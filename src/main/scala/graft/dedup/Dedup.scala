@@ -294,148 +294,20 @@ object Dedup {
     * that appears in at least one pair; the survivor is the minimum member
     * id (deterministic, replayable), which is also the cluster_id.
     *
-    * Scale shape: connected components over the pair graph run as GraphX
-    * Pregel supersteps — the diameter of a dup chain is unbounded, so an
-    * iterative DataFrame self-join would shuffle once per hop with an
-    * exploding plan, while Pregel reuses one edge partitioning across
-    * iterations (the g05 rationale). Document ids are already longs, so
-    * no vertex dictionary is needed, and the pair set is orders of
-    * magnitude smaller than the corpus (it came out of a dedup sketch),
-    * so the graph comfortably outlives even a 100 TB corpus's dup mass.
+    * Engine: the shared connected-components kernel
+    * (`GraphAlgos.connectedComponentsLong`) over the pair graph. Document
+    * ids are already longs, so no vertex dictionary is needed, and the
+    * pair set is dup-mass-sized — orders smaller than the corpus it came
+    * out of — so it usually takes the kernel's driver-local union-find;
+    * past the kernel's exact-count cap, GraphX connected components.
     */
   def clusters(pairs: DataFrame, aCol: String = "doc_a", bCol: String = "doc_b")
-      : DataFrame = {
-    val spark = pairs.sparkSession
-    import spark.implicits._
-    // DRIVER-LOCAL fast path (round 17; the g06 pageRankLocal / g10
-    // localRelax cap-dispatch precedent): the pair set is dup-mass-sized
-    // — orders smaller than the corpus it came out of — so it very often
-    // fits one JVM, where a union-find labels components in one pass
-    // with ZERO Spark jobs, versus GraphX Pregel's per-superstep
-    // join+shuffle cascade (measured sf0.1 interleaved: 0.6-2.1s GraphX
-    // vs 0.16-0.6s local, R17AbExperiment E2). Dispatch needs the EXACT
-    // pair count, so the pair set is pinned ONCE (lazy localCheckpoint)
-    // and both regimes consume the pinned blocks — the first cut of this
-    // path probed with `limit(cap+1).collect()` on the UNPINNED frame,
-    // and executeTake's incremental partition rounds re-ran the
-    // pair-generating join stage at trickle parallelism: t12 at sf1 read
-    // 22.0s vs the r16 pair's 7.1s (measured live this round) — the
-    // exact CollectLimit trap the bm25TopKStaged InList probe avoids by
-    // collecting a tiny frame. count() on the pinned blocks is one
-    // full-parallelism evaluation of the join (which either regime needs
-    // anyway), and the under-cap collect is a block read, not a re-run.
-    // The local labels equal GraphX connectedComponents' by definition
-    // (min vertex id per component — the LlmOpsSpec local≡distributed
-    // law).
-    val typed = pairs.select(col(aCol).cast("long"), col(bCol).cast("long"))
-      .as[(Long, Long)]
-    val pinned = typed.localCheckpoint(false)
-    val n = pinned.count()
-    if (n <= LocalClustersMaxPairs) {
-      val out = localClusters(spark, pinned.collect())
-      graft.Pinned.free(pinned.toDF())
-      out
-    } else {
-      // distributedClusters materializes its result (localCheckpoint)
-      // before returning, so the pin is safe to release afterwards
-      val out = distributedClusters(pinned)
-      graft.Pinned.free(pinned.toDF())
-      out
-    }
-  }
-
-  /** The distributed [[clusters]] body (GraphX connected components) —
-    * callable directly so the DedupSpec local≡distributed law can run
-    * both regimes on one fixture without a 2^20-pair fixture.
-    */
-  private[graft] def distributedClusters(
-      typed: org.apache.spark.sql.Dataset[(Long, Long)]): DataFrame = {
-    val spark = typed.sparkSession
-    import spark.implicits._
-    // CC supersteps pay per-partition task overhead EVERY iteration; the
-    // pair set is dup-mass-sized (orders smaller than its parent join's
-    // partitioning), so merge partitions 8:1 before building the graph —
-    // BUT only behind a stage boundary. A shuffle-FREE coalesce chains
-    // parent partitions into fewer tasks all the way back to the previous
-    // exchange, so round 13's bare `raw.coalesce(n/8)` silently ran the
-    // pair-GENERATING join itself at 1/8 parallelism — v12's within-cell
-    // cosine stage regressed 4.3→7.5s sf1 isolated on "unchanged"
-    // semanticDedup code. shuffle=true keeps the merge: its map side runs
-    // the pair join at full width and the exchange moves only the
-    // dup-mass-sized pair set (an eager localCheckpoint barrier was
-    // measured too — same sf1 win, but its fixed materialization cost
-    // showed at sf0.1, so the lazy shuffle form ships).
-    val raw = typed.rdd
-    val edges =
-      raw.coalesce(math.max(1, raw.getNumPartitions / 8), shuffle = true)
-    val pairGraph = org.apache.spark.graphx.Graph.fromEdgeTuples(edges, defaultValue = 0)
-    val ccGraph = pairGraph.connectedComponents()
-    val out = ccGraph.vertices // (doc_id, min id in component)
-      .toDF("doc_id", "cluster_id")
-      .withColumn("cluster_size",
-        count(lit(1)).over(Window.partitionBy(col("cluster_id"))))
-      .withColumn("is_survivor", col("doc_id") === col("cluster_id"))
-      .select(col("cluster_id"), col("doc_id"), col("cluster_size"),
-        col("is_survivor"))
-      // materialize, then free the GraphX graphs: they pin vertex/edge
-      // RDDs at MEMORY_AND_DISK per call and never self-release (the
-      // GraphAlgos.releasing rationale — dup-mass-sized here, but a
-      // curation service calls this per corpus snapshot). A/B-measured
-      // round 13 after t12 read 1.94→3.75s across the r11/r12 sf0.1 pair
-      // windows on an UNCHANGED code path (git: only BM25 queries landed
-      // between the pair commits): removing this checkpoint makes t12
-      // SLOWER (3.54s vs 2.85s quiet-box — every downstream consumer
-      // re-runs CC lazily), and quiet-box t12 spans 2.48-3.04s run to
-      // run, so the r12 pair reading was window noise, not a regression.
-      .localCheckpoint(true)
-    pairGraph.unpersist(blocking = false)
-    ccGraph.unpersist(blocking = false)
-    out
-  }
-
-  /** Most pair rows [[clusters]] resolves driver-locally: 2^20 pairs ≈
-    * tens of MB boxed on an 8g driver (the BandedBroadcastMaxRows comfort
-    * bound), and a dup-pair graph that large already implies a corpus far
-    * past gate scale — past it, the distributed GraphX plan owns the job.
-    */
-  private[graft] val LocalClustersMaxPairs = 1 << 20
-
-  /** Union-find over a driver-resident pair set: components labeled by
-    * their min vertex id (exactly GraphX connectedComponents' labels),
-    * sizes counted over the member vertices, min-id member as survivor —
-    * the same (cluster_id, doc_id, cluster_size, is_survivor) contract as
-    * the distributed path. One driver pass, zero Spark jobs.
-    */
-  private def localClusters(spark: org.apache.spark.sql.SparkSession,
-      edges: Array[(Long, Long)]): DataFrame = {
-    import spark.implicits._
-    val parent = new java.util.HashMap[Long, Long](edges.length * 2)
-    def find(x: Long): Long = { // path-halving iterative find
-      var r = x
-      while (parent.get(r) != r) {
-        val g = parent.get(parent.get(r))
-        parent.put(r, g)
-        r = g
-      }
-      r
-    }
-    edges.foreach { case (a, b) =>
-      parent.putIfAbsent(a, a)
-      parent.putIfAbsent(b, b)
-      val (ra, rb) = (find(a), find(b))
-      // union toward the smaller root: roots stay the component min id,
-      // so labels need no second normalization pass
-      if (ra < rb) parent.put(rb, ra)
-      else if (rb < ra) parent.put(ra, rb)
-    }
-    import scala.jdk.CollectionConverters._
-    val members = parent.keySet().asScala.toArray.map(v => (find(v), v))
-    val sizes = members.groupMapReduce(_._1)(_ => 1L)(_ + _)
-    val rows = members.toSeq.map { case (root, v) =>
-      (root, v, sizes(root), v == root)
-    }
-    rows.toDF("cluster_id", "doc_id", "cluster_size", "is_survivor")
-  }
+      : DataFrame =
+    graft.graph.GraphAlgos.connectedComponentsLong(
+        pairs.select(col(aCol).as("src"), col(bCol).as("dst")))
+      .select(col("component").as("cluster_id"), col("vid").as("doc_id"),
+        count(lit(1)).over(Window.partitionBy(col("component"))).as("cluster_size"),
+        (col("vid") === col("component")).as("is_survivor"))
 
   /** MinHash + LSH near-dup candidate pairs with exact-signature
     * verification: shingle → k-slot signature → band keys → explode bands →

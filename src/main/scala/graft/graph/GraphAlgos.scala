@@ -1,39 +1,50 @@
 package graft.graph
 
-import org.apache.spark.graphx.{Edge, Graph, VertexId}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.schema.GraphSchema.{DstCol, IdCol, SrcCol}
 
-/** GraphX analytics over a PropertyGraph (SURVEY.md §2 "multi-hop graph
-  * traversal at scale" + Phase 4): iterative algorithms — unbounded-depth
-  * reachability, connected components, PageRank, triangle counting — run as
-  * Pregel supersteps instead of self-join-per-hop Catalyst plans, which is
-  * the right engine once depth is unbounded (a k-hop join chain builds k
-  * shuffles and an exploding plan; Pregel reuses one partitioning across
-  * iterations).
+/** Iterative analytics over a PropertyGraph (SURVEY.md §2 "multi-hop graph
+  * traversal at scale" + Phase 4). Each algorithm has one kernel, keyed on
+  * longs, with a measured driver-local regime and a distributed one:
   *
-  * Projection contract: string node ids get COLLISION-FREE VertexId longs
+  *  - reachability and hop distance ([[relatedN]], [[hopDistance]]) and
+  *    weighted SSSP ([[weightedDistance]]) run on [[weightedDistanceLong]]:
+  *    a frontier Bellman-Ford on DataFrames, driver-local while the
+  *    probed frontier stays small;
+  *  - connected components ([[connectedComponents]], g05, `Dedup.clusters`)
+  *    run on [[connectedComponentsLong]]: union-find on the driver up to
+  *    [[LocalClustersMaxPairs]] edges, GraphX connected components past it;
+  *  - PageRank ([[pageRankFixedPoint]]) runs on [[pageRankFixedPointLong]]:
+  *    exact-integer iterations over primitive arrays on the driver, or a
+  *    broadcast-join DataFrame loop;
+  *  - triangle counting ([[triangleCount]]) runs on [[triangleCountEdges]]:
+  *    a bounded 2-join DataFrame plan, not an iteration.
+  *
+  * Projection contract: string node ids get COLLISION-FREE vertex id longs
   * via a dictionary (`monotonically_increasing_id`), pinned with
-  * localCheckpoint so every consumer (vertex RDD, per-relation edge joins)
-  * sees the same assignment. A content hash (xxhash64) would be cheaper —
-  * no dictionary joins — but carries a ≈2.7% birthday-collision chance at
-  * 10^9 nodes, and a collision silently MERGES two vertices, corrupting
-  * every downstream algorithm; the dictionary makes that unrepresentable.
-  * Results always travel back through vertex ATTRS (label, original id),
-  * never raw vids, so the run-dependent numbering is invisible to callers.
+  * localCheckpoint so every consumer (per-relation edge joins, the result
+  * join) sees the same assignment. A content hash (xxhash64) would be
+  * cheaper — no dictionary joins — but carries a ≈2.7% birthday-collision
+  * chance at 10^9 nodes, and a collision silently MERGES two vertices,
+  * corrupting every downstream algorithm; the dictionary makes that
+  * unrepresentable. Results always travel back through the dictionary as
+  * (label, original id), never raw vids, so the run-dependent numbering is
+  * invisible to callers.
+  *
+  * Pin contract: every entry returns a materialized result and frees its
+  * scratch pins before returning; `graft.Pinned.free(result)` then
+  * releases everything the call left in the block manager.
   */
 object GraphAlgos {
 
-  /** Project a PropertyGraph (optionally restricted to some relations) to a
-    * GraphX graph. Vertex attr = (label, original id); edge attr = relation
-    * name. Returns the graph plus the pinned dictionary (id → vid) for
-    * callers that need a specific vertex (e.g. BFS start).
+  /** The pinned node dictionary (nid, nlabel, vid) over every node table,
+    * and the selected relations' edges (all of them when `relations` is
+    * empty) encoded to (src, dst) vids — lazy, over the dictionary.
     */
-  def toGraphX(g: PropertyGraph, relations: Seq[String] = Seq.empty)
-      : (Graph[(String, String), String], DataFrame) = {
+  private def encode(g: PropertyGraph, relations: Seq[String])
+      : (DataFrame, DataFrame) = {
     val rels = if (relations.isEmpty) g.schema.relationDefs.map(_.name) else relations
     val dict = g.nodeTables.toSeq.map { case (label, df) =>
       df.select(col(IdCol).as("nid"), lit(label).as("nlabel"))
@@ -41,128 +52,90 @@ object GraphAlgos {
       .withColumn("vid", monotonically_increasing_id())
       // pin: the id expression is partition-dependent; without the
       // checkpoint, AQE could re-evaluate the plan with different
-      // partitioning per consumer and hand vertices and edges different
+      // partitioning per consumer and hand the edge joins different
       // numberings
       .localCheckpoint(true)
-    val vertices = dict.rdd.map(r =>
-      (r.getAs[VertexId]("vid"), (r.getAs[String]("nlabel"), r.getAs[String]("nid"))))
     val edges = rels.map { r =>
       g.edgeTables(r)
         .join(dict.select(col("nid").as(SrcCol), col("vid").as("svid")), Seq(SrcCol))
         .join(dict.select(col("nid").as(DstCol), col("vid").as("dvid")), Seq(DstCol))
-        .select(col("svid"), col("dvid"))
-        .rdd.map(row => Edge(row.getLong(0), row.getLong(1), r))
-    }.reduce(_ union _)
-    (Graph(vertices, edges, defaultVertexAttr = ("", ""),
-      edgeStorageLevel = StorageLevel.MEMORY_AND_DISK,
-      vertexStorageLevel = StorageLevel.MEMORY_AND_DISK), dict)
+        .select(col("svid").as("src"), col("dvid").as("dst"))
+    }.reduce(_ unionByName _)
+    (dict, edges)
   }
 
-  /** Materialize `out` (eager localCheckpoint) and release the GraphX
-    * graphs that back it. GraphX pins vertex/edge RDDs at
-    * MEMORY_AND_DISK and never frees them itself, so returning a lazy
-    * DataFrame over a still-cached graph leaks a graph-sized
-    * block-manager footprint per CALL — in a long-lived driver (a bench
-    * loop, a notebook, a service) repeated invocations accumulate until
-    * eviction thrash; at sf1 (7.5M edges) back-to-back g10 runs degraded
-    * from seconds to minutes before this release. The checkpoint
-    * materializes the (small) result rows first, so freeing the graphs
-    * cannot trigger recompute.
+  /** Distances from `startId` over dictionary-encoded (src, dst, weight)
+    * edges: [[weightedDistanceLong]] joined back to the dictionary,
+    * materialized, with the dictionary and the edge pin freed. Returns
+    * (vid, dist, every dict column); an unknown start frees the
+    * dictionary and throws.
     */
-  private def releasing(out: DataFrame, graphs: Graph[_, _]*): DataFrame = {
-    val pinned = out.localCheckpoint(true)
-    graphs.foreach(_.unpersist(blocking = false))
-    pinned
+  private def distancesFrom(dict: DataFrame, edges: DataFrame, startId: String,
+      maxIters: Int, directed: Boolean, caller: String): DataFrame = {
+    val start = dict.where(col("nid") === startId)
+      .select(col("vid")).collect().headOption
+      .getOrElse {
+        freePinned(dict)
+        throw new IllegalArgumentException(s"$caller: unknown start node '$startId'")
+      }
+      .getLong(0)
+    // every round probes the edges: encode them once, not per round
+    val pinnedEdges = edges.localCheckpoint(false)
+    val dist = weightedDistanceLong(pinnedEdges, start, maxIters, directed)
+    val out = dist.join(dict, Seq("vid")).localCheckpoint(true)
+    Seq(dist, pinnedEdges, dict).foreach(freePinned)
+    out
   }
+
+  /** Unit-weight distances as (label, id, hops) — the shared body of
+    * [[relatedN]] and [[hopDistance]].
+    */
+  private def hops(dict: DataFrame, edges: DataFrame, startId: String,
+      maxHops: Int, directed: Boolean, caller: String): DataFrame =
+    distancesFrom(dict, edges.withColumn("weight", lit(1.0)), startId, maxHops,
+      directed, caller)
+      .select(col("nlabel").as("label"), col("nid").as(IdCol),
+        col("dist").cast("int").as("hops"))
 
   /** All nodes within `depth` hops of `startId` following `relation`
-    * (directed) — Pregel BFS; the unbounded-depth generalization of
+    * (directed, an inverse name walks the stored edges backwards) as
+    * (label, id, hops), start excluded — unit-weight directed
+    * [[weightedDistanceLong]]; the unbounded-depth generalization of
     * Traversal.related chains (reference: concatMapM getRelated,
     * app/Main.hs:152-156).
     */
   def relatedN(g: PropertyGraph, relation: String, startId: String, depth: Int)
       : DataFrame = {
-    val spark = g.nodeTables.head._2.sparkSession
     val ref = g.schema.relation(relation)
-    val (gx, dict) = toGraphX(g, Seq(ref.rel.name))
-    val start = dict.where(col("nid") === startId)
-      .select(col("vid")).collect().headOption
-      .getOrElse(throw new IllegalArgumentException(
-        s"relatedN: unknown start node '$startId'"))
-      .getLong(0)
-    val reversedRel = ref.reversed
-    val init = gx.mapVertices((id, attr) =>
-      (attr, if (id == start) 0 else Int.MaxValue))
-    val bfs = init.pregel(Int.MaxValue, maxIterations = depth)(
-      (_, v, msg) => (v._1, math.min(v._2, msg)),
-      triplet => {
-        val (fromAttr, toAttr) =
-          if (reversedRel) (triplet.dstAttr, triplet.srcAttr)
-          else (triplet.srcAttr, triplet.dstAttr)
-        val sendTo = if (reversedRel) triplet.srcId else triplet.dstId
-        if (fromAttr._2 != Int.MaxValue && fromAttr._2 + 1 < toAttr._2)
-          Iterator((sendTo, fromAttr._2 + 1))
-        else Iterator.empty
-      },
-      math.min)
-    import spark.implicits._
-    releasing(bfs.vertices
-      .filter { case (_, (_, d)) => d != Int.MaxValue && d > 0 }
-      .map { case (_, ((label, id), d)) => (label, id, d) }
-      .toDF("label", IdCol, "hops"), gx, init, bfs)
+    val (dict, stored) = encode(g, Seq(ref.rel.name))
+    val edges =
+      if (ref.reversed) stored.select(col("dst").as("src"), col("src").as("dst"))
+      else stored
+    hops(dict, edges, startId, depth, directed = true, "relatedN")
+      .where(col("hops") > 0)
   }
 
-  /** UNDIRECTED hop distance (unit-weight SSSP) from `startId` over the
-    * selected relations: Pregel BFS with messages along both edge
-    * directions, `maxHops` bounding the supersteps — returns (label, id,
-    * hops) for every node settled within the bound, seed included at 0.
-    * Same engine rationale as [[relatedN]]: one edge partitioning reused
-    * across layers instead of a shuffle per hop.
+  /** UNDIRECTED hop distance from `startId` over the selected relations:
+    * unit-weight undirected [[weightedDistanceLong]], `maxHops` bounding
+    * the rounds — returns (label, id, hops) for every node settled within
+    * the bound, seed included at 0.
     */
   def hopDistance(g: PropertyGraph, startId: String, maxHops: Int,
       relations: Seq[String] = Seq.empty): DataFrame = {
-    val spark = g.nodeTables.head._2.sparkSession
-    val (gx, dict) = toGraphX(g, relations)
-    val start = dict.where(col("nid") === startId)
-      .select(col("vid")).collect().headOption
-      .getOrElse(throw new IllegalArgumentException(
-        s"hopDistance: unknown start node '$startId'"))
-      .getLong(0)
-    val init = gx.mapVertices((id, attr) =>
-      (attr, if (id == start) 0 else Int.MaxValue))
-    val bfs = init.pregel(Int.MaxValue, maxIterations = maxHops)(
-      (_, v, msg) => (v._1, math.min(v._2, msg)),
-      triplet => {
-        val out = List.newBuilder[(VertexId, Int)]
-        if (triplet.srcAttr._2 != Int.MaxValue &&
-            triplet.srcAttr._2 + 1 < triplet.dstAttr._2)
-          out += ((triplet.dstId, triplet.srcAttr._2 + 1))
-        if (triplet.dstAttr._2 != Int.MaxValue &&
-            triplet.dstAttr._2 + 1 < triplet.srcAttr._2)
-          out += ((triplet.srcId, triplet.dstAttr._2 + 1))
-        out.result().iterator
-      },
-      math.min)
-    import spark.implicits._
-    releasing(bfs.vertices
-      .filter { case (_, (_, d)) => d != Int.MaxValue }
-      .map { case (_, ((label, id), d)) => (label, id, d) }
-      .toDF("label", IdCol, "hops"), gx, init, bfs)
+    val (dict, edges) = encode(g, relations)
+    hops(dict, edges, startId, maxHops, directed = false, "hopDistance")
   }
 
   /** Bounded weighted single-source shortest paths over an explicit
     * weighted edge list (src, dst, weight) — distances are the minimum
     * path weight reachable in at most `maxIters` edges, treating each
-    * listed edge as undirected (messages flow both ways, the hopDistance
-    * convention). Parallel edges are legal (bag semantics); the min fold
-    * absorbs them.
+    * listed edge as undirected (the hopDistance convention). Parallel
+    * edges are legal (bag semantics); the min fold absorbs them.
     *
-    * Scale shape: identical to hopDistance — one vertex dictionary, one
-    * edge partitioning reused across supersteps, message payload one
-    * double per vertex. Bounding the supersteps (rather than running to
-    * fixpoint) both caps the cost on high-diameter graphs and makes the
-    * result replayable by a bounded recursive-CTE oracle (g10), the same
-    * contract as the BFS layers (g07).
+    * Bounding the rounds (rather than running to fixpoint) both caps the
+    * cost on high-diameter graphs and makes the result replayable by a
+    * bounded recursive-CTE oracle (g10), the same contract as the BFS
+    * layers (g07). The dictionary here spans the edge endpoints only.
     */
   def weightedDistance(edges: DataFrame, startId: String, maxIters: Int)
       : DataFrame = {
@@ -171,17 +144,11 @@ object GraphAlgos {
       .distinct()
       .withColumn("vid", monotonically_increasing_id())
       .localCheckpoint(true)
-    val start = dict.where(col("nid") === startId)
-      .select(col("vid")).collect().headOption
-      .getOrElse(throw new IllegalArgumentException(
-        s"weightedDistance: unknown start node '$startId'"))
-      .getLong(0)
     val enc = edges
       .join(dict.select(col("nid").as("src"), col("vid").as("svid")), Seq("src"))
       .join(dict.select(col("nid").as("dst"), col("vid").as("dvid")), Seq("dst"))
       .select(col("svid").as("src"), col("dvid").as("dst"), col("weight"))
-    weightedDistanceLong(enc, start, maxIters)
-      .join(dict, Seq("vid"))
+    distancesFrom(dict, enc, startId, maxIters, directed = false, "weightedDistance")
       .select(col("nid").as(IdCol), col("dist"))
   }
 
@@ -198,13 +165,12 @@ object GraphAlgos {
     * k-hop traversal from one source usually touches a driver-trivial
     * neighborhood (g10 at sf1: frontiers of 16/63/1874 rows), yet the
     * distributed loop pays ~3 jobs of scheduler floor PER ROUND moving
-    * them — measured at sf1 as ~1.3 s/round on a 2.3 s query
-    * (GraphProfileExperiment). The caps are enforced by PROBING, not
-    * estimated a priori: each round's adjacency slice is fetched with
-    * `limit(rowCap + 1)` and the local path bails to the distributed
-    * loop the moment either cap is exceeded, so no degree statistic has
-    * to be trusted and the driver never holds more than
-    * `maxIters × rowCap` rows. At 100 TB the caps are what keep this
+    * them — measured at sf1 as ~1.3 s/round on a 2.3 s query. The caps
+    * are enforced by PROBING, not estimated a priori: each round's
+    * adjacency slice is counted before it is collected, and the local
+    * path bails to the distributed loop the moment either cap is
+    * exceeded, so no degree statistic has to be trusted and the driver
+    * never holds more than `maxIters × rowCap` rows. At 100 TB the caps are what keep this
     * safe: a hub vertex blows the row probe, a broad frontier blows the
     * vertex cap, and either way the distributed plan takes over.
     */
@@ -220,16 +186,17 @@ object GraphAlgos {
     * touched-edge count exceeds `rowCap`.
     *
     * Job shape per round: ONE filtered count + ONE bounded collect over
-    * the FORWARD edge frame (`src ∈ F OR dst ∈ F`, both directions
-    * expanded driver-side) — not `limit(cap).collect()`, whose
-    * CollectLimit executeTake schedules sequential partition WAVES
+    * the FORWARD edge frame (`src ∈ F`, plus `dst ∈ F` when undirected,
+    * both directions expanded driver-side) — not `limit(cap).collect()`,
+    * whose CollectLimit executeTake schedules sequential partition WAVES
     * (1, 4, 16… partitions per job: measured 5.1s for g10 at sf1 vs
     * 2.0s for count-then-collect), and not the flipped union, which
     * scans the source twice per round. The count guard runs BEFORE any
     * rows move, so a hub frontier bails having transferred nothing.
     */
   private def localRelax(fwd: DataFrame, start: Long, maxIters: Int,
-      vertexCap: Int, rowCap: Int): Option[Seq[(Long, Double)]] = {
+      directed: Boolean, vertexCap: Int, rowCap: Int)
+      : Option[Seq[(Long, Double)]] = {
     if (vertexCap <= 0 || rowCap <= 0) return None
     val dist = scala.collection.mutable.HashMap(start -> 0.0)
     var frontier: Set[Long] = Set(start)
@@ -237,9 +204,9 @@ object GraphAlgos {
     while (i < maxIters && frontier.nonEmpty) {
       if (frontier.size > vertexCap) return None
       // isInCollection compiles to InSet past the literal threshold
+      val outgoing = col("src").isInCollection(frontier)
       val matched = fwd.where(
-        col("src").isInCollection(frontier) ||
-          col("dst").isInCollection(frontier))
+        if (directed) outgoing else outgoing || col("dst").isInCollection(frontier))
       if (matched.count() > rowCap) return None
       val slice = matched.collect()
       // round-start snapshot: a vertex improved THIS round must not
@@ -259,7 +226,7 @@ object GraphAlgos {
       slice.foreach { r =>
         val s = r.getLong(0); val d = r.getLong(1); val w = r.getDouble(2)
         relax(s, d, w) // stored direction
-        relax(d, s, w) // undirected: traversed backwards
+        if (!directed) relax(d, s, w) // traversed backwards
       }
       frontier = improved.toSet
       i += 1
@@ -267,9 +234,11 @@ object GraphAlgos {
     Some(dist.toSeq)
   }
 
-  /** Long-keyed core of [[weightedDistance]]: edges (src, dst, weight) with
-    * long vertex ids, returns (vid, dist). When the vertex key space is
-    * already numeric — or arithmetically encodable, e.g.
+  /** Long-keyed core of [[weightedDistance]], [[hopDistance]] and
+    * [[relatedN]]: edges (src, dst, weight) with long vertex ids, returns
+    * (vid, dist). `directed` relaxes each edge along its stored direction
+    * only; undirected (the default) relaxes it both ways. When the vertex
+    * key space is already numeric — or arithmetically encodable, e.g.
     * `key * #kinds + kind` over a few node labels — calling this directly
     * skips the string dictionary entirely (measured at sf0.1: the dict
     * distinct + two encode joins on 765k string ids cost ~6s of g10's
@@ -285,27 +254,30 @@ object GraphAlgos {
     * candidate relaxations (a codegen'd map-combined agg: parallel edges'
     * bag semantics are absorbed map-side), and keeps only IMPROVED
     * distances as the next frontier, so settled regions send nothing.
-    * Semantics are identical to the Pregel form: after round k, dist(v)
-    * is the min path weight over ≤k edges (undirected — each edge relaxes
-    * both ways via the union'd flip). Early-exits when a round improves
+    * After round k, dist(v) is the min path weight over ≤k edges (when
+    * undirected, each edge relaxes both ways via the union'd flip) — with
+    * unit weights, exactly BFS layers. Early-exits when a round improves
     * nothing. The start vertex is reported at distance 0 whether or not
     * it occurs in the edge list (the string-keyed wrapper rejects unknown
     * starts at the dictionary).
     */
   def weightedDistanceLong(edges: DataFrame, start: Long, maxIters: Int,
+      directed: Boolean = false,
       localVertexCap: Int = LocalFrontierVertexCap,
       localRowCap: Int = LocalSliceRowCap): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
     val fwd = edges.select(col("src").cast("long").as("src"),
       col("dst").cast("long").as("dst"), col("weight").cast("double").as("weight"))
-    val undirected = fwd.unionByName(fwd.select(
-      col("dst").as("src"), col("src").as("dst"), col("weight")))
+    val relaxed =
+      if (directed) fwd
+      else fwd.unionByName(fwd.select(
+        col("dst").as("src"), col("src").as("dst"), col("weight")))
     // tiny-frontier fast path: one probed scan per round instead of
     // join+agg+checkpoint+count jobs; bails (None) past either cap and
     // the distributed loop below runs from scratch — GraphSpec pins the
     // threshold-invariance law (same answer at caps 0 / 1 / default)
-    localRelax(fwd, start, maxIters, localVertexCap, localRowCap) match {
+    localRelax(fwd, start, maxIters, directed, localVertexCap, localRowCap) match {
       case Some(d) => return d.toDF("vid", "dist")
       case None => ()
     }
@@ -319,7 +291,7 @@ object GraphAlgos {
     // until driver GC notices (ContextCleaner frees them only via weak
     // refs). Free each round's scratch as soon as the frame that
     // supersedes it is materialized — only the returned `dist` stays
-    // pinned, matching releasing()'s one-result contract. localCheckpoint
+    // pinned, the one-result pin contract. localCheckpoint
     // (vs persist) also truncates lineage, so round k's plan never grows
     // with k; the non-fault-tolerance trade (an executor loss mid-run
     // fails the job instead of recomputing) is accepted for a bounded
@@ -328,8 +300,8 @@ object GraphAlgos {
       val fr = frontier.select(col("vid").as("src"), col("dist").as("fdist"))
       val joined =
         if (frontierRows <= BroadcastFrontierMaxRows)
-          undirected.join(broadcast(fr), Seq("src"))
-        else undirected.join(fr, Seq("src"))
+          relaxed.join(broadcast(fr), Seq("src"))
+        else relaxed.join(fr, Seq("src"))
       val msgs = joined
         .select(col("dst").as("vid"), (col("fdist") + col("weight")).as("cand"))
         .groupBy(col("vid")).agg(min(col("cand")).as("cand"))
@@ -366,44 +338,137 @@ object GraphAlgos {
     */
   private def freePinned(df: DataFrame): Unit = graft.Pinned.free(df)
 
-  /** Join per-vertex algorithm output back to (label, id, value) through
-    * the vertex attrs — the shared tail of the GraphX algorithms below.
+  /** Most edges [[connectedComponentsLong]] labels driver-locally: 2^20
+    * pairs ≈ tens of MB boxed on an 8g driver (the BandedBroadcastMaxRows
+    * comfort bound), and a dup-pair graph that large already implies a
+    * corpus far past gate scale — past it, GraphX owns the job.
     */
-  private def attachAttrs[V: scala.reflect.runtime.universe.TypeTag : scala.reflect.ClassTag](
-      g: PropertyGraph,
-      result: org.apache.spark.graphx.VertexRDD[V],
-      vertices: org.apache.spark.graphx.VertexRDD[(String, String)],
-      valueCol: String): DataFrame = {
-    val spark = g.nodeTables.head._2.sparkSession
+  private[graft] val LocalClustersMaxPairs = 1L << 20
+
+  /** Connected components over undirected long-keyed edges (src, dst):
+    * returns (vid, component) for every edge endpoint, where component is
+    * the MIN vid of its component — deterministic, and exactly GraphX
+    * connectedComponents' label. The one CC kernel: [[connectedComponents]],
+    * g05 and `Dedup.clusters` all call it.
+    *
+    * Dispatch on the EXACT edge count, read off the input pinned once
+    * (lazy localCheckpoint) so both regimes consume the same blocks:
+    *  - ≤ `localMaxEdges`: union-find on the driver, one pass, zero Spark
+    *    jobs past the count and the block-read collect (measured sf0.1
+    *    interleaved: 0.16-0.6s vs GraphX's 0.6-2.1s for t12's pairs);
+    *  - past it: GraphX connected components, whose Pregel supersteps
+    *    reuse one edge partitioning across the unbounded-diameter
+    *    iteration (a DataFrame self-join per hop would shuffle each time).
+    * The pin is probed with count(), not `limit(cap+1).collect()` on the
+    * unpinned frame: executeTake's incremental partition rounds re-ran the
+    * pair-generating join at trickle parallelism (t12 at sf1: 22.0s vs
+    * 7.1s). LlmOpsSpec pins local ≡ distributed (caps default vs 0).
+    */
+  def connectedComponentsLong(edges: DataFrame,
+      localMaxEdges: Long = LocalClustersMaxPairs): DataFrame = {
+    val spark = edges.sparkSession
     import spark.implicits._
-    result.join(vertices)
-      .map { case (_, (v, (label, id))) => (label, id, v) }
-      .toDF("label", IdCol, valueCol)
+    val pinned = edges.select(col("src").cast("long"), col("dst").cast("long"))
+      .as[(Long, Long)].localCheckpoint(false)
+    val out =
+      if (pinned.count() <= localMaxEdges)
+        unionFind(pinned.collect()).toDF("vid", "component")
+      else graphxComponents(pinned)
+    freePinned(pinned.toDF())
+    out
+  }
+
+  /** Union-find over driver-resident edges: (vid, min vid of its
+    * component) for every endpoint.
+    */
+  private def unionFind(edges: Array[(Long, Long)]): Seq[(Long, Long)] = {
+    val parent = new java.util.HashMap[Long, Long](edges.length * 2)
+    def find(x: Long): Long = { // path-halving iterative find
+      var r = x
+      while (parent.get(r) != r) {
+        val g = parent.get(parent.get(r))
+        parent.put(r, g)
+        r = g
+      }
+      r
+    }
+    edges.foreach { case (a, b) =>
+      parent.putIfAbsent(a, a)
+      parent.putIfAbsent(b, b)
+      val (ra, rb) = (find(a), find(b))
+      // union toward the smaller root: roots stay the component min id,
+      // so labels need no second normalization pass
+      if (ra < rb) parent.put(rb, ra)
+      else if (rb < ra) parent.put(ra, rb)
+    }
+    import scala.jdk.CollectionConverters._
+    parent.keySet().asScala.toSeq.map(v => (v, find(v)))
+  }
+
+  /** The distributed [[connectedComponentsLong]] regime: GraphX CC over
+    * the pinned edges, materialized, then every RDD GraphX cached on the
+    * way freed.
+    */
+  private def graphxComponents(pinned: Dataset[(Long, Long)]): DataFrame = {
+    val spark = pinned.sparkSession
+    import spark.implicits._
+    // CC supersteps pay per-partition task overhead EVERY iteration; the
+    // edge set (a dup-pair set for Dedup) is orders smaller than its
+    // parent join's partitioning, so merge partitions 8:1 — BUT only
+    // behind a stage boundary. A shuffle-FREE coalesce chains parent
+    // partitions into fewer tasks all the way back to the previous
+    // exchange, so a bare `coalesce(n/8)` silently ran the pair-GENERATING
+    // join itself at 1/8 parallelism (v12's within-cell cosine stage:
+    // 4.3→7.5s sf1). shuffle=true keeps the merge: its map side runs at
+    // full width and the exchange moves only the edges.
+    val raw = pinned.rdd
+    val edges = raw.coalesce(math.max(1, raw.getNumPartitions / 8), shuffle = true)
+    val cc = org.apache.spark.graphx.Graph.fromEdgeTuples(edges, defaultValue = 0)
+      .connectedComponents()
+    val out = cc.vertices.toDF("vid", "component").localCheckpoint(true)
+    // GraphX caches every graph it builds at MEMORY_AND_DISK and, past
+    // Pregel's own bookkeeping, never frees the last ones: left alone, each
+    // call leaves a graph-sized block-manager footprint behind (at sf1,
+    // back-to-back calls degraded from seconds to minutes). The result is
+    // materialized, so the whole cached lineage can go.
+    unpersistLineage(Seq(cc.vertices, cc.edges))
+    out
+  }
+
+  /** Unpersist every cached RDD in the lineage of `roots`. */
+  private def unpersistLineage(roots: Seq[org.apache.spark.rdd.RDD[_]]): Unit = {
+    val seen = scala.collection.mutable.Set.empty[Int]
+    var todo = roots.toList
+    while (todo.nonEmpty) {
+      val r = todo.head
+      todo = todo.tail
+      if (seen.add(r.id)) {
+        if (r.getStorageLevel.isValid) r.unpersist(blocking = false)
+        todo = r.dependencies.map(_.rdd).toList ::: todo
+      }
+    }
   }
 
   /** Connected components over selected relations; returns (label, id,
     * component_id) where component_id is the MIN ORIGINAL node id in the
     * component — deterministic and meaningful to callers, unlike the
-    * internal (run-dependent) vids.
+    * internal (run-dependent) vids. Nodes the relations never touch are
+    * singleton components.
     */
   def connectedComponents(g: PropertyGraph, relations: Seq[String] = Seq.empty)
       : DataFrame = {
-    val (gx, _) = toGraphX(g, relations)
-    val ccGraph = gx.connectedComponents()
-    val comps = attachAttrs(g, ccGraph.vertices, gx.vertices, "comp")
+    val (dict, edges) = encode(g, relations)
+    val cc = connectedComponentsLong(edges)
+    val comps = dict.join(cc, Seq("vid"), "left")
+      .select(col("nlabel").as("label"), col("nid").as(IdCol),
+        coalesce(col("component"), col("vid")).as("comp"))
     val names = comps.groupBy(col("comp"))
       .agg(min(col(IdCol)).as("component_id"))
-    releasing(
-      comps.join(names, "comp").select(col("label"), col(IdCol), col("component_id")),
-      gx, ccGraph)
-  }
-
-  /** PageRank; returns (label, id, rank). */
-  def pageRank(g: PropertyGraph, tol: Double = 1e-4,
-      relations: Seq[String] = Seq.empty): DataFrame = {
-    val (gx, _) = toGraphX(g, relations)
-    val pr = gx.pageRank(tol)
-    releasing(attachAttrs(g, pr.vertices, gx.vertices, "rank"), gx, pr)
+    val out = comps.join(names, "comp")
+      .select(col("label"), col(IdCol), col("component_id"))
+      .localCheckpoint(true)
+    Seq(cc, dict).foreach(freePinned)
+    out
   }
 
   /** FIXED-POINT static PageRank: ranks are Longs in 1/`scale` units,
@@ -411,8 +476,8 @@ object GraphAlgos {
     * (`contrib = rank / outDeg`, `next = 0.15*scale + 85*Σcontrib/100`,
     * both truncating division). Integer sums are EXACT under any
     * accumulation order, so the result is bit-identical across partition
-    * layouts, core counts, and engines — unlike the double-precision
-    * [[pageRank]], whose 4dp-rounded output can legally flip at a rank
+    * layouts, core counts, and engines — unlike a double-precision
+    * PageRank, whose 4dp-rounded output can legally flip at a rank
     * boundary when partitioning changes the float accumulation order.
     * This is the variant a cross-engine replay oracle can verify exactly
     * (the g06 gate query replays it in a DuckDB recursive CTE), and the
@@ -638,18 +703,7 @@ object GraphAlgos {
     // Every arithmetic step stays truncating-integer (`div`), so the
     // bit-exactness contract (GraphSpec cross-engine golden + layout
     // independence) is unchanged.
-    val rels = if (relations.isEmpty) g.schema.relationDefs.map(_.name) else relations
-    val dict = g.nodeTables.toSeq.map { case (label, df) =>
-      df.select(col(IdCol).as("nid"), lit(label).as("nlabel"))
-    }.reduce(_ unionByName _)
-      .withColumn("vid", monotonically_increasing_id())
-      .localCheckpoint(true) // pin: partition-dependent ids (toGraphX rule)
-    val edges = rels.map { r =>
-      g.edgeTables(r)
-        .join(dict.select(col("nid").as(SrcCol), col("vid").as("svid")), Seq(SrcCol))
-        .join(dict.select(col("nid").as(DstCol), col("vid").as("dvid")), Seq(DstCol))
-        .select(col("svid").as("src"), col("dvid").as("dst"))
-    }.reduce(_ unionByName _)
+    val (dict, edges) = encode(g, relations)
     val ranks = pageRankFixedPointLong(dict.select(col("vid")), edges,
       iters, scale, localMaxEdges, localMaxVerts)
     val out = ranks.join(dict, Seq("vid"))
@@ -692,7 +746,7 @@ object GraphAlgos {
     // machinery: the O(Σ wedges) intersection work compares vertex ids
     // 41M+ times at sf0.1, and long compares beat string compares ~2.5×
     // end-to-end (measured 15.7s → 6s warm). Collision-free by
-    // construction (same rationale as toGraphX's dictionary).
+    // construction (same rationale as the node dictionary, [[encode]]).
     val dict = raw.select(explode(array(col("a"), col("b"))).as("nid"))
       .distinct()
       .withColumn("vid", monotonically_increasing_id())
@@ -702,11 +756,14 @@ object GraphAlgos {
       .join(dict.select(col("nid").as("b"), col("vid").as("ub")), Seq("b"))
       .select(col("ua").as("u"), col("ub").as("v"))
     val perNode = triangleCountEdges(pairs)
-    verts
+    val out = verts
       .join(dict.select(col("nid").as(IdCol), col("vid")), Seq(IdCol), "left")
       .join(perNode.select(col("vid"), col("n")), Seq("vid"), "left")
       .select(col("label"), col(IdCol),
         coalesce(col("n"), lit(0L)).cast("int").as("triangles"))
+      .localCheckpoint(true)
+    Seq(perNode, dict, raw).foreach(freePinned)
+    out
   }
 
   /** Long-keyed triangle core over raw (u, v) pairs — duplicates,

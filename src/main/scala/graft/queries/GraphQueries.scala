@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.graphx.{Edge, Graph}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -12,13 +11,14 @@ import Tables.t
   * tables projected as a property graph (customer —placed→ order —contains→
   * part), traversed with the PropertyGraph API, and checked against plain
   * join SQL — the "graph queries compile to joins, so they are
-  * oracle-checkable" self-check of SURVEY.md §5.2.4. Plus the GraphX
-  * algorithms: Pregel reachability (g04), connected components with a
-  * deterministically labeled oracle (g05), integer fixed-point PageRank
-  * replayed by a recursive-CTE oracle (g06), undirected BFS layers
-  * replayed the same way (g07), triangle counting over the part
-  * co-purchase projection with a 3-way-self-join oracle (g09), and
-  * bounded weighted SSSP replayed by a weighted recursive-CTE walk (g10).
+  * oracle-checkable" self-check of SURVEY.md §5.2.4. Plus the
+  * `GraphAlgos` kernels: directed reachability (g04), connected
+  * components with a deterministically labeled oracle (g05), integer
+  * fixed-point PageRank replayed by a recursive-CTE oracle (g06),
+  * undirected BFS layers replayed the same way (g07), triangle counting
+  * over the part co-purchase projection with a 3-way-self-join oracle
+  * (g09), and bounded weighted SSSP replayed by a weighted recursive-CTE
+  * walk (g10).
   */
 object GraphQueries {
 
@@ -47,11 +47,12 @@ object GraphQueries {
   private[graft] def tpchGraph(s: SparkSession, dir: String): PropertyGraph =
     tpchGraphImpl(s, dir, longIds = true)
 
-  /** String-keyed image ('c:1' prefixed natural keys) for the GraphX
-    * algorithm queries (g04/g06/g07): toGraphX dictionary-encodes node ids
-    * ONCE per run (not per hop), and their oracles compare/order the
-    * string id form, so the string image is both cheap and oracle-stable
-    * there. Traversal queries use the long-keyed [[tpchGraph]].
+  /** String-keyed image ('c:1' prefixed natural keys) for the
+    * PropertyGraph algorithm queries (g04/g07): `GraphAlgos` dictionary-
+    * encodes node ids ONCE per run (not per hop), and their oracles
+    * compare/order the string id form, so the string image is both cheap
+    * and oracle-stable there. Traversal queries use the long-keyed
+    * [[tpchGraph]].
     */
   private[queries] def tpchGraphStr(s: SparkSession, dir: String): PropertyGraph =
     tpchGraphImpl(s, dir, longIds = false)
@@ -198,11 +199,12 @@ object GraphQueries {
          WHERE c_mktsegment = 'AUTOMOBILE')
        GROUP BY part_id"""
 
-  // ------------------------------------------------- GraphX: reachability
-  // Parts reachable one `contains` hop from order o:1 via Pregel BFS —
-  // compared against the join-based oracle (bounded depth is joinable;
-  // unbounded depth is where Pregel becomes the only plan; GraphSpec covers
-  // a depth-2 walk).
+  // ------------------------------- reachability (frontier Bellman-Ford)
+  // Parts reachable one `contains` hop from order o:1 via directed
+  // unit-weight BFS (GraphAlgos.relatedN on the SSSP core) — compared
+  // against the join-based oracle (bounded depth is joinable; unbounded
+  // depth is where the iterative kernel becomes the only plan; GraphSpec
+  // covers a depth-2 walk).
   private val g04: Q = (s, dir) => {
     val g = tpchGraphStr(s, dir)
     graft.graph.GraphAlgos.relatedN(g, "contains", "o:1", 1)
@@ -213,29 +215,22 @@ object GraphQueries {
     """SELECT DISTINCT 'p:' || l_partkey AS part_id, 1 AS hops
        FROM lineitem WHERE l_orderkey = 1"""
 
-  // ------------------------------------- GraphX: connected components (CC)
+  // ------------------------------------------ connected components (CC)
   // customer–nation–region membership graph: every region forms one
   // component; labeling each component by its MIN numeric vertex id makes
-  // GraphX output deterministic and joinable to plain SQL. Vertex ids:
+  // the output deterministic and joinable to plain SQL. Vertex ids:
   // region = r_regionkey (0-4, always the component min), nation = 100+key,
-  // customer = 10000+key.
+  // customer = 10000+key. The shared CC kernel (GraphAlgos.
+  // connectedComponentsLong): union-find on the driver under its edge cap,
+  // GraphX past it.
   private val g05: Q = (s, dir) => {
-    val spark = s
-    import spark.implicits._
     val nation = t(s, dir, "nation")
-    val customer = t(s, dir, "customer")
-    val vertices = customer.select((col("c_custkey") + 10000).cast("long").as("vid"))
-      .unionByName(nation.select((col("n_nationkey") + 100).cast("long").as("vid")))
-      .unionByName(t(s, dir, "region").select(col("r_regionkey").cast("long").as("vid")))
-      .rdd.map(r => (r.getLong(0), ()))
-    val edges = customer
-      .select((col("c_custkey") + 10000).cast("long").as("s"),
-        (col("c_nationkey") + 100).cast("long").as("d"))
-      .unionByName(nation.select((col("n_nationkey") + 100).cast("long").as("s"),
-        col("n_regionkey").cast("long").as("d")))
-      .rdd.map(r => Edge(r.getLong(0), r.getLong(1), ()))
-    val cc = Graph(vertices, edges).connectedComponents().vertices
-    cc.toDF("vid", "component")
+    val edges = t(s, dir, "customer")
+      .select((col("c_custkey") + 10000).cast("long").as("src"),
+        (col("c_nationkey") + 100).cast("long").as("dst"))
+      .unionByName(nation.select((col("n_nationkey") + 100).cast("long").as("src"),
+        col("n_regionkey").cast("long").as("dst")))
+    graft.graph.GraphAlgos.connectedComponentsLong(edges)
       .where(col("vid") >= 10000)
       .select((col("vid") - 10000).as("c_custkey"), col("component"))
   }
@@ -246,7 +241,7 @@ object GraphQueries {
        JOIN nation ON n_nationkey = c_nationkey
        JOIN region ON r_regionkey = n_regionkey"""
 
-  // ------------------------------------------------- GraphX: PageRank
+  // ------------------------------------------------------------ PageRank
   // Part importance over the customer→order→part graph, via the
   // FIXED-POINT static PageRank (GraphAlgos.pageRankFixedPoint): integer
   // ranks make the result bit-identical across partition layouts and
@@ -255,7 +250,7 @@ object GraphQueries {
   // CTE keeps every node alive each iteration via zero-weight self-loops
   // (a node with no in-edges still re-ranks to 0.15), and duplicate
   // lineitem edges are kept — bag edges carry rank mass per occurrence,
-  // exactly like the GraphX edge RDD.
+  // exactly like the edge list the kernel iterates.
   private val g06Iters = 25
   private val g06: Q = (s, dir) => {
     // arithmetic vertex encoding (key * 4 + kind) into the long-keyed
@@ -316,8 +311,9 @@ object GraphQueries {
        ORDER BY rank DESC, node
        LIMIT 20"""
 
-  // ------------------------------------- GraphX: undirected BFS layers (g07)
-  // Unit-weight SSSP from customer c:0 over the whole star graph, layers
+  // ------------------------------------------ undirected BFS layers (g07)
+  // Unit-weight SSSP from customer c:0 over the whole star graph
+  // (GraphAlgos.hopDistance on the frontier Bellman-Ford core), layers
   // summarized as (label, hops, n_nodes, min_id). Oracle = recursive-CTE
   // BFS over the same bidirectional edge set with min-hop dedup — exact,
   // because BFS layers are engine-independent.
@@ -343,7 +339,7 @@ object GraphQueries {
               hops, count(*) AS n_nodes, min(node) AS min_id
        FROM dist GROUP BY 1, 2"""
 
-  // --------------------------------- GraphX: weighted shortest paths (g10)
+  // ----------------------------------------- weighted shortest paths (g10)
   // Bounded weighted SSSP from c:0: customer→order edges weigh 1, an
   // order→part edge weighs its l_quantity (parallel lineitem edges kept —
   // bag semantics, the min fold absorbs them). Distances summarized as
@@ -435,15 +431,15 @@ object GraphQueries {
       .ds.groupBy(col("name"))
       .agg(count(lit(1)).as("times_ordered"))
 
-  // ------------------------------------- GraphX: triangle counting (g09)
+  // ------------------------------------------------ triangle counting (g09)
   // Part co-purchase graph: parts are linked when some order contains both
   // (the one-mode projection of the bipartite order–part graph, canonical
-  // distinct pairs). GraphAlgos.triangleCount runs GraphX over it; the
-  // histogram (triangle count → how many parts) is engine-independent, so
-  // the oracle replays the triangles with a 3-way self-join in DuckDB.
-  // Scale shape: the projection's fan-out is bounded by per-order line
-  // count (≤7 in TPC-H, C(7,2)=21 pairs max per order), and GraphX
-  // iterates over the pair table, never the corpus.
+  // distinct pairs). GraphAlgos.triangleCountEdges counts over it with a
+  // DataFrame 2-join plan; the histogram (triangle count → how many parts)
+  // is engine-independent, so the oracle replays the triangles with a
+  // 3-way self-join in DuckDB. Scale shape: the projection's fan-out is
+  // bounded by per-order line count (≤7 in TPC-H, C(7,2)=21 pairs max per
+  // order), and the kernel works over the pair table, never the corpus.
   private val g09: Q = (s, dir) => {
     // The whole pipeline runs on LONG part keys: the co-purchase
     // projection is already long-keyed, so feed `triangleCountEdges` (the

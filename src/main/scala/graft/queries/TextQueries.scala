@@ -399,10 +399,12 @@ object TextQueries {
 
   // ------------------------------------------------- near-dup clustering
   // The retention step after pair generation: transitive clusters over the
-  // t07 exact-Jaccard pairs (GraphX connected components) with the min-id
-  // member as canonical survivor. The oracle replays the clustering with a
-  // recursive-CTE transitive closure over the same pair set — tractable
-  // because the pair graph is dup-mass-sized, not corpus-sized.
+  // t07 exact-Jaccard pairs (Dedup.clusters: the shared CC kernel —
+  // union-find on the driver at this pair count, GraphX past its cap) with
+  // the min-id member as canonical survivor. The oracle replays the
+  // clustering with a recursive-CTE transitive closure over the same pair
+  // set — tractable because the pair graph is dup-mass-sized, not
+  // corpus-sized.
   private val t12: Q = (s, dir) =>
     Dedup.clusters(Dedup.ngramJaccardPairs(t(s, dir, "documents"),
       "doc_id", "text", threshold = 0.1, shingleN = 3, maxDf = t07MaxDf,

@@ -401,7 +401,7 @@ object Streams {
     * re-emit the full result every data batch, so the final no-data batch
     * only re-runs the output stage to produce byte-identical sink
     * contents (~0.5s of pure machinery per drain at gate scale, measured
-    * interleaved in R17AbExperiment E3 with row parity pinned). APPEND
+    * interleaved with row parity pinned, OPTIMIZATION_r17.md). APPEND
     * and timer-bearing drains MUST keep it: their final emissions are
     * exactly what the watermark-advance batch flushes. Session-global
     * conf, so the same save/set/restore scope as the provider swap.

@@ -343,59 +343,65 @@ class GraphSpec extends SparkSpec {
   }
 
   test("graph algorithms release their GraphX caches per call") {
-    // the sf1 leak regression pin, detected by STORAGE SIZE, not RDD
-    // identity: GraphX's VertexRDDImpl/EdgeRDDImpl persist their
-    // underlying partitionsRDDs (plain MapPartitionsRDDs — no
-    // class/name signature), and both legitimate result pins and
-    // GraphX-internal small pins accumulate per call, so counting
-    // entries can't discriminate. What CAN: a leaked graph retains
-    // graph-sized bytes, a released one retains only the (tiny) result.
-    // Calibrate the detector on a deliberately-leaked raw graph of the
-    // same scale first, so a Spark-internals change that blinds the
-    // metric fails the test instead of vacuously passing it.
-    def storedBytes(): Long = spark.sparkContext.getRDDStorageInfo
-      .map(i => i.memSize + i.diskSize).sum
-    def delta(body: => Unit): Long = {
-      val before = storedBytes()
-      body
-      storedBytes() - before
-    }
+    // residue law: after collect() and Pinned.free(result), the cached-RDD
+    // set is back to what it was before the call — every scratch pin
+    // (dictionaries, frontiers, GraphX graphs) freed by the entry itself.
+    // Pinned.free does not block, so poll briefly.
     import spark.implicits._
-    def chainEdges = spark.range(200000)
-      .selectExpr("id as src", "id + 1 as dst", "cast(1.0 as double) as weight")
-
-    // calibration: an unreleased graph of this size retains megabytes
-    var leaked: org.apache.spark.graphx.Graph[Unit, Double] = null
-    val leakedBytes = delta {
-      leaked = org.apache.spark.graphx.Graph.fromEdges(
-        chainEdges.as[(Long, Long, Double)].rdd
-          .map(e => org.apache.spark.graphx.Edge(e._1, e._2, e._3)),
-        defaultValue = ())
-      leaked.vertices.count(); leaked.edges.count()
+    def cached(): Set[Int] = spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
+    def residue(result: => org.apache.spark.sql.DataFrame): Set[Int] = {
+      val before = cached()
+      val out = result
+      out.collect()
+      graft.Pinned.free(out)
+      val deadline = System.nanoTime() + 3000000000L
+      var left = cached() -- before
+      while (left.nonEmpty && System.nanoTime() < deadline) {
+        Thread.sleep(50)
+        left = cached() -- before
+      }
+      left
     }
-    assert(leakedBytes > (2L << 20),
-      s"detector blind: leaked 200k-edge graph retained only $leakedBytes bytes")
-    leaked.unpersist(blocking = true)
-
-    // the released algorithm on the same edges must retain well under a
-    // quarter of that — only the checkpointed result rows and GraphX's
-    // small internal remnants, never the graph
-    // caps 0 force the DISTRIBUTED loop — the release pattern under test
-    // (the default caps would take the collect-based local path, which
-    // pins nothing and would pass vacuously)
-    val algoBytes = delta {
-      graft.graph.GraphAlgos.weightedDistanceLong(chainEdges, start = 0L,
-        maxIters = 3, localVertexCap = 0, localRowCap = 0).count()
+    // calibration: a pin the result does not reach must show up
+    var stray: org.apache.spark.sql.DataFrame = null
+    val calibration = residue {
+      stray = spark.range(8).toDF().localCheckpoint(true)
+      spark.range(1).toDF()
     }
-    assert(algoBytes < leakedBytes / 4,
-      s"weightedDistanceLong retained $algoBytes bytes (leak calibration: $leakedBytes)")
+    assert(calibration.nonEmpty, "detector blind: a stray pin left no residue")
+    graft.Pinned.free(stray)
 
-    // Dedup.clusters shares the same materialize-then-unpersist pattern
-    // but is NOT size-assertable this way: its RESULT is legitimately
-    // vertex-sized (one row per doc — measured ~100 B/row pinned), so a
-    // retained-bytes bound cannot separate the result pin from a leaked
-    // graph of the same order. Its release is the identical code path
-    // exercised above; correctness of the output is t12's oracle.
+    g.nodeTables.values.foreach(_.count()); g.edgeTables.values.foreach(_.count())
+    val pairs = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (8L, 9L))
+    val weighted = pairs.map { case (a, b) => (a, b, 1.0) }.toDF("src", "dst", "weight")
+    val named = pairs.map { case (a, b) => (s"n$a", s"n$b", 1.0) }
+      .toDF("src", "dst", "weight")
+    val ga = graft.graph.GraphAlgos
+    val entries: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+      "relatedN" -> (() => ga.relatedN(g, "friend", "person:jane", 2)),
+      "hopDistance" -> (() => ga.hopDistance(g, "person:jane", 2)),
+      "connectedComponents" -> (() => ga.connectedComponents(g, Seq("friend"))),
+      "weightedDistance" -> (() => ga.weightedDistance(named, "n1", 3)),
+      "weightedDistanceLong local" -> (() => ga.weightedDistanceLong(weighted, 1L, 3)),
+      "weightedDistanceLong distributed" -> (() => ga.weightedDistanceLong(weighted, 1L, 3,
+        localVertexCap = 0, localRowCap = 0)),
+      "connectedComponentsLong local" -> (() => ga.connectedComponentsLong(weighted)),
+      "connectedComponentsLong distributed" -> (() =>
+        ga.connectedComponentsLong(weighted, localMaxEdges = 0L)),
+      "pageRankFixedPoint local" -> (() => ga.pageRankFixedPoint(g, iters = 3)),
+      "pageRankFixedPoint distributed" -> (() => ga.pageRankFixedPoint(g, iters = 3,
+        localMaxEdges = 0L, localMaxVerts = 0L)),
+      "pageRankFixedPointLong" -> (() => ga.pageRankFixedPointLong(
+        Seq(1L, 2L, 3L, 4L, 8L, 9L).toDF("vid"), weighted, iters = 3)),
+      "triangleCount" -> (() => ga.triangleCount(g, Seq("friend"))),
+      "triangleCountEdges" -> (() => ga.triangleCountEdges(
+        weighted.select(col("src").as("u"), col("dst").as("v")))),
+      "Dedup.clusters" -> (() => graft.dedup.Dedup.clusters(
+        weighted.select(col("src").as("doc_a"), col("dst").as("doc_b")))))
+    entries.foreach { case (name, run) =>
+      val left = residue(run())
+      assert(left.isEmpty, s"$name left cached RDDs $left behind")
+    }
   }
 
   test("connectedComponents labels by min member id via the collision-free dictionary") {
@@ -535,6 +541,26 @@ class GraphSpec extends SparkSpec {
     // 0→2→1 detour at 3.0
     assert(run(8192, 1000000, 1)(1L) === 10.0)
     assert(run(8192, 1000000, 2)(1L) === 2.0)
+    // the relatedN shape: directed, unit weights — same law at caps
+    // 0, 1 and default
+    val unit = edges.withColumn("weight", lit(1.0))
+    def runDirected(vCap: Int, rCap: Int, iters: Int): Map[Long, Double] =
+      graft.graph.GraphAlgos.weightedDistanceLong(unit, start = 0L,
+        maxIters = iters, directed = true, localVertexCap = vCap, localRowCap = rCap)
+        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    for (iters <- 1 to 4) {
+      val distributed = runDirected(0, 0, iters)
+      assert(runDirected(8192, 1000000, iters) === distributed,
+        s"directed local path diverged at iters=$iters")
+      assert(runDirected(1, 1000000, iters) === distributed,
+        s"directed vertex-cap bail diverged at iters=$iters")
+      assert(runDirected(8192, 1, iters) === distributed,
+        s"directed row-cap bail diverged at iters=$iters")
+    }
+    // directed BFS layers: 3 is two hops out (0→1→3), and the 3→0 edge
+    // is never walked backwards
+    assert(runDirected(8192, 1000000, 4) ===
+      Map(0L -> 0.0, 1L -> 1.0, 2L -> 1.0, 3L -> 2.0))
   }
 
   test("save clusters edges by src; bucketed tables self-join without shuffle") {

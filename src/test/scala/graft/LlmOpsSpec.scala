@@ -606,22 +606,31 @@ class LlmOpsSpec extends SparkSpec {
   test("clusters: driver-local union-find ≡ distributed GraphX CC") {
     import spark.implicits._
     // a messy fixture: chains, a cycle, duplicate and reversed pairs, a
-    // self-contained pair far from the rest — every shape the min-id
-    // label and size count must agree on across the two regimes
+    // self-contained pair far from the rest, and a pair above 2^53 (labels
+    // must stay exact longs, never pass through a double) — every shape
+    // the min-id label must agree on across the shared CC kernel's two
+    // regimes
+    val big = (1L << 53) + 1
     val pairs = Seq(
       (2L, 3L), (1L, 2L), (3L, 1L), (3L, 4L), // cycle + tail: {1,2,3,4}
       (11L, 10L), (10L, 11L),                 // duplicate + reversed pair
       (7L, 8L), (8L, 9L),                     // chain {7,8,9}
-      (20L, 21L))                             // isolated pair
+      (20L, 21L),                             // isolated pair
+      (big + 2, big))                         // ids above 2^53
       .toDF("doc_a", "doc_b")
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
+    def labels(cap: Long) = graft.graph.GraphAlgos.connectedComponentsLong(
+        pairs.select(col("doc_a").as("src"), col("doc_b").as("dst")), cap)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val local = labels(graft.graph.GraphAlgos.LocalClustersMaxPairs) // 10 pairs ≪ cap
+    val dist = labels(0L)                                             // forced GraphX
+    assert(local === dist, s"local $local\ndistributed $dist")
+    assert(local(big + 2) === big)
+    // Dedup.clusters derives its rows from the same kernel labels
+    val rows = Dedup.clusters(pairs).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getBoolean(3)))
       .toSet
-    val local = rows(Dedup.clusters(pairs)) // 9 pairs ≪ cap → local path
-    val dist = rows(Dedup.distributedClusters(
-      pairs.select(col("doc_a"), col("doc_b")).as[(Long, Long)]))
-    assert(local === dist, s"local $local\ndistributed $dist")
-    assert(local.exists { case (c, d, n, s) => c == 1L && d == 4L && n == 4L && !s })
+    assert(rows.contains((1L, 4L, 4L, false)))
+    assert(rows.contains((big, big + 2, 2L, false)) && rows.contains((big, big, 2L, true)))
   }
 
   test("PII redaction scrubs emails and phones, leaves clean text alone") {

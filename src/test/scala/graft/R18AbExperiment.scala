@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.streaming.Streams
 
-/** Round-18 same-session interleaved A/B experiments (the R17AbExperiment
+/** Round-18 same-session interleaved A/B experiments (the round-17 A/B
   * harness: hypervisor steal swings cross-run totals 1.5-2x within
   * minutes, so every A/B runs its variant pairs back-to-back x3 inside
   * ONE session and reports per-rep seconds).
