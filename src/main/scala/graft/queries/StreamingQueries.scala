@@ -8,10 +8,10 @@ import org.apache.spark.sql.functions._
 import graft.streaming.Streams
 
 /** Structured Streaming entries run synchronously against the events
-  * parquet replayed as a file stream (Trigger.AvailableNow → drain →
-  * memory sink). The DuckDB oracle is the equivalent batch SQL — the
-  * batch-stream equivalence check of SURVEY.md §5.2.5, wired straight into
-  * the driver's correctness gate.
+  * parquet replayed as a file stream (an AvailableNow drain into the
+  * memory sink, `Streams.runToMemory`). The DuckDB oracle is the
+  * equivalent batch SQL — the batch-stream equivalence check of SURVEY.md
+  * §5.2.5, wired straight into the driver's correctness gate.
   */
 object StreamingQueries {
 

@@ -1,8 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState,
+  GroupStateTimeout, OutputMode, Trigger}
 import org.apache.spark.sql.types._
 
 /** Structured Streaming surface (SURVEY.md §2.3 streaming; Phase 5): the
@@ -178,26 +179,6 @@ object Streams {
     }
   }
 
-  /** Run a streaming DataFrame to completion against the currently
-    * available input (one synchronous drain), returning the result table.
-    *
-    * `stateStoreProvider` selects the state store for THIS drain
-    * (restored afterwards); large-key-space operators pass
-    * [[RocksDB]], tiny-key windowed aggregates leave it unset.
-    */
-  /** Drain a streaming frame to a memory sink and return the result.
-    *
-    * `statePartitions` sizes the STATE STORE instance count for stateful
-    * queries (state partitioning = the stateful operator's shuffle
-    * partitioning, fixed at first run): every micro-batch opens and
-    * commits one store per partition, a per-instance fixed cost that
-    * dwarfs per-row work when state is small — s05 profiled 4.1s → 2.6s
-    * at sf0.1 going 32 → 8 RocksDB instances, identical output. Size it
-    * by expected keyed-state volume (a 100 TB deployment with hundreds
-    * of millions of session keys wants hundreds of partitions; a gate-
-    * scale drain wants single digits), not by the session's relational
-    * shuffle width. None = inherit the session conf.
-    */
   /** On-disk bytes of a streaming source — driver-side FS metadata, no
     * Spark job, so sizing decisions never tax the drain they size.
     */
@@ -211,26 +192,27 @@ object Streams {
     * from the source table's on-disk size. Measured anchors: on s05
     * (session_window over events, RocksDB) at 2 MB source (100k rows) 8
     * stores beat 32 by 1.6×; the round-15 sf1 grid (12 MB source, 1M
-    * rows, S09ProfileExperiment) re-measured FOUR gates at 4/6/8/16/32
-    * stores — s09 6.8→4.4s, s08 4.2→2.8s, s07 2.8→2.1s, s05 4.8→3.9s
-    * going 32→8, with 4 and 6 inside noise of 8 — the per-instance
-    * open+commit fixed cost dominates through at least 12 MB of source,
-    * across both backends and all four operator shapes. One store per
-    * 2 MiB of source parquet keeps everything at this corpus scale on
-    * the measured-best 8 (the floor); the cap scales with the cluster
-    * (defaultParallelism), so a 100 TB deployment sizes to its executor
-    * count, not to 32.
+    * rows, SURVEY.md "Streaming drain fixed costs") re-measured FOUR
+    * gates at 4/6/8/16/32 stores — s09 6.8→4.4s, s08 4.2→2.8s, s07
+    * 2.8→2.1s, s05 4.8→3.9s going 32→8, with 4 and 6 inside noise of
+    * 8 — the per-instance open+commit fixed cost dominates through at
+    * least 12 MB of source, across both backends and all four operator
+    * shapes. One store per 2 MiB of source parquet keeps everything at
+    * this corpus scale on the measured-best 8 (the floor); the cap
+    * scales with the cluster (defaultParallelism), so a 100 TB
+    * deployment sizes to its executor count, not to 32.
     *
     * Below 8 the ladder is EXHAUSTED: the round-16 sf0.1 sweep
-    * (S07FloorExperiment) re-measured 2/4/8 stores for s07/s08/s09 —
-    * all inside run-to-run noise — and RocksDB changelog checkpointing
-    * (commit = changelog append instead of SST snapshot) measured
-    * flat-to-worse on both TWS gates. What remains is per-BATCH
-    * machinery, attributed by S09ProfileExperiment's progress log at
-    * sf0.1: s09 ≈ 0.4s query start + memory-sink copy, 1.35s data-batch
-    * addBatch, 0.85s watermark-finalization (no-data) addBatch — state
-    * commit + append-emission scans that run once per micro-batch
-    * whatever the volume. That floor AMORTIZES with data but — per the
+    * (SURVEY.md "The streaming floor is NAMED") re-measured 2/4/8 stores
+    * for s07/s08/s09 — all inside run-to-run noise — and RocksDB
+    * changelog checkpointing (commit = changelog append instead of SST
+    * snapshot) measured flat-to-worse on both TWS gates. What remains is
+    * per-BATCH machinery, attributed from the round-15 progress log
+    * (OPTIMIZATION_r17.md §3) at sf0.1: s09 ≈ 0.4s query start +
+    * memory-sink copy, 1.35s data-batch addBatch, 0.85s
+    * watermark-finalization (no-data) addBatch — state commit +
+    * append-emission scans that run once per micro-batch whatever the
+    * volume. That floor AMORTIZES with data but — per the
     * committed clean sf1 pair (BENCH_sf1_r16b vs DUCK_sf1_r16) — has
     * only crossed under DuckDB for the ingest-volume gates (s12 0.37×,
     * s13 0.26×, s14 0.49×); the fixed-floor machinery gates grow just
@@ -330,9 +312,34 @@ object Streams {
       finally walk.close()
     } catch { case scala.util.control.NonFatal(_) => () }
 
-  /** Drain `df` (Trigger.AvailableNow → awaitTermination) and return the
-    * emitted rows as a batch frame. `resultSink` None = the memory sink
-    * (result copied out of driver memory and the temp view dropped);
+  /** The drain core: start `w` with `Trigger.AvailableNow`, block until
+    * the query has processed every input available at start, and stop it.
+    * Every drain in this object runs through here.
+    *
+    * Failure semantics: a failed micro-batch surfaces as the
+    * `StreamingQueryException` (cause = the batch's own error) that
+    * `awaitTermination` throws. Whatever leaves the await — that
+    * exception, an `InterruptedException` of the awaiting thread, a fatal
+    * error — passes through `q.stop()` first, which cancels the query's
+    * jobs and joins its thread, so no query outlives its drain and no
+    * caller's cleanup deletes input or checkpoint files under a running
+    * query. `stop()` on a query that already terminated is a no-op.
+    *
+    * Cleanup: the core owns only the query. The sink, the checkpoint
+    * location and any staged input belong to the caller, which removes
+    * them after this returns or throws.
+    */
+  private def drain(w: DataStreamWriter[_]): Unit = {
+    val q = w.trigger(Trigger.AvailableNow()).start()
+    try q.awaitTermination()
+    finally q.stop()
+  }
+
+  /** Drain `df` against its currently available input (one synchronous
+    * [[drain]]) and return the emitted rows as a batch frame.
+    *
+    * `resultSink` None = the memory sink: the result is copied out of
+    * driver memory and the temp view dropped, also when the drain fails.
     * Some("parquet") = a file sink under java.io.tmpdir — callers whose
     * output is source-sized pass [[resultSinkForSource]]. The parquet
     * variant keeps its ~result-sized directory for the JVM's lifetime
@@ -342,6 +349,21 @@ object Streams {
     * result-sized directories in /tmp until OS reaping. Any other
     * Some(name) is an error, not a silent fall-through to the
     * driver-collecting memory sink.
+    *
+    * `stateStoreProvider` selects the state store for THIS drain
+    * (restored afterwards); large-key-space operators pass [[RocksDB]],
+    * tiny-key windowed aggregates leave it unset.
+    *
+    * `statePartitions` sizes the STATE STORE instance count for stateful
+    * queries (state partitioning = the stateful operator's shuffle
+    * partitioning, fixed at first run): every micro-batch opens and
+    * commits one store per partition, a per-instance fixed cost that
+    * dwarfs per-row work when state is small — s05 profiled 4.1s → 2.6s
+    * at sf0.1 going 32 → 8 RocksDB instances, identical output. Size it
+    * by expected keyed-state volume (a 100 TB deployment with hundreds
+    * of millions of session keys wants hundreds of partitions; a gate-
+    * scale drain wants single digits), not by the session's relational
+    * shuffle width. None = inherit the session conf.
     */
   def runToMemory(spark: SparkSession, df: DataFrame, name: String,
       mode: String = "complete",
@@ -361,14 +383,11 @@ object Streams {
             // _spark_metadata-committed files as this drain's result
             val root = registerDrainRoot(java.nio.file.Files
               .createTempDirectory(s"graft_drain_${name}_")).toString
-            val q = df.writeStream
+            drain(df.writeStream
               .format("parquet")
               .option("path", s"$root/data")
               .option("checkpointLocation", s"$root/ckpt")
-              .outputMode(mode)
-              .trigger(Trigger.AvailableNow())
-              .start()
-            q.awaitTermination()
+              .outputMode(mode))
             // a drain that emitted nothing leaves no parquet footers to
             // infer from — hand the reader the query's own schema
             spark.read.schema(df.schema).parquet(s"$root/data")
@@ -377,20 +396,17 @@ object Streams {
               s"unsupported result sink '$other' — supported: " +
                 "None (memory) or Some(\"parquet\")")
           case None =>
-            val q = df.writeStream
-              .format("memory")
-              .queryName(name)
-              .outputMode(mode)
-              .trigger(Trigger.AvailableNow())
-              .start()
-            q.awaitTermination()
             // copy the result out of the memory sink and DROP it: the sink
             // holds the full result set in driver memory, and repeated
             // drains (bench reps) would otherwise accumulate one retained
             // table per run
-            val out = spark.table(name).localCheckpoint(true)
-            spark.catalog.dropTempView(name)
-            out
+            try {
+              drain(df.writeStream
+                .format("memory")
+                .queryName(name)
+                .outputMode(mode))
+              spark.table(name).localCheckpoint(true)
+            } finally spark.catalog.dropTempView(name)
         }
        }
       }
@@ -985,55 +1001,8 @@ object Streams {
     }
   }
 
-  // ---------------------- continuous-ingest semantic dedup (s11, round 10)
+  // ------------------------------------------ continuous-ingest machinery
 
-  /** Streaming semantic dedup — the continuous-ingest form of
-    * [[graft.dedup.Dedup.semanticDedupIncremental]] (v13): new documents
-    * arrive as a stream, each micro-batch is deduplicated against the
-    * persisted IVF corpus layout PLUS every previously-streamed document,
-    * then folded into the reference set — so a near-dup arriving an hour
-    * after its source is caught even though neither is in the base corpus.
-    *
-    * Semantics are EXACTLY v13's when micro-batches arrive in ascending id
-    * order: a doc's dup sources are the corpus (any id) plus lower-id new
-    * docs — whether the lower-id doc came in an earlier micro-batch
-    * (visible via the accumulated reference set) or the same one (visible
-    * via the operator's internal lower-id pairing). The verdicts are
-    * therefore INVARIANT to how the stream is batched (1 file or N — the
-    * StreamingSpec law), and the driver oracle is v13's SQL verbatim.
-    *
-    * Shape: `foreachBatch` — dedup is a multi-stage join pipeline (cell
-    * assignment → pruned corpus join → verdict rollup), far beyond what a
-    * single stateful streaming operator expresses, and the micro-batch
-    * boundary is precisely the nightly/hourly ingest-tick this operator
-    * models. Inside each tick everything is the PROVEN batch operator;
-    * streaming adds only the fold. At 100 TB the accumulated-docs append
-    * would target the layout's `partitionBy(cluster_id)` directory itself
-    * (tiny per-tick deltas, compacted offline); here it is a flat parquet
-    * dir the next tick unions in — same plan shape, the corpus side still
-    * reaches the join pruned to the batch's probed cells.
-    *
-    * Determinism of the drain: the input files are staged by ascending id
-    * range with strictly increasing mtimes and the file source is capped
-    * `maxFilesPerTrigger=1`, so AvailableNow replays them oldest-first —
-    * one micro-batch per file, in id order.
-    */
-  /** Stage `batch` as `n` id-ordered parquet files with strictly
-    * increasing mtimes under `$work/input` — the replayable input both
-    * continuous-ingest operators drain: `maxFilesPerTrigger=1` +
-    * AvailableNow then replays them oldest-first, one micro-batch per
-    * file, in ascending id order.
-    *
-    * Slicing is by id VALUE range (one scalar min/max agg, then n fully
-    * parallel filters over the pinned batch), not by rank: an exact
-    * equal-count split would need `ntile` over a GLOBAL sort window —
-    * the whole batch funneled through one task, the exact straggler
-    * shape the rest of the codebase bans. Value slices can be unequal
-    * (ids needn't be uniform) and that is fine BY LAW: the
-    * continuous-ingest operators are tick-INVARIANT (StreamingSpec), so
-    * slice sizing affects staging balance only, never verdicts — only
-    * the ascending-range order across files matters.
-    */
   /** One micro-batch's output, keyed by its batchId partition — the
     * replay-idempotence primitive of the continuous-ingest operators:
     * foreachBatch is at-least-once, and dynamic partition overwrite makes
@@ -1051,49 +1020,64 @@ object Streams {
     // list-and-commit cost over the whole table
     df.write.mode("overwrite").parquet(s"$dir/batch=$batchId")
 
-  // bounded pool for concurrent per-tick sink writes: daemon threads so a
-  // dying JVM never hangs on it, and a fixed size (max writes per tick is
-  // 3 today) so a future many-store drain can't fan out unboundedly
-  private lazy val tickWritePool =
-    java.util.concurrent.Executors.newFixedThreadPool(4,
-      (r: Runnable) => {
-        val t = new Thread(r, "graft-tick-write"); t.setDaemon(true); t
-      })
-
   /** Run a tick's INDEPENDENT sink writes as concurrent Spark jobs
     * (optimization guide §2.6: actions are only sequential because the
-    * caller invokes them sequentially). Each continuous-ingest tick ends
-    * in 2-3 writes of tiny derived tables whose cost is per-job floor
-    * (scan + schedule + commit), not data volume, so overlapping them
-    * cuts the tick's write wall-time to ~max(job) instead of Σ(job).
+    * caller invokes them sequentially; measured in OPTIMIZATION_r18.md
+    * §2). Each continuous-ingest tick ends in 2-3 writes of tiny derived
+    * tables whose cost is per-job floor (scan + schedule + commit), not
+    * data volume, so overlapping them cuts the tick's write wall-time to
+    * ~max(job) instead of Σ(job).
     *
-    * Failure semantics: ALL writes are awaited to COMPLETION (success or
-    * failure) before the first failure is rethrown — never fail-fast. A
-    * fail-fast return could leave a straggler write job running while the
-    * stream replays the batch, and the replay's overwrite of that same
-    * `batch=N` directory would then race the straggler. With the quiesce,
-    * a failed batch leaves no job behind, the batch does not commit, and
-    * the batchId-keyed overwrite heals the replay exactly as on the
-    * sequential path.
+    * Each write runs on its own daemon thread, created by the caller, so
+    * it inherits the CALLER's SparkContext local properties (job group,
+    * execution id, interrupt-on-cancel: Spark clones them into every
+    * thread at creation), plus one job tag shared by this call. A
+    * stream's `stop()` therefore cancels the writes with the rest of its
+    * job group. A long-lived pool would not: its threads keep the
+    * properties of whichever caller created them.
     *
-    * `-Dgraft.tickWrites.sequential=true` restores the sequential path —
-    * the A-arm of the R18AbExperiment measurement, kept so the comparison
-    * stays re-runnable.
+    * Failure semantics:
+    *   - ALL writes are awaited to COMPLETION (success or failure) before
+    *     the first failure in argument order is rethrown — never
+    *     fail-fast. A fail-fast return could leave a straggler write job
+    *     running while the stream replays the batch, and the replay's
+    *     overwrite of that same `batch=N` directory would then race the
+    *     straggler. With the quiesce, a failed batch leaves no job
+    *     behind, the batch does not commit, and the batchId-keyed
+    *     overwrite heals the replay.
+    *   - Every Throwable is captured, fatal errors included, so every
+    *     thread ends and the unbounded await cannot hang on a dead write.
+    *   - If the caller is interrupted while awaiting, the call's jobs are
+    *     cancelled by its tag, the writes are awaited (each ends once its
+    *     job's cancellation surfaces), and the InterruptedException is
+    *     rethrown.
     */
-  private[graft] def writeConcurrently(writes: (() => Unit)*): Unit =
-    if (writes.sizeIs <= 1 ||
-        sys.props.get("graft.tickWrites.sequential").contains("true"))
-      writes.foreach(_())
-    else {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
-      implicit val ec: ExecutionContext =
-        ExecutionContext.fromExecutor(tickWritePool)
-      val done = Await.result(
-        Future.sequence(writes.map(w => Future(scala.util.Try(w())))),
-        Duration.Inf)
-      done.foreach(_.get) // rethrow the first failure AFTER all quiesced
+  private[graft] def writeConcurrently(spark: SparkSession)(
+      writes: (() => Unit)*): Unit = {
+    val sc = spark.sparkContext
+    val tag = s"graft-tick-write-${java.util.UUID.randomUUID()}"
+    val failures = new Array[Throwable](writes.size)
+    val threads = writes.zipWithIndex.map { case (w, i) =>
+      val t = new Thread(() =>
+        try { sc.addJobTag(tag); w() }
+        catch { case e: Throwable => failures(i) = e },
+        "graft-tick-write")
+      t.setDaemon(true)
+      t.start()
+      t
     }
+    try threads.foreach(_.join())
+    catch {
+      case ie: InterruptedException =>
+        sc.cancelJobsWithTag(tag)
+        threads.foreach { t =>
+          while (t.isAlive)
+            try t.join() catch { case _: InterruptedException => () }
+        }
+        throw ie
+    }
+    failures.find(_ != null).foreach(e => throw e)
+  }
 
   /** All ticks written so far to `dir`, with the physical batch partition
     * column dropped so readers see the logical schema.
@@ -1118,6 +1102,22 @@ object Streams {
     else None
   }
 
+  /** Stage `batch` as `n` id-ordered parquet files with strictly
+    * increasing mtimes under `$work/input` — the replayable input every
+    * continuous-ingest operator drains: `maxFilesPerTrigger=1` +
+    * AvailableNow then replays them oldest-first, one micro-batch per
+    * file, in ascending id order.
+    *
+    * Slicing is by id VALUE range (one scalar min/max agg, then n fully
+    * parallel filters over the pinned batch), not by rank: an exact
+    * equal-count split would need `ntile` over a GLOBAL sort window —
+    * the whole batch funneled through one task, the exact straggler
+    * shape the rest of the codebase bans. Value slices can be unequal
+    * (ids needn't be uniform) and that is fine BY LAW: the
+    * continuous-ingest operators are tick-INVARIANT (StreamingSpec), so
+    * slice sizing affects staging balance only, never verdicts — only
+    * the ascending-range order across files matters.
+    */
   private[graft] def stageOrderedInput(batch: DataFrame, idCol: String,
       work: String, n: Int): java.io.File = {
     val inputDir = new java.io.File(s"$work/input"); inputDir.mkdirs()
@@ -1160,71 +1160,135 @@ object Streams {
     inputDir
   }
 
+  /** The continuous-ingest drain every s11–s15 operator runs on: stage
+    * `batch` as `nInputFiles` id-ordered files ([[stageOrderedInput]]),
+    * replay them through a `maxFilesPerTrigger=1` file source — one
+    * micro-batch per file, in ascending id order — with `tick` as the
+    * foreachBatch body, then run `readBack` and return its result.
+    *
+    * `tick` and `readBack` receive the call's private work dir. What a
+    * tick writes there (verdicts, folds, overlays) lives only as long as
+    * the call, so `readBack` must materialize whatever the result still
+    * reads from it. Each tick body keeps its own empty-batch guard.
+    *
+    * Failure semantics: the drain runs on [[drain]], so a failed tick
+    * surfaces as the StreamingQueryException carrying the tick's error,
+    * and the query is stopped before cleanup starts — also when the
+    * caller is interrupted.
+    *
+    * Cleanup: the wrapper owns the work dir (staged input, checkpoint,
+    * tick outputs) and removes it with [[deleteTree]] on every exit path.
+    * deleteTree swallows per-file errors, so a straggler state or
+    * checkpoint file appearing or vanishing mid-walk never replaces the
+    * drain's result or exception. Pins made by `tick` or `readBack` are
+    * theirs to release.
+    */
+  private def stagedIngest[A](spark: SparkSession, batch: DataFrame,
+      idCol: String, nInputFiles: Int, prefix: String)(
+      tick: String => (DataFrame, Long) => Unit)(readBack: String => A): A = {
+    require(nInputFiles >= 1, s"nInputFiles must be >= 1, got $nInputFiles")
+    val work = java.nio.file.Files.createTempDirectory(prefix)
+    try {
+      val dir = work.toString
+      val body = tick(dir)
+      drain(spark.readStream
+        .schema(batch.schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(stageOrderedInput(batch, idCol, dir, nInputFiles).toString)
+        .writeStream
+        .foreachBatch((mb: Dataset[Row], batchId: Long) => body(mb.toDF(), batchId))
+        .option("checkpointLocation", s"$dir/ckpt"))
+      readBack(dir)
+    } finally deleteTree(work)
+  }
+
+  /** The verdict ticks a dedup drain wrote under `dir`, pinned so they
+    * outlive the work dir. A drain whose ticks were all empty wrote none
+    * and gets an empty frame of the non-empty path's `schema`.
+    */
+  private def verdictsOrEmpty(spark: SparkSession, dir: String,
+      schema: StructType): DataFrame =
+    if (new java.io.File(dir).isDirectory)
+      readTicks(spark, dir).localCheckpoint(true)
+    else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+
+  /** s11/s12 verdict schema: the id column keeps the caller's name and
+    * type (not a hardcoded doc_id LONG), as on the non-empty path.
+    */
+  private def dupVerdictSchema(batch: DataFrame, idCol: String): StructType = {
+    val idT = batch.schema(idCol).dataType
+    StructType(Seq(
+      StructField(idCol, idT), StructField("n_dup_sources", LongType),
+      StructField("dup_of", idT), StructField("is_dup", BooleanType)))
+  }
+
+  // ---------------------- continuous-ingest semantic dedup (s11, round 10)
+
+  /** Streaming semantic dedup — the continuous-ingest form of
+    * [[graft.dedup.Dedup.semanticDedupIncremental]] (v13): new documents
+    * arrive as a stream, each micro-batch is deduplicated against the
+    * persisted IVF corpus layout PLUS every previously-streamed document,
+    * then folded into the reference set — so a near-dup arriving an hour
+    * after its source is caught even though neither is in the base corpus.
+    *
+    * Semantics are EXACTLY v13's when micro-batches arrive in ascending id
+    * order: a doc's dup sources are the corpus (any id) plus lower-id new
+    * docs — whether the lower-id doc came in an earlier micro-batch
+    * (visible via the accumulated reference set) or the same one (visible
+    * via the operator's internal lower-id pairing). The verdicts are
+    * therefore INVARIANT to how the stream is batched (1 file or N — the
+    * StreamingSpec law), and the driver oracle is v13's SQL verbatim.
+    *
+    * Shape: `foreachBatch` — dedup is a multi-stage join pipeline (cell
+    * assignment → pruned corpus join → verdict rollup), far beyond what a
+    * single stateful streaming operator expresses, and the micro-batch
+    * boundary is precisely the nightly/hourly ingest-tick this operator
+    * models. Inside each tick everything is the PROVEN batch operator;
+    * streaming adds only the fold. At 100 TB the accumulated-docs append
+    * would target the layout's `partitionBy(cluster_id)` directory itself
+    * (tiny per-tick deltas, compacted offline); here it is a flat parquet
+    * dir the next tick unions in — same plan shape, the corpus side still
+    * reaches the join pruned to the batch's probed cells.
+    *
+    * Determinism of the drain: the input files are staged by ascending id
+    * range with strictly increasing mtimes and the file source is capped
+    * `maxFilesPerTrigger=1`, so AvailableNow replays them oldest-first —
+    * one micro-batch per file, in id order.
+    */
   def semanticDedupIngest(spark: SparkSession, stored: DataFrame,
       centroids: DataFrame, batch: DataFrame, idCol: String, vecCol: String,
       threshold: Double, roundDp: Int = -1, nInputFiles: Int = 4): DataFrame = {
-    require(nInputFiles >= 1, s"nInputFiles must be >= 1, got $nInputFiles")
-    val work = java.nio.file.Files.createTempDirectory("graft_s11_").toString
-    try {
-      val inputDir = stageOrderedInput(batch, idCol, work, nInputFiles)
-      val processedDir = s"$work/processed"
-      val verdictsDir = s"$work/verdicts"
-      // centroid count read ONCE: both per-tick assignCells calls would
-      // otherwise run a count job per micro-batch just to pick the
-      // flat-vs-hierarchical dispatch
-      val nCentroids = centroids.count().toInt
-      val storedSlim = stored
-        .select(col("cluster_id"), col(idCol), col(vecCol))
-
-      val q = spark.readStream
-        .schema(batch.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(inputDir.toString)
-        .writeStream
-        .foreachBatch { (mb: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-          if (!mb.isEmpty) {
-            val reference = ticksSoFar(spark, processedDir, batchId)
-              .map(storedSlim.unionByName(_)).getOrElse(storedSlim)
-            val (verdicts, assigned) = graft.dedup.Dedup
-              .semanticDedupIncrementalWithAssign(reference, centroids,
-                mb.toDF(), idCol, vecCol, threshold, roundDp = roundDp,
-                nCells = nCentroids)
-            // fold the WHOLE micro-batch (not just survivors) into the
-            // reference set — v13 counts any lower-id doc as a source.
-            // `assigned` IS the verdict path's pinned primary-cell
-            // (nAssign = 1) assignment, so the fold re-reads the
-            // checkpoint instead of re-running assignCells on the tick.
-            // The two writes are independent (disjoint dirs, both off the
-            // pinned assignment) — run them as concurrent jobs
-            writeConcurrently(
-              () => writeTick(verdicts, verdictsDir, batchId),
-              () => writeTick(assigned
-                .select(col("cell_id").as("cluster_id"),
-                  col("doc_id").as(idCol), col("vec").as(vecCol)),
-                processedDir, batchId))
-          }
+    // centroid count read ONCE: both per-tick assignCells calls would
+    // otherwise run a count job per micro-batch just to pick the
+    // flat-vs-hierarchical dispatch
+    val nCentroids = centroids.count().toInt
+    val storedSlim = stored
+      .select(col("cluster_id"), col(idCol), col(vecCol))
+    stagedIngest(spark, batch, idCol, nInputFiles, "graft_s11_") { work =>
+      (mb, batchId) =>
+        if (!mb.isEmpty) {
+          val reference = ticksSoFar(spark, s"$work/processed", batchId)
+            .map(storedSlim.unionByName(_)).getOrElse(storedSlim)
+          val (verdicts, assigned) = graft.dedup.Dedup
+            .semanticDedupIncrementalWithAssign(reference, centroids,
+              mb, idCol, vecCol, threshold, roundDp = roundDp,
+              nCells = nCentroids)
+          // fold the WHOLE micro-batch (not just survivors) into the
+          // reference set — v13 counts any lower-id doc as a source.
+          // `assigned` IS the verdict path's pinned primary-cell
+          // (nAssign = 1) assignment, so the fold re-reads the
+          // checkpoint instead of re-running assignCells on the tick.
+          // The two writes are independent (disjoint dirs, both off the
+          // pinned assignment) — run them as concurrent jobs
+          writeConcurrently(spark)(
+            () => writeTick(verdicts, s"$work/verdicts", batchId),
+            () => writeTick(assigned
+              .select(col("cell_id").as("cluster_id"),
+                col("doc_id").as(idCol), col("vec").as(vecCol)),
+              s"$work/processed", batchId))
         }
-        .option("checkpointLocation", s"$work/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      if (new java.io.File(verdictsDir).isDirectory)
-        readTicks(spark, verdictsDir).localCheckpoint(true)
-      else { // an empty ingest tick: no verdicts, but the shape must hold —
-        // and the shape is the NON-EMPTY path's: id column named after
-        // idCol with the caller's id type (not a hardcoded doc_id LONG)
-        val idT = batch.schema(idCol).dataType
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          StructType(Seq(
-            StructField(idCol, idT), StructField("n_dup_sources", LongType),
-            StructField("dup_of", idT), StructField("is_dup", BooleanType))))
-      }
-    } finally {
-      import scala.jdk.CollectionConverters._
-      val root = java.nio.file.Paths.get(work)
-      java.nio.file.Files.walk(root).iterator().asScala.toSeq
-        .sortBy(-_.getNameCount).foreach(java.nio.file.Files.deleteIfExists(_))
-    }
+    }(work => verdictsOrEmpty(spark, s"$work/verdicts",
+      dupVerdictSchema(batch, idCol)))
   }
 
   // --------------------- continuous-ingest text near-dup (s12, round 10)
@@ -1277,7 +1341,6 @@ object Streams {
       idCol: String, textCol: String, threshold: Double,
       nInputFiles: Int = 4): DataFrame = {
     import graft.dedup.Dedup
-    require(nInputFiles >= 1, s"nInputFiles must be >= 1, got $nInputFiles")
     // meta read + validated ONCE here; ticks call the Pre variant so no
     // per-micro-batch driver job re-reads the one-row meta table
     val m = staged.meta.select(col("shingle_n"), col("max_df"),
@@ -1292,58 +1355,30 @@ object Streams {
         "can turn a shingle hot and retroactively change earlier verdicts); " +
         "re-stage with maxDf = 0 for continuous ingest, or serve capped " +
         "batches through incrementalJaccardStaged directly")
-    val work = java.nio.file.Files.createTempDirectory("graft_s12_").toString
-    try {
-      val inputDir = stageOrderedInput(batch, idCol, work, nInputFiles)
-      val processedDir = s"$work/processed"
-      val verdictsDir = s"$work/verdicts"
-
-      val q = spark.readStream
-        .schema(batch.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(inputDir.toString)
-        .writeStream
-        .foreachBatch { (mb: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-          if (!mb.isEmpty) {
-            val posts = ticksSoFar(spark, processedDir, batchId)
-              .map(staged.postings.unionByName(_)).getOrElse(staged.postings)
-            // fold the WHOLE micro-batch in (not just survivors): a later
-            // doc's dup sources include every lower-id streamed doc. The
-            // verdict write and the postings fold are independent jobs
-            // (disjoint dirs; the fold never reads this tick's verdicts) —
-            // run them concurrently
-            writeConcurrently(
-              () => writeTick(Dedup.incrementalJaccardStagedPre(
-                  Dedup.StagedPostings(posts, staged.shingleDf, staged.meta),
-                  mb.toDF(), idCol, textCol, threshold, shingleN, maxDf),
-                verdictsDir, batchId),
-              () => writeTick(
-                Dedup.jaccardPostings(mb.toDF(), idCol, textCol, shingleN)
-                  .withColumn("sz", count(lit(1)).over(
-                    org.apache.spark.sql.expressions.Window
-                      .partitionBy(col("doc")))),
-                processedDir, batchId))
-          }
+    stagedIngest(spark, batch, idCol, nInputFiles, "graft_s12_") { work =>
+      (mb, batchId) =>
+        if (!mb.isEmpty) {
+          val posts = ticksSoFar(spark, s"$work/processed", batchId)
+            .map(staged.postings.unionByName(_)).getOrElse(staged.postings)
+          // fold the WHOLE micro-batch in (not just survivors): a later
+          // doc's dup sources include every lower-id streamed doc. The
+          // verdict write and the postings fold are independent jobs
+          // (disjoint dirs; the fold never reads this tick's verdicts) —
+          // run them concurrently
+          writeConcurrently(spark)(
+            () => writeTick(Dedup.incrementalJaccardStagedPre(
+                Dedup.StagedPostings(posts, staged.shingleDf, staged.meta),
+                mb, idCol, textCol, threshold, shingleN, maxDf),
+              s"$work/verdicts", batchId),
+            () => writeTick(
+              Dedup.jaccardPostings(mb, idCol, textCol, shingleN)
+                .withColumn("sz", count(lit(1)).over(
+                  org.apache.spark.sql.expressions.Window
+                    .partitionBy(col("doc")))),
+              s"$work/processed", batchId))
         }
-        .option("checkpointLocation", s"$work/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      if (new java.io.File(verdictsDir).isDirectory)
-        readTicks(spark, verdictsDir).localCheckpoint(true)
-      else { // empty tick: match the non-empty path's idCol name and type
-        val idT = batch.schema(idCol).dataType
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          StructType(Seq(
-            StructField(idCol, idT), StructField("n_dup_sources", LongType),
-            StructField("dup_of", idT), StructField("is_dup", BooleanType))))
-      }
-    } finally {
-      import scala.jdk.CollectionConverters._
-      val root = java.nio.file.Paths.get(work)
-      java.nio.file.Files.walk(root).iterator().asScala.toSeq
-        .sortBy(-_.getNameCount).foreach(java.nio.file.Files.deleteIfExists(_))
-    }
+    }(work => verdictsOrEmpty(spark, s"$work/verdicts",
+      dupVerdictSchema(batch, idCol)))
   }
 
   // ---------------- continuous-ingest CDC substring dedup (s13, round 11)
@@ -1382,7 +1417,6 @@ object Streams {
       batch: DataFrame, idCol: String, textCol: String,
       nInputFiles: Int = 4): DataFrame = {
     import graft.dedup.Dedup
-    require(nInputFiles >= 1, s"nInputFiles must be >= 1, got $nInputFiles")
     // meta read + validated ONCE here; ticks call the WithHashes core so
     // no per-micro-batch driver job re-reads the one-row meta table
     val m = store.meta.select(col("avg_chunk_tokens"), col("tokenizer_version")).head()
@@ -1390,50 +1424,57 @@ object Streams {
     require(tokVer == Dedup.TokenizerVersion,
       s"staged chunk store was written by tokenizer v$tokVer but this library " +
         s"chunks with v${Dedup.TokenizerVersion} — re-run stageCdcChunks")
-    val work = java.nio.file.Files.createTempDirectory("graft_s13_").toString
-    try {
-      val inputDir = stageOrderedInput(batch, idCol, work, nInputFiles)
-      val processedDir = s"$work/processed"
-      val verdictsDir = s"$work/verdicts"
-
-      val q = spark.readStream
-        .schema(batch.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(inputDir.toString)
-        .writeStream
-        .foreachBatch { (mb: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-          if (!mb.isEmpty) {
-            val hashes = ticksSoFar(spark, processedDir, batchId)
-              .map(store.hashes.unionByName(_)).getOrElse(store.hashes)
-            val (verdicts, newHashes) = Dedup.cdcDedupIncrementalWithHashes(
-              hashes, mb.toDF(), idCol, textCol, avgChunkTokens)
-            // fold only the tick's NOVEL hashes: presence is the only fact
-            // later ticks need, and the anti-join keeps the set distinct.
-            // Both tables hang off the same pinned tick chunking, so the
-            // two writes are independent jobs — run them concurrently
-            writeConcurrently(
-              () => writeTick(verdicts, verdictsDir, batchId),
-              () => writeTick(newHashes, processedDir, batchId))
-          }
+    stagedIngest(spark, batch, idCol, nInputFiles, "graft_s13_") { work =>
+      (mb, batchId) =>
+        if (!mb.isEmpty) {
+          val hashes = ticksSoFar(spark, s"$work/processed", batchId)
+            .map(store.hashes.unionByName(_)).getOrElse(store.hashes)
+          val (verdicts, newHashes) = Dedup.cdcDedupIncrementalWithHashes(
+            hashes, mb, idCol, textCol, avgChunkTokens)
+          // fold only the tick's NOVEL hashes: presence is the only fact
+          // later ticks need, and the anti-join keeps the set distinct.
+          // Both tables hang off the same pinned tick chunking, so the
+          // two writes are independent jobs — run them concurrently
+          writeConcurrently(spark)(
+            () => writeTick(verdicts, s"$work/verdicts", batchId),
+            () => writeTick(newHashes, s"$work/processed", batchId))
         }
-        .option("checkpointLocation", s"$work/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      if (new java.io.File(verdictsDir).isDirectory)
-        readTicks(spark, verdictsDir).localCheckpoint(true)
-      else // empty tick: match the non-empty path's idCol name and type
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          StructType(Seq(
-            StructField(idCol, batch.schema(idCol).dataType),
-            StructField("n_chunks", LongType),
-            StructField("n_dup_chunks", LongType),
-            StructField("dup_token_ratio", DoubleType))))
-    } finally {
-      import scala.jdk.CollectionConverters._
-      val root = java.nio.file.Paths.get(work)
-      java.nio.file.Files.walk(root).iterator().asScala.toSeq
-        .sortBy(-_.getNameCount).foreach(java.nio.file.Files.deleteIfExists(_))
+    }(work => verdictsOrEmpty(spark, s"$work/verdicts", StructType(Seq(
+      StructField(idCol, batch.schema(idCol).dataType),
+      StructField("n_chunks", LongType),
+      StructField("n_dup_chunks", LongType),
+      StructField("dup_token_ratio", DoubleType)))))
+  }
+
+  /** Streaming GRAPH ingest at the bench surface — the D6 GraphUpdater
+    * (the reference's runEdgy transaction boundary run as a stream,
+    * src/Edgy/Operations.hs:73-79) driven by the same replayable
+    * file-stream harness as the other continuous-ingest gates: edge rows
+    * arrive in id-ordered micro-batches (`maxFilesPerTrigger=1` +
+    * AvailableNow), each tick folds atomically into a NEW immutable
+    * [[graft.graph.PropertyGraph]] snapshot via
+    * [[GraphUpdater.applyBatch]] (idempotent on batchId replay), and the
+    * folded graph is returned after the drain. Because addRelated is a
+    * bag append and every edge is delivered exactly once, the folded
+    * graph ≡ the batch-built graph whatever the tick partitioning — the
+    * StreamingSpec law, which is what lets a plain join SQL oracle check
+    * the post-ingest traversal. Durability (WAL + versioned snapshots +
+    * recovery) is the DemoCliSpec-covered mode; this gate runs the
+    * non-durable fold, so its cost is pure ingest machinery + fold.
+    */
+  def graphIngest(spark: SparkSession, base: graft.graph.PropertyGraph,
+      relation: String, edges: DataFrame, nInputFiles: Int = 2)
+      : graft.graph.PropertyGraph = {
+    val updater = new GraphUpdater(base, relation)
+    stagedIngest(spark, edges, graft.schema.GraphSchema.DstCol, nInputFiles,
+        "graft_s15_")(_ => updater.applyBatch) { _ =>
+      // safe to return past the work-dir delete: every tick was eagerly
+      // localCheckpoint'd into block-manager blocks as it was applied, so
+      // the folded snapshot never reads the streamed files again. The
+      // seal transfers those tick pins to the snapshot (no edge-table
+      // re-checkpoint job — the caller's release() frees them, the
+      // graphIngest contract)
+      updater.sealAndRelease()
     }
   }
 
@@ -1459,105 +1500,41 @@ object Streams {
     * dynamic overwrite, so a re-delivered tick replaces its previous
     * write — reusing a checkpoint can no longer double-index a tick.
     */
-  /** Streaming GRAPH ingest at the bench surface — the D6 GraphUpdater
-    * (the reference's runEdgy transaction boundary run as a stream,
-    * src/Edgy/Operations.hs:73-79) driven by the same replayable
-    * file-stream harness as the other continuous-ingest gates: edge rows
-    * arrive in id-ordered micro-batches (`maxFilesPerTrigger=1` +
-    * AvailableNow), each tick folds atomically into a NEW immutable
-    * [[graft.graph.PropertyGraph]] snapshot via
-    * [[GraphUpdater.applyBatch]] (idempotent on batchId replay), and the
-    * folded graph is returned after the drain. Because addRelated is a
-    * bag append and every edge is delivered exactly once, the folded
-    * graph ≡ the batch-built graph whatever the tick partitioning — the
-    * StreamingSpec law, which is what lets a plain join SQL oracle check
-    * the post-ingest traversal. Durability (WAL + versioned snapshots +
-    * recovery) is the DemoCliSpec-covered mode; this gate runs the
-    * non-durable fold, so its cost is pure ingest machinery + fold.
-    */
-  def graphIngest(spark: SparkSession, base: graft.graph.PropertyGraph,
-      relation: String, edges: DataFrame, nInputFiles: Int = 2)
-      : graft.graph.PropertyGraph = {
-    require(nInputFiles >= 1, s"nInputFiles must be >= 1, got $nInputFiles")
-    val work = java.nio.file.Files.createTempDirectory("graft_s15_").toString
-    try {
-      val inputDir = stageOrderedInput(edges,
-        graft.schema.GraphSchema.DstCol, work, nInputFiles)
-      val updater = new GraphUpdater(base, relation)
-      val q = spark.readStream
-        .schema(edges.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(inputDir.toString)
-        .writeStream
-        .foreachBatch { (mb: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-          updater.applyBatch(mb.toDF(), batchId)
-        }
-        .option("checkpointLocation", s"$work/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      // safe to return past the work-dir delete: every tick was eagerly
-      // localCheckpoint'd into block-manager blocks as it was applied, so
-      // the folded snapshot never reads the streamed files again. The
-      // seal transfers those tick pins to the snapshot (no edge-table
-      // re-checkpoint job — the caller's release() frees them, the
-      // graphIngest contract)
-      updater.sealAndRelease()
-    } finally {
-      // deleteTree, not a bare walk: a straggler state-store/checkpoint
-      // file must not turn a successful ingest into a thrown finally
-      deleteTree(java.nio.file.Paths.get(work))
-    }
-  }
-
   def bm25Ingest(spark: SparkSession, baseDir: String, batch: DataFrame,
       queries: DataFrame, idCol: String, textCol: String, k: Int,
       nInputFiles: Int = 4): DataFrame = {
     import graft.operators.Retrieval
-    require(nInputFiles >= 1, s"nInputFiles must be >= 1, got $nInputFiles")
     // meta validated ONCE; ticks never re-read the one-row table
     val tokVer = spark.read.parquet(s"$baseDir/meta")
       .select(col("tokenizer_version")).head().getInt(0)
     require(tokVer == graft.dedup.Dedup.TokenizerVersion,
       s"staged BM25 index was tokenized with v$tokVer, this build ingests " +
         s"with v${graft.dedup.Dedup.TokenizerVersion} — re-run stageBm25Index")
-    val work = java.nio.file.Files.createTempDirectory("graft_s14_").toString
-    try {
-      val inputDir = stageOrderedInput(batch, idCol, work, nInputFiles)
-      val overlay = s"$work/overlay"
-      val q = spark.readStream
-        .schema(batch.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(inputDir.toString)
-        .writeStream
-        .foreachBatch { (mb: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-          if (!mb.isEmpty) {
-            // batchId-keyed generations (replay-idempotent): foreachBatch
-            // is at-least-once, and a re-delivered tick OVERWRITES its own
-            // gen partition instead of appending a duplicate
-            // pin=false (the foldIntoBm25Index rationale): a tick's
-            // postings recompute is cheaper than a per-tick checkpoint
-            // job, and nothing pins, so ticks leave no blocks behind
-            val delta = Retrieval.stageBm25Index(mb.toDF(), idCol, textCol,
-              pin = false)
-            // three independent generation writes (disjoint dirs, all off
-            // the same tick tokenization) — concurrent jobs: each is a
-            // tick-sized write whose cost is per-job floor, and the
-            // unpinned recompute they share is tick-proportional CPU that
-            // overlaps across the three
-            writeConcurrently(
-              () => Retrieval.StagedBm25Index.writeGen(
-                delta.postings, s"$overlay/postings", batchId + 1),
-              () => Retrieval.StagedBm25Index.writeGen(
-                delta.termDf, s"$overlay/term_df", batchId + 1),
-              () => Retrieval.StagedBm25Index.writeGen(
-                delta.stats, s"$overlay/stats", batchId + 1))
-          }
+    stagedIngest(spark, batch, idCol, nInputFiles, "graft_s14_") { work =>
+      (mb, batchId) =>
+        if (!mb.isEmpty) {
+          // batchId-keyed generations (replay-idempotent): foreachBatch
+          // is at-least-once, and a re-delivered tick OVERWRITES its own
+          // gen partition instead of appending a duplicate
+          // pin=false (the foldIntoBm25Index rationale): a tick's
+          // postings recompute is cheaper than a per-tick checkpoint
+          // job, and nothing pins, so ticks leave no blocks behind
+          val delta = Retrieval.stageBm25Index(mb, idCol, textCol, pin = false)
+          // three independent generation writes (disjoint dirs, all off
+          // the same tick tokenization) — concurrent jobs: each is a
+          // tick-sized write whose cost is per-job floor, and the
+          // unpinned recompute they share is tick-proportional CPU that
+          // overlaps across the three
+          writeConcurrently(spark)(
+            () => Retrieval.StagedBm25Index.writeGen(
+              delta.postings, s"$work/overlay/postings", batchId + 1),
+            () => Retrieval.StagedBm25Index.writeGen(
+              delta.termDf, s"$work/overlay/term_df", batchId + 1),
+            () => Retrieval.StagedBm25Index.writeGen(
+              delta.stats, s"$work/overlay/stats", batchId + 1))
         }
-        .option("checkpointLocation", s"$work/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+    } { work =>
+      val overlay = s"$work/overlay"
       val base = Retrieval.StagedBm25Index.read(spark, baseDir)
       val idx =
         if (new java.io.File(s"$overlay/postings").isDirectory)
@@ -1573,8 +1550,6 @@ object Streams {
       // materialize BEFORE the overlay is deleted
       Retrieval.bm25TopKStaged(idx, queries, idCol, textCol, k)
         .localCheckpoint(true)
-    } finally {
-      deleteTree(java.nio.file.Paths.get(work))
     }
   }
 }

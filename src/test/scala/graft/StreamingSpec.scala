@@ -888,38 +888,224 @@ class StreamingSpec extends SparkSpec {
 
   test("writeConcurrently runs every write, and rethrows only after ALL quiesce") {
     import java.util.concurrent.atomic.AtomicInteger
-    val work = java.nio.file.Files.createTempDirectory("graft_wc_").toString
+    val work = java.nio.file.Files.createTempDirectory("graft_wc_")
     val df = spark.range(10).toDF("id")
-    // happy path: all three sinks land
-    Streams.writeConcurrently(
-      () => Streams.writeTick(df, s"$work/a", 0L),
-      () => Streams.writeTick(df, s"$work/b", 0L),
-      () => Streams.writeTick(df, s"$work/c", 0L))
-    for (d <- Seq("a", "b", "c"))
-      assert(spark.read.parquet(s"$work/$d").count() === 10L,
-        s"sink $d missing rows")
-    // failure path: the failure is rethrown, but ONLY after the other
-    // writes completed (the replay-race quiesce guarantee) — the slow
-    // successful write must have finished its side effect by the time
-    // the exception reaches the caller
-    val finished = new AtomicInteger(0)
-    val boom = intercept[RuntimeException] {
-      Streams.writeConcurrently(
-        () => { throw new RuntimeException("tick write failed") },
-        () => {
-          Thread.sleep(200) // forces the failure to wait on this write
-          Streams.writeTick(df, s"$work/slow", 1L)
-          finished.incrementAndGet()
-        })
+    try {
+      // happy path: all three sinks land
+      Streams.writeConcurrently(spark)(
+        () => Streams.writeTick(df, s"$work/a", 0L),
+        () => Streams.writeTick(df, s"$work/b", 0L),
+        () => Streams.writeTick(df, s"$work/c", 0L))
+      for (d <- Seq("a", "b", "c"))
+        assert(spark.read.parquet(s"$work/$d").count() === 10L,
+          s"sink $d missing rows")
+      // failure path: the failure is rethrown, but ONLY after the other
+      // writes completed (the replay-race quiesce guarantee) — the slow
+      // successful write must have finished its side effect by the time
+      // the exception reaches the caller
+      val finished = new AtomicInteger(0)
+      val boom = intercept[RuntimeException] {
+        Streams.writeConcurrently(spark)(
+          () => { throw new RuntimeException("tick write failed") },
+          () => {
+            Thread.sleep(200) // forces the failure to wait on this write
+            Streams.writeTick(df, s"$work/slow", 1L)
+            finished.incrementAndGet()
+          })
+      }
+      assert(boom.getMessage === "tick write failed")
+      assert(finished.get() === 1,
+        "failure was rethrown before the concurrent write quiesced")
+    } finally Streams.deleteTree(work)
+  }
+
+  test("writeConcurrently rethrows a fatal write error instead of hanging") {
+    // a LinkageError is not NonFatal: a write path that only captures
+    // NonFatal leaves its future uncompleted and the await hangs forever.
+    // The call runs on its own daemon thread so this test bounds its wait
+    val work = java.nio.file.Files.createTempDirectory("graft_wc_fatal_")
+    val df = spark.range(10).toDF("id")
+    val (caller, outcome) = onThread(Streams.writeConcurrently(spark)(
+      () => throw new LinkageError("fatal tick write"),
+      () => Streams.writeTick(df, s"$work/ok", 0L)))
+    try {
+      caller.join(60000)
+      assert(!caller.isAlive, "a fatal write error hung the await")
+      assert(outcome.get.isInstanceOf[LinkageError] &&
+        outcome.get.getMessage == "fatal tick write",
+        s"wrong outcome: ${outcome.get}")
+      assert(spark.read.parquet(s"$work/ok").count() === 10L,
+        "the healthy write did not complete")
+    } finally Streams.deleteTree(work)
+  }
+
+  test("writeConcurrently runs every write under its caller's job group") {
+    // a call under group A, then one under group B: every job the B call
+    // starts must carry B. Listener events arrive in posting order, so a
+    // fence job after each call delimits the B call's jobs
+    import scala.jdk.CollectionConverters._
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        groups.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .getOrElse("none"))
     }
-    assert(boom.getMessage === "tick write failed")
-    assert(finished.get() === 1,
-      "failure was rethrown before the concurrent write quiesced")
-    // the sequential escape hatch (the A/B's A-arm) still runs everything
-    sys.props("graft.tickWrites.sequential") = "true"
-    try Streams.writeConcurrently(
-      () => Streams.writeTick(df, s"$work/seq", 2L))
-    finally sys.props.remove("graft.tickWrites.sequential")
-    assert(spark.read.parquet(s"$work/seq").count() === 10L)
+    val work = java.nio.file.Files.createTempDirectory("graft_wc_groups_")
+    val df = spark.range(10).toDF("id")
+    def writesUnder(group: String): Unit = {
+      sc.setJobGroup(group, group)
+      Streams.writeConcurrently(spark)((1 to 4).map(i =>
+        () => Streams.writeTick(df, s"$work/$group$i", 0L)): _*)
+    }
+    def fence(group: String): Unit = {
+      sc.setJobGroup(group, group)
+      spark.range(1).count()
+      assert(within(30)(groups.contains(group)), s"fence $group never seen")
+    }
+    sc.addSparkListener(listener)
+    try {
+      writesUnder("wc-A")
+      fence("wc-fence-1")
+      writesUnder("wc-B")
+      fence("wc-fence-2")
+      val seen = groups.asScala.toSeq
+      val bJobs = seen.drop(seen.lastIndexOf("wc-fence-1") + 1)
+        .takeWhile(_ != "wc-fence-2")
+      assert(bJobs.nonEmpty, "the B call started no jobs")
+      assert(bJobs.forall(_ == "wc-B"),
+        s"jobs of the B call ran under other groups: $bJobs")
+    } finally {
+      sc.removeSparkListener(listener)
+      sc.clearJobGroup()
+      Streams.deleteTree(work)
+    }
+  }
+
+  test("writeConcurrently cancels and awaits its writes when the caller is interrupted") {
+    val work = java.nio.file.Files.createTempDirectory("graft_wc_interrupt_")
+    TaskGate.reset()
+    val gate = udf(TaskGate.pass _)
+    val (caller, outcome) = onThread(Streams.writeConcurrently(spark)(
+      () => Streams.writeTick(spark.range(4).toDF("id")
+        .select(gate(col("id")).as("id")), s"$work/blocked", 0L),
+      () => Streams.writeTick(spark.range(4).toDF("id"), s"$work/free", 0L)))
+    try {
+      assert(TaskGate.entered.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "the blocking write never started")
+      caller.interrupt()
+      caller.join(60000)
+      assert(!caller.isAlive, "the interrupted call did not return")
+      assert(outcome.get.isInstanceOf[InterruptedException],
+        s"wrong outcome: ${outcome.get}")
+      assert(within(30)(spark.sparkContext.statusTracker.getActiveJobIds.isEmpty),
+        "a write job outlived its interrupted call: " +
+          spark.sparkContext.statusTracker.getActiveJobIds.mkString(","))
+    } finally {
+      TaskGate.release.countDown()
+      Streams.deleteTree(work)
+    }
+  }
+
+  test("a failed ingest tick rethrows its own error, stops its query and removes its work dir") {
+    import spark.implicits._
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def workDirs: Set[String] =
+      tmp.list().filter(_.matches("graft_s1\\d_.*")).toSet
+    val docs = (0 until 20).map(i => (i.toLong, s"w$i a b c d e f g h"))
+      .toDF("doc_id", "text")
+    val store = java.nio.file.Files.createTempDirectory("graft_failpath_store_")
+    try {
+      graft.dedup.Dedup.stageCdcChunks(docs.where(col("doc_id") < 10),
+        "doc_id", "text", avgChunkTokens = 5).write(store.toString)
+      val staged = graft.dedup.Dedup.StagedChunkStore.read(spark, store.toString)
+      val dirsBefore = workDirs
+      val queriesBefore = spark.streams.active.map(_.id).toSet
+      // every tick reads a text column the batch lacks, so the first
+      // tick throws inside the drain
+      val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+        Streams.cdcIngest(spark, staged, docs.where(col("doc_id") >= 10),
+          "doc_id", "no_such_text", nInputFiles = 2)
+      }
+      val chain = Iterator.iterate[Throwable](e)(_.getCause)
+        .takeWhile(_ != null).toSeq
+      assert(chain.exists(t => String.valueOf(t.getMessage).contains("no_such_text")),
+        s"the tick's own error was replaced: ${chain.mkString(" <- ")}")
+      assert(spark.streams.active.map(_.id).toSet === queriesBefore,
+        "the failed drain left its query active")
+      assert((workDirs -- dirsBefore).isEmpty,
+        s"work dir left behind: ${workDirs -- dirsBefore}")
+    } finally Streams.deleteTree(store)
+  }
+
+  test("an interrupted drain stops its query before returning") {
+    // the drain's caller is interrupted while a micro-batch is blocked:
+    // the drain must not hand control back (and let its caller delete
+    // input and checkpoint dirs) while the query still runs
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    TaskGate.reset()
+    val gate = udf(TaskGate.pass _)
+    val input = MemoryStream[Long]
+    input.addData(1L, 2L, 3L)
+    val name = "interrupted_drain"
+    val (caller, outcome) = onThread(Streams.runToMemory(spark,
+      input.toDF().select(gate(col("value")).as("v")), name, mode = "append"))
+    try {
+      assert(TaskGate.entered.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "the micro-batch never started")
+      caller.interrupt()
+      caller.join(60000)
+      assert(!caller.isAlive, "the interrupted drain did not return")
+      assert(outcome.get.isInstanceOf[InterruptedException],
+        s"wrong outcome: ${outcome.get}")
+      assert(within(30)(!spark.streams.active.exists(_.name == name)),
+        "the query kept running after its drain returned")
+    } finally {
+      TaskGate.release.countDown()
+      spark.streams.active.filter(_.name == name).foreach(_.stop())
+      spark.catalog.dropTempView(name)
+    }
+  }
+
+  /** Run `body` on a new daemon thread (a hung body cannot keep the JVM
+    * alive); the reference receives whatever it throws.
+    */
+  private def onThread(body: => Unit)
+      : (Thread, java.util.concurrent.atomic.AtomicReference[Throwable]) = {
+    val outcome = new java.util.concurrent.atomic.AtomicReference[Throwable]
+    val t = new Thread(() =>
+      try body catch { case e: Throwable => outcome.set(e) })
+    t.setDaemon(true)
+    t.start()
+    (t, outcome)
+  }
+
+  /** Poll `cond` for up to `seconds`; its final value. */
+  private def within(seconds: Int)(cond: => Boolean): Boolean = {
+    val deadline = System.nanoTime() + seconds * 1000000000L
+    while (!cond && System.nanoTime() < deadline) Thread.sleep(50)
+    cond
+  }
+}
+
+/** Latches a Spark task can block on. A top-level object, so task
+  * closures reach it without capturing the suite; the task's wait is
+  * bounded, so a failing test cannot strand an executor thread.
+  */
+object TaskGate {
+  import java.util.concurrent.{CountDownLatch, TimeUnit}
+  @volatile var entered = new CountDownLatch(1)
+  @volatile var release = new CountDownLatch(1)
+  def reset(): Unit = {
+    entered = new CountDownLatch(1)
+    release = new CountDownLatch(1)
+  }
+  def pass(x: Long): Long = {
+    entered.countDown()
+    release.await(120, TimeUnit.SECONDS)
+    x
   }
 }
