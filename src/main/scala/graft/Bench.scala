@@ -469,7 +469,7 @@ object Bench {
         val prior = BenchAgree.parseQueries(raw)
         val a = BenchAgree.agreement(results.toMap, prior)
         if (a.shared >= 10)
-          Some((p, a, BenchAgree.signedMedianRelDiff(results.toMap, prior)))
+          Some((p, prior, a, BenchAgree.signedMedianRelDiff(results.toMap, prior)))
         else {
           if (explicitAnchor && raw.nonEmpty)
             System.err.println(s"[bench] WARNING: anchor $p shares only " +
@@ -482,23 +482,21 @@ object Bench {
     // FASTER than its anchor is a faster environment (or faster code),
     // and its numbers are real; report the drift, don't condemn them.
     // ROUND-18 RECALIBRATION: the contamination verdict now keys on the
-    // catastrophe TAIL (rows inflated ≥ ~5×) or a uniform ≥1.8×
-    // slowdown, NOT on the certification median — three same-code full
+    // catastrophe TAIL (rows inflated ≥ ~5×) or a uniform slowdown (a
+    // signed symmetric median above 0.6, i.e. a ratio above ≈1.86×),
+    // NOT on the certification median — three same-code full
     // runs this round measured honest window swings moving the median by
     // up to 0.41 (the old flag bound was 0.10), while the round-17
     // driver catastrophe's median was only 0.24; the tail is what
     // separates them (see BenchAgree.tailOver for the numbers). The full
     // agreement block stays in the JSON for transparency either way.
-    val driftTail = drift.map { case (p, _, _) =>
-      val prior = BenchAgree.parseQueries(scala.util.Try(new String(
-        java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p)),
-        "UTF-8")).getOrElse(""))
+    val driftTail = drift.map { case (_, prior, _, _) =>
       BenchAgree.tailOver(results.toMap, prior)
     }.getOrElse(Seq.empty)
-    val driftFlagged = drift.exists { case (_, _, signed) =>
+    val driftFlagged = drift.exists { case (_, _, _, signed) =>
       BenchAgree.driftContaminated(signed, driftTail.size)
     }
-    val driftJson = drift.fold("") { case (p, a, signed) =>
+    val driftJson = drift.fold("") { case (p, _, a, signed) =>
       val tailJson = driftTail.map("\"" + _ + "\"").mkString("[", ",", "]")
       s""","drift":{"anchor":"${BenchFormat.jsonStr(p)}","shared":${a.shared},"median_rel_diff":${a.medianRelDiff},"signed_median_rel_diff":$signed,"frac_within":${a.fracWithin},"pass":${a.pass},"tail_over":$tailJson,"flagged":$driftFlagged}"""
     }

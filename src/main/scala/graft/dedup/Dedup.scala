@@ -317,8 +317,7 @@ object Dedup {
   def minhashPairs(
       df: DataFrame, idCol: String, textCol: String,
       threshold: Double, k: Int = 64, bands: Int = 16,
-      shingleN: Int = 3,
-      bandedBroadcastMaxRows: Long = BandedBroadcastMaxRows): DataFrame = {
+      shingleN: Int = 3): DataFrame = {
     // pin the sketch pipeline ONCE: it feeds both banded self-join sides
     // AND both signature re-attach sides below — the k-slot signature
     // computes exactly once per document
@@ -340,8 +339,7 @@ object Dedup {
       posexplode(minhashBands(col("sig"), k, bands)).as(Seq("band_idx", "band_key")))
     val a = banded.select(col("band_idx"), col("band_key"), col("doc").as("doc_a"))
     val b = banded.select(col("band_idx"), col("band_key"), col("doc").as("doc_b"))
-    val cands = selfJoinSized(a, b, Seq("band_idx", "band_key"), nBanded,
-        bandedBroadcastMaxRows)
+    val cands = selfJoinSized(a, b, Seq("band_idx", "band_key"), nBanded)
       .where(col("doc_a") < col("doc_b"))
       // dedup multi-band collisions BEFORE scoring: a pair hitting all
       // `bands` bands would otherwise re-score the k-wide signature
@@ -365,18 +363,19 @@ object Dedup {
     * This is the [[graft.similarity.Ann.BroadcastCellsMax]] pattern:
     * broadcast below a KNOWN row count (the checkpoint makes it exact,
     * not an estimate), sort-merge — AQE-skew-split — above.
-    * Scale-proof: TextScaleExperiment's 500k t08 point (8M banded rows)
-    * stays merge-pinned and runs on the default 8g heap.
+    * Scale-proof: the 500k t08 point (8M banded rows; SURVEY.md §8, "the
+    * t08 500k broadcast cliff") stays merge-pinned and runs on the
+    * default 8g heap. [[graft.Regime]] makes the choice.
     */
   private[graft] val BandedBroadcastMaxRows = 1L << 20
 
   /** Equal-sized candidate self-join with the size-conditioned strategy:
-    * `broadcast(b)` when the frame's exact row count is under `maxRows`,
-    * the merge pin above it (see [[BandedBroadcastMaxRows]]).
+    * `broadcast(b)` when the frame's exact row count is within
+    * [[BandedBroadcastMaxRows]], the merge pin above it.
     */
   private def selfJoinSized(a: DataFrame, b: DataFrame, keys: Seq[String],
-      nRows: Long, maxRows: Long): DataFrame =
-    if (nRows <= maxRows) a.join(broadcast(b), keys)
+      nRows: Long): DataFrame =
+    if (graft.Regime.fits(nRows, BandedBroadcastMaxRows)) a.join(broadcast(b), keys)
     else a.hint("merge").join(b.hint("merge"), keys)
 
   /** EXACT n-gram Jaccard pairs at scale, via an inverted shingle index
@@ -480,8 +479,8 @@ object Dedup {
     * out); per-doc rank window is PARTITIONED by doc (bounded by a
     * document's own shingle count — never a global sort); the prefix
     * self-join is size-conditioned like t08/t09's banded joins
-    * (broadcast below `prefixBroadcastMaxRows` EXACT checkpointed rows,
-    * merge-pinned above — see [[BandedBroadcastMaxRows]]); verification
+    * (broadcast within [[BandedBroadcastMaxRows]] EXACT checkpointed
+    * rows, merge-pinned above); verification
     * joins the deduped candidate pairs back to the full postings on
     * (doc, shingle) keys — candidate-proportional, and candidates are
     * answer-shaped by the prefix principle. The size-ratio filter
@@ -490,8 +489,7 @@ object Dedup {
   def ppjoinPairs(
       df: DataFrame, idCol: String, textCol: String,
       threshold: Double, shingleN: Int = 3,
-      inputPartitions: Int = 0,
-      prefixBroadcastMaxRows: Long = BandedBroadcastMaxRows): DataFrame = {
+      inputPartitions: Int = 0): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0,
       s"threshold must be in (0, 1], got $threshold")
     val input = if (inputPartitions > 0) df.repartition(inputPartitions) else df
@@ -522,8 +520,7 @@ object Dedup {
     // size-conditioned self-join of the checkpointed prefix frame (the
     // minhashPairs hazard above the bound; prefixes hold the RARE
     // shingles, so per-key fan-out is small by construction either way)
-    val cand = selfJoinSized(a, b, Seq("shingle"), postsRows,
-        prefixBroadcastMaxRows)
+    val cand = selfJoinSized(a, b, Seq("shingle"), postsRows)
       .where(col("doc_a") < col("doc_b") &&
         least(col("sz_a"), col("sz_b")).cast("double") >=
           lit(threshold) * greatest(col("sz_a"), col("sz_b")).cast("double"))
@@ -559,7 +556,7 @@ object Dedup {
       // planner, the checkpointed-prefix lineage's under-estimating
       // stats chose to BROADCAST the pair table at 500k docs and died in
       // the exchange (the third face of the minhashPairs cliff, measured
-      // in TextScaleExperiment after the first two were pinned)
+      // at 500k docs after the first two were pinned; SURVEY.md §8)
       .localCheckpoint(false)
     // exact verification over the FULL postings (uncapped Jaccard),
     // size-conditioned per join on EXACT counts — ONE fused agg job over
@@ -578,10 +575,10 @@ object Dedup {
     val pa = posts.select(col("doc").as("doc_a"), col("shingle"))
     val pb = posts.select(col("doc").as("doc_b"), col("shingle"))
     val expanded =
-      if (candRows <= prefixBroadcastMaxRows)
+      if (graft.Regime.fits(candRows, BandedBroadcastMaxRows))
         broadcast(cand).join(pa, Seq("doc_a"))
       else cand.hint("merge").join(pa.hint("merge"), Seq("doc_a"))
-    (if (expandedRows <= prefixBroadcastMaxRows)
+    (if (graft.Regime.fits(expandedRows, BandedBroadcastMaxRows))
         broadcast(expanded).join(pb, Seq("doc_b", "shingle"))
       else
         expanded.hint("merge").join(pb.hint("merge"), Seq("doc_b", "shingle")))
@@ -602,7 +599,7 @@ object Dedup {
     * checkpointed posts' under-estimating stats) built a multi-GB hashed
     * relation on the driver, and a `shuffle_hash` pin hit Spark's
     * non-spillable per-task hash-map build ("There is not enough memory
-    * to build hash map", measured in TextScaleExperiment). The window is
+    * to build hash map", measured at 500k docs; SURVEY.md §8). The window is
     * one hash exchange on the shingle key plus a SPILLABLE sort — no
     * hashed relation anywhere; a skew (hot-shingle) group streams
     * through UnsafeExternalSorter. Rank + size windows are per-doc
@@ -1028,12 +1025,11 @@ object Dedup {
     * estimated size (inflated by `shingleN`, since each word lands in
     * ~shingleN shingle strings) exceeds the session's broadcast
     * threshold, the join falls back to a shingle-keyed shuffle-hash join
-    * instead of OOMing every executor on the broadcast. `broadcastEval`
-    * overrides the auto-decision in either direction.
+    * instead of OOMing every executor on the broadcast.
+    * [[graft.Regime.broadcastable]] makes the choice.
     */
   def contamination(train: DataFrame, bench: DataFrame,
-      idCol: String, textCol: String, shingleN: Int = 8,
-      broadcastEval: Option[Boolean] = None): DataFrame = {
+      idCol: String, textCol: String, shingleN: Int = 8): DataFrame = {
     def postings(df: DataFrame, side: String) =
       // two-step select — see jaccardPostings (lambda-capture re-eval)
       df.select(col(idCol).as(side), tokens(col(textCol)).as("__toks"))
@@ -1041,23 +1037,12 @@ object Dedup {
           explode(array_distinct(shingles(col("__toks"), shingleN)))
             .as("shingle"))
     val evalPostings = postings(bench, "bench_doc")
-    val doBroadcast = broadcastEval.getOrElse {
-      // "-1" (the documented way to disable auto-broadcast) is not a
-      // byte string — treat anything unparseable as broadcast-disabled
-      val threshold =
-        try org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-          bench.sparkSession.conf
-            .get("spark.sql.autoBroadcastJoinThreshold", (10L << 20).toString))
-        catch { case _: NumberFormatException => -1L }
-      // sizeInBytes × shingleN approximates the exploded shingle strings
-      // but ignores per-posting row overhead (the repeated bench_doc id and
-      // row framing), which dominates for short documents — so compare
-      // against HALF the threshold rather than pretending the estimate is
-      // exact. broadcastEval overrides in either direction.
-      threshold > 0 &&
-        bench.queryExecution.optimizedPlan.stats.sizeInBytes * shingleN <=
-          BigInt(threshold / 2)
-    }
+    // sizeInBytes × shingleN approximates the exploded shingle strings
+    // but ignores per-posting row overhead (the repeated bench_doc id and
+    // row framing), which dominates for short documents — so the estimate
+    // is doubled (HALF the threshold) rather than pretending it is exact
+    val doBroadcast = graft.Regime.broadcastable(
+      bench.queryExecution.optimizedPlan.stats.sizeInBytes * shingleN * 2)
     val joined =
       if (doBroadcast)
         postings(train, "train_doc").join(broadcast(evalPostings), Seq("shingle"))
@@ -1080,8 +1065,7 @@ object Dedup {
     */
   def simhashPairs(
       df: DataFrame, idCol: String, textCol: String,
-      maxHamming: Int = 3,
-      bandedBroadcastMaxRows: Long = BandedBroadcastMaxRows): DataFrame = {
+      maxHamming: Int = 3): DataFrame = {
     require(maxHamming >= 0 && maxHamming < 64,
       s"maxHamming must be in [0, 63], got $maxHamming")
     val bands = maxHamming + 1
@@ -1111,8 +1095,7 @@ object Dedup {
       col("doc").as("doc_b"), col("sh").as("sh_b"))
     // size-conditioned self-join — same shape and 500k hazard as
     // minhashPairs' banded join (see BandedBroadcastMaxRows)
-    selfJoinSized(a, b, Seq("band_idx", "band_key"), nBanded,
-        bandedBroadcastMaxRows)
+    selfJoinSized(a, b, Seq("band_idx", "band_key"), nBanded)
       .where(col("doc_a") < col("doc_b"))
       .dropDuplicates("doc_a", "doc_b")
       .select(col("doc_a"), col("doc_b"),
@@ -1337,11 +1320,11 @@ object Dedup {
     * in the same batch, clears `threshold`. The corpus is never
     * self-paired and its assignment is never recomputed: batch docs
     * assign to cells against the layout's `centroids` (hierarchical
-    * above [[graft.similarity.Ann.FlatAssignMaxCells]] cells — pass
+    * above [[graft.similarity.Ann.FlatDispatchMaxCells]] cells — pass
     * `nCells` when known to skip a count job), and pairing is confined
     * to the batch's probed cells — on a cluster-partitioned layout the
     * probed-cell filter arrives as LITERALS and prunes partitions (the
-    * v11 scan shape) up to [[graft.similarity.Ann.MaxCellLiterals]]
+    * v11 scan shape) up to [[graft.Regime.MaxInListLiterals]]
     * cells, and as a broadcast semi-join (runtime partition pruning)
     * beyond, so a large batch under auto cells can never blow up the
     * plan or the driver.

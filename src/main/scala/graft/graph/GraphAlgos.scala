@@ -7,7 +7,8 @@ import graft.schema.GraphSchema.{DstCol, IdCol, SrcCol}
 
 /** Iterative analytics over a PropertyGraph (SURVEY.md §2 "multi-hop graph
   * traversal at scale" + Phase 4). Each algorithm has one kernel, keyed on
-  * longs, with a measured driver-local regime and a distributed one:
+  * longs, with a measured driver-local regime and a distributed one.
+  * [[graft.Regime]] chooses between them against the caps kept here:
   *
   *  - reachability and hop distance ([[relatedN]], [[hopDistance]]) and
   *    weighted SSSP ([[weightedDistance]]) run on [[weightedDistanceLong]]:
@@ -156,7 +157,7 @@ object GraphAlgos {
     * of 2M (vid, dist) pairs is ~32 MB — the broadcast-hash-join cost
     * class. Beyond it the round falls back to a shuffle join (a frontier
     * that wide is a meaningful fraction of the vertex set, where the
-    * shuffle is the right plan anyway).
+    * shuffle is the right plan anyway). [[graft.Regime]] makes the choice.
     */
   private[graft] val BroadcastFrontierMaxRows = 2_000_000L
 
@@ -183,7 +184,8 @@ object GraphAlgos {
     * after round k, dist(v) is the min path weight over ≤k edges.
     * Returns None (caller falls back to the distributed loop, no state
     * carried over) when a round's frontier exceeds `vertexCap` or its
-    * touched-edge count exceeds `rowCap`.
+    * touched-edge count exceeds `rowCap` (arguments, so GraphSpec can
+    * force a mid-run bail at cap 1; `Regime.atScale` bails at round 0).
     *
     * Job shape per round: ONE filtered count + ONE bounded collect over
     * the FORWARD edge frame (`src ∈ F`, plus `dst ∈ F` when undirected,
@@ -194,20 +196,19 @@ object GraphAlgos {
     * scans the source twice per round. The count guard runs BEFORE any
     * rows move, so a hub frontier bails having transferred nothing.
     */
-  private def localRelax(fwd: DataFrame, start: Long, maxIters: Int,
+  private[graft] def localRelax(fwd: DataFrame, start: Long, maxIters: Int,
       directed: Boolean, vertexCap: Int, rowCap: Int)
       : Option[Seq[(Long, Double)]] = {
-    if (vertexCap <= 0 || rowCap <= 0) return None
     val dist = scala.collection.mutable.HashMap(start -> 0.0)
     var frontier: Set[Long] = Set(start)
     var i = 0
     while (i < maxIters && frontier.nonEmpty) {
-      if (frontier.size > vertexCap) return None
+      if (!graft.Regime.fits(frontier.size, vertexCap)) return None
       // isInCollection compiles to InSet past the literal threshold
       val outgoing = col("src").isInCollection(frontier)
       val matched = fwd.where(
         if (directed) outgoing else outgoing || col("dst").isInCollection(frontier))
-      if (matched.count() > rowCap) return None
+      if (!graft.Regime.fits(matched.count(), rowCap)) return None
       val slice = matched.collect()
       // round-start snapshot: a vertex improved THIS round must not
       // relax further edges until the NEXT round, or dist(v) after k
@@ -262,9 +263,7 @@ object GraphAlgos {
     * starts at the dictionary).
     */
   def weightedDistanceLong(edges: DataFrame, start: Long, maxIters: Int,
-      directed: Boolean = false,
-      localVertexCap: Int = LocalFrontierVertexCap,
-      localRowCap: Int = LocalSliceRowCap): DataFrame = {
+      directed: Boolean = false): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
     val fwd = edges.select(col("src").cast("long").as("src"),
@@ -276,8 +275,9 @@ object GraphAlgos {
     // tiny-frontier fast path: one probed scan per round instead of
     // join+agg+checkpoint+count jobs; bails (None) past either cap and
     // the distributed loop below runs from scratch — GraphSpec pins the
-    // threshold-invariance law (same answer at caps 0 / 1 / default)
-    localRelax(fwd, start, maxIters, directed, localVertexCap, localRowCap) match {
+    // threshold-invariance law (same answer at scale / caps 1 / default)
+    localRelax(fwd, start, maxIters, directed, LocalFrontierVertexCap,
+        LocalSliceRowCap) match {
       case Some(d) => return d.toDF("vid", "dist")
       case None => ()
     }
@@ -299,7 +299,7 @@ object GraphAlgos {
     while (i < maxIters && !settled) {
       val fr = frontier.select(col("vid").as("src"), col("dist").as("fdist"))
       val joined =
-        if (frontierRows <= BroadcastFrontierMaxRows)
+        if (graft.Regime.fits(frontierRows, BroadcastFrontierMaxRows))
           relaxed.join(broadcast(fr), Seq("src"))
         else relaxed.join(fr, Seq("src"))
       val msgs = joined
@@ -353,7 +353,7 @@ object GraphAlgos {
     *
     * Dispatch on the EXACT edge count, read off the input pinned once
     * (lazy localCheckpoint) so both regimes consume the same blocks:
-    *  - ≤ `localMaxEdges`: union-find on the driver, one pass, zero Spark
+    *  - ≤ [[LocalClustersMaxPairs]]: union-find on the driver, one pass, zero Spark
     *    jobs past the count and the block-read collect (measured sf0.1
     *    interleaved: 0.16-0.6s vs GraphX's 0.6-2.1s for t12's pairs);
     *  - past it: GraphX connected components, whose Pregel supersteps
@@ -362,16 +362,16 @@ object GraphAlgos {
     * The pin is probed with count(), not `limit(cap+1).collect()` on the
     * unpinned frame: executeTake's incremental partition rounds re-ran the
     * pair-generating join at trickle parallelism (t12 at sf1: 22.0s vs
-    * 7.1s). LlmOpsSpec pins local ≡ distributed (caps default vs 0).
+    * 7.1s). LlmOpsSpec pins local ≡ distributed (default vs
+    * [[graft.Regime.atScale]]).
     */
-  def connectedComponentsLong(edges: DataFrame,
-      localMaxEdges: Long = LocalClustersMaxPairs): DataFrame = {
+  def connectedComponentsLong(edges: DataFrame): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
     val pinned = edges.select(col("src").cast("long"), col("dst").cast("long"))
       .as[(Long, Long)].localCheckpoint(false)
     val out =
-      if (pinned.count() <= localMaxEdges)
+      if (graft.Regime.fits(pinned.count(), LocalClustersMaxPairs))
         unionFind(pinned.collect()).toDF("vid", "component")
       else graphxComponents(pinned)
     freePinned(pinned.toDF())
@@ -471,28 +471,6 @@ object GraphAlgos {
     out
   }
 
-  /** FIXED-POINT static PageRank: ranks are Longs in 1/`scale` units,
-    * messages are Longs, and every arithmetic step is integer
-    * (`contrib = rank / outDeg`, `next = 0.15*scale + 85*Σcontrib/100`,
-    * both truncating division). Integer sums are EXACT under any
-    * accumulation order, so the result is bit-identical across partition
-    * layouts, core counts, and engines — unlike a double-precision
-    * PageRank, whose 4dp-rounded output can legally flip at a rank
-    * boundary when partitioning changes the float accumulation order.
-    * This is the variant a cross-engine replay oracle can verify exactly
-    * (the g06 gate query replays it in a DuckDB recursive CTE), and the
-    * variant to prefer whenever reproducibility matters more than the
-    * last 1e-9 of rank mass.
-    *
-    * Quantization error vs float static PageRank is ≤ iters/scale per
-    * vertex — at the default scale (1e-9 units) invisible at any sane
-    * rounding. Overflow bound: 85 × (total rank mass ≈ V·scale) must fit
-    * a Long, so at the default scale the graph can hold ~10^8 vertices;
-    * pass a smaller `scale` (1e6) for billion-vertex graphs.
-    *
-    * Returns (label, id, rank_nano) with the raw fixed-point Long —
-    * exact by construction; divide by `scale` for a float rank.
-    */
   /** Widest vertex set whose per-iteration rank contributions broadcast:
     * 8M (vid, contrib) long pairs ≈ 128 MB raw — the upper end of a
     * comfortable repeated broadcast. Under it, each PageRank iteration
@@ -611,9 +589,7 @@ object GraphAlgos {
     * (vid, rank_nano); dispatches local vs distributed on exact counts.
     */
   def pageRankFixedPointLong(verts: DataFrame, edges: DataFrame, iters: Int,
-      scale: Long = 1000000000L,
-      localMaxEdges: Long = PageRankLocalMaxEdges,
-      localMaxVerts: Long = PageRankLocalMaxVerts): DataFrame = {
+      scale: Long = 1000000000L): DataFrame = {
     require(iters >= 0, s"iters must be >= 0, got $iters")
     val spark = verts.sparkSession
     import spark.implicits._
@@ -624,7 +600,8 @@ object GraphAlgos {
     val nVerts = vv.count()
     val nEdges = ee.count() // exact, over materialized blocks
     val baseRank = (15L * scale) / 100L
-    if (nEdges <= localMaxEdges && nVerts <= localMaxVerts) {
+    if (graft.Regime.fits(nEdges, PageRankLocalMaxEdges) &&
+        graft.Regime.fits(nVerts, PageRankLocalMaxVerts)) {
       // primitive Array[Long] collects, no boxed rows or tuples (the
       // Tuple2 form measured 1.7s + a GC bill charged to the NEXT bench
       // query). src and dst collect as two narrow projections of the
@@ -671,7 +648,8 @@ object GraphAlgos {
       val send = ranks.join(degD, col("vid") === col("src"))
         .select(col("src"), expr("rank div d").as("c"))
       val sendSide =
-        if (nVerts <= PageRankBroadcastMaxVerts) broadcast(send) else send
+        if (graft.Regime.fits(nVerts, PageRankBroadcastMaxVerts)) broadcast(send)
+        else send
       // ONE pass over the static edge table; partial aggregation folds
       // the per-destination sum map-side before the vertex-sized shuffle
       val msgs = ee.join(sendSide, Seq("src"))
@@ -690,10 +668,31 @@ object GraphAlgos {
     out
   }
 
+  /** FIXED-POINT static PageRank: ranks are Longs in 1/`scale` units,
+    * messages are Longs, and every arithmetic step is integer
+    * (`contrib = rank / outDeg`, `next = 0.15*scale + 85*Σcontrib/100`,
+    * both truncating division). Integer sums are EXACT under any
+    * accumulation order, so the result is bit-identical across partition
+    * layouts, core counts, and engines — unlike a double-precision
+    * PageRank, whose 4dp-rounded output can legally flip at a rank
+    * boundary when partitioning changes the float accumulation order.
+    * This is the variant a cross-engine replay oracle can verify exactly
+    * (the g06 gate query replays it in a DuckDB recursive CTE), and the
+    * variant to prefer whenever reproducibility matters more than the
+    * last 1e-9 of rank mass.
+    *
+    * Quantization error vs float static PageRank is ≤ iters/scale per
+    * vertex — at the default scale (1e-9 units) invisible at any sane
+    * rounding. Overflow bound: 85 × (total rank mass ≈ V·scale) must fit
+    * a Long, so at the default scale the graph can hold ~10^8 vertices;
+    * pass a smaller `scale` (1e6) for billion-vertex graphs.
+    *
+    * Returns (label, id, rank_nano) with the raw fixed-point Long —
+    * exact by construction; divide by `scale` for a float rank.
+    */
   def pageRankFixedPoint(g: PropertyGraph, iters: Int = 25,
-      relations: Seq[String] = Seq.empty, scale: Long = 1000000000L,
-      localMaxEdges: Long = PageRankLocalMaxEdges,
-      localMaxVerts: Long = PageRankLocalMaxVerts): DataFrame = {
+      relations: Seq[String] = Seq.empty, scale: Long = 1000000000L)
+      : DataFrame = {
     require(iters >= 0, s"iters must be >= 0, got $iters")
     // DataFrame loop, not RDD joins (round 15): the RDD formulation
     // shuffled 7.5M boxed tuples per iteration through Java-object
@@ -705,7 +704,7 @@ object GraphAlgos {
     // independence) is unchanged.
     val (dict, edges) = encode(g, relations)
     val ranks = pageRankFixedPointLong(dict.select(col("vid")), edges,
-      iters, scale, localMaxEdges, localMaxVerts)
+      iters, scale)
     val out = ranks.join(dict, Seq("vid"))
       .select(col("nlabel").as("label"), col("nid").as(IdCol), col("rank_nano"))
       // pin the (vertex-sized) result so the dict pin can be dropped
@@ -766,6 +765,18 @@ object GraphAlgos {
     out
   }
 
+  /** Most canonical edges the triangle adjacency will broadcast: the
+    * oriented adjacency is exactly m longs plus per-vertex array
+    * overhead, so 32M edges ≈ 256 MB raw (sub-GB materialized) — inside
+    * any executor this engine targets, and far above the sf1 corpus
+    * (7.5M). Past the bound the joins degrade gracefully to sort-merge
+    * instead of OOMing a 100×-scale caller by default. The dispatch is
+    * MEASURED on the exact checkpointed edge count (the t08/t33
+    * size-conditioned-join precedent), never estimated, and
+    * [[graft.Regime]] makes the choice.
+    */
+  private[graft] val BroadcastAdjacencyMaxEdges = 32_000_000L
+
   /** Long-keyed triangle core over raw (u, v) pairs — duplicates,
     * self-loops and both orientations tolerated (canonicalized + dedup'd
     * inside). Returns (vid, n) for every vertex in at least one triangle.
@@ -785,20 +796,7 @@ object GraphAlgos {
     * ~10s, as did GraphX, and the same plan on string ids ran ~16s;
     * DuckDB single-node needs 8.8s for the counts alone).
     */
-  /** Most canonical edges the triangle adjacency will broadcast: the
-    * oriented adjacency is exactly m longs plus per-vertex array
-    * overhead, so 32M edges ≈ 256 MB raw (sub-GB materialized) — inside
-    * any executor this engine targets, and far above the sf1 corpus
-    * (7.5M). Past the bound the joins degrade gracefully to sort-merge
-    * instead of OOMing a 100×-scale caller by default. The dispatch is
-    * MEASURED on the exact checkpointed edge count (the t08/t33
-    * size-conditioned-join precedent), never estimated; callers can
-    * still force either regime.
-    */
-  private[graft] val BroadcastAdjacencyMaxEdges = 32_000_000L
-
-  def triangleCountEdges(rawPairs: DataFrame,
-      broadcastAdjacency: Option[Boolean] = None): DataFrame = {
+  def triangleCountEdges(rawPairs: DataFrame): DataFrame = {
     val canon = rawPairs
       .select(col("u").cast("long").as("a"), col("v").cast("long").as("b"))
       .filter(col("a") =!= col("b"))
@@ -807,8 +805,7 @@ object GraphAlgos {
       .localCheckpoint(true)
     // exact, cheap (canon is already materialized blocks), and decisive:
     // no optimizer size estimate exists for a checkpointed frame
-    val doBroadcast = broadcastAdjacency
-      .getOrElse(canon.count() <= BroadcastAdjacencyMaxEdges)
+    val doBroadcast = graft.Regime.fits(canon.count(), BroadcastAdjacencyMaxEdges)
     val degPlain = canon.select(explode(array(col("u"), col("v"))).as("x"))
       .groupBy(col("x")).agg(count(lit(1)).as("deg"))
     // vertex-sized and strictly smaller than the adjacency (one long +

@@ -388,16 +388,14 @@ object Retrieval {
     * (query-vocabulary-sized), and the stats sum is generation-counted.
     * Corpus text is never re-tokenized; per-query cost tracks the query
     * terms' posting lists, not the corpus.
+    *
+    * A query vocabulary within [[graft.Regime.MaxInListLiterals]] turns
+    * both stored-table prunes into ONE pushed `BETWEEN + IN(terms…)` data
+    * filter derived from a single bounded collect — no range-agg job, no
+    * broadcast-semi builds (the v12 bounded cell-prune rule). Above it,
+    * the range + broadcast-semi plan takes over; [[graft.Regime]] makes
+    * the choice.
     */
-  /** Max collected query-vocabulary size for the literal-IN prune: at or
-    * under it, both stored-table prunes become ONE pushed
-    * `BETWEEN + IN(terms…)` data filter derived from a single bounded
-    * collect — no range-agg job, no broadcast-semi builds (the v12
-    * bounded cell-prune rule, and the same 1000-literal comfort bound).
-    * Above it, the range + broadcast-semi plan takes over.
-    */
-  private[graft] val InListTermMax = 1000
-
   def bm25TopKStaged(
       index: StagedBm25Index, queries: DataFrame,
       idCol: String, textCol: String, k: Int,
@@ -431,13 +429,13 @@ object Retrieval {
     val spark = queries.sparkSession
     import spark.implicits._
     val vocab = qTerms.select(col("term")).distinct()
-      .limit(InListTermMax + 1).collect().map(_.getString(0))
+      .limit(graft.Regime.MaxInListLiterals + 1).collect().map(_.getString(0))
     val (pruned, dfq, stats) =
       if (vocab.isEmpty)
         (index.postings.where(lit(false)),
           Seq.empty[(String, Long)].toDF("term", "df"),
           Seq((0L, 0.0)).toDF("n_docs", "avgdl"))
-      else if (vocab.length <= InListTermMax) {
+      else if (graft.Regime.fits(vocab.length, graft.Regime.MaxInListLiterals)) {
         // min/max under UTF8String BINARY order — the order the pushed
         // BETWEEN compares in. Java String ordering (UTF-16 code units)
         // disagrees for supplementary-plane characters (a surrogate pair

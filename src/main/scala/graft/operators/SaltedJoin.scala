@@ -66,15 +66,8 @@ object SaltedJoin {
     * broadcast threshold — the same signal Catalyst's join strategy uses,
     * so the dispatch agrees with what a plain `join` would have planned.
     */
-  private[graft] def broadcastable(df: DataFrame): Boolean = {
-    val raw = df.sparkSession.conf
-      .get("spark.sql.autoBroadcastJoinThreshold", "10MB").trim
-    val threshold =
-      if (raw.startsWith("-")) -1L
-      else org.apache.spark.network.util.JavaUtils.byteStringAsBytes(raw)
-    threshold > 0 &&
-      df.queryExecution.optimizedPlan.stats.sizeInBytes <= threshold
-  }
+  private[graft] def broadcastable(df: DataFrame): Boolean =
+    graft.Regime.broadcastable(df.queryExecution.optimizedPlan.stats.sizeInBytes)
 
   /** The skewed side with its `__salt` column attached — package-visible so
     * the spec can assert the spread property (identical duplicate rows land

@@ -50,7 +50,8 @@ object Sketch {
     * 2^21 ≈ 2M short string keys is ~100-200 MB of partial-agg hash map
     * per task worst case — comfortably inside executor memory at local
     * and cluster defaults; beyond it dropping the Zipf tail AT THE SCAN
-    * (the probe) beats aggregating it.
+    * (the probe) beats aggregating it. [[graft.Regime]] decides on the
+    * caller's `expectedVocab` hint.
     */
   private[graft] val SmallVocabMax = 1L << 21
 
@@ -66,10 +67,10 @@ object Sketch {
     * the vocabulary is as expensive as aggregating it; only PRIOR
     * knowledge can pick the sketch plan for free. Hence:
     *
-    *   - default (no hint, or hint <= smallVocabMax): ONE pass — plain
+    *   - default (no hint, or hint <= SmallVocabMax): ONE pass — plain
     *     groupBy + HAVING, the same plan the oracle runs. Map-side
     *     partial aggregation absorbs any vocabulary below the floor.
-    *   - `expectedVocab` above `smallVocabMax` (the 100 TB corpus-vocab
+    *   - `expectedVocab` above `SmallVocabMax` (the 100 TB corpus-vocab
     *     case — billions of keys, which the caller knows a priori): CMS
     *     build pass + codegen'd probe-filtered exact pass, so the Zipf
     *     tail is dropped at the scan and never reaches the exchange.
@@ -93,14 +94,11 @@ object Sketch {
     */
   def heavyHitters(keyed: DataFrame, keyCol: String, threshold: Long,
       eps: Double = 1e-4, confidence: Double = 0.99,
-      seed: Int = 42, forceProbe: Boolean = false,
-      smallVocabMax: Long = SmallVocabMax,
-      expectedVocab: Option[Long] = None): DataFrame = {
+      seed: Int = 42, expectedVocab: Option[Long] = None): DataFrame = {
     require(threshold >= 1, s"threshold must be >= 1, got $threshold")
     requireStringKey(keyed, keyCol, "heavyHitters")
     aggExact(
-      probeBase(keyed, keyCol, threshold, eps, confidence, seed,
-        forceProbe, smallVocabMax, expectedVocab),
+      probeBase(keyed, keyCol, threshold, eps, confidence, seed, expectedVocab),
       keyCol, threshold)
   }
 
@@ -110,23 +108,17 @@ object Sketch {
     * passes the prefilter) and lets the exact aggregation do everything.
     */
   private def probeBase(keyed: DataFrame, keyCol: String, threshold: Long,
-      eps: Double, confidence: Double, seed: Int, forceProbe: Boolean,
-      smallVocabMax: Long, expectedVocab: Option[Long]): DataFrame =
-    if (probeRegime(forceProbe, smallVocabMax, expectedVocab))
+      eps: Double, confidence: Double, seed: Int,
+      expectedVocab: Option[Long]): DataFrame =
+    if (probeRegime(expectedVocab))
       probeFiltered(keyed, keyCol, threshold,
         buildCms(keyed, keyCol, eps, confidence, seed))
     else keyed.where(col(keyCol).isNotNull)
 
-  // `forceProbe` is a TEST hook (exercising the FP-repair and
-  // exchange-shrink laws on toy fixtures whose vocabulary would rightly
-  // dispatch naive); production dispatch is by the a-priori
-  // `expectedVocab` hint alone. It replaced the measured-dispatch era's
-  // `prefilterFanout` cost knob (round 13): after dispatch went a-priori
-  // that parameter's positive values were silently ignored — a renamed
-  // boolean makes any stale tuned call site fail to compile instead.
-  private def probeRegime(forceProbe: Boolean, smallVocabMax: Long,
-      expectedVocab: Option[Long]): Boolean =
-    forceProbe || expectedVocab.exists(_ > smallVocabMax)
+  // production dispatch is by the a-priori `expectedVocab` hint alone (no
+  // hint = a small vocabulary); specs force the probe with Regime.atScale
+  private def probeRegime(expectedVocab: Option[Long]): Boolean =
+    !graft.Regime.fits(expectedVocab.getOrElse(0L), SmallVocabMax)
 
   /** The sketch pass — one scan, fixed-size executor→driver merge. */
   private def buildCms(keyed: DataFrame, keyCol: String,
@@ -160,14 +152,12 @@ object Sketch {
     */
   def heavyHittersByShare(keyed: DataFrame, keyCol: String, minShare: Double,
       eps: Double = 1e-4, confidence: Double = 0.99,
-      seed: Int = 42, forceProbe: Boolean = false,
-      smallVocabMax: Long = SmallVocabMax,
-      expectedVocab: Option[Long] = None): DataFrame = {
+      seed: Int = 42, expectedVocab: Option[Long] = None): DataFrame = {
     require(minShare > 0.0 && minShare < 1.0,
       s"minShare must be in (0, 1), got $minShare")
     requireStringKey(keyed, keyCol, "heavyHittersByShare")
     val (agged, total) =
-      if (probeRegime(forceProbe, smallVocabMax, expectedVocab)) {
+      if (probeRegime(expectedVocab)) {
         // probe regime: the CMS pass doubles as the exact-N pass
         // (totalCount counts every non-null add — not an estimate), so
         // the share threshold costs no extra scan before the probe pass

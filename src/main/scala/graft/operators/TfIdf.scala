@@ -13,7 +13,7 @@ import graft.functions.TextFunctions.tokens
   *
   * Two physical plans, one answer (TfIdfSpec pins the equivalence):
   *
-  *  - KERNEL (vocabulary ≤ `vocabCap`, the norm — natural-language
+  *  - KERNEL (vocabulary ≤ [[TfIdf.DefaultVocabCap]], the norm — natural-language
   *    vocabularies are Zipf-bounded, millions of terms against billions
   *    of documents): one vocabulary-sized aggregation builds the df
   *    table, which collapses with N into a broadcast term→idf hash map;
@@ -30,9 +30,9 @@ import graft.functions.TextFunctions.tokens
   *    (byte-shingle or adversarial corpora).
   *
   * The dispatch probe costs one vocabulary aggregation capped at
-  * `vocabCap + 1` collected rows — bounded by construction; the kernel
-  * branch reuses exactly those rows as the model, so the probe is never
-  * wasted work.
+  * `DefaultVocabCap + 1` collected rows — bounded by construction; the
+  * kernel branch reuses exactly those rows as the model, so the probe is
+  * never wasted work. [[graft.Regime]] makes the choice.
   */
 object TfIdf {
 
@@ -43,8 +43,8 @@ object TfIdf {
     */
   val DefaultVocabCap = 1 << 20
 
-  def topTerms(docs: DataFrame, idCol: String, textCol: String, k: Int,
-      vocabCap: Int = DefaultVocabCap): DataFrame = {
+  def topTerms(docs: DataFrame, idCol: String, textCol: String, k: Int)
+      : DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     val spark = docs.sparkSession
     val dfreq = docs
@@ -59,8 +59,9 @@ object TfIdf {
     // the underlying bytes, so the model keys equal the executor's terms.
     val capped = dfreq
       .select(col("term").cast("binary").as("term"), col("df"))
-      .limit(vocabCap + 1).collect()
-    if (capped.length > vocabCap) topTermsJoined(docs, idCol, textCol, k)
+      .limit(DefaultVocabCap + 1).collect()
+    if (!graft.Regime.fits(capped.length, DefaultVocabCap))
+      topTermsJoined(docs, idCol, textCol, k)
     else {
       val nDocs = docs.count().toDouble
       val idf = new java.util.HashMap[UTF8String, java.lang.Double](

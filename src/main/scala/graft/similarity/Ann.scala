@@ -233,14 +233,14 @@ object Ann {
   private[graft] val FlatAssignMaxCells = 64
 
   /** Largest cell count [[assignCells]] routes to the FLAT (single-level
-    * broadcast-argmax) form. MEASURED crossover (CellScaleExperiment,
-    * dim 64, local[32]): flat costs α·n·k (1.15 s at n=50k/k=196;
+    * broadcast-argmax) form. MEASURED crossover (SURVEY.md §8, "the cells
+    * 10× step"; dim 64, local[32]): flat costs α·n·k (1.15 s at n=50k/k=196;
     * 232 s at n=500k/k=1954 — the quadratic cliff under [[autoCells]]'
     * k ∝ n) while hierarchical costs ~β·n (4.9 s / 21.5 s at the same
     * points), crossing near k ≈ 300; 256 is the nearest power of two
     * below it, and comfortably above every replay-oracle corpus (gate
     * scale resolves ≤ 64 cells), so oracles stay on the bit-exact flat
-    * path.
+    * path. [[graft.Regime]] makes the top-level choice.
     */
   private[graft] val FlatDispatchMaxCells = 256
 
@@ -259,12 +259,11 @@ object Ann {
     */
   private[graft] def assignCells(cent: DataFrame, df: DataFrame,
       idCol: String, vecCol: String, side: String, keep: Int,
-      nCells: Int = -1, dispatchMax: Int = FlatDispatchMaxCells): DataFrame = {
+      nCells: Int = -1): DataFrame = {
     val k = if (nCells >= 0) nCells else cent.count().toInt
-    if (k <= dispatchMax)
+    if (graft.Regime.fits(k, FlatDispatchMaxCells))
       assignCellsFlat(cent, df, idCol, vecCol, side, keep)
-    else assignCellsHierarchical(cent, df, idCol, vecCol, side, keep, k,
-      dispatchMax = dispatchMax)
+    else assignCellsHierarchical(cent, df, idCol, vecCol, side, keep, k)
   }
 
   private[graft] def assignCellsFlat(cent: DataFrame, df: DataFrame,
@@ -303,8 +302,8 @@ object Ann {
     * each; every cell maps to its nearest super-cell; each row assigns
     * to its `superProbe` nearest super-cells and runs the argmax over
     * only those supers' children (~superProbe·64 candidates). Both
-    * "assign to super" steps are themselves [[assignCells]] calls, so
-    * when the super set still exceeds the flat threshold (k > ~4k) the
+    * "assign to super" steps dispatch like [[assignCells]], so when the
+    * super set still exceeds [[FlatDispatchMaxCells]] (k > ~16k) the
     * hierarchy RECURSES — depth log₆₄(k), per-row work
     * O(superProbe·64·depth) ≈ constant·log instead of flat's O(k). With
     * [[autoCells]]' k ∝ n the whole pass is O(n·log n), and the only
@@ -321,7 +320,7 @@ object Ann {
     * candidate set is all k cells and the tie-break order is identical;
     * inductively at every depth) — the spec's equivalence law.
     *
-    * MEASURED at the depth-2 regime (CellScaleExperiment, n=5M,
+    * MEASURED at the depth-2 regime (SURVEY.md §8, n=5M,
     * k=19532, nSuper=306 > 256 so the row→super step itself recurses):
     * 763 s on local[32] vs 23.4 s at n=500k/k=1954 (depth 1) — ~1.6×
     * per-row candidate growth (≈255 vs ≈159 cosines/row) × 10× rows,
@@ -331,8 +330,7 @@ object Ann {
     */
   private[graft] def assignCellsHierarchical(cent: DataFrame, df: DataFrame,
       idCol: String, vecCol: String, side: String, keep: Int, nCells: Int,
-      superProbe: Int = -1,
-      dispatchMax: Int = FlatDispatchMaxCells): DataFrame = {
+      superProbe: Int = -1): DataFrame = {
     val nSuper = math.max(2,
       math.ceil(nCells.toDouble / FlatAssignMaxCells).toInt)
     val probe = math.min(nSuper,
@@ -344,17 +342,18 @@ object Ann {
     val supers = cells.orderBy(col("cid")).limit(nSuper)
       .select(col("cid").as("cid"), col("centroid").as("centroid"))
       .localCheckpoint(false) // consumed by the cell map + the row probe
-    // cell → nearest super: a recursive assignment (the super set itself
-    // exceeds the flat threshold once k > threshold², so it re-enters
-    // the hierarchy). Work: k·64·depth cosines — linear in k.
-    val cellSuper = assignCells(supers, cells, "cid", "centroid",
-        "cell", keep = 1, nCells = nSuper, dispatchMax = dispatchMax)
+    // a super set past the flat threshold re-enters the hierarchy — a
+    // plain comparison, not a Regime choice: at scale, 2 supers would
+    // recurse forever. cell → nearest super: k·64·depth cosines
+    def toSupers(target: DataFrame, id: String, vec: String, s: String, keep: Int) =
+      if (nSuper <= FlatDispatchMaxCells) assignCellsFlat(supers, target, id, vec, s, keep)
+      else assignCellsHierarchical(supers, target, id, vec, s, keep, nSuper)
+    val cellSuper = toSupers(cells, "cid", "centroid", "cell", keep = 1)
       .select(col("cluster_id").as("sid"), col("cell_id").as("cid"),
         col("cell_vec").as("centroid"))
     // row → `probe` nearest super-cells, same recursion; returns
     // (side_id, sid, side_vec) with the vector already attached
-    val rowSuper = assignCells(supers, df, idCol, vecCol, side,
-        keep = probe, nCells = nSuper, dispatchMax = dispatchMax)
+    val rowSuper = toSupers(df, idCol, vecCol, side, keep = probe)
       .withColumnRenamed("cluster_id", "sid")
     // leaf level: argmax over the probed supers' children. The join key
     // `sid` has only nSuper distinct values and rows CLUSTER onto few
@@ -376,7 +375,7 @@ object Ann {
     //     of one task absorbing a hot super's whole fan-out.
     val ids = df.select(col(idCol).as(s"${side}_id"), col(vecCol).as(s"${side}_vec"))
     val joined =
-      if (nCells <= BroadcastCellsMax)
+      if (graft.Regime.fits(nCells, BroadcastCellsMax))
         rowSuper.join(broadcast(cellSuper), Seq("sid"))
       else
         // forceSalt: this branch only runs when cellSuper is BY DESIGN too
@@ -396,6 +395,7 @@ object Ann {
     * executor memory at local and cluster defaults. Covers corpora to
     * ~16M rows under [[autoCells]]' k = n/256; beyond it the leaf join
     * salt-spreads instead (see [[assignCellsHierarchical]]).
+    * [[graft.Regime]] makes the choice.
     */
   private[graft] val BroadcastCellsMax = 65536
 
@@ -486,17 +486,10 @@ object Ann {
       .write.mode("overwrite").partitionBy(clusterCol).parquet(dstLayoutDir)
   }
 
-  /** Most distinct cells a probed-cell filter may carry as IN-list
-    * LITERALS before [[pruneToCells]] switches to a broadcast semi-join:
-    * literals buy static partition pruning on a cluster-partitioned
-    * layout, but an unbounded list is a driver-memory and plan-size
-    * hazard once auto cells puts 10⁵-10⁶ cells in play.
-    */
-  private[graft] val MaxCellLiterals = 1000
-
   /** Prune `stored` to the rows whose `clusterCol` appears in `cells`
     * (a single-column DataFrame of probed cell ids, duplicates fine).
-    * Collects AT MOST `maxLiterals + 1` distinct ids: within the bound
+    * Collects AT MOST [[graft.Regime.MaxInListLiterals]] + 1 distinct
+    * ids, since auto cells can put 10⁵-10⁶ cells in play: within the bound
     * the filter is an IN-list of literals (static partition pruning on a
     * cluster-partitioned layout — the v11 scan shape); beyond it a
     * broadcast LEFT SEMI join on the distinct cell set, which dynamic
@@ -504,10 +497,11 @@ object Ann {
     * either way — the spec asserts the equivalence and both plan shapes.
     */
   private[graft] def pruneToCells(stored: DataFrame, clusterCol: String,
-      cells: DataFrame, maxLiterals: Int = MaxCellLiterals): DataFrame = {
+      cells: DataFrame): DataFrame = {
     val distinctCells = cells.toDF("__probe_cell").distinct()
-    val sample = distinctCells.limit(maxLiterals + 1).collect().map(_.get(0)).toSeq
-    if (sample.size <= maxLiterals)
+    val sample = distinctCells.limit(graft.Regime.MaxInListLiterals + 1)
+      .collect().map(_.get(0)).toSeq
+    if (graft.Regime.fits(sample.size, graft.Regime.MaxInListLiterals))
       stored.where(col(clusterCol).isInCollection(sample))
     else
       stored.join(broadcast(distinctCells),
@@ -525,7 +519,7 @@ object Ann {
     * probed cells only.
     *
     * The probed-cell filter is bounded by [[pruneToCells]]: up to
-    * [[MaxCellLiterals]] distinct cells arrive as literals (static
+    * [[graft.Regime.MaxInListLiterals]] distinct cells arrive as literals (static
     * partition pruning); beyond that (auto-cell production scale, or a
     * huge query batch) it becomes a broadcast semi-join, so neither the
     * driver nor the plan ever holds an unbounded IN-list.

@@ -250,12 +250,12 @@ class GraphSpec extends SparkSpec {
     // ization surface
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 1L), (1L, 4L), (4L, 2L),
       (2L, 1L), (3L, 2L), (5L, 5L), (4L, 6L)).toDF("u", "v")
-    def counts(mode: Option[Boolean]): Map[Long, Long] =
-      graft.graph.GraphAlgos.triangleCountEdges(pairs, mode)
+    def counts(): Map[Long, Long] =
+      graft.graph.GraphAlgos.triangleCountEdges(pairs)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val bcast = counts(Some(true))
-    val smj = counts(Some(false))
-    val measured = counts(None) // 8 canon edges ≤ bound → broadcast branch
+    val measured = counts() // 8 canon edges ≤ bound → broadcast branch
+    val bcast = measured
+    val smj = Regime.atScale(counts())
     assert(bcast === Map(1L -> 2L, 2L -> 2L, 3L -> 1L, 4L -> 1L))
     assert(smj === bcast, "sort-merge regime must match broadcast regime")
     assert(measured === bcast, "measured dispatch must match forced regimes")
@@ -305,10 +305,10 @@ class GraphSpec extends SparkSpec {
     // exact reproducibility across runs (fresh vertex numbering each time)
     assert(run() === ranks)
     // the local fast path ≡ the distributed loop, BIT-EXACT (integer
-    // arithmetic, so the law is equality, not tolerance): caps 0 force
-    // the DataFrame loop the 100-TB fallback runs
-    val distributed = graft.graph.GraphAlgos.pageRankFixedPoint(tiny,
-      iters = 5, localMaxEdges = 0L, localMaxVerts = 0L)
+    // arithmetic, so the law is equality, not tolerance): Regime.atScale
+    // forces the DataFrame loop the 100-TB fallback runs
+    val distributed = Regime.atScale(
+        graft.graph.GraphAlgos.pageRankFixedPoint(tiny, iters = 5))
       .collect().map(r => r.getString(1) -> r.getLong(2)).toMap
     assert(distributed === ranks,
       "distributed PageRank loop diverged from the local fast path")
@@ -329,9 +329,8 @@ class GraphSpec extends SparkSpec {
       df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val viaLocalDispatch = ranksOf(
       graft.graph.GraphAlgos.pageRankFixedPointLong(verts, edges, iters = 5))
-    val viaDistributed = ranksOf(
-      graft.graph.GraphAlgos.pageRankFixedPointLong(verts, edges, iters = 5,
-        localMaxEdges = 0L, localMaxVerts = 0L))
+    val viaDistributed = ranksOf(Regime.atScale(
+      graft.graph.GraphAlgos.pageRankFixedPointLong(verts, edges, iters = 5)))
     assert(viaLocalDispatch === viaDistributed,
       "dangling-edge input diverged between dispatch regimes")
     assert(viaLocalDispatch.keySet === Set(1L, 2L, 3L))
@@ -383,14 +382,16 @@ class GraphSpec extends SparkSpec {
       "connectedComponents" -> (() => ga.connectedComponents(g, Seq("friend"))),
       "weightedDistance" -> (() => ga.weightedDistance(named, "n1", 3)),
       "weightedDistanceLong local" -> (() => ga.weightedDistanceLong(weighted, 1L, 3)),
-      "weightedDistanceLong distributed" -> (() => ga.weightedDistanceLong(weighted, 1L, 3,
-        localVertexCap = 0, localRowCap = 0)),
+      "weightedDistanceLong distributed" -> (() =>
+        Regime.atScale(ga.weightedDistanceLong(weighted, 1L, 3))),
       "connectedComponentsLong local" -> (() => ga.connectedComponentsLong(weighted)),
       "connectedComponentsLong distributed" -> (() =>
-        ga.connectedComponentsLong(weighted, localMaxEdges = 0L)),
+        Regime.atScale(ga.connectedComponentsLong(weighted))),
       "pageRankFixedPoint local" -> (() => ga.pageRankFixedPoint(g, iters = 3)),
-      "pageRankFixedPoint distributed" -> (() => ga.pageRankFixedPoint(g, iters = 3,
-        localMaxEdges = 0L, localMaxVerts = 0L)),
+      "pageRankFixedPoint distributed" -> (() =>
+        Regime.atScale(ga.pageRankFixedPoint(g, iters = 3))),
+      "triangleCountEdges at scale" -> (() => Regime.atScale(ga.triangleCountEdges(
+        weighted.select(col("src").as("u"), col("dst").as("v"))))),
       "pageRankFixedPointLong" -> (() => ga.pageRankFixedPointLong(
         Seq(1L, 2L, 3L, 4L, 8L, 9L).toDF("vid"), weighted, iters = 3)),
       "triangleCount" -> (() => ga.triangleCount(g, Seq("friend"))),
@@ -522,44 +523,54 @@ class GraphSpec extends SparkSpec {
       (0L, 1L, 10.0), (0L, 2L, 1.0), (2L, 1L, 2.0), (2L, 1L, 7.0),
       (1L, 3L, 1.0), (3L, 0L, 1.0), (8L, 9L, 1.0))
       .toDF("src", "dst", "weight")
-    def run(vCap: Int, rCap: Int, iters: Int): Map[Long, Double] =
-      graft.graph.GraphAlgos.weightedDistanceLong(edges, start = 0L,
-        maxIters = iters, localVertexCap = vCap, localRowCap = rCap)
-        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    // the default dispatch (local while the probes fit), the distributed
+    // loop (Regime.atScale), and the local kernel at a vertex cap or a
+    // row cap of 1, which bails mid-run (None) and hands the call to the
+    // distributed loop from scratch
+    def dists(df: org.apache.spark.sql.DataFrame): Map[Long, Double] =
+      df.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    def run(e: org.apache.spark.sql.DataFrame, directed: Boolean, iters: Int) =
+      dists(graft.graph.GraphAlgos.weightedDistanceLong(e, start = 0L,
+        maxIters = iters, directed = directed))
+    def bailOr(e: org.apache.spark.sql.DataFrame, directed: Boolean,
+        vCap: Int, rCap: Int, iters: Int, distributed: Map[Long, Double]) =
+      graft.graph.GraphAlgos.localRelax(e, 0L, iters, directed, vCap, rCap)
+        .map(_.toMap).getOrElse(distributed)
     for (iters <- 1 to 4) {
-      val distributed = run(0, 0, iters)            // caps 0 = never local
-      assert(run(8192, 1000000, iters) === distributed,
+      val distributed = Regime.atScale(run(edges, directed = false, iters))
+      assert(run(edges, directed = false, iters) === distributed,
         s"local path diverged at iters=$iters")
-      assert(run(1, 1000000, iters) === distributed,
+      assert(bailOr(edges, false, 1, 1000000, iters, distributed) === distributed,
         s"vertex-cap bail (frontier > 1 mid-run) diverged at iters=$iters")
-      assert(run(8192, 1, iters) === distributed,
+      assert(bailOr(edges, false, 8192, 1, iters, distributed) === distributed,
         s"row-cap bail (slice > 1 row) diverged at iters=$iters")
     }
+    // the vertex cap of 1 really bails mid-run: round 1's frontier is the
+    // start alone, round 2's is {1, 2, 3}
+    val ga = graft.graph.GraphAlgos
+    assert(ga.localRelax(edges, 0L, 1, false, 1, 1000000).isDefined)
+    assert(ga.localRelax(edges, 0L, 2, false, 1, 1000000).isEmpty)
     // the bounded-walk contract itself: 1 round sees only the direct
     // edge; 2 rounds find the cheapest detour — 0→3→1 at 2.0 (the 3→0
     // edge traversed backwards: undirected relaxation), beating the
     // 0→2→1 detour at 3.0
-    assert(run(8192, 1000000, 1)(1L) === 10.0)
-    assert(run(8192, 1000000, 2)(1L) === 2.0)
-    // the relatedN shape: directed, unit weights — same law at caps
-    // 0, 1 and default
+    assert(run(edges, directed = false, 1)(1L) === 10.0)
+    assert(run(edges, directed = false, 2)(1L) === 2.0)
+    // the relatedN shape: directed, unit weights — same law at scale,
+    // at caps 1 and at the default
     val unit = edges.withColumn("weight", lit(1.0))
-    def runDirected(vCap: Int, rCap: Int, iters: Int): Map[Long, Double] =
-      graft.graph.GraphAlgos.weightedDistanceLong(unit, start = 0L,
-        maxIters = iters, directed = true, localVertexCap = vCap, localRowCap = rCap)
-        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     for (iters <- 1 to 4) {
-      val distributed = runDirected(0, 0, iters)
-      assert(runDirected(8192, 1000000, iters) === distributed,
+      val distributed = Regime.atScale(run(unit, directed = true, iters))
+      assert(run(unit, directed = true, iters) === distributed,
         s"directed local path diverged at iters=$iters")
-      assert(runDirected(1, 1000000, iters) === distributed,
+      assert(bailOr(unit, true, 1, 1000000, iters, distributed) === distributed,
         s"directed vertex-cap bail diverged at iters=$iters")
-      assert(runDirected(8192, 1, iters) === distributed,
+      assert(bailOr(unit, true, 8192, 1, iters, distributed) === distributed,
         s"directed row-cap bail diverged at iters=$iters")
     }
     // directed BFS layers: 3 is two hops out (0→1→3), and the 3→0 edge
     // is never walked backwards
-    assert(runDirected(8192, 1000000, 4) ===
+    assert(run(unit, directed = true, 4) ===
       Map(0L -> 0.0, 1L -> 1.0, 2L -> 1.0, 3L -> 2.0))
   }
 

@@ -618,11 +618,11 @@ class LlmOpsSpec extends SparkSpec {
       (20L, 21L),                             // isolated pair
       (big + 2, big))                         // ids above 2^53
       .toDF("doc_a", "doc_b")
-    def labels(cap: Long) = graft.graph.GraphAlgos.connectedComponentsLong(
-        pairs.select(col("doc_a").as("src"), col("doc_b").as("dst")), cap)
+    def labels() = graft.graph.GraphAlgos.connectedComponentsLong(
+        pairs.select(col("doc_a").as("src"), col("doc_b").as("dst")))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val local = labels(graft.graph.GraphAlgos.LocalClustersMaxPairs) // 10 pairs ≪ cap
-    val dist = labels(0L)                                             // forced GraphX
+    val local = labels()                      // 10 pairs ≪ LocalClustersMaxPairs
+    val dist = Regime.atScale(labels())       // forced GraphX
     assert(local === dist, s"local $local\ndistributed $dist")
     assert(local(big + 2) === big)
     // Dedup.clusters derives its rows from the same kernel labels
@@ -1363,11 +1363,11 @@ class LlmOpsSpec extends SparkSpec {
       .toDF("doc_id", "text")
     val bench = Seq((100L, phrase)).toDF("doc_id", "text")
 
-    val fast = Dedup.contamination(train, bench, "doc_id", "text",
-      broadcastEval = Some(true))
-    val safe = Dedup.contamination(train, bench, "doc_id", "text",
-      broadcastEval = Some(false))
-    // a tiny eval set auto-selects the broadcast (map-side) path
+    // a tiny eval set selects the broadcast (map-side) path; forced to
+    // scale, the shingle-keyed shuffle
+    val fast = Dedup.contamination(train, bench, "doc_id", "text")
+    val safe = Regime.atScale(
+      Dedup.contamination(train, bench, "doc_id", "text"))
     val auto = Dedup.contamination(train, bench, "doc_id", "text")
 
     def rows(df: org.apache.spark.sql.DataFrame) =
@@ -1687,36 +1687,37 @@ class LlmOpsSpec extends SparkSpec {
 
   test("hierarchical assignment recurses past threshold^2 cells; law holds") {
     // a super set bigger than the dispatch threshold re-enters the
-    // hierarchy (depth 2). In production that needs k > 64·256 ≈ 16k
-    // cells — too big for a unit fixture, so the test pins dispatchMax
-    // to the children target (64), which is exactly the production
-    // recursion SHAPE at a testable size. Synthetic deterministic
-    // vectors — no RNG, replayable.
-    val n = 4360 // nSuper = ceil(4360/64) = 69 > 64 → recursion
+    // hierarchy (depth 2): k > 64·256 cells. The cell→super step scales
+    // with k, but the row side needs only a few rows — a small row set
+    // keeps the flat reference (rows × k cosines) unit-sized. Synthetic
+    // deterministic vectors — no RNG, replayable.
+    val n = Ann.FlatAssignMaxCells * (Ann.FlatDispatchMaxCells + 1) // nSuper = 257
+    val rowsN = 96
     val dim = 4
-    val syn = spark.range(n.toLong).select(col("id").as("vec_id"),
+    val syn = spark.range((n + rowsN).toLong).select(col("id").as("vec_id"),
       array((0 until dim).map(d =>
         (pmod(hash(col("id"), lit(d)), lit(997)) + lit(13)).cast("double")): _*)
         .as("embedding"))
       .localCheckpoint(false)
     val cent = Ann.seedCentroids(syn, "vec_id", "embedding", n)
       .localCheckpoint(false)
+    // the rows are the ids above the centroid range
+    val rowsDf = syn.where(col("vec_id") >= n)
     def key(df: org.apache.spark.sql.DataFrame) = df
       .select("corpus_id", "cluster_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val flat = key(Ann.assignCellsFlat(cent, syn, "vec_id", "embedding",
+    val flat = key(Ann.assignCellsFlat(cent, rowsDf, "vec_id", "embedding",
       "corpus", keep = 1))
     val nSuper = math.ceil(n.toDouble / Ann.FlatAssignMaxCells).toInt
-    val hierAll = key(Ann.assignCellsHierarchical(cent, syn, "vec_id",
-      "embedding", "corpus", keep = 1, nCells = n, superProbe = nSuper,
-      dispatchMax = Ann.FlatAssignMaxCells))
+    assert(nSuper > Ann.FlatDispatchMaxCells, "fixture must recurse")
+    val hierAll = key(Ann.assignCellsHierarchical(cent, rowsDf, "vec_id",
+      "embedding", "corpus", keep = 1, nCells = n, superProbe = nSuper))
     assert(hierAll === flat,
       "recursive superProbe=all must still reproduce flat exactly")
     // the default-probe recursive path stays total: one valid cell per row
-    val hd = key(Ann.assignCellsHierarchical(cent, syn, "vec_id",
-      "embedding", "corpus", keep = 1, nCells = n,
-      dispatchMax = Ann.FlatAssignMaxCells))
-    assert(hd.size === n.toLong, "one cell per row through the recursion")
+    val hd = key(Ann.assignCellsHierarchical(cent, rowsDf, "vec_id",
+      "embedding", "corpus", keep = 1, nCells = n))
+    assert(hd.size === rowsN.toLong, "one cell per row through the recursion")
   }
 
   test("pruneToCells: literals within bound, semi-join beyond, same rows") {
@@ -1730,7 +1731,7 @@ class LlmOpsSpec extends SparkSpec {
       def ids(df: org.apache.spark.sql.DataFrame) =
         df.select("vec_id").collect().map(_.getLong(0)).toSet
       val litPath = Ann.pruneToCells(stored, "cluster_id", probe)
-      val semiPath = Ann.pruneToCells(stored, "cluster_id", probe, maxLiterals = 0)
+      val semiPath = Regime.atScale(Ann.pruneToCells(stored, "cluster_id", probe))
       assert(ids(litPath) === ids(semiPath), "both prunes must keep the same rows")
       assert(ids(litPath).nonEmpty, "fixture probe should hit cells")
       // plan shapes: literals prune partitions statically; past the bound

@@ -75,16 +75,16 @@ class PlanAuditSpec extends SparkSpec {
     // right; the checkpoint's EXACT row count (not the under-estimating
     // stats that caused the 500k cliff) picks the regime. Both regimes are
     // pinned here: the gate-scale plan must broadcast, and forcing the
-    // bound to 0 must re-produce the merge shape that survives 500k docs
-    // on an 8g heap.
+    // scale regime must re-produce the merge shape that survives 500k
+    // docs on an 8g heap.
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     val mhAuto = graft.dedup.Dedup.minhashPairs(docs, "doc_id", "text",
       threshold = 0.5, k = 64, bands = 16)
     val pa = mhAuto.queryExecution.executedPlan.toString
     assert(pa.contains("BroadcastHashJoin"),
       s"gate-scale banded join should broadcast:\n$pa")
-    val mhPinned = graft.dedup.Dedup.minhashPairs(docs, "doc_id", "text",
-      threshold = 0.5, k = 64, bands = 16, bandedBroadcastMaxRows = 0L)
+    val mhPinned = Regime.atScale(graft.dedup.Dedup.minhashPairs(docs,
+      "doc_id", "text", threshold = 0.5, k = 64, bands = 16))
     val pp = mhPinned.queryExecution.executedPlan.toString
     assert(pp.contains("SortMergeJoin"),
       s"above-bound banded join lost its merge pin:\n$pp")
@@ -92,8 +92,8 @@ class PlanAuditSpec extends SparkSpec {
       maxHamming = 3)
     assert(shAuto.queryExecution.executedPlan.toString.contains("BroadcastHashJoin"),
       "gate-scale simhash banded join should broadcast")
-    val shPinned = graft.dedup.Dedup.simhashPairs(docs, "doc_id", "text",
-      maxHamming = 3, bandedBroadcastMaxRows = 0L)
+    val shPinned = Regime.atScale(graft.dedup.Dedup.simhashPairs(docs,
+      "doc_id", "text", maxHamming = 3))
     assert(shPinned.queryExecution.executedPlan.toString.contains("SortMergeJoin"),
       "above-bound simhash banded join lost its merge pin")
   }
@@ -105,7 +105,7 @@ class PlanAuditSpec extends SparkSpec {
     // returned frame's plan only shows the VERIFICATION joins. The auto
     // plan is therefore asserted for shape — equi-joins only, never a
     // cartesian — while regime exactness is pinned two ways: the
-    // bound-0 run below must plumb the merge pin through every join the
+    // at-scale run below must plumb the merge pin through every join the
     // final plan CAN see, and the shared selfJoinSized helper's regime
     // split is audited directly on t08/t09 (whose banded join is
     // pre-checkpoint and thus visible).
@@ -115,11 +115,11 @@ class PlanAuditSpec extends SparkSpec {
     assert(!pa.contains("CartesianProduct"), s"no cartesian anywhere:\n$pa")
     assert(pa.contains("BroadcastHashJoin") || pa.contains("SortMergeJoin"),
       s"verification lost its equi-joins:\n$pa")
-    val pinned = graft.dedup.Dedup.ppjoinPairs(docs, "doc_id", "text",
-      threshold = 0.5, prefixBroadcastMaxRows = 0L)
+    val pinned = Regime.atScale(graft.dedup.Dedup.ppjoinPairs(docs,
+      "doc_id", "text", threshold = 0.5))
     val pp = pinned.queryExecution.executedPlan.toString
     assert(pp.contains("SortMergeJoin") && !pp.contains("BroadcastHashJoin"),
-      s"bound-0 verification joins lost their merge pins:\n$pp")
+      s"at-scale verification joins lost their merge pins:\n$pp")
     // df attach, audited on the ranking stage directly (the prefix
     // checkpoint truncates it out of the final plan's lineage): it must
     // be a WINDOW on the shingle key and contain NO join — both join

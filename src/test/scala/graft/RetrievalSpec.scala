@@ -107,151 +107,156 @@ class RetrievalSpec extends SparkSpec {
   }
 
   test("bm25: a binding df-cap drops ubiquitous-term-only candidates, inline ≡ staged") {
-    // 'common' has df=4 (docs 1/2/3/5); cap 0.5 → ceil(0.5·5)=3 excludes
-    // it. d3 matched ONLY via 'common', so it must vanish; d1 (verbatim)
-    // and d2/d5 (share 'zebra', df=3 ≤ 3) survive with d1 still first.
-    val capped = Retrieval.bm25TopK(corpus, query, "doc_id", "text", k = 5,
-      excludeSelf = false, maxDfFraction = 0.5)
-    val byId = capped.collect()
-      .map(r => r.getAs[Long]("corpus_id") -> r.getAs[Int]("rank")).toMap
-    assert(!byId.contains(3L), s"ubiquitous-only candidate survived the cap: $byId")
-    assert(byId(1L) === 1)
-    assert(Set(2L, 5L).subsetOf(byId.keySet))
-    val dir = tempIndexDir()
-    Retrieval.stageBm25Index(corpus, "doc_id", "text").write(dir)
-    val staged = Retrieval.bm25TopKStaged(
-      Retrieval.StagedBm25Index.read(spark, dir), query, "doc_id", "text",
-      k = 5, excludeSelf = false, maxDfFraction = 0.5)
-    assert(staged.collect().map(_.toSeq).toSet ===
-      capped.collect().map(_.toSeq).toSet)
+    withTempDir("graft_test_bm25_") { dir =>
+      // 'common' has df=4 (docs 1/2/3/5); cap 0.5 → ceil(0.5·5)=3 excludes
+      // it. d3 matched ONLY via 'common', so it must vanish; d1 (verbatim)
+      // and d2/d5 (share 'zebra', df=3 ≤ 3) survive with d1 still first.
+      val capped = Retrieval.bm25TopK(corpus, query, "doc_id", "text", k = 5,
+        excludeSelf = false, maxDfFraction = 0.5)
+      val byId = capped.collect()
+        .map(r => r.getAs[Long]("corpus_id") -> r.getAs[Int]("rank")).toMap
+      assert(!byId.contains(3L), s"ubiquitous-only candidate survived the cap: $byId")
+      assert(byId(1L) === 1)
+      assert(Set(2L, 5L).subsetOf(byId.keySet))
+      Retrieval.stageBm25Index(corpus, "doc_id", "text").write(dir)
+      val staged = Retrieval.bm25TopKStaged(
+        Retrieval.StagedBm25Index.read(spark, dir), query, "doc_id", "text",
+        k = 5, excludeSelf = false, maxDfFraction = 0.5)
+      assert(staged.collect().map(_.toSeq).toSet ===
+        capped.collect().map(_.toSeq).toSet)
+    }
   }
 
   // --------------------------------------------- staged index (LSM) laws
 
   private def rows(df: DataFrame) = df.collect().map(_.toSeq).toSet
 
-  private def tempIndexDir(): String =
-    java.nio.file.Files.createTempDirectory("graft_test_bm25_").toString
-
   test("staged: serving from an EMPTY index yields no rows (stats row all-null)") {
-    // the one-collect construct (round 18) reads df and stats from a
-    // tagged union; an index staged from zero docs must still produce the
-    // all-null stats row and serve an empty result, not throw
-    val dir = tempIndexDir()
-    Retrieval.stageBm25Index(corpus.where(lit(false)), "doc_id", "text")
-      .write(dir)
-    val out = Retrieval.bm25TopKStaged(
-      Retrieval.StagedBm25Index.read(spark, dir), query, "doc_id", "text",
-      k = 5, excludeSelf = false)
-    assert(out.count() === 0L)
+    withTempDir("graft_test_bm25_") { dir =>
+      // the one-collect construct (round 18) reads df and stats from a
+      // tagged union; an index staged from zero docs must still produce the
+      // all-null stats row and serve an empty result, not throw
+      Retrieval.stageBm25Index(corpus.where(lit(false)), "doc_id", "text")
+        .write(dir)
+      val out = Retrieval.bm25TopKStaged(
+        Retrieval.StagedBm25Index.read(spark, dir), query, "doc_id", "text",
+        k = 5, excludeSelf = false)
+      assert(out.count() === 0L)
+    }
   }
 
   test("staged: bm25TopKStaged over a roundtripped index equals the inline operator") {
-    val dir = tempIndexDir()
-    Retrieval.stageBm25Index(corpus, "doc_id", "text").write(dir)
-    val staged = Retrieval.bm25TopKStaged(
-      Retrieval.StagedBm25Index.read(spark, dir), query, "doc_id", "text",
-      k = 5, excludeSelf = false)
-    val inline = Retrieval.bm25TopK(corpus, query, "doc_id", "text",
-      k = 5, excludeSelf = false)
-    assert(rows(staged) === rows(inline))
+    withTempDir("graft_test_bm25_") { dir =>
+      Retrieval.stageBm25Index(corpus, "doc_id", "text").write(dir)
+      val staged = Retrieval.bm25TopKStaged(
+        Retrieval.StagedBm25Index.read(spark, dir), query, "doc_id", "text",
+        k = 5, excludeSelf = false)
+      val inline = Retrieval.bm25TopK(corpus, query, "doc_id", "text",
+        k = 5, excludeSelf = false)
+      assert(rows(staged) === rows(inline))
+    }
   }
 
   test("staged: folding a batch equals re-staging the union corpus") {
-    // generation 1 = docs 1-3, generation 2 (folded) = docs 4-5: df deltas
-    // must SUM across generations ('common' spans both) and the stats
-    // rows must sum to the union corpus's n_docs/avgdl
-    val foldDir = tempIndexDir()
-    Retrieval.stageBm25Index(corpus.where(col("doc_id") <= 3), "doc_id", "text")
-      .write(foldDir)
-    Retrieval.foldIntoBm25Index(spark, foldDir,
-      corpus.where(col("doc_id") > 3), "doc_id", "text", gen = 1L)
-    val restageDir = tempIndexDir()
-    Retrieval.stageBm25Index(corpus, "doc_id", "text").write(restageDir)
-    val folded = Retrieval.bm25TopKStaged(
-      Retrieval.StagedBm25Index.read(spark, foldDir), query, "doc_id", "text",
-      k = 5, excludeSelf = false)
-    val restaged = Retrieval.bm25TopKStaged(
-      Retrieval.StagedBm25Index.read(spark, restageDir), query, "doc_id", "text",
-      k = 5, excludeSelf = false)
-    assert(rows(folded) === rows(restaged))
-    assert(rows(folded) === rows(Retrieval.bm25TopK(corpus, query,
-      "doc_id", "text", k = 5, excludeSelf = false)))
+    withTempDir("graft_test_bm25_") { tmp =>
+      // generation 1 = docs 1-3, generation 2 (folded) = docs 4-5: df deltas
+      // must SUM across generations ('common' spans both) and the stats
+      // rows must sum to the union corpus's n_docs/avgdl
+      val foldDir = s"$tmp/foldDir"
+      Retrieval.stageBm25Index(corpus.where(col("doc_id") <= 3), "doc_id", "text")
+        .write(foldDir)
+      Retrieval.foldIntoBm25Index(spark, foldDir,
+        corpus.where(col("doc_id") > 3), "doc_id", "text", gen = 1L)
+      val restageDir = s"$tmp/restageDir"
+      Retrieval.stageBm25Index(corpus, "doc_id", "text").write(restageDir)
+      val folded = Retrieval.bm25TopKStaged(
+        Retrieval.StagedBm25Index.read(spark, foldDir), query, "doc_id", "text",
+        k = 5, excludeSelf = false)
+      val restaged = Retrieval.bm25TopKStaged(
+        Retrieval.StagedBm25Index.read(spark, restageDir), query, "doc_id", "text",
+        k = 5, excludeSelf = false)
+      assert(rows(folded) === rows(restaged))
+      assert(rows(folded) === rows(Retrieval.bm25TopK(corpus, query,
+        "doc_id", "text", k = 5, excludeSelf = false)))
+    }
   }
 
   test("compacted: compact(stage + folds) ≡ stage(union), one generation, term-sorted") {
-    // two-generation source (the fold law's fixture), compacted into a
-    // fresh dir: the serve must be row-identical to a from-scratch
-    // union-corpus stage AND to the source it compacted
-    val srcDir = tempIndexDir()
-    Retrieval.stageBm25Index(corpus.where(col("doc_id") <= 3), "doc_id", "text")
-      .write(srcDir)
-    Retrieval.foldIntoBm25Index(spark, srcDir,
-      corpus.where(col("doc_id") > 3), "doc_id", "text", gen = 1L)
-    val dstDir = tempIndexDir()
-    Retrieval.compactBm25Index(spark, srcDir, dstDir)
+    withTempDir("graft_test_bm25_") { tmp =>
+      // two-generation source (the fold law's fixture), compacted into a
+      // fresh dir: the serve must be row-identical to a from-scratch
+      // union-corpus stage AND to the source it compacted
+      val srcDir = s"$tmp/srcDir"
+      Retrieval.stageBm25Index(corpus.where(col("doc_id") <= 3), "doc_id", "text")
+        .write(srcDir)
+      Retrieval.foldIntoBm25Index(spark, srcDir,
+        corpus.where(col("doc_id") > 3), "doc_id", "text", gen = 1L)
+      val dstDir = s"$tmp/dstDir"
+      Retrieval.compactBm25Index(spark, srcDir, dstDir)
 
-    def serve(dir: String) = rows(Retrieval.bm25TopKStaged(
-      Retrieval.StagedBm25Index.read(spark, dir), query, "doc_id", "text",
-      k = 5, excludeSelf = false))
-    assert(serve(dstDir) === serve(srcDir))
-    val restageDir = tempIndexDir()
-    Retrieval.stageBm25Index(corpus, "doc_id", "text").write(restageDir)
-    assert(serve(dstDir) === serve(restageDir))
+      def serve(dir: String) = rows(Retrieval.bm25TopKStaged(
+        Retrieval.StagedBm25Index.read(spark, dir), query, "doc_id", "text",
+        k = 5, excludeSelf = false))
+      assert(serve(dstDir) === serve(srcDir))
+      val restageDir = s"$tmp/restageDir"
+      Retrieval.stageBm25Index(corpus, "doc_id", "text").write(restageDir)
+      assert(serve(dstDir) === serve(restageDir))
 
-    // structural claims: ONE generation everywhere, deltas summed
-    def gens(sub: String): Set[Long] = spark.read
-      .parquet(s"$dstDir/$sub").select(col("gen").cast("long"))
-      .distinct().collect().map(_.getLong(0)).toSet
-    assert(gens("postings") === Set(0L))
-    assert(gens("term_df") === Set(0L))
-    assert(gens("stats") === Set(0L))
-    val termDf = Retrieval.StagedBm25Index.readGens(spark, s"$dstDir/term_df")
-    assert(termDf.groupBy(col("term")).count().where(col("count") > 1).isEmpty,
-      "compacted term_df must hold one summed row per term")
-    assert(Retrieval.StagedBm25Index
-      .readGens(spark, s"$dstDir/stats").count() === 1L)
-    // the source is untouched (compaction is copy-then-swap, not in place)
-    assert(Retrieval.StagedBm25Index
-      .readGens(spark, s"$srcDir/stats").count() === 2L)
+      // structural claims: ONE generation everywhere, deltas summed
+      def gens(sub: String): Set[Long] = spark.read
+        .parquet(s"$dstDir/$sub").select(col("gen").cast("long"))
+        .distinct().collect().map(_.getLong(0)).toSet
+      assert(gens("postings") === Set(0L))
+      assert(gens("term_df") === Set(0L))
+      assert(gens("stats") === Set(0L))
+      val termDf = Retrieval.StagedBm25Index.readGens(spark, s"$dstDir/term_df")
+      assert(termDf.groupBy(col("term")).count().where(col("count") > 1).isEmpty,
+        "compacted term_df must hold one summed row per term")
+      assert(Retrieval.StagedBm25Index
+        .readGens(spark, s"$dstDir/stats").count() === 1L)
+      // the source is untouched (compaction is copy-then-swap, not in place)
+      assert(Retrieval.StagedBm25Index
+        .readGens(spark, s"$srcDir/stats").count() === 2L)
 
-    // in-place compaction is refused LOUDLY (writeGen into srcDir would
-    // clobber postings/gen=0 mid-scan) — including via a non-canonical
-    // spelling of the same path
-    intercept[IllegalArgumentException] {
-      Retrieval.compactBm25Index(spark, srcDir, srcDir)
-    }
-    intercept[IllegalArgumentException] {
-      Retrieval.compactBm25Index(spark, srcDir, srcDir + "/./")
+      // in-place compaction is refused LOUDLY (writeGen into srcDir would
+      // clobber postings/gen=0 mid-scan) — including via a non-canonical
+      // spelling of the same path
+      intercept[IllegalArgumentException] {
+        Retrieval.compactBm25Index(spark, srcDir, srcDir)
+      }
+      intercept[IllegalArgumentException] {
+        Retrieval.compactBm25Index(spark, srcDir, srcDir + "/./")
+      }
     }
   }
 
   test("staged: replaying a fold generation is idempotent, not a double-count") {
-    // the at-least-once delivery law: folding the SAME batch under the
-    // SAME gen twice overwrites that generation's partition, so df/stats
-    // sums across generations — and therefore every score — are
-    // unchanged; a second DISTINCT gen of the same batch would instead
-    // double n_docs and shift every idf
-    val dir = tempIndexDir()
-    Retrieval.stageBm25Index(corpus.where(col("doc_id") <= 3), "doc_id", "text")
-      .write(dir)
-    val batch = corpus.where(col("doc_id") > 3)
-    Retrieval.foldIntoBm25Index(spark, dir, batch, "doc_id", "text", gen = 1L)
-    val once = rows(Retrieval.bm25TopKStaged(
-      Retrieval.StagedBm25Index.read(spark, dir), query, "doc_id", "text",
-      k = 5, excludeSelf = false))
-    Retrieval.foldIntoBm25Index(spark, dir, batch, "doc_id", "text", gen = 1L)
-    val replayed = Retrieval.StagedBm25Index.read(spark, dir)
-    assert(rows(Retrieval.bm25TopKStaged(replayed, query, "doc_id", "text",
-      k = 5, excludeSelf = false)) === once)
-    // the stats table proves it structurally: one base row + one fold row
-    assert(replayed.stats.count() === 2L,
-      "replayed generation appended instead of overwriting")
-    // gen 0 is reserved for the base corpus layout
-    val e = intercept[IllegalArgumentException] {
-      Retrieval.foldIntoBm25Index(spark, dir, batch, "doc_id", "text", gen = 0L)
+    withTempDir("graft_test_bm25_") { dir =>
+      // the at-least-once delivery law: folding the SAME batch under the
+      // SAME gen twice overwrites that generation's partition, so df/stats
+      // sums across generations — and therefore every score — are
+      // unchanged; a second DISTINCT gen of the same batch would instead
+      // double n_docs and shift every idf
+      Retrieval.stageBm25Index(corpus.where(col("doc_id") <= 3), "doc_id", "text")
+        .write(dir)
+      val batch = corpus.where(col("doc_id") > 3)
+      Retrieval.foldIntoBm25Index(spark, dir, batch, "doc_id", "text", gen = 1L)
+      val once = rows(Retrieval.bm25TopKStaged(
+        Retrieval.StagedBm25Index.read(spark, dir), query, "doc_id", "text",
+        k = 5, excludeSelf = false))
+      Retrieval.foldIntoBm25Index(spark, dir, batch, "doc_id", "text", gen = 1L)
+      val replayed = Retrieval.StagedBm25Index.read(spark, dir)
+      assert(rows(Retrieval.bm25TopKStaged(replayed, query, "doc_id", "text",
+        k = 5, excludeSelf = false)) === once)
+      // the stats table proves it structurally: one base row + one fold row
+      assert(replayed.stats.count() === 2L,
+        "replayed generation appended instead of overwriting")
+      // gen 0 is reserved for the base corpus layout
+      val e = intercept[IllegalArgumentException] {
+        Retrieval.foldIntoBm25Index(spark, dir, batch, "doc_id", "text", gen = 0L)
+      }
+      assert(e.getMessage.contains("base corpus"))
     }
-    assert(e.getMessage.contains("base corpus"))
   }
 
   test("staged: a tokenizer-version mismatch fails loudly, not silently empty") {
@@ -265,80 +270,84 @@ class RetrievalSpec extends SparkSpec {
   }
 
   test("staged: a pre-gen flat-layout index (no layout_version) is refused") {
-    // a legacy meta has tokenizer_version only — folding gen=N/ files into
-    // a flat directory would leave a mixed tree parquet readers reject, so
-    // both the serve and the fold paths must fail with a re-stage message
-    val idx = Retrieval.stageBm25Index(corpus, "doc_id", "text")
-    val legacy = idx.copy(meta =
-      Seq(Tuple1(graft.dedup.Dedup.TokenizerVersion)).toDF("tokenizer_version"))
-    val e = intercept[IllegalArgumentException] {
-      Retrieval.bm25TopKStaged(legacy, query, "doc_id", "text", k = 5)
-    }
-    assert(e.getMessage.contains("layout") &&
-      e.getMessage.contains("re-run stageBm25Index"))
+    withTempDir("graft_test_bm25_") { dir =>
+      // a legacy meta has tokenizer_version only — folding gen=N/ files into
+      // a flat directory would leave a mixed tree parquet readers reject, so
+      // both the serve and the fold paths must fail with a re-stage message
+      val idx = Retrieval.stageBm25Index(corpus, "doc_id", "text")
+      val legacy = idx.copy(meta =
+        Seq(Tuple1(graft.dedup.Dedup.TokenizerVersion)).toDF("tokenizer_version"))
+      val e = intercept[IllegalArgumentException] {
+        Retrieval.bm25TopKStaged(legacy, query, "doc_id", "text", k = 5)
+      }
+      assert(e.getMessage.contains("layout") &&
+        e.getMessage.contains("re-run stageBm25Index"))
 
-    val dir = tempIndexDir()
-    idx.write(dir)
-    legacy.meta.write.mode("overwrite").parquet(s"$dir/meta")
-    val ef = intercept[IllegalArgumentException] {
-      Retrieval.foldIntoBm25Index(spark, dir, corpus.limit(2), "doc_id",
-        "text", gen = 1L)
+      idx.write(dir)
+      legacy.meta.write.mode("overwrite").parquet(s"$dir/meta")
+      val ef = intercept[IllegalArgumentException] {
+        Retrieval.foldIntoBm25Index(spark, dir, corpus.limit(2), "doc_id",
+          "text", gen = 1L)
+      }
+      assert(ef.getMessage.contains("layout"))
     }
-    assert(ef.getMessage.contains("layout"))
   }
 
   test("staged plan: stored tables reached via pushed term range + IN-list") {
-    val dir = tempIndexDir()
-    Retrieval.stageBm25Index(corpus, "doc_id", "text").write(dir)
-    val plan = Retrieval.bm25TopKStaged(
-      Retrieval.StagedBm25Index.read(spark, dir), query, "doc_id", "text",
-      k = 5, excludeSelf = false).queryExecution.executedPlan.toString
-    // the query-vocabulary range reaches the parquet scans as data
-    // filters (row-group skipping on a term-sorted store)...
-    assert(plan.contains("GreaterThanOrEqual(term") &&
-      plan.contains("LessThanOrEqual(term"),
-      s"expected a pushed term range in:\n$plan")
-    // ...and a batch-bounded vocabulary prunes via a pushed literal IN —
-    // zero join machinery on the stored side, and never a shuffled join
-    assert(plan.contains("In(term"), s"expected a pushed IN prune in:\n$plan")
-    assert(!plan.contains("SortMergeJoin"),
-      s"stored tables must not reach a shuffled join:\n$plan")
+    withTempDir("graft_test_bm25_") { dir =>
+      Retrieval.stageBm25Index(corpus, "doc_id", "text").write(dir)
+      val plan = Retrieval.bm25TopKStaged(
+        Retrieval.StagedBm25Index.read(spark, dir), query, "doc_id", "text",
+        k = 5, excludeSelf = false).queryExecution.executedPlan.toString
+      // the query-vocabulary range reaches the parquet scans as data
+      // filters (row-group skipping on a term-sorted store)...
+      assert(plan.contains("GreaterThanOrEqual(term") &&
+        plan.contains("LessThanOrEqual(term"),
+        s"expected a pushed term range in:\n$plan")
+      // ...and a batch-bounded vocabulary prunes via a pushed literal IN —
+      // zero join machinery on the stored side, and never a shuffled join
+      assert(plan.contains("In(term"), s"expected a pushed IN prune in:\n$plan")
+      assert(!plan.contains("SortMergeJoin"),
+        s"stored tables must not reach a shuffled join:\n$plan")
+    }
   }
 
   test("staged serve range is UTF8-binary ordered (supplementary-plane terms)") {
-    // '😀' (U+1F600) sorts ABOVE U+FFFD in UTF-8 bytes but BELOW it in
-    // Java's UTF-16 ordering: a Java-ordered BETWEEN would cut the emoji
-    // term out of the pushed range while the IN list still names it —
-    // silently dropping its postings. Staged must equal inline.
-    val c = Seq((1L, "😀 zebra"), (2L, "� zebra"),
-      (3L, "zebra only here")).toDF("doc_id", "text")
-    val q = Seq((0L, "😀 �")).toDF("doc_id", "text")
-    val dir = tempIndexDir()
-    Retrieval.stageBm25Index(c, "doc_id", "text").write(dir)
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getAs[Long]("corpus_id"),
-        r.getAs[Int]("rank"), r.getAs[Double]("score"))).toSet
-    val inline = rows(Retrieval.bm25TopK(c, q, "doc_id", "text", k = 3,
-      excludeSelf = false))
-    val staged = rows(Retrieval.bm25TopKStaged(
-      Retrieval.StagedBm25Index.read(spark, dir), q, "doc_id", "text", k = 3,
-      excludeSelf = false))
-    assert(staged === inline)
-    assert(staged.exists(_._1 == 1L), "the emoji-term doc must be a candidate")
+    withTempDir("graft_test_bm25_") { dir =>
+      // '😀' (U+1F600) sorts ABOVE U+FFFD in UTF-8 bytes but BELOW it in
+      // Java's UTF-16 ordering: a Java-ordered BETWEEN would cut the emoji
+      // term out of the pushed range while the IN list still names it —
+      // silently dropping its postings. Staged must equal inline.
+      val c = Seq((1L, "😀 zebra"), (2L, "� zebra"),
+        (3L, "zebra only here")).toDF("doc_id", "text")
+      val q = Seq((0L, "😀 �")).toDF("doc_id", "text")
+      Retrieval.stageBm25Index(c, "doc_id", "text").write(dir)
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(r => (r.getAs[Long]("corpus_id"),
+          r.getAs[Int]("rank"), r.getAs[Double]("score"))).toSet
+      val inline = rows(Retrieval.bm25TopK(c, q, "doc_id", "text", k = 3,
+        excludeSelf = false))
+      val staged = rows(Retrieval.bm25TopKStaged(
+        Retrieval.StagedBm25Index.read(spark, dir), q, "doc_id", "text", k = 3,
+        excludeSelf = false))
+      assert(staged === inline)
+      assert(staged.exists(_._1 == 1L), "the emoji-term doc must be a candidate")
+    }
   }
 
   test("staged plan: a vocabulary beyond the IN bound prunes via broadcast semi") {
-    val dir = tempIndexDir()
-    Retrieval.stageBm25Index(corpus, "doc_id", "text").write(dir)
-    // a >InListTermMax-term synthetic query batch forces the fallback
-    val wide = (0 to Retrieval.InListTermMax).map(i => (i.toLong, s"term$i zebra"))
-      .toDF("doc_id", "text")
-    val plan = Retrieval.bm25TopKStaged(
-      Retrieval.StagedBm25Index.read(spark, dir), wide, "doc_id", "text",
-      k = 5, excludeSelf = false).queryExecution.executedPlan.toString
-    assert(plan.contains("LeftSemi"), s"expected semi-join prunes in:\n$plan")
-    assert(!plan.contains("SortMergeJoin"),
-      s"stored tables must not reach a shuffled join:\n$plan")
+    withTempDir("graft_test_bm25_") { dir =>
+      Retrieval.stageBm25Index(corpus, "doc_id", "text").write(dir)
+      // a >MaxInListLiterals-term synthetic query batch forces the fallback
+      val wide = (0 to Regime.MaxInListLiterals).map(i => (i.toLong, s"term$i zebra"))
+        .toDF("doc_id", "text")
+      val plan = Retrieval.bm25TopKStaged(
+        Retrieval.StagedBm25Index.read(spark, dir), wide, "doc_id", "text",
+        k = 5, excludeSelf = false).queryExecution.executedPlan.toString
+      assert(plan.contains("LeftSemi"), s"expected semi-join prunes in:\n$plan")
+      assert(!plan.contains("SortMergeJoin"),
+        s"stored tables must not reach a shuffled join:\n$plan")
+    }
   }
 
   // ------------------------------------------------------------------ RRF

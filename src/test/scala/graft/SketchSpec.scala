@@ -36,11 +36,11 @@ class SketchSpec extends SparkSpec {
       val naive = naiveHeavy(zipf, threshold)
       // eps=0.05 → width ~55 buckets for ~400 distinct keys: collisions
       // guaranteed, so the prefilter WILL pass false positives.
-      // forceProbe FORCES the probe branch — the zipf fixture's
+      // Regime.atScale FORCES the probe branch — the zipf fixture's
       // vocabulary is small enough that the auto dispatch would (rightly)
       // pick the naive plan and make this law vacuous
-      val sketched = Sketch.heavyHitters(zipf, "term", threshold, eps = 0.05,
-        forceProbe = true)
+      val sketched = Regime.atScale(
+          Sketch.heavyHitters(zipf, "term", threshold, eps = 0.05))
         .collect().map(r => (r.getString(0), r.getLong(1))).toSet
       assert(sketched === naive, s"threshold=$threshold diverged")
     }
@@ -59,10 +59,10 @@ class SketchSpec extends SparkSpec {
     val auto = Sketch.heavyHitters(zipfDist, "term", 40L, eps = 0.05)
     assert(!auto.queryExecution.executedPlan.toString.contains("cms_at_least"),
       "small-vocab input should dispatch to the naive plan (no probe)")
-    val forced = Sketch.heavyHitters(zipfDist, "term", 40L, eps = 0.05,
-      forceProbe = true)
+    val forced = Regime.atScale(
+      Sketch.heavyHitters(zipfDist, "term", 40L, eps = 0.05))
     assert(forced.queryExecution.executedPlan.toString.contains("cms_at_least"),
-      "forceProbe must force the probe branch")
+      "Regime.atScale must force the probe branch")
     // and both regimes agree exactly (the dispatch may only change cost)
     assert(auto.collect().map(r => (r.getString(0), r.getLong(1))).toSet ===
       forced.collect().map(r => (r.getString(0), r.getLong(1))).toSet)
@@ -80,7 +80,7 @@ class SketchSpec extends SparkSpec {
     assert(!auto.queryExecution.executedPlan.toString.contains("cms_at_least"),
       "no hint must dispatch to the one-pass naive plan")
     val hinted = Sketch.heavyHitters(wide, "term", 500L, eps = 0.05,
-      smallVocabMax = 1000L, expectedVocab = Some(5000L))
+      expectedVocab = Some(Sketch.SmallVocabMax + 1))
     assert(hinted.queryExecution.executedPlan.toString.contains("cms_at_least"),
       "an above-floor hint must engage the probe plan")
     val subFloor = Sketch.heavyHitters(wide, "term", 500L, eps = 0.05,
@@ -91,8 +91,8 @@ class SketchSpec extends SparkSpec {
   }
 
   test("probe runs codegen'd, not as a ScalaUDF") {
-    val forced = Sketch.heavyHitters(zipfDist, "term", 40L, eps = 0.05,
-      forceProbe = true)
+    val forced = Regime.atScale(
+      Sketch.heavyHitters(zipfDist, "term", 40L, eps = 0.05))
     val p = forced.queryExecution.executedPlan.toString
     assert(p.contains("cms_at_least"), s"probe missing from plan:\n$p")
     assert(!p.contains("ScalaUDF"), s"probe fell back to a UDF:\n$p")
@@ -118,8 +118,8 @@ class SketchSpec extends SparkSpec {
     val total = zipf.count()
     val minShare = 0.005
     val threshold = math.ceil(total * minShare).toLong
-    val byShare = Sketch.heavyHittersByShare(zipf, "term", minShare, eps = 0.05,
-      forceProbe = true)
+    val byShare = Regime.atScale(
+        Sketch.heavyHittersByShare(zipf, "term", minShare, eps = 0.05))
       .collect().map(r => (r.getString(0), r.getLong(1))).toSet
     assert(byShare === naiveHeavy(zipf, threshold))
   }
@@ -201,12 +201,11 @@ class SketchSpec extends SparkSpec {
     val naiveRows = exchangeRows(
       keyed.groupBy(col("term")).agg(count(lit(1)).as("cnt"))
         .where(col("cnt") >= threshold))
-    // above-floor hint: the 50k-key fixture models the big-vocab regime
+    // forced to scale: the 50k-key fixture models the big-vocab regime
     // at toy scale — without it the dispatcher would rightly pick the
     // one-pass naive plan and make this shrink law vacuous
-    val sketchedRows = exchangeRows(
-      Sketch.heavyHitters(keyed, "term", threshold, eps = 1e-4,
-        smallVocabMax = 10000L, expectedVocab = Some(50000L)))
+    val sketchedRows = exchangeRows(Regime.atScale(
+      Sketch.heavyHitters(keyed, "term", threshold, eps = 1e-4)))
     // at eps=1e-4 the overcount bound is ~10 on 100k instances — no tail
     // key near the 1000 cut survives, so the sketched exchange is ~20
     // keys × ≤4 partitions vs ~50k tail partials for the naive plan

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites. */
@@ -22,4 +22,28 @@ object TestSpark {
 
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
+
+  /** Runs `body` on a fresh temp dir named `prefix…` and deletes the dir,
+    * contents included, on every exit path.
+    */
+  def withTempDir[T](prefix: String)(body: String => T): T = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix)
+    try body(dir.toString)
+    finally graft.streaming.Streams.deleteTree(dir)
+  }
+
+  /** The regime law: `op` answers the same multiset of rows whichever plan
+    * [[Regime]] picks — its default choice on the fixture, and the scale
+    * plan under [[Regime.atScale]]. Rows are collected inside the scope,
+    * so decisions taken at execution time are forced too. An empty answer
+    * fails the law: it would show nothing.
+    */
+  def regimeLaw(name: String)(op: => DataFrame): Unit = {
+    def rows(): Map[Seq[Any], Int] = op.collect().toSeq.map(_.toSeq)
+      .groupBy(identity).map { case (r, n) => r -> n.size }
+    val small = rows()
+    val atScale = Regime.atScale(rows())
+    assert(small.nonEmpty, s"$name: the fixture answers no rows")
+    assert(atScale === small, s"$name: the scale plan answers other rows")
+  }
 }

@@ -611,8 +611,7 @@ class StreamingSpec extends SparkSpec {
     val corpus = docs.where(col("doc_id") < 30)
     val batch = docs.where(col("doc_id") >= 30)
     val queries = docs.where(col("doc_id") % 10 === 0)
-    val base = java.nio.file.Files.createTempDirectory("graft_s14_spec_").toString
-    try {
+    withTempDir("graft_s14_spec_") { base =>
       Retrieval.stageBm25Index(corpus, "doc_id", "text").write(base)
       val basePostings = spark.read.parquet(s"$base/postings").count()
       def normalized(df: org.apache.spark.sql.DataFrame) =
@@ -621,11 +620,12 @@ class StreamingSpec extends SparkSpec {
       // and a from-scratch re-stage of the union
       val expected = normalized(Retrieval.bm25TopK(docs, queries,
         "doc_id", "text", k = 5))
-      val restage = java.nio.file.Files.createTempDirectory("graft_s14_re_").toString
-      Retrieval.stageBm25Index(docs, "doc_id", "text").write(restage)
-      assert(normalized(Retrieval.bm25TopKStaged(
-        Retrieval.StagedBm25Index.read(spark, restage), queries,
-        "doc_id", "text", k = 5)) === expected)
+      withTempDir("graft_s14_re_") { restage =>
+        Retrieval.stageBm25Index(docs, "doc_id", "text").write(restage)
+        assert(normalized(Retrieval.bm25TopKStaged(
+          Retrieval.StagedBm25Index.read(spark, restage), queries,
+          "doc_id", "text", k = 5)) === expected)
+      }
       val streamed = normalized(Streams.bm25Ingest(spark, base, batch,
         queries, "doc_id", "text", k = 5, nInputFiles = 4))
       assert(streamed === expected, "4-tick BM25 ingest differs from batch")
@@ -636,11 +636,6 @@ class StreamingSpec extends SparkSpec {
       // calls above would otherwise have compounded
       assert(spark.read.parquet(s"$base/postings").count() === basePostings,
         "ingest mutated the read-only base index")
-    } finally {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(java.nio.file.Paths.get(base)).iterator()
-        .asScala.toSeq.sortBy(-_.getNameCount)
-        .foreach(java.nio.file.Files.deleteIfExists(_))
     }
   }
 
@@ -749,14 +744,14 @@ class StreamingSpec extends SparkSpec {
       statePartitions = Some(4)))
     // the same 100 rows through the file source (batch range == the rate
     // source's deterministic value sequence)
-    val fileDir = java.nio.file.Files
-      .createTempDirectory("graft_src_agnostic_").toString
-    shape(spark.range(100).toDF("value")).write.parquet(s"$fileDir/events")
-    val fileSrc = spark.readStream
-      .schema(rate.schema).parquet(s"$fileDir/events")
-    val viaFile = rows(Streams.runToMemory(spark,
-      Streams.hourlyActiveUsers(fileSrc), "src_agnostic_file", mode = "append",
-      statePartitions = Some(4)))
+    val viaFile = withTempDir("graft_src_agnostic_") { fileDir =>
+      shape(spark.range(100).toDF("value")).write.parquet(s"$fileDir/events")
+      val fileSrc = spark.readStream
+        .schema(rate.schema).parquet(s"$fileDir/events")
+      rows(Streams.runToMemory(spark,
+        Streams.hourlyActiveUsers(fileSrc), "src_agnostic_file", mode = "append",
+        statePartitions = Some(4)))
+    }
     assert(viaRate.nonEmpty, "fixture must close at least one hourly window")
     assert(viaRate === viaFile,
       "the same rows through rate vs file sources diverged")

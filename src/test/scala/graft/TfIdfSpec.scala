@@ -35,8 +35,8 @@ class TfIdfSpec extends SparkSpec {
   }
 
   test("a vocabulary above the cap dispatches to the join plan, same answer") {
-    // vocabCap = 2 forces the fallback on a 7-term vocabulary
-    val forced = rows(TfIdf.topTerms(docs, "doc_id", "text", k = 3, vocabCap = 2))
+    // Regime.atScale forces the fallback on a 7-term vocabulary
+    val forced = rows(Regime.atScale(TfIdf.topTerms(docs, "doc_id", "text", k = 3)))
     val joined = rows(TfIdf.topTermsJoined(docs, "doc_id", "text", k = 3))
     assert(forced === joined)
   }

@@ -1,13 +1,14 @@
-// Dump formatted physical plans for the round-17 optimization evidence:
-//   plans/r18/<query>_<suffix>.txt
-// Usage: tools/dump_plans_r18.sh <suffix>   (after sbt compile)
+// Dump formatted physical plans for optimization evidence:
+//   <dir>/<query>_<suffix>.txt
+// Usage: tools/dump_plan_set.sh <dir> <suffix> <sf_dir>   (after sbt compile)
 // Batch queries only -- the s-gates' cost is drain machinery, not a single
-// physical plan; their evidence lives in OPTIMIZATION_r18.md progress-log
-// decompositions instead.
+// physical plan; their evidence lives in the OPTIMIZATION_r17/r18.md
+// progress-log decompositions instead.
 import java.nio.file.{Files, Paths}
 
-val suffix = sys.env.getOrElse("GRAFT_PLAN_SUFFIX", "before")
-val sfDir = sys.env.getOrElse("GRAFT_PLAN_SF", "/root/testdata/sf0.1")
+val outDir = sys.env("GRAFT_PLAN_DIR")
+val suffix = sys.env("GRAFT_PLAN_SUFFIX")
+val sfDir = sys.env("GRAFT_PLAN_SF")
 val names = Seq(
   "q01_pricing_summary", "q03_top_revenue_orders", "q05_region_star_join",
   "q07_window_topk_per_group", "q12_bag_difference", "q25_left_outer_join",
@@ -36,13 +37,13 @@ val names = Seq(
   "v20_hybrid_rrf_topk", "v21_compacted_ivf_layout",
   "g01_two_hop_traversal", "g05_connected_components", "g06_pagerank_topk",
   "g09_triangle_count", "g10_weighted_sssp", "g12_bucketed_traversal")
-Files.createDirectories(Paths.get("/root/repo/plans/r18"))
+Files.createDirectories(Paths.get(outDir))
 for (n <- names) {
   try {
     val df = graft.SparkEntry.queries(n)(spark, sfDir)
     val txt = df.queryExecution.explainString(
       org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-    Files.writeString(Paths.get(s"/root/repo/plans/r18/${n}_$suffix.txt"), txt)
+    Files.writeString(Paths.get(s"$outDir/${n}_$suffix.txt"), txt)
     println(s"[res] wrote $n ($suffix): ${txt.length} chars")
   } catch {
     case e: Throwable =>
