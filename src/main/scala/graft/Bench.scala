@@ -160,8 +160,7 @@ object Bench {
     // maintenance, not query cost; blocking so the removal never races
     // the next timed sample.
     def cleanupBlocks(): Unit = {
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
+      Pinned.sweep(spark.sparkContext)
       spark.streams.resetTerminated()
       // NOTE (round 15): an explicit System.gc() here was measured and
       // REJECTED — the g-block A/B read g10 5.84→6.14s and every

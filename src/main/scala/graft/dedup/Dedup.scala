@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Pinned.PinSyntax
 import graft.functions.TextFunctions._
 import graft.functions.VectorFunctions._
 
@@ -263,7 +264,7 @@ object Dedup {
       : (DataFrame, DataFrame) = {
     // pinned: consumed by the distinct-hash prune, the ranking and the fold
     val occ = cdcChunkOccurrences(batch, idCol, textCol, avgChunkTokens)
-      .localCheckpoint(false)
+      .pin(false)
     val batchHashes = occ.select(col("chunk_hash")).distinct()
     // corpus-present hashes ∩ batch — batch-bounded, so broadcastable; the
     // defensive distinct keeps a non-distinct store (e.g. a raw fold dir)
@@ -274,7 +275,7 @@ object Dedup {
         batchHashes, keyCol = "chunk_hash")
       .distinct()
       .withColumn("__present", lit(true))
-      .localCheckpoint(false)
+      .pin(false)
     val w = Window.partitionBy(col("chunk_hash"))
       .orderBy(col(idCol), col("chunk_idx"))
     val marked = occ
@@ -325,7 +326,7 @@ object Dedup {
       col(idCol).as("doc"),
       graft.functions.MinHashSignature.minhashSig(tokens(col(textCol)), k, shingleN)
         .as("sig"))
-      .localCheckpoint(false)
+      .pin(false)
     // the count materializes the pinned frame (its consumers needed that
     // anyway) and decides the self-join regime below
     val nBanded = sketched.count() * bands
@@ -416,7 +417,7 @@ object Dedup {
       // pin the tokenize→shingle output: with the cap on, BOTH the hot-list
       // aggregation and the anti-join left side consume it — one evaluation
       // of the dominant compute instead of two
-      .localCheckpoint(false)
+      .pin(false)
     // document-frequency cap (shared dfCapped definition): a shingle
     // present in f docs contributes f² join rows, so one ubiquitous
     // shingle is a quadratic skew bomb (and carries no dedup signal); a
@@ -436,7 +437,7 @@ object Dedup {
     // shape is identical.
     val p = postings.withColumn("sz",
       count(lit(1)).over(Window.partitionBy(col("doc"))))
-      .localCheckpoint(false)
+      .pin(false)
     val a = p.select(col("shingle"), col("doc").as("doc_a"), col("sz").as("sz_a"))
     val b = p.select(col("shingle"), col("doc").as("doc_b"), col("sz").as("sz_b"))
     // merge pin — equal-sized self-join of a checkpointed frame; see
@@ -496,7 +497,7 @@ object Dedup {
     // full postings pinned: consumed by the df agg, the prefix ranking,
     // and both verification sides
     val posts = jaccardPostings(input, idCol, textCol, shingleN)
-      .localCheckpoint(false)
+      .pin(false)
     // EXACT pinned-scan count — conditions the prefix self-join. posts is
     // a SUPERSET of the prefix frame, so the bound is conservative, and
     // counting posts (a bare pinned scan) is the cheapest possible
@@ -506,7 +507,7 @@ object Dedup {
     val pref = ppjoinRanked(posts)
       .where(col("r") <= col("sz") - ceil(lit(threshold) * col("sz")) + 1)
       .select(col("shingle"), col("doc"), col("sz"), col("r"))
-      .localCheckpoint(false) // both self-join sides
+      .pin(false) // both self-join sides
     val a = pref.select(col("shingle"), col("doc").as("doc_a"),
       col("sz").as("sz_a"), col("r").as("r_a"))
     val b = pref.select(col("shingle"), col("doc").as("doc_b"),
@@ -557,7 +558,7 @@ object Dedup {
       // stats chose to BROADCAST the pair table at 500k docs and died in
       // the exchange (the third face of the minhashPairs cliff, measured
       // at 500k docs after the first two were pinned; SURVEY.md §8)
-      .localCheckpoint(false)
+      .pin(false)
     // exact verification over the FULL postings (uncapped Jaccard),
     // size-conditioned per join on EXACT counts — ONE fused agg job over
     // the pinned pair table. The two joins have different build-side
@@ -699,11 +700,11 @@ object Dedup {
     val all0 = corpusPostings.select(col("doc"), lit(0).as("side"), col("shingle"))
       .unionByName(jaccardPostings(batch, idCol, textCol, shingleN)
         .select(col("doc"), lit(1).as("side"), col("shingle")))
-      .localCheckpoint(false)
+      .pin(false)
     val all = dfCapped(all0, maxDf)
     val p = all
       .withColumn("sz", count(lit(1)).over(Window.partitionBy(col("doc"))))
-      .localCheckpoint(false)
+      .pin(false)
     val bSide = p.where(col("side") === 1)
       .select(col("shingle"), col("doc").as("b_doc"), col("sz").as("b_sz"))
     val srcSide = p.select(col("shingle"), col("doc").as("src"),
@@ -827,7 +828,7 @@ object Dedup {
     // pin the tokenize→shingle output: consumed by the df aggregation and
     // the capped-postings branch (ingest-time cost, paid once per snapshot)
     val all = jaccardPostings(corpus, idCol, textCol, shingleN)
-      .localCheckpoint(false)
+      .pin(false)
     val dfTable = all.groupBy(col("shingle"))
       .agg(count(lit(1)).as("df_count"))
     val capped =
@@ -932,7 +933,7 @@ object Dedup {
       batch: DataFrame, idCol: String, textCol: String, threshold: Double,
       shingleN: Int, maxDf: Int): DataFrame = {
     val bp = jaccardPostings(batch, idCol, textCol, shingleN)
-      .localCheckpoint(false) // consumed by df agg, prune keys, and pair side
+      .pin(false) // consumed by df agg, prune keys, and pair side
     val batchShingles = bp.select(col("shingle")).distinct()
     val shingleRange = batchShingleRange(batchShingles)
 
@@ -940,7 +941,7 @@ object Dedup {
     // aggregation — lossless for pair generation (every emitted pair
     // contains a batch doc, so its witness shingles are batch shingles)
     val pruned = pruneToBatch(staged.postings, batchShingles, Some(shingleRange))
-      .localCheckpoint(false) // overlap-sized; consumed by corr + pair side
+      .pin(false) // overlap-sized; consumed by corr + pair side
 
     // UNCAPPED (maxDf <= 0, the continuous-ingest regime): no hotness to
     // reconstruct — stored sz is already the combined-cap size. Skipping
@@ -964,7 +965,7 @@ object Dedup {
           .select(col("shingle"),
             coalesce(col("df_count"), lit(0L)).as("df_c"),
             (coalesce(col("df_count"), lit(0L)) + col("df_b")).as("df_comb"))
-          .localCheckpoint(false) // batch-shingle-sized; consumed 2×
+          .pin(false) // batch-shingle-sized; consumed 2×
         val hot = stats.where(col("df_comb") > maxDf).select(col("shingle"))
         val newlyHot = stats
           .where(col("df_comb") > maxDf && col("df_c") <= maxDf)
@@ -984,7 +985,7 @@ object Dedup {
     // batch side: size over the (possibly capped) postings (batch-sized)
     val bpCap = bpCapBase
       .withColumn("sz", count(lit(1)).over(Window.partitionBy(col("doc"))))
-      .localCheckpoint(false) // consumed as probe side and as pair source
+      .pin(false) // consumed as probe side and as pair source
     val bSide = bpCap.select(col("shingle"), col("doc").as("b_doc"),
       col("sz").as("b_sz"))
     val srcBatch = bpCap.select(col("shingle"), col("doc").as("src"),
@@ -1079,7 +1080,7 @@ object Dedup {
     // sizes the self-join strategy
     val sketched = df.select(col(idCol).as("doc"),
       simhash64(tokens(col(textCol))).as("sh"))
-      .localCheckpoint(false)
+      .pin(false)
     val nBanded = sketched.count() * bands
     // the 64-bit sketch is one long — carrying it through the self-join is
     // cheaper than a re-attach join would be
@@ -1129,7 +1130,7 @@ object Dedup {
     val bucketed = df.select(col(idCol).as("doc"),
       explode(graft.similarity.Ann.lshBuckets(col(vecCol), nPlanes, tables, seed, dim))
         .as("bucket"))
-      .localCheckpoint(false) // see minhashPairs: one bucketing pass, not two
+      .pin(false) // see minhashPairs: one bucketing pass, not two
     val a = bucketed.select(col("bucket"), col("doc").as("doc_a"))
     val b = bucketed.select(col("bucket"), col("doc").as("doc_b"))
     // merge pin — equal-sized self-join (see minhashPairs); the bucket
@@ -1208,7 +1209,7 @@ object Dedup {
         nCells = cells)
       .select(col("corpus_id").as("doc_id"), col("cluster_id").as("cell_id"),
         col("corpus_vec").as("vec"))
-      .localCheckpoint(false) // consumed by both pair sides + the verdict join
+      .pin(false) // consumed by both pair sides + the verdict join
     // the verdict row's cell label is the PRIMARY (best) cell; with
     // keep=1 this is `multi` itself, sparing the extra assignment pass
     val assigned =
@@ -1371,7 +1372,7 @@ object Dedup {
         nCells = nCells)
       .select(col("cluster_id").as("cell_id"), col("batch_id").as("doc_id"),
         col("batch_vec").as("vec"))
-      .localCheckpoint(false) // consumed by cell prune + pair side + verdict
+      .pin(false) // consumed by cell prune + pair side + verdict
     val corpusSide = Ann
       .pruneToCells(stored, clusterCol, bAssign.select(col("cell_id")))
       .select(col(clusterCol).as("cell_id"), col(idCol).as("src"),

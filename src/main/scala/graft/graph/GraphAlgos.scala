@@ -3,6 +3,8 @@ package graft.graph
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
+import graft.Pinned
+import graft.Pinned.PinSyntax
 import graft.schema.GraphSchema.{DstCol, IdCol, SrcCol}
 
 /** Iterative analytics over a PropertyGraph (SURVEY.md §2 "multi-hop graph
@@ -34,9 +36,11 @@ import graft.schema.GraphSchema.{DstCol, IdCol, SrcCol}
   * (label, original id), never raw vids, so the run-dependent numbering is
   * invisible to callers.
   *
-  * Pin contract: every entry returns a materialized result and frees its
-  * scratch pins before returning; `graft.Pinned.free(result)` then
-  * releases everything the call left in the block manager.
+  * Pin contract: every entry runs in a [[graft.Pinned.scope]], so on
+  * every exit path — a throw included — it frees each scratch pin its
+  * result cannot reach. Entries return a materialized result;
+  * `graft.Pinned.free(result)` then releases everything the call left in
+  * the block manager.
   */
 object GraphAlgos {
 
@@ -55,7 +59,7 @@ object GraphAlgos {
       // checkpoint, AQE could re-evaluate the plan with different
       // partitioning per consumer and hand the edge joins different
       // numberings
-      .localCheckpoint(true)
+      .pin(true)
     val edges = rels.map { r =>
       g.edgeTables(r)
         .join(dict.select(col("nid").as(SrcCol), col("vid").as("svid")), Seq(SrcCol))
@@ -67,25 +71,20 @@ object GraphAlgos {
 
   /** Distances from `startId` over dictionary-encoded (src, dst, weight)
     * edges: [[weightedDistanceLong]] joined back to the dictionary,
-    * materialized, with the dictionary and the edge pin freed. Returns
-    * (vid, dist, every dict column); an unknown start frees the
-    * dictionary and throws.
+    * materialized. Returns (vid, dist, every dict column); an unknown
+    * start throws.
     */
   private def distancesFrom(dict: DataFrame, edges: DataFrame, startId: String,
       maxIters: Int, directed: Boolean, caller: String): DataFrame = {
     val start = dict.where(col("nid") === startId)
       .select(col("vid")).collect().headOption
-      .getOrElse {
-        freePinned(dict)
-        throw new IllegalArgumentException(s"$caller: unknown start node '$startId'")
-      }
+      .getOrElse(throw new IllegalArgumentException(
+        s"$caller: unknown start node '$startId'"))
       .getLong(0)
     // every round probes the edges: encode them once, not per round
-    val pinnedEdges = edges.localCheckpoint(false)
-    val dist = weightedDistanceLong(pinnedEdges, start, maxIters, directed)
-    val out = dist.join(dict, Seq("vid")).localCheckpoint(true)
-    Seq(dist, pinnedEdges, dict).foreach(freePinned)
-    out
+    val pinnedEdges = edges.pin(false)
+    weightedDistanceLong(pinnedEdges, start, maxIters, directed)
+      .join(dict, Seq("vid")).pin(true)
   }
 
   /** Unit-weight distances as (label, id, hops) — the shared body of
@@ -106,7 +105,7 @@ object GraphAlgos {
     * app/Main.hs:152-156).
     */
   def relatedN(g: PropertyGraph, relation: String, startId: String, depth: Int)
-      : DataFrame = {
+      : DataFrame = Pinned.scope {
     val ref = g.schema.relation(relation)
     val (dict, stored) = encode(g, Seq(ref.rel.name))
     val edges =
@@ -122,7 +121,7 @@ object GraphAlgos {
     * the bound, seed included at 0.
     */
   def hopDistance(g: PropertyGraph, startId: String, maxHops: Int,
-      relations: Seq[String] = Seq.empty): DataFrame = {
+      relations: Seq[String] = Seq.empty): DataFrame = Pinned.scope {
     val (dict, edges) = encode(g, relations)
     hops(dict, edges, startId, maxHops, directed = false, "hopDistance")
   }
@@ -139,12 +138,12 @@ object GraphAlgos {
     * layers (g07). The dictionary here spans the edge endpoints only.
     */
   def weightedDistance(edges: DataFrame, startId: String, maxIters: Int)
-      : DataFrame = {
+      : DataFrame = Pinned.scope {
     val dict = edges.select(col("src").as("nid"))
       .unionByName(edges.select(col("dst").as("nid")))
       .distinct()
       .withColumn("vid", monotonically_increasing_id())
-      .localCheckpoint(true)
+      .pin(true)
     val enc = edges
       .join(dict.select(col("nid").as("src"), col("vid").as("svid")), Seq("src"))
       .join(dict.select(col("nid").as("dst"), col("vid").as("dvid")), Seq("dst"))
@@ -263,7 +262,7 @@ object GraphAlgos {
     * starts at the dictionary).
     */
   def weightedDistanceLong(edges: DataFrame, start: Long, maxIters: Int,
-      directed: Boolean = false): DataFrame = {
+      directed: Boolean = false): DataFrame = Pinned.scope {
     val spark = edges.sparkSession
     import spark.implicits._
     val fwd = edges.select(col("src").cast("long").as("src"),
@@ -281,17 +280,15 @@ object GraphAlgos {
       case Some(d) => return d.toDF("vid", "dist")
       case None => ()
     }
-    var dist = Seq((start, 0.0)).toDF("vid", "dist").localCheckpoint(true)
+    var dist = Seq((start, 0.0)).toDF("vid", "dist").pin(true)
     var frontier = dist
     var frontierRows = 1L
     var i = 0
     var settled = false
-    // Every round checkpoints `improved` and the rebuilt `dist`; without
-    // explicit release a k-round run pins 2k frontier-sized block sets
-    // until driver GC notices (ContextCleaner frees them only via weak
-    // refs). Free each round's scratch as soon as the frame that
-    // supersedes it is materialized — only the returned `dist` stays
-    // pinned, the one-result pin contract. localCheckpoint
+    // Every round pins `improved` and the rebuilt `dist`: the scope would
+    // hold a k-round run's 2k frontier-sized block sets to its exit, so
+    // each round's scratch is freed early, as soon as the frame that
+    // supersedes it is materialized. localCheckpoint
     // (vs persist) also truncates lineage, so round k's plan never grows
     // with k; the non-fault-tolerance trade (an executor loss mid-run
     // fails the job instead of recomputing) is accepted for a bounded
@@ -309,34 +306,26 @@ object GraphAlgos {
         .join(dist.select(col("vid"), col("dist").as("old")), Seq("vid"), "left")
         .where(col("old").isNull || col("cand") < col("old"))
         .select(col("vid"), col("cand").as("dist"))
-        .localCheckpoint(true)
+        .pin(true)
       frontierRows = improved.count()
-      if (frontierRows == 0L) { settled = true; freePinned(improved) }
+      if (frontierRows == 0L) settled = true
       else {
         val prevDist = dist
         val prevFrontier = frontier
         dist = dist.join(improved.select(col("vid")), Seq("vid"), "left_anti")
           .unionByName(improved)
-          .localCheckpoint(true)
+          .pin(true)
         // new dist is materialized (eager): its inputs can go. The
         // previous frontier IS round i-1's `improved` — releasing it here
         // (not at reassignment) keeps it alive through the join above.
-        freePinned(prevDist)
-        if (prevFrontier ne prevDist) freePinned(prevFrontier)
+        Pinned.free(prevDist)
+        if (prevFrontier ne prevDist) Pinned.free(prevFrontier)
         frontier = improved
       }
       i += 1
     }
-    // the last round's frontier survives the loop when it exits on
-    // maxIters rather than settling
-    if (frontier ne dist) freePinned(frontier)
     dist
   }
-
-  /** Explicitly release the blocks behind a localCheckpoint'd frame
-    * (shared [[graft.Pinned]] walker).
-    */
-  private def freePinned(df: DataFrame): Unit = graft.Pinned.free(df)
 
   /** Most edges [[connectedComponentsLong]] labels driver-locally: 2^20
     * pairs ≈ tens of MB boxed on an 8g driver (the BandedBroadcastMaxRows
@@ -365,17 +354,14 @@ object GraphAlgos {
     * 7.1s). LlmOpsSpec pins local ≡ distributed (default vs
     * [[graft.Regime.atScale]]).
     */
-  def connectedComponentsLong(edges: DataFrame): DataFrame = {
+  def connectedComponentsLong(edges: DataFrame): DataFrame = Pinned.scope {
     val spark = edges.sparkSession
     import spark.implicits._
     val pinned = edges.select(col("src").cast("long"), col("dst").cast("long"))
-      .as[(Long, Long)].localCheckpoint(false)
-    val out =
-      if (graft.Regime.fits(pinned.count(), LocalClustersMaxPairs))
-        unionFind(pinned.collect()).toDF("vid", "component")
-      else graphxComponents(pinned)
-    freePinned(pinned.toDF())
-    out
+      .as[(Long, Long)].pin(false)
+    if (graft.Regime.fits(pinned.count(), LocalClustersMaxPairs))
+      unionFind(pinned.collect()).toDF("vid", "component")
+    else graphxComponents(pinned)
   }
 
   /** Union-find over driver-resident edges: (vid, min vid of its
@@ -425,28 +411,14 @@ object GraphAlgos {
     val edges = raw.coalesce(math.max(1, raw.getNumPartitions / 8), shuffle = true)
     val cc = org.apache.spark.graphx.Graph.fromEdgeTuples(edges, defaultValue = 0)
       .connectedComponents()
-    val out = cc.vertices.toDF("vid", "component").localCheckpoint(true)
+    val out = cc.vertices.toDF("vid", "component").pin(true)
     // GraphX caches every graph it builds at MEMORY_AND_DISK and, past
     // Pregel's own bookkeeping, never frees the last ones: left alone, each
     // call leaves a graph-sized block-manager footprint behind (at sf1,
     // back-to-back calls degraded from seconds to minutes). The result is
     // materialized, so the whole cached lineage can go.
-    unpersistLineage(Seq(cc.vertices, cc.edges))
+    Pinned.freeLineage(Seq(cc.vertices, cc.edges))
     out
-  }
-
-  /** Unpersist every cached RDD in the lineage of `roots`. */
-  private def unpersistLineage(roots: Seq[org.apache.spark.rdd.RDD[_]]): Unit = {
-    val seen = scala.collection.mutable.Set.empty[Int]
-    var todo = roots.toList
-    while (todo.nonEmpty) {
-      val r = todo.head
-      todo = todo.tail
-      if (seen.add(r.id)) {
-        if (r.getStorageLevel.isValid) r.unpersist(blocking = false)
-        todo = r.dependencies.map(_.rdd).toList ::: todo
-      }
-    }
   }
 
   /** Connected components over selected relations; returns (label, id,
@@ -456,7 +428,7 @@ object GraphAlgos {
     * singleton components.
     */
   def connectedComponents(g: PropertyGraph, relations: Seq[String] = Seq.empty)
-      : DataFrame = {
+      : DataFrame = Pinned.scope {
     val (dict, edges) = encode(g, relations)
     val cc = connectedComponentsLong(edges)
     val comps = dict.join(cc, Seq("vid"), "left")
@@ -464,11 +436,9 @@ object GraphAlgos {
         coalesce(col("component"), col("vid")).as("comp"))
     val names = comps.groupBy(col("comp"))
       .agg(min(col(IdCol)).as("component_id"))
-    val out = comps.join(names, "comp")
+    comps.join(names, "comp")
       .select(col("label"), col(IdCol), col("component_id"))
-      .localCheckpoint(true)
-    Seq(cc, dict).foreach(freePinned)
-    out
+      .pin(true)
   }
 
   /** Widest vertex set whose per-iteration rank contributions broadcast:
@@ -589,14 +559,14 @@ object GraphAlgos {
     * (vid, rank_nano); dispatches local vs distributed on exact counts.
     */
   def pageRankFixedPointLong(verts: DataFrame, edges: DataFrame, iters: Int,
-      scale: Long = 1000000000L): DataFrame = {
+      scale: Long = 1000000000L): DataFrame = Pinned.scope {
     require(iters >= 0, s"iters must be >= 0, got $iters")
     val spark = verts.sparkSession
     import spark.implicits._
     val vv = verts.select(col(verts.columns.head).cast("long").as("vid"))
-      .localCheckpoint(true)
+      .pin(true)
     val ee = edges.select(col("src").cast("long"), col("dst").cast("long"))
-      .localCheckpoint(true)
+      .pin(true)
     val nVerts = vv.count()
     val nEdges = ee.count() // exact, over materialized blocks
     val baseRank = (15L * scale) / 100L
@@ -613,7 +583,8 @@ object GraphAlgos {
       assert(sArr.length == dArr.length)
       val rank = pageRankLocal(vArr, sArr, dArr, iters, scale, baseRank)
       if (rank != null) {
-        Seq(vv, ee).foreach(freePinned)
+        // early: the result build below reads neither
+        Seq(vv, ee).foreach(Pinned.free)
         // result via broadcast arrays + a distributed index map — not a
         // LocalRelation (re-encodes vertex-sized rows on the driver and
         // ships them inside every downstream task binary) and not
@@ -630,7 +601,7 @@ object GraphAlgos {
         val localOut = spark.range(vArr.length)
           .map(i => (bcV.value(i.toInt), bcR.value(i.toInt)))
           .toDF("vid", "rank_nano")
-          .localCheckpoint(true)
+          .pin(true)
         bcV.destroy(); bcR.destroy()
         return localOut
       }
@@ -639,9 +610,9 @@ object GraphAlgos {
       // stay live for the distributed loop.
     }
     val degD = ee.groupBy(col("src")).agg(count(lit(1)).as("d"))
-      .localCheckpoint(true) // vertex-sized, consumed every iteration
+      .pin(true) // vertex-sized, consumed every iteration
     var ranks = vv.select(col("vid"), lit(scale).as("rank"))
-      .localCheckpoint(true)
+      .pin(true)
     for (_ <- 0 until iters) {
       // contributions: rank div outDeg per SOURCE vertex (vertex-sized;
       // vertices with no out-edges drop out — they send nothing)
@@ -659,13 +630,10 @@ object GraphAlgos {
         .join(msgs, col("vid") === col("mvid"), "left")
         .select(col("vid"),
           (lit(baseRank) + expr("(85 * coalesce(m, bigint(0))) div 100")).as("rank"))
-        .localCheckpoint(true) // materialize the step, then drop the last
-      freePinned(prev)
+        .pin(true) // materialize the step, then drop the last
+      Pinned.free(prev)
     }
-    val out = ranks.select(col("vid"), col("rank").as("rank_nano"))
-      .localCheckpoint(true)
-    Seq(ranks, degD, ee, vv).foreach(freePinned)
-    out
+    ranks.select(col("vid"), col("rank").as("rank_nano")).pin(true)
   }
 
   /** FIXED-POINT static PageRank: ranks are Longs in 1/`scale` units,
@@ -692,7 +660,7 @@ object GraphAlgos {
     */
   def pageRankFixedPoint(g: PropertyGraph, iters: Int = 25,
       relations: Seq[String] = Seq.empty, scale: Long = 1000000000L)
-      : DataFrame = {
+      : DataFrame = Pinned.scope {
     require(iters >= 0, s"iters must be >= 0, got $iters")
     // DataFrame loop, not RDD joins (round 15): the RDD formulation
     // shuffled 7.5M boxed tuples per iteration through Java-object
@@ -705,13 +673,11 @@ object GraphAlgos {
     val (dict, edges) = encode(g, relations)
     val ranks = pageRankFixedPointLong(dict.select(col("vid")), edges,
       iters, scale)
-    val out = ranks.join(dict, Seq("vid"))
+    ranks.join(dict, Seq("vid"))
       .select(col("nlabel").as("label"), col("nid").as(IdCol), col("rank_nano"))
       // pin the (vertex-sized) result so the dict pin can be dropped
       // without the caller's lazy plan recomputing through it
-      .localCheckpoint(true)
-    Seq(ranks, dict).foreach(freePinned)
-    out
+      .pin(true)
   }
 
   /** Triangle count per node over an (undirected-ized, deduplicated)
@@ -729,7 +695,7 @@ object GraphAlgos {
     * vertex) and credited to all three corners.
     */
   def triangleCount(g: PropertyGraph, relations: Seq[String] = Seq.empty)
-      : DataFrame = {
+      : DataFrame = Pinned.scope {
     val rels = if (relations.isEmpty) g.schema.relationDefs.map(_.name) else relations
     val verts = g.nodeTables.toSeq.map { case (label, df) =>
       df.select(col(IdCol), lit(label).as("label"))
@@ -740,7 +706,7 @@ object GraphAlgos {
     val raw = rels.map(r => g.edgeTables(r)
         .select(col(SrcCol).as("a"), col(DstCol).as("b")))
       .reduce(_ unionByName _)
-      .localCheckpoint(true)
+      .pin(true)
     // dictionary-encode string ids to dense longs BEFORE the triangle
     // machinery: the O(Σ wedges) intersection work compares vertex ids
     // 41M+ times at sf0.1, and long compares beat string compares ~2.5×
@@ -749,20 +715,18 @@ object GraphAlgos {
     val dict = raw.select(explode(array(col("a"), col("b"))).as("nid"))
       .distinct()
       .withColumn("vid", monotonically_increasing_id())
-      .localCheckpoint(true)
+      .pin(true)
     val pairs = raw
       .join(dict.select(col("nid").as("a"), col("vid").as("ua")), Seq("a"))
       .join(dict.select(col("nid").as("b"), col("vid").as("ub")), Seq("b"))
       .select(col("ua").as("u"), col("ub").as("v"))
     val perNode = triangleCountEdges(pairs)
-    val out = verts
+    verts
       .join(dict.select(col("nid").as(IdCol), col("vid")), Seq(IdCol), "left")
       .join(perNode.select(col("vid"), col("n")), Seq("vid"), "left")
       .select(col("label"), col(IdCol),
         coalesce(col("n"), lit(0L)).cast("int").as("triangles"))
-      .localCheckpoint(true)
-    Seq(perNode, dict, raw).foreach(freePinned)
-    out
+      .pin(true)
   }
 
   /** Most canonical edges the triangle adjacency will broadcast: the
@@ -796,13 +760,13 @@ object GraphAlgos {
     * ~10s, as did GraphX, and the same plan on string ids ran ~16s;
     * DuckDB single-node needs 8.8s for the counts alone).
     */
-  def triangleCountEdges(rawPairs: DataFrame): DataFrame = {
+  def triangleCountEdges(rawPairs: DataFrame): DataFrame = Pinned.scope {
     val canon = rawPairs
       .select(col("u").cast("long").as("a"), col("v").cast("long").as("b"))
       .filter(col("a") =!= col("b"))
       .select(least(col("a"), col("b")).as("u"), greatest(col("a"), col("b")).as("v"))
       .distinct()
-      .localCheckpoint(true)
+      .pin(true)
     // exact, cheap (canon is already materialized blocks), and decisive:
     // no optimizer size estimate exists for a checkpointed frame
     val doBroadcast = graft.Regime.fits(canon.count(), BroadcastAdjacencyMaxEdges)
@@ -825,7 +789,7 @@ object GraphAlgos {
           struct(col("u").as("s"), col("v").as("t")))
           .otherwise(struct(col("v").as("s"), col("u").as("t"))).as("e"))
       .select(col("e.s").as("s"), col("e.t").as("t"))
-      .localCheckpoint(true)
+      .pin(true)
     // sorted adjacency: per-vertex O(d log d) at build time buys the
     // O(Σ wedges) closing stage a two-pointer merge instead of the
     // builtin array_intersect's per-row hash set (sorted_intersect —
@@ -833,7 +797,7 @@ object GraphAlgos {
     // spec-pinned)
     val adjPlain = dirE.groupBy(col("s"))
       .agg(array_sort(collect_list(col("t"))).as("nbrs"))
-      .localCheckpoint(true)
+      .pin(true)
     // broadcast the adjacency by default: a shuffled second join would
     // re-exchange join-1's output WITH the ns arrays attached — a
     // wedge-sized payload. The oriented adjacency is exactly m longs
@@ -853,17 +817,15 @@ object GraphAlgos {
       .join(adj.select(col("s").as("t"), col("nbrs").as("nt")), Seq("t"))
       .select(explode(graft.functions.TriangleContribs.triangleContribs(
         col("s"), col("t"), col("ns"), col("nt"))).as("e"))
-    // materialize the vertex-sized result and free the three edge-sized
-    // pins HERE (the pageRankFixedPointLong pattern): left lazy, canon/
-    // dirE/adjPlain stay live until the caller's first action and then
-    // linger for the session — at bench scale that residue billed the
-    // NEXT query (g10 runs right after g09; the round-15 SURVEY traced
-    // its in-pair churn to exactly this boundary)
-    val out = contribs
+    // materialize the vertex-sized result so the scope frees the three
+    // edge-sized pins HERE: left lazy, canon/dirE/adjPlain stay live
+    // until the caller's first action and then linger for the session —
+    // at bench scale that residue billed the NEXT query (g10 runs right
+    // after g09; the round-15 SURVEY traced its in-pair churn to exactly
+    // this boundary)
+    contribs
       .select(col("e.vid").as("vid"), col("e.c").as("c"))
       .groupBy(col("vid")).agg(sum(col("c")).as("n"))
-      .localCheckpoint(true)
-    Seq(canon, dirE, adjPlain).foreach(freePinned)
-    out
+      .pin(true)
   }
 }

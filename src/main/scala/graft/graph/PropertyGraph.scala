@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.Pinned
+import graft.Pinned.PinSyntax
 import graft.schema._
 import graft.schema.GraphSchema.{DstCol, IdCol, SrcCol}
 
@@ -229,7 +231,7 @@ final case class PropertyGraph(
     * hash-stability, production loads use this.
     */
   def addNodesWithGeneratedIds(label: String, df: DataFrame): PropertyGraph =
-    addNodes(label, df.withColumn(IdCol, expr("uuid()")).localCheckpoint(true))
+    addNodes(label, df.withColumn(IdCol, expr("uuid()")).pin(true))
 
   /** Bulk edge insert — bag semantics, one union for the whole DataFrame
     * (the scale path for streaming / batch ingest; `addRelated` is the
@@ -252,8 +254,8 @@ final case class PropertyGraph(
     */
   def checkpointed(eager: Boolean = true): PropertyGraph =
     copy(
-      nodeTables = nodeTables.map { case (k, v) => k -> v.localCheckpoint(eager) },
-      edgeTables = edgeTables.map { case (k, v) => k -> v.localCheckpoint(eager) })
+      nodeTables = nodeTables.map { case (k, v) => k -> v.pin(eager) },
+      edgeTables = edgeTables.map { case (k, v) => k -> v.pin(eager) })
 
   /** Release every checkpoint block this snapshot's tables pin (no-op on
     * non-checkpointed tables). Call ONLY after every consumer of the
@@ -263,7 +265,7 @@ final case class PropertyGraph(
     * it each ingest pins a graph-sized block set for the JVM lifetime.
     */
   def release(): Unit =
-    (nodeTables.values ++ edgeTables.values).foreach(graft.Pinned.free)
+    (nodeTables.values ++ edgeTables.values).foreach(Pinned.free)
 
   /** Remove ALL occurrences of one edge in either stored orientation for
     * symmetric relations (reference: removeRelated filters every occurrence,
@@ -426,16 +428,17 @@ final case class PropertyGraph(
     * by [[save]] — the incremental path for point mutations, which touch
     * exactly one stored edge table: rewriting every table would make a
     * point mutation cost O(graph) instead of O(one relation). Layout
-    * contract identical to [[save]]. The table is eagerly pinned before
-    * the write because its own plan typically reads the very parquet
-    * files being overwritten.
+    * contract identical to [[save]]. The table is eagerly pinned for the
+    * write because its own plan typically reads the very parquet files
+    * being overwritten.
     */
-  def saveRelation(dir: String, relName: String, edgeBuckets: Int = 8): Unit = {
-    val stored = schema.relation(relName).rel.name
-    edgeTables(stored).localCheckpoint(true)
-      .repartition(edgeBuckets, col(SrcCol)).sortWithinPartitions(col(SrcCol))
-      .write.mode("overwrite").parquet(s"$dir/edges_$stored.parquet")
-  }
+  def saveRelation(dir: String, relName: String, edgeBuckets: Int = 8): Unit =
+    Pinned.scope {
+      val stored = schema.relation(relName).rel.name
+      edgeTables(stored).pin(true)
+        .repartition(edgeBuckets, col(SrcCol)).sortWithinPartitions(col(SrcCol))
+        .write.mode("overwrite").parquet(s"$dir/edges_$stored.parquet")
+    }
 
   /** Persist as CATALOG-BUCKETED tables (`bucketBy(src)` + `sortBy`): unlike
     * `save`, the bucket metadata survives in the catalog, so a subsequent

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Pinned.PinSyntax
+
 /** Exact global rank over an ARBITRARY sort order without a single-task
   * window — the value-ordered sibling of [[CorpusShuffle]] (whose two-level
   * scheme needs the shard key to be a PREFIX of the sort key, which only a
@@ -54,7 +56,7 @@ object GlobalOrder {
       else df.sparkSession.sessionState.conf.numShufflePartitions
     val rp = df.repartitionByRange(n, sortCols: _*)
       .withColumn("__go_pid", spark_partition_id())
-      .localCheckpoint()
+      .pin(true)
     val w = Window.partitionBy(col("__go_pid")).orderBy(sortCols: _*)
     val ranked = rp.withColumn("__go_r", row_number().over(w))
     // predecessors per range partition: <= n rows — the only non-parallel step

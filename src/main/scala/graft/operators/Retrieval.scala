@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Pinned
+import graft.Pinned.PinSyntax
 import graft.dedup.Dedup
 import graft.functions.TextFunctions.tokens
 
@@ -54,31 +56,27 @@ object Retrieval {
       idCol: String, textCol: String, k: Int,
       k1: Double = 1.2, b: Double = 0.75,
       excludeSelf: Boolean = true,
-      maxDfFraction: Double = 1.0): DataFrame = {
-    val (topk, scratch) = bm25TopKLazy(corpus, queries, idCol, textCol, k,
-      k1, b, excludeSelf, maxDfFraction)
-    // materialize the (queries×k)-row result, then release the scratch
-    // checkpoints: without this every call pins a corpus-row-sized
-    // (docLen) + query-vocab-sized (pruned) block set for the JVM
-    // lifetime, and bench reps accumulate them. Only the one small
-    // result frame stays pinned (the graph algos' one-result contract).
-    val out = topk.localCheckpoint(true)
-    scratch.foreach(graft.Pinned.free)
-    out
+      maxDfFraction: Double = 1.0): DataFrame = Pinned.scope {
+    // materialize the (queries×k)-row result, so the scope frees the
+    // scratch pins: a corpus-row-sized (docLen) + query-vocab-sized
+    // (pruned) block set that bench reps would otherwise accumulate. Only
+    // the one small result frame stays pinned (the graph algos'
+    // one-result contract).
+    bm25TopKLazy(corpus, queries, idCol, textCol, k, k1, b, excludeSelf,
+      maxDfFraction).pin(true)
   }
 
-  /** [[bm25TopK]] before result materialization: the lazy top-k frame
-    * plus the scratch checkpoints backing it (which the caller must
-    * [[graft.Pinned.free]] once — and only once — the result no longer
-    * needs recomputation). Exists so plan assertions can inspect the
-    * executed plan the public operator hides behind its checkpoint.
+  /** [[bm25TopK]] before result materialization: the lazy top-k frame over
+    * the scratch pins, which belong to the caller's scope. Exists so plan
+    * assertions can inspect the executed plan the public operator hides
+    * behind its checkpoint.
     */
   private[graft] def bm25TopKLazy(
       corpus: DataFrame, queries: DataFrame,
       idCol: String, textCol: String, k: Int,
       k1: Double = 1.2, b: Double = 0.75,
       excludeSelf: Boolean = true,
-      maxDfFraction: Double = 1.0): (DataFrame, Seq[DataFrame]) = {
+      maxDfFraction: Double = 1.0): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(k1 > 0 && b >= 0 && b <= 1, s"BM25 params out of range: k1=$k1 b=$b")
     require(maxDfFraction > 0 && maxDfFraction <= 1,
@@ -112,7 +110,7 @@ object Retrieval {
     val docLen = corpus
       .select(col(idCol).as("corpus_id"),
         size(tokens(coalesce(col(textCol), lit("")))).cast("long").as("dl"))
-      .localCheckpoint()
+      .pin(true)
     val stats = docLen.agg(
       count(lit(1)).as("n_docs"), avg(col("dl")).as("avgdl"))
 
@@ -126,7 +124,7 @@ object Retrieval {
     // corpus twice more) — the frame is query-vocabulary-sized
     val pruned = tf
       .join(broadcast(qTerms.select(col("term")).distinct()), Seq("term"))
-      .localCheckpoint()
+      .pin(true)
 
     // df restricted to query terms — identical to the full-vocabulary df
     // on those terms (tf is distinct per (doc, term) by construction)
@@ -156,14 +154,13 @@ object Retrieval {
       .groupBy(col("query_id"), col("corpus_id"))
       .agg(round(sum(contrib) + lit(1e-9), 5).as("score"))
 
-    val topk = scored
+    scored
       .withColumn("rank", row_number().over(
         Window.partitionBy(col("query_id"))
           .orderBy(col("score").desc, col("corpus_id"))))
       .where(col("rank") <= k)
       .select(col("query_id"), col("rank").cast("int").as("rank"),
         col("corpus_id"), col("score"))
-    (topk, Seq(docLen, pruned))
   }
 
   /** The persisted ingest artifacts of a BM25 corpus index — the search
@@ -292,7 +289,7 @@ object Retrieval {
     // tick's recompute is cheaper than the checkpoint job + block free
     // it would add to EVERY tick of a drain
     val postings =
-      if (pin) postingsPlan.localCheckpoint() else postingsPlan
+      if (pin) postingsPlan.pin(true) else postingsPlan
     val termDf = postings.groupBy(col("term")).agg(count(lit(1)).as("df"))
     val stats = toked
       .agg(count(lit(1)).as("n_docs"),

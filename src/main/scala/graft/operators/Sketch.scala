@@ -6,6 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.sketch.CountMinSketch
 
+import graft.Pinned.PinSyntax
 import graft.functions.SketchProbes
 
 /** Sketch-accelerated exact operators — the 100 TB pattern where a
@@ -173,7 +174,7 @@ object Sketch {
         // pinned counts, never re-running the input pipeline
         val counts = keyed.where(col(keyCol).isNotNull)
           .groupBy(col(keyCol)).agg(count(lit(1)).as("cnt"))
-          .localCheckpoint(true)
+          .pin(true)
         val total = counts.agg(coalesce(sum(col("cnt")), lit(0L)))
           .head().getLong(0)
         (counts.where(col("cnt") >= shareThreshold(total, minShare)), total)
@@ -239,7 +240,7 @@ object Sketch {
         // pinned blocks (see scaladoc — two filters over an unpinned
         // frame would be two full pipeline scans)
         val flagged = big.withColumn("__bloom_hit", probe)
-          .localCheckpoint(false)
+          .pin(false)
         val hits = flagged.where(col("__bloom_hit")).drop("__bloom_hit")
           .join(smallKeys, Seq(keyCol), "left_anti")
         flagged.where(!col("__bloom_hit")).drop("__bloom_hit")

@@ -252,7 +252,7 @@ object GraphQueries {
   // lineitem edges are kept — bag edges carry rank mass per occurrence,
   // exactly like the edge list the kernel iterates.
   private val g06Iters = 25
-  private val g06: Q = (s, dir) => {
+  private val g06: Q = (s, dir) => graft.Pinned.scope {
     // arithmetic vertex encoding (key * 4 + kind) into the long-keyed
     // core — the g10 rationale: the string dictionary's distinct + two
     // encode joins on 765k ids were ~14s of g06's 21.9s at sf1
@@ -269,12 +269,15 @@ object GraphQueries {
       .unionByName(t(s, dir, "lineitem").select(
         (col("l_orderkey") * 4 + 1).as("src"),
         (col("l_partkey") * 4 + 2).as("dst")))
-    graft.graph.GraphAlgos.pageRankFixedPointLong(verts, edges, iters = g06Iters)
+    val top = graft.graph.GraphAlgos.pageRankFixedPointLong(verts, edges, iters = g06Iters)
       .where(col("vid") % 4 === 2)
       .select(concat(lit("p:"), expr("vid div 4")).as("part_id"),
         col("rank_nano"))
       .orderBy(col("rank_nano").desc, col("part_id"))
       .limit(20)
+    // the 20-row answer travels as a driver-local frame, so the scope
+    // frees the vertex-sized rank pin at exit
+    s.createDataFrame(java.util.Arrays.asList(top.collect(): _*), top.schema)
   }
 
   private val g06Sql =

@@ -5,6 +5,8 @@ import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Pinned
+import graft.Pinned.PinSyntax
 import graft.streaming.Streams
 
 /** Structured Streaming entries run synchronously against the events
@@ -470,22 +472,20 @@ object StreamingQueries {
   // (BUILDING customers → placed orders, per-status rollup) covers base
   // AND streamed edges, so a dropped or double-folded tick changes the
   // counts — the oracle is the plain join SQL over the full tables.
-  private val s15: Q = (s, dir) => {
+  private val s15: Q = (s, dir) => Pinned.scope {
     val (base, tail) = GraphQueries.tpchPlacedSplit(s, dir, 250)
     val folded = Streams.graphIngest(s, base, "placed", tail, nInputFiles = 2)
-    // materialize the (few-row) rollup, then release the graph's blocks:
-    // without the release every bench rep pins a graph-sized block set
-    // for the JVM lifetime (the bm25 Pinned.free pattern)
-    val out = folded
+    // materialize the (few-row) rollup, so the scope frees the graph's
+    // blocks: left pinned, every bench rep would hold a graph-sized block
+    // set for the JVM lifetime
+    folded
       .from("Customer")
       .filter(col("segment") === "BUILDING")
       .related("placed")
       .df.groupBy(col("status"))
       .agg(count(lit(1)).as("n_orders"),
         round(sum(col("totalprice")), 2).as("total_spent"))
-      .localCheckpoint(true)
-    folded.release()
-    out
+      .pin(true)
   }
 
   private val s15Sql =

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Pinned
+import graft.Pinned.PinSyntax
 import graft.functions.VectorFunctions._
 
 /** Similarity search over embedding columns (SURVEY.md §2.4): brute-force
@@ -193,7 +195,7 @@ object Ann {
         .groupBy(col("cid"))
         .agg(array_sort(collect_list(struct(col("pos"), col("cx")))).as("pairs"))
         .select(col("cid"), transform(col("pairs"), p => p.getField("cx")).as("centroid"))
-        .localCheckpoint(false)
+        .pin(false)
     }
   }
 
@@ -338,10 +340,10 @@ object Ann {
     // pin: `cent` is typically a TakeOrdered over the corpus; the three
     // consumers below (supers, cell→super map, child argmax) must not
     // each rescan the corpus
-    val cells = cent.localCheckpoint(false)
+    val cells = cent.pin(false)
     val supers = cells.orderBy(col("cid")).limit(nSuper)
       .select(col("cid").as("cid"), col("centroid").as("centroid"))
-      .localCheckpoint(false) // consumed by the cell map + the row probe
+      .pin(false) // consumed by the cell map + the row probe
     // a super set past the flat threshold re-enters the hierarchy — a
     // plain comparison, not a Regime choice: at scale, 2 supers would
     // recurse forever. cell → nearest super: k·64·depth cosines
@@ -535,7 +537,7 @@ object Ann {
     requireInt8Codes(stored, codesCol)
     val rankKey = rankRounder(rankRoundDp)
     val q = assignCells(centroids, queries, idCol, vecCol, "query", nProbe, nCells)
-      .localCheckpoint(false) // probe pairs: consumed by the cell prune + join
+      .pin(false) // probe pairs: consumed by the cell prune + join
     val probed = pruneToCells(stored, clusterCol, q.select(col("cluster_id")))
     val cq = probed.select(col(clusterCol).as("cluster_id"),
       col(idCol).as("corpus_id"), col(codesCol).as("cq"))
@@ -829,7 +831,7 @@ object Ann {
     * query path.
     */
   def pqTrainedCodebook(corpus: DataFrame, idCol: String, vecCol: String,
-      m: Int, ksub: Int, iters: Int, roundDp: Int = 6): Array[Double] = {
+      m: Int, ksub: Int, iters: Int, roundDp: Int = 6): Array[Double] = Pinned.scope {
     import graft.functions.PqExpressions.pqEncode
     require(iters >= 0, s"pqTrainedCodebook: iters must be >= 0, got $iters")
     val seed = pqSeedCodebook(corpus, idCol, vecCol, m, ksub)
@@ -838,7 +840,9 @@ object Ann {
     val pow = math.pow(10, roundDp)
     val normed = pqNormalize(corpus, idCol, vecCol, "corpus")
       .select(col("corpus_vec").as("__v"))
-      .localCheckpoint(false) // one normalize pass, reused by every iteration
+      // one normalize pass, reused by every iteration; the scope frees it
+      // once the codebook is on the driver
+      .pin(false)
     (0 until iters).foldLeft(seed) { (cb, _) =>
       val means = normed
         .select(posexplode(pqEncode(col("__v"), cb, m, ksub, subDim))
@@ -982,7 +986,7 @@ object Ann {
     val rankKey = rankRounder(rankRoundDp)
     val subDim = codebook.length / (m * ksub)
     val q = assignCells(centroids, queries, idCol, vecCol, "query", nProbe, nCells)
-      .localCheckpoint(false) // probe pairs: consumed by the cell prune + join
+      .pin(false) // probe pairs: consumed by the cell prune + join
     val probed = pruneToCells(stored, clusterCol, q.select(col("cluster_id")))
     val cq = probed.select(col(clusterCol).as("cluster_id"),
       col(idCol).as("corpus_id"), col(codesCol).as("__codes"))

@@ -6,6 +6,9 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState,
   GroupStateTimeout, OutputMode, Trigger}
 import org.apache.spark.sql.types._
 
+import graft.Pinned
+import graft.Pinned.PinSyntax
+
 /** Structured Streaming surface (SURVEY.md §2.3 streaming; Phase 5): the
   * events table replayed as a file stream, watermarked windowed
   * aggregations, streaming dedup, stateful sessionization via
@@ -405,7 +408,7 @@ object Streams {
                 .format("memory")
                 .queryName(name)
                 .outputMode(mode))
-              spark.table(name).localCheckpoint(true)
+              spark.table(name).pin(true)
             } finally spark.catalog.dropTempView(name)
         }
        }
@@ -751,50 +754,24 @@ object Streams {
     @volatile private var lastAppliedBatch = -1L
     private var batchesSinceCheckpoint = 0
     private var batchesSinceSave = 0
-    // every block set THIS updater pinned (per-tick batches + periodic
-    // snapshot checkpoints; never `initial`'s tables) — a DataFrame ref
-    // per tick on the driver, released by sealAndRelease. Long-lived
-    // durable updaters that never seal pay one small ref per batch.
-    private val scratchPins =
-      scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    // the latest periodic snapshot's tables IF this updater created them
-    // (None until the first checkpointEvery boundary): still live, moved
-    // to scratch only when the next periodic checkpoint supersedes them
-    private var ownedSnapshot: Option[Seq[DataFrame]] = None
+    // owns every block set THIS updater pins (per-tick batches + periodic
+    // snapshot checkpoints; never `initial`'s tables) until the seal.
+    // Long-lived durable updaters that never seal pay one id per batch.
+    private val pins = Pinned.arena()
 
     def current(): graft.graph.PropertyGraph = graph
 
-    /** Release every scratch pin the final snapshot does NOT read, and
-      * transfer ownership of the ones it does. Until round 17 the seal
-      * re-checkpointed the stored edge table (one eager edge-table-sized
-      * job + a second copy of every edge in the block manager) purely so
-      * the tick pins could be freed here; but [[graft.Pinned.free]] —
-      * and therefore PropertyGraph.release() — reaches LogicalRDD leaves
-      * through ANY plan, so a snapshot whose edge table is the lazy
-      * union over the tick pins releases exactly the same blocks when
-      * the CALLER frees it. The seal now just partitions the scratch
-      * pins by reachability from the snapshot's tables: unreachable
-      * pins (ticks absorbed by a later periodic checkpoint, superseded
-      * periodic snapshots) free immediately, reachable ones become the
-      * snapshot's own blocks. `current()` stays valid afterwards; the
-      * graph's blocks — owned pins included — are the caller's to free
-      * via PropertyGraph.release() once consumed (the graphIngest
-      * contract, unchanged).
+    /** Close the updater's arena against the final snapshot: pins it does
+      * NOT read (ticks absorbed by a later periodic checkpoint, superseded
+      * periodic snapshots) free immediately, and the ones it reads pass
+      * to the enclosing scope — at top level, to the caller, who frees
+      * them via PropertyGraph.release() once consumed (the graphIngest
+      * contract). The snapshot's edge table stays the lazy union over the
+      * tick pins: no edge-table re-checkpoint at the seal. `current()`
+      * stays valid afterwards.
       */
     def sealAndRelease(): graft.graph.PropertyGraph = synchronized {
-      def leafIds(df: DataFrame): Seq[Int] =
-        df.queryExecution.analyzed.collect {
-          case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
-        }
-      val live: Set[Int] =
-        (graph.nodeTables.values ++ graph.edgeTables.values)
-          .flatMap(leafIds).toSet
-      scratchPins.filterNot(df => leafIds(df).exists(live))
-        .foreach(graft.Pinned.free)
-      scratchPins.clear()
-      // still-live periodic-snapshot tables are (parts of) the graph's
-      // own tables — release() reaches them; drop the superseded refs
-      ownedSnapshot = ownedSnapshot.map(_.filter(df => leafIds(df).exists(live)))
+      pins.close(graph)
       graph
     }
 
@@ -802,26 +779,20 @@ object Streams {
       * batchId replay. Exposed for deterministic replay tests.
       */
     private[graft] def applyBatch(batch: DataFrame, batchId: Long): Unit =
-      synchronized {
+      synchronized { pins.within {
         if (batchId > lastAppliedBatch) {
           val pinned = batch
             .toDF(graft.schema.GraphSchema.SrcCol, graft.schema.GraphSchema.DstCol)
-            .localCheckpoint(true)
+            .pin(true)
           // WAL first: once the stream commits this batch (after
           // foreachBatch returns) the delta must already be on disk
           durableDir.foreach { d =>
             pinned.write.mode("overwrite").parquet(s"$d/wal/$batchId")
           }
-          scratchPins += pinned
           var next = graph.addRelatedBulk(relation, pinned)
           batchesSinceCheckpoint += 1
           if (batchesSinceCheckpoint >= checkpointEvery) {
             next = next.checkpointed()
-            // the snapshot tables this replaces (if WE checkpointed
-            // them) are now unreachable from the fold: scratch
-            ownedSnapshot.foreach(scratchPins ++= _)
-            ownedSnapshot =
-              Some((next.nodeTables.values ++ next.edgeTables.values).toSeq)
             batchesSinceCheckpoint = 0
           }
           graph = next
@@ -834,7 +805,7 @@ object Streams {
             }
           }
         }
-      }
+      } }
 
     /** Force a committed snapshot of the current folded state (durable
       * mode only; no-op before any batch applied). This is the
@@ -1129,12 +1100,12 @@ object Streams {
         "collapse slices to one file (verdicts stay exact by the " +
         "tick-invariance law; only staging balance degrades). String or " +
         "other orderable ids need a rank-based splitter instead.")
-    val rows = batch.localCheckpoint(false) // pinned: one filter pass per slice
     // the pin is STAGING-SCOPED: freed as soon as the slices are on disk
     // (round-18 fix — it used to live until the ContextCleaner happened to
     // GC the frame, billing a batch-sized block set to whatever ran next;
     // the seal-ownership test caught it as a GC-timing-dependent "leak")
-    try {
+    Pinned.scope {
+      val rows = batch.pin(false) // pinned: one filter pass per slice
       val mm = rows.agg(
         min(col(idCol)).cast("double"), max(col(idCol)).cast("double")).head()
       val (lo, hi) =
@@ -1156,7 +1127,7 @@ object Streams {
         java.nio.file.Files.move(part.toPath, dest.toPath)
         dest.setLastModified(baseMtime + k * 2000L)
       }
-    } finally graft.Pinned.free(rows)
+    }
     inputDir
   }
 
@@ -1209,7 +1180,7 @@ object Streams {
   private def verdictsOrEmpty(spark: SparkSession, dir: String,
       schema: StructType): DataFrame =
     if (new java.io.File(dir).isDirectory)
-      readTicks(spark, dir).localCheckpoint(true)
+      readTicks(spark, dir).pin(true)
     else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
 
   /** s11/s12 verdict schema: the id column keeps the caller's name and
@@ -1549,7 +1520,7 @@ object Streams {
         else base // an empty ingest: serve the base index unchanged
       // materialize BEFORE the overlay is deleted
       Retrieval.bm25TopKStaged(idx, queries, idCol, textCol, k)
-        .localCheckpoint(true)
+        .pin(true)
     }
   }
 }

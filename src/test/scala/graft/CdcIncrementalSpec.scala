@@ -1,5 +1,12 @@
 package graft
 
+import org.apache.spark.sql.catalyst.plans.LeftSemi
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.functions._
 
 import graft.dedup.Dedup
@@ -20,8 +27,7 @@ class CdcIncrementalSpec extends SparkSpec {
   test("incremental CDC ≡ whole-corpus cdcDedup restricted to batch docs") {
     val docs = spark.read.parquet(s"${TestSpark.sf0001}/documents.parquet")
     val split = docs.agg(max(col("doc_id"))).head().getLong(0) / 2
-    val store = java.nio.file.Files.createTempDirectory("graft_cdc_spec_").toString
-    try {
+    withTempDir("graft_cdc_spec_") { store =>
       Dedup.stageCdcChunks(docs.where(col("doc_id") < split),
         "doc_id", "text", avgChunkTokens = 20).write(store)
       val staged = Dedup.StagedChunkStore.read(spark, store)
@@ -31,11 +37,6 @@ class CdcIncrementalSpec extends SparkSpec {
         avgChunkTokens = 20).where(col("doc_id") >= split))
       assert(incremental === whole,
         "incremental verdicts diverge from the whole-corpus run")
-    } finally {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(java.nio.file.Paths.get(store)).iterator()
-        .asScala.toSeq.sortBy(-_.getNameCount)
-        .foreach(java.nio.file.Files.deleteIfExists(_))
     }
   }
 
@@ -74,8 +75,7 @@ class CdcIncrementalSpec extends SparkSpec {
     val docs = spark.read.parquet(s"${TestSpark.sf0001}/documents.parquet")
     val maxId = docs.agg(max(col("doc_id"))).head().getLong(0)
     val (s1, s2) = (maxId - 199L, maxId - 99L)
-    val work = java.nio.file.Files.createTempDirectory("graft_cdc_compact_").toString
-    try {
+    withTempDir("graft_cdc_compact_") { work =>
       Dedup.stageCdcChunks(docs.where(col("doc_id") < s1),
         "doc_id", "text", avgChunkTokens = 20).write(s"$work/src")
       val store = Dedup.StagedChunkStore.read(spark, s"$work/src")
@@ -112,11 +112,6 @@ class CdcIncrementalSpec extends SparkSpec {
         Dedup.compactChunkStore(spark, s"$work/src", s"$work/overlay",
           Seq(s"$work/overlay"))
       }
-    } finally {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(java.nio.file.Paths.get(work)).iterator()
-        .asScala.toSeq.sortBy(-_.getNameCount)
-        .foreach(java.nio.file.Files.deleteIfExists(_))
     }
   }
 
@@ -143,8 +138,7 @@ class CdcIncrementalSpec extends SparkSpec {
     val docs = (0 until 40)
       .map(i => (i.toLong, (0 until 30).map(j => s"w${i}x$j").mkString(" ")))
       .toDF("doc_id", "text")
-    val store = java.nio.file.Files.createTempDirectory("graft_cdc_plan_").toString
-    try {
+    withTempDir("graft_cdc_plan_") { store =>
       Dedup.stageCdcChunks(docs.where(col("doc_id") < 20),
         "doc_id", "text", avgChunkTokens = 5).write(store)
       val staged = Dedup.StagedChunkStore.read(spark, store)
@@ -157,24 +151,40 @@ class CdcIncrementalSpec extends SparkSpec {
         .select(col("chunk_hash")).distinct()
       val pruned = Dedup.pruneToBatch(staged.hashes, batchHashes,
         keyCol = "chunk_hash")
-      val plan = pruned.queryExecution.executedPlan.toString
-      val semiIdx = plan.indexOf("LeftSemi")
-      assert(semiIdx >= 0, s"no semi join in the prune plan:\n$plan")
-      val below = plan.substring(semiIdx)
-      val storedScan = below.indexOf("chunk_hashes")
-      assert(storedScan >= 0, s"stored scan not under the semi join:\n$plan")
-      val between = below.substring(0, storedScan)
-      assert(!between.contains("HashAggregate") && !between.contains("Exchange h"),
-        s"aggregation/exchange above the stored scan:\n$plan")
+      // found in the plan TREE, not its string: Spark truncates a long
+      // file location in the string, cutting the table name off
+      val plan = pruned.queryExecution.executedPlan
+      def kids(p: SparkPlan): Seq[SparkPlan] = p match {
+        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+        case q: QueryStageExec => Seq(q.plan)
+        case _ => p.children
+      }
+      // root → … → node, the first node `hit` picks in pre-order
+      def pathTo(p: SparkPlan, hit: SparkPlan => Boolean): Option[List[SparkPlan]] =
+        if (hit(p)) Some(List(p))
+        else kids(p).iterator.map(pathTo(_, hit)).collectFirst { case Some(t) => p :: t }
+      val root = new java.io.File(store).getCanonicalPath
+      val semi = pathTo(plan, {
+        case j: BaseJoinExec => j.joinType == LeftSemi
+        case _ => false
+      }).map(_.last).getOrElse(fail(s"no semi join in the prune plan:\n$plan"))
+      val toScan = pathTo(semi, {
+        case f: FileSourceScanExec => f.relation.location.rootPaths.forall(
+          r => new java.io.File(r.toUri).getCanonicalPath.startsWith(root))
+        case _ => false
+      }).getOrElse(fail(s"stored scan not under the semi join:\n$plan"))
+      val between = toScan.tail.init
+      assert(!between.exists {
+        case _: HashAggregateExec => true
+        case e: ShuffleExchangeExec => e.outputPartitioning.isInstanceOf[HashPartitioning]
+        case _ => false
+      }, s"aggregation/exchange above the stored scan:\n$plan")
       // and the batch's hash range is pushed to the stored scan as a filter
-      assert(below.substring(0, storedScan).contains("Filter") ||
-        plan.contains("PushedFilters: [IsNotNull(chunk_hash), GreaterThanOrEqual(chunk_hash"),
+      val scan = toScan.last.asInstanceOf[FileSourceScanExec]
+      assert(between.exists(_.isInstanceOf[FilterExec]) ||
+        scan.metadata.get("PushedFilters").exists(
+          _.contains("GreaterThanOrEqual(chunk_hash")),
         s"batch hash range not pushed to the stored scan:\n$plan")
-    } finally {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(java.nio.file.Paths.get(store)).iterator()
-        .asScala.toSeq.sortBy(-_.getNameCount)
-        .foreach(java.nio.file.Files.deleteIfExists(_))
     }
   }
 }

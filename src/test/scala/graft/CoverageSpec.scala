@@ -39,30 +39,31 @@ class CoverageSpec extends SparkSpec {
   }
 
   test("sources/sinks: parquet, csv, json, orc roundtrip losslessly") {
-    val tmp = Files.createTempDirectory("graft_io").toString
-    val src = Tables.t(spark, dir, "nation")
-    val n = src.count()
+    withTempDir("graft_io") { tmp =>
+      val src = Tables.t(spark, dir, "nation")
+      val n = src.count()
 
-    src.write.mode("overwrite").parquet(s"$tmp/nation_pq")
-    val pq = spark.read.parquet(s"$tmp/nation_pq")
-    assert(pq.count() === n)
-    assert(pq.exceptAll(src).isEmpty && src.exceptAll(pq).isEmpty)
+      src.write.mode("overwrite").parquet(s"$tmp/nation_pq")
+      val pq = spark.read.parquet(s"$tmp/nation_pq")
+      assert(pq.count() === n)
+      assert(pq.exceptAll(src).isEmpty && src.exceptAll(pq).isEmpty)
 
-    src.write.mode("overwrite").option("header", "true").csv(s"$tmp/nation_csv")
-    val csv = spark.read.option("header", "true").option("inferSchema", "true")
-      .csv(s"$tmp/nation_csv")
-    assert(csv.count() === n)
-    assert(csv.select("n_name").exceptAll(src.select("n_name")).isEmpty)
+      src.write.mode("overwrite").option("header", "true").csv(s"$tmp/nation_csv")
+      val csv = spark.read.option("header", "true").option("inferSchema", "true")
+        .csv(s"$tmp/nation_csv")
+      assert(csv.count() === n)
+      assert(csv.select("n_name").exceptAll(src.select("n_name")).isEmpty)
 
-    src.write.mode("overwrite").json(s"$tmp/nation_json")
-    val js = spark.read.json(s"$tmp/nation_json")
-    assert(js.count() === n)
-    assert(js.select("n_name").exceptAll(src.select("n_name")).isEmpty)
+      src.write.mode("overwrite").json(s"$tmp/nation_json")
+      val js = spark.read.json(s"$tmp/nation_json")
+      assert(js.count() === n)
+      assert(js.select("n_name").exceptAll(src.select("n_name")).isEmpty)
 
-    src.write.mode("overwrite").orc(s"$tmp/nation_orc")
-    val orc = spark.read.orc(s"$tmp/nation_orc")
-    assert(orc.count() === n)
-    assert(orc.exceptAll(src).isEmpty && src.exceptAll(orc).isEmpty)
+      src.write.mode("overwrite").orc(s"$tmp/nation_orc")
+      val orc = spark.read.orc(s"$tmp/nation_orc")
+      assert(orc.count() === n)
+      assert(orc.exceptAll(src).isEmpty && src.exceptAll(orc).isEmpty)
+    }
   }
 
   test("schema_of_json infers the events props schema for dynamic parsing") {
@@ -82,22 +83,24 @@ class CoverageSpec extends SparkSpec {
   }
 
   test("xml source/sink roundtrip preserves rows (built-in since Spark 4)") {
-    val tmp = Files.createTempDirectory("graft_xml").toString
-    val src = Tables.t(spark, dir, "nation")
-    src.write.mode("overwrite").option("rootTag", "nations")
-      .option("rowTag", "nation").xml(s"$tmp/nation_xml")
-    val re = spark.read.option("rowTag", "nation").xml(s"$tmp/nation_xml")
-    assert(re.count() === src.count())
-    assert(re.select("n_name").exceptAll(src.select("n_name")).isEmpty)
+    withTempDir("graft_xml") { tmp =>
+      val src = Tables.t(spark, dir, "nation")
+      src.write.mode("overwrite").option("rootTag", "nations")
+        .option("rowTag", "nation").xml(s"$tmp/nation_xml")
+      val re = spark.read.option("rowTag", "nation").xml(s"$tmp/nation_xml")
+      assert(re.count() === src.count())
+      assert(re.select("n_name").exceptAll(src.select("n_name")).isEmpty)
+    }
   }
 
   test("text source/sink roundtrip preserves lines") {
-    val tmp = Files.createTempDirectory("graft_text").toString
-    val src = Tables.t(spark, dir, "nation").select(col("n_name").as("value"))
-    src.write.mode("overwrite").text(s"$tmp/nation_txt")
-    val re = spark.read.text(s"$tmp/nation_txt")
-    assert(re.count() === src.count())
-    assert(re.exceptAll(src).isEmpty && src.exceptAll(re).isEmpty)
+    withTempDir("graft_text") { tmp =>
+      val src = Tables.t(spark, dir, "nation").select(col("n_name").as("value"))
+      src.write.mode("overwrite").text(s"$tmp/nation_txt")
+      val re = spark.read.text(s"$tmp/nation_txt")
+      assert(re.count() === src.count())
+      assert(re.exceptAll(src).isEmpty && src.exceptAll(re).isEmpty)
+    }
   }
 
   test("point lookup pushes filters to the parquet scan") {
@@ -115,18 +118,19 @@ class CoverageSpec extends SparkSpec {
     // the 100 TB layout contract: a filter on the partition column must
     // become a PartitionFilter (directory pruning — zero data read for
     // excluded partitions), not a post-scan predicate
-    val tmp = Files.createTempDirectory("graft_part").toString
-    val src = Tables.t(spark, dir, "lineitem")
-    src.write.mode("overwrite").partitionBy("l_returnflag")
-      .parquet(s"$tmp/lineitem_by_flag")
-    val re = spark.read.parquet(s"$tmp/lineitem_by_flag")
-    val filtered = re.where(col("l_returnflag") === "R")
-    val plan = filtered.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters: [") &&
-      plan.replaceAll("(?s).*PartitionFilters: \\[([^\\]]*)\\].*", "$1")
-        .contains("l_returnflag"),
-      s"partition filter not pruned at scan:\n$plan")
-    assert(filtered.count() ===
-      src.where(col("l_returnflag") === "R").count())
+    withTempDir("graft_part") { tmp =>
+      val src = Tables.t(spark, dir, "lineitem")
+      src.write.mode("overwrite").partitionBy("l_returnflag")
+        .parquet(s"$tmp/lineitem_by_flag")
+      val re = spark.read.parquet(s"$tmp/lineitem_by_flag")
+      val filtered = re.where(col("l_returnflag") === "R")
+      val plan = filtered.queryExecution.executedPlan.toString
+      assert(plan.contains("PartitionFilters: [") &&
+        plan.replaceAll("(?s).*PartitionFilters: \\[([^\\]]*)\\].*", "$1")
+          .contains("l_returnflag"),
+        s"partition filter not pruned at scan:\n$plan")
+      assert(filtered.count() ===
+        src.where(col("l_returnflag") === "R").count())
+    }
   }
 }

@@ -20,42 +20,41 @@ import graft.streaming.Streams
   */
 class EventTsLoaderSpec extends SparkSpec {
 
-  private def tmp(): String =
-    Files.createTempDirectory("graft-tsenc").toString
-
   // 2024-01-15 12:00:00 UTC, the fixtures' era
   private val eraMicros = 1705320000000000L
 
   test("LongType ts (legacy nanos fixture) gets the div-1000 shim") {
     import spark.implicits._
-    val dir = tmp()
-    // nanos-as-long is what the legacy TIMESTAMP(NANOS) fixture becomes
-    // under spark.sql.legacy.parquet.nanosAsLong — a plain int64 column
-    // reproduces that loaded shape exactly
-    Seq((1L, eraMicros * 1000L + 999L, 7L, "click", 1.0, "{}"))
-      .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-      .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val out = Tables.t(spark, dir, "events")
-    assert(out.schema("ts").dataType === TimestampType)
-    val ts = out.select("ts").head().getTimestamp(0)
-    // truncation to micros, matching DuckDB's ns→us read
-    assert(ts === Timestamp.valueOf(LocalDateTime.of(2024, 1, 15, 12, 0, 0)))
+    withTempDir("graft-tsenc") { dir =>
+      // nanos-as-long is what the legacy TIMESTAMP(NANOS) fixture becomes
+      // under spark.sql.legacy.parquet.nanosAsLong — a plain int64 column
+      // reproduces that loaded shape exactly
+      Seq((1L, eraMicros * 1000L + 999L, 7L, "click", 1.0, "{}"))
+        .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+        .write.mode("overwrite").parquet(s"$dir/events.parquet")
+      val out = Tables.t(spark, dir, "events")
+      assert(out.schema("ts").dataType === TimestampType)
+      val ts = out.select("ts").head().getTimestamp(0)
+      // truncation to micros, matching DuckDB's ns→us read
+      assert(ts === Timestamp.valueOf(LocalDateTime.of(2024, 1, 15, 12, 0, 0)))
+    }
   }
 
   test("TIMESTAMP_NTZ ts (current timestamp[us] fixture) casts straight through") {
     import spark.implicits._
-    val dir = tmp()
-    val ntz = LocalDateTime.of(2024, 1, 15, 12, 0, 0)
-    Seq((1L, ntz, 7L, "click", 1.0, "{}"))
-      .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-      .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    // written as parquet timestamp[us] isAdjustedToUTC=false → loads NTZ
-    assert(spark.read.parquet(s"$dir/events.parquet")
-      .schema("ts").dataType.typeName === "timestamp_ntz")
-    val out = Tables.t(spark, dir, "events")
-    assert(out.schema("ts").dataType === TimestampType)
-    // session tz is pinned UTC, so the wall clock is preserved exactly
-    assert(out.select("ts").head().getTimestamp(0) === Timestamp.valueOf(ntz))
+    withTempDir("graft-tsenc") { dir =>
+      val ntz = LocalDateTime.of(2024, 1, 15, 12, 0, 0)
+      Seq((1L, ntz, 7L, "click", 1.0, "{}"))
+        .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+        .write.mode("overwrite").parquet(s"$dir/events.parquet")
+      // written as parquet timestamp[us] isAdjustedToUTC=false → loads NTZ
+      assert(spark.read.parquet(s"$dir/events.parquet")
+        .schema("ts").dataType.typeName === "timestamp_ntz")
+      val out = Tables.t(spark, dir, "events")
+      assert(out.schema("ts").dataType === TimestampType)
+      // session tz is pinned UTC, so the wall clock is preserved exactly
+      assert(out.select("ts").head().getTimestamp(0) === Timestamp.valueOf(ntz))
+    }
   }
 
   test("TimestampType ts passes through untouched") {

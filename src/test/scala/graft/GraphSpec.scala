@@ -341,70 +341,6 @@ class GraphSpec extends SparkSpec {
     assert(clean.keySet === Set(1L, 2L, 3L))
   }
 
-  test("graph algorithms release their GraphX caches per call") {
-    // residue law: after collect() and Pinned.free(result), the cached-RDD
-    // set is back to what it was before the call — every scratch pin
-    // (dictionaries, frontiers, GraphX graphs) freed by the entry itself.
-    // Pinned.free does not block, so poll briefly.
-    import spark.implicits._
-    def cached(): Set[Int] = spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
-    def residue(result: => org.apache.spark.sql.DataFrame): Set[Int] = {
-      val before = cached()
-      val out = result
-      out.collect()
-      graft.Pinned.free(out)
-      val deadline = System.nanoTime() + 3000000000L
-      var left = cached() -- before
-      while (left.nonEmpty && System.nanoTime() < deadline) {
-        Thread.sleep(50)
-        left = cached() -- before
-      }
-      left
-    }
-    // calibration: a pin the result does not reach must show up
-    var stray: org.apache.spark.sql.DataFrame = null
-    val calibration = residue {
-      stray = spark.range(8).toDF().localCheckpoint(true)
-      spark.range(1).toDF()
-    }
-    assert(calibration.nonEmpty, "detector blind: a stray pin left no residue")
-    graft.Pinned.free(stray)
-
-    g.nodeTables.values.foreach(_.count()); g.edgeTables.values.foreach(_.count())
-    val pairs = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (8L, 9L))
-    val weighted = pairs.map { case (a, b) => (a, b, 1.0) }.toDF("src", "dst", "weight")
-    val named = pairs.map { case (a, b) => (s"n$a", s"n$b", 1.0) }
-      .toDF("src", "dst", "weight")
-    val ga = graft.graph.GraphAlgos
-    val entries: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
-      "relatedN" -> (() => ga.relatedN(g, "friend", "person:jane", 2)),
-      "hopDistance" -> (() => ga.hopDistance(g, "person:jane", 2)),
-      "connectedComponents" -> (() => ga.connectedComponents(g, Seq("friend"))),
-      "weightedDistance" -> (() => ga.weightedDistance(named, "n1", 3)),
-      "weightedDistanceLong local" -> (() => ga.weightedDistanceLong(weighted, 1L, 3)),
-      "weightedDistanceLong distributed" -> (() =>
-        Regime.atScale(ga.weightedDistanceLong(weighted, 1L, 3))),
-      "connectedComponentsLong local" -> (() => ga.connectedComponentsLong(weighted)),
-      "connectedComponentsLong distributed" -> (() =>
-        Regime.atScale(ga.connectedComponentsLong(weighted))),
-      "pageRankFixedPoint local" -> (() => ga.pageRankFixedPoint(g, iters = 3)),
-      "pageRankFixedPoint distributed" -> (() =>
-        Regime.atScale(ga.pageRankFixedPoint(g, iters = 3))),
-      "triangleCountEdges at scale" -> (() => Regime.atScale(ga.triangleCountEdges(
-        weighted.select(col("src").as("u"), col("dst").as("v"))))),
-      "pageRankFixedPointLong" -> (() => ga.pageRankFixedPointLong(
-        Seq(1L, 2L, 3L, 4L, 8L, 9L).toDF("vid"), weighted, iters = 3)),
-      "triangleCount" -> (() => ga.triangleCount(g, Seq("friend"))),
-      "triangleCountEdges" -> (() => ga.triangleCountEdges(
-        weighted.select(col("src").as("u"), col("dst").as("v")))),
-      "Dedup.clusters" -> (() => graft.dedup.Dedup.clusters(
-        weighted.select(col("src").as("doc_a"), col("dst").as("doc_b")))))
-    entries.foreach { case (name, run) =>
-      val left = residue(run())
-      assert(left.isEmpty, s"$name left cached RDDs $left behind")
-    }
-  }
-
   test("connectedComponents labels by min member id via the collision-free dictionary") {
     val cc = graft.graph.GraphAlgos.connectedComponents(g, Seq("friend", "spouse"))
       .collect().map(r => r.getString(1) -> r.getString(2)).toMap
@@ -480,22 +416,24 @@ class GraphSpec extends SparkSpec {
       .addRelated("knows", "p1", "p2")
       .addRelated("tagged", "p1", "t1")
       .addRelated("tagged", "p2", "t1")
-    val dir = java.nio.file.Files.createTempDirectory("graft-selfdesc").toString
-    g2.save(dir)
-    // NO schema object passed — it must come back from the manifest
-    val back = PropertyGraph.load(spark, dir)
-    assert(back.schema.nodeDefs.sortBy(_.label) === s.nodeDefs.sortBy(_.label),
-      "node defs (attrs, types, requiredness, defaults) must roundtrip")
-    assert(back.schema.relationDefs.sortBy(_.name) === s.relationDefs.sortBy(_.name),
-      "relation defs (cardinalities, symmetry) must roundtrip")
-    // data + default semantics survive: Ann's age reads the manifest default
-    assert(back.getAttribute("Person", "p1", "age") === 7L)
-    assert(back.from("Person").related("tagged").ids.count() === 2L)
-    // the demo graph roundtrips end-to-end the same way
-    val demoDir = java.nio.file.Files.createTempDirectory("graft-selfdesc-demo").toString
-    g.save(demoDir)
-    assert(names(DemoGraph.missingTools(PropertyGraph.load(spark, demoDir), "Bob"))
-      === Seq("Poker Chips"))
+    withTempDir("graft-selfdesc") { dir =>
+      g2.save(dir)
+      // NO schema object passed — it must come back from the manifest
+      val back = PropertyGraph.load(spark, dir)
+      assert(back.schema.nodeDefs.sortBy(_.label) === s.nodeDefs.sortBy(_.label),
+        "node defs (attrs, types, requiredness, defaults) must roundtrip")
+      assert(back.schema.relationDefs.sortBy(_.name) === s.relationDefs.sortBy(_.name),
+        "relation defs (cardinalities, symmetry) must roundtrip")
+      // data + default semantics survive: Ann's age reads the manifest default
+      assert(back.getAttribute("Person", "p1", "age") === 7L)
+      assert(back.from("Person").related("tagged").ids.count() === 2L)
+      // the demo graph roundtrips end-to-end the same way
+      withTempDir("graft-selfdesc-demo") { demoDir =>
+        g.save(demoDir)
+        assert(names(DemoGraph.missingTools(PropertyGraph.load(spark, demoDir), "Bob"))
+          === Seq("Poker Chips"))
+      }
+    }
   }
 
   test("weightedDistance relaxes multi-edge paths and honors the superstep bound") {
@@ -575,45 +513,46 @@ class GraphSpec extends SparkSpec {
   }
 
   test("save clusters edges by src; bucketed tables self-join without shuffle") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-bucketed").toString
-    g.save(dir, edgeBuckets = 2)
-    val reloaded = PropertyGraph.load(spark, DemoGraph.schema, dir)
-    assert(reloaded.edges("possession").count() === g.edges("possession").count())
-    assert(names(DemoGraph.missingTools(reloaded, "Bob")) === Seq("Poker Chips"))
+    withTempDir("graft-bucketed") { dir =>
+      g.save(dir, edgeBuckets = 2)
+      val reloaded = PropertyGraph.load(spark, DemoGraph.schema, dir)
+      assert(reloaded.edges("possession").count() === g.edges("possession").count())
+      assert(names(DemoGraph.missingTools(reloaded, "Bob")) === Seq("Poker Chips"))
 
-    g.saveAsBucketedTables("graftspec", buckets = 4)
-    try {
-      val e = spark.table("graftspec_edges_possession")
-      assert(e.count() === g.edges("possession").count())
-      // co-located join: both sides share the bucket layout on src, so the
-      // equi-join plans with no shuffle exchange — the 100 TB traversal path
-      val selfJoin = e.as("a").join(e.as("b"), "src")
-      val plan = selfJoin.queryExecution.executedPlan.toString
-      assert(!plan.contains("Exchange hashpartitioning"),
-        s"bucketed self-join should not shuffle:\n$plan")
-      // the catalog round-trip preserves full graph semantics — loaded
-      // SELF-DESCRIBINGLY from the <prefix>_schema manifest table
-      val fromTables = PropertyGraph.loadFromTables(spark, "graftspec")
-      assert(fromTables.schema.relationDefs.sortBy(_.name)
-        === DemoGraph.schema.relationDefs.sortBy(_.name))
-      assert(names(DemoGraph.missingTools(fromTables, "Bob")) === Seq("Poker Chips"))
-      // the g12 gate-query shape: a traversal hop over the reloaded graph
-      // joins edge.src (bucketed) to node.id (bucketed, same count) — the
-      // STORED sides must not re-shuffle; only small post-join exchanges
-      // (the aggregation) are allowed, so count exchanges strictly below
-      // the unbucketed plan's rather than asserting zero
-      val hop = fromTables.from("Person").related("possession").df
-      val hopPlan = hop.queryExecution.executedPlan.toString
-      val unbucketed = g.from("Person").related("possession").df
-        .queryExecution.executedPlan.toString
-      def exchanges(p: String) = "Exchange hashpartitioning".r.findAllIn(p).size
-      assert(exchanges(hopPlan) < exchanges(unbucketed) ||
-        (exchanges(hopPlan) == 0 && exchanges(unbucketed) == 0),
-        s"bucketed traversal hop should drop stored-side exchanges:\n$hopPlan")
-    } finally {
-      DemoGraph.schema.nodeDefs.foreach(d => spark.sql(s"DROP TABLE IF EXISTS graftspec_nodes_${d.label}"))
-      DemoGraph.schema.relationDefs.foreach(r => spark.sql(s"DROP TABLE IF EXISTS graftspec_edges_${r.name}"))
-      spark.sql("DROP TABLE IF EXISTS graftspec_schema")
+      g.saveAsBucketedTables("graftspec", buckets = 4)
+      try {
+        val e = spark.table("graftspec_edges_possession")
+        assert(e.count() === g.edges("possession").count())
+        // co-located join: both sides share the bucket layout on src, so the
+        // equi-join plans with no shuffle exchange — the 100 TB traversal path
+        val selfJoin = e.as("a").join(e.as("b"), "src")
+        val plan = selfJoin.queryExecution.executedPlan.toString
+        assert(!plan.contains("Exchange hashpartitioning"),
+          s"bucketed self-join should not shuffle:\n$plan")
+        // the catalog round-trip preserves full graph semantics — loaded
+        // SELF-DESCRIBINGLY from the <prefix>_schema manifest table
+        val fromTables = PropertyGraph.loadFromTables(spark, "graftspec")
+        assert(fromTables.schema.relationDefs.sortBy(_.name)
+          === DemoGraph.schema.relationDefs.sortBy(_.name))
+        assert(names(DemoGraph.missingTools(fromTables, "Bob")) === Seq("Poker Chips"))
+        // the g12 gate-query shape: a traversal hop over the reloaded graph
+        // joins edge.src (bucketed) to node.id (bucketed, same count) — the
+        // STORED sides must not re-shuffle; only small post-join exchanges
+        // (the aggregation) are allowed, so count exchanges strictly below
+        // the unbucketed plan's rather than asserting zero
+        val hop = fromTables.from("Person").related("possession").df
+        val hopPlan = hop.queryExecution.executedPlan.toString
+        val unbucketed = g.from("Person").related("possession").df
+          .queryExecution.executedPlan.toString
+        def exchanges(p: String) = "Exchange hashpartitioning".r.findAllIn(p).size
+        assert(exchanges(hopPlan) < exchanges(unbucketed) ||
+          (exchanges(hopPlan) == 0 && exchanges(unbucketed) == 0),
+          s"bucketed traversal hop should drop stored-side exchanges:\n$hopPlan")
+      } finally {
+        DemoGraph.schema.nodeDefs.foreach(d => spark.sql(s"DROP TABLE IF EXISTS graftspec_nodes_${d.label}"))
+        DemoGraph.schema.relationDefs.foreach(r => spark.sql(s"DROP TABLE IF EXISTS graftspec_edges_${r.name}"))
+        spark.sql("DROP TABLE IF EXISTS graftspec_schema")
+      }
     }
   }
 }

@@ -273,58 +273,59 @@ class LlmOpsSpec extends SparkSpec {
   test("stored PQ codes (v16): byte-only coarse scan, parity, tag safety") {
     val m = 8; val ksub = 16
     val codebook = Ann.pqSeedCodebook(embs, "vec_id", "embedding", m, ksub)
-    val dir = java.nio.file.Files.createTempDirectory("graft-pq").toString
-    Ann.withPqCodes(embs, "embedding", codebook, m, ksub)
-      .write.mode("overwrite").parquet(s"$dir/corpus")
-    val stored = spark.read.parquet(s"$dir/corpus")
-    val queries = embs.where(col("vec_id") < 10)
+    withTempDir("graft-pq") { dir =>
+      Ann.withPqCodes(embs, "embedding", codebook, m, ksub)
+        .write.mode("overwrite").parquet(s"$dir/corpus")
+      val stored = spark.read.parquet(s"$dir/corpus")
+      val queries = embs.where(col("vec_id") < 10)
 
-    def key(df: org.apache.spark.sql.DataFrame) = df
-      .select("query_id", "rank", "corpus_id").collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
+      def key(df: org.apache.spark.sql.DataFrame) = df
+        .select("query_id", "rank", "corpus_id").collect()
+        .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
 
-    // parity: the persisted byte codes reproduce the inline array-codes
-    // retrieval exactly (same codebook, same summation order)
-    val storedRes = Ann.pqTopKStored(stored, queries, "vec_id", "embedding",
-      "pq_codes", codebook, k = 5, m = m, ksub = ksub,
-      nCandidates = 50, rankRoundDp = 5)
-    val inlineRes = Ann.pqTopK(embs, queries, "vec_id", "embedding", k = 5,
-      m = m, ksub = ksub, nCandidates = 50, rankRoundDp = 5)
-    assert(key(storedRes) === key(inlineRes),
-      "persisted PQ codes must reproduce the inline computation exactly")
+      // parity: the persisted byte codes reproduce the inline array-codes
+      // retrieval exactly (same codebook, same summation order)
+      val storedRes = Ann.pqTopKStored(stored, queries, "vec_id", "embedding",
+        "pq_codes", codebook, k = 5, m = m, ksub = ksub,
+        nCandidates = 50, rankRoundDp = 5)
+      val inlineRes = Ann.pqTopK(embs, queries, "vec_id", "embedding", k = 5,
+        m = m, ksub = ksub, nCandidates = 50, rankRoundDp = 5)
+      assert(key(storedRes) === key(inlineRes),
+        "persisted PQ codes must reproduce the inline computation exactly")
 
-    // plan pin: the coarse scan of the stored layout reads the code BYTES
-    // and never the vector column; the rerank scan legitimately reads both
-    val scans = storedRes.queryExecution.executedPlan.toString
-      .split("FileScan parquet").toSeq.drop(1)
-      .filter(_.contains("graft-pq"))
-    assert(scans.size >= 2,
-      s"expected coarse + rerank scans of the layout, got ${scans.size}")
-    val coarseScans = scans.filter(
-      "ReadSchema: struct<[^>]*pq_codes".r.findFirstIn(_).isDefined)
-    assert(coarseScans.nonEmpty, "no layout scan reads the pq_codes column")
-    coarseScans.foreach { s =>
-      val schema = "ReadSchema: struct<[^>]*>".r.findFirstIn(s).get
-      assert(!schema.contains("embedding"),
-        s"coarse scan reads full vectors: $schema")
+      // plan pin: the coarse scan of the stored layout reads the code BYTES
+      // and never the vector column; the rerank scan legitimately reads both
+      val scans = storedRes.queryExecution.executedPlan.toString
+        .split("FileScan parquet").toSeq.drop(1)
+        .filter(_.contains("graft-pq"))
+      assert(scans.size >= 2,
+        s"expected coarse + rerank scans of the layout, got ${scans.size}")
+      val coarseScans = scans.filter(
+        "ReadSchema: struct<[^>]*pq_codes".r.findFirstIn(_).isDefined)
+      assert(coarseScans.nonEmpty, "no layout scan reads the pq_codes column")
+      coarseScans.foreach { s =>
+        val schema = "ReadSchema: struct<[^>]*>".r.findFirstIn(s).get
+        assert(!schema.contains("embedding"),
+          s"coarse scan reads full vectors: $schema")
+      }
+
+      // tag safety: an untagged BINARY impostor is refused, and codes from a
+      // DIFFERENT geometry are refused even though they carry the tag
+      val impostor = embs.withColumn("pq_codes", md5(col("vec_id").cast("string"))
+        .cast("binary"))
+      val e1 = intercept[IllegalArgumentException] {
+        Ann.pqTopKStored(impostor, queries, "vec_id", "embedding", "pq_codes",
+          codebook, k = 5, m = m, ksub = ksub)
+      }
+      assert(e1.getMessage.contains("provenance"))
+      val wrongGeom = Ann.withPqCodes(embs, "embedding",
+        Ann.pqSeedCodebook(embs, "vec_id", "embedding", 4, 16), 4, 16)
+      val e2 = intercept[IllegalArgumentException] {
+        Ann.pqTopKStored(wrongGeom, queries, "vec_id", "embedding", "pq_codes",
+          codebook, k = 5, m = m, ksub = ksub)
+      }
+      assert(e2.getMessage.contains("geometry"))
     }
-
-    // tag safety: an untagged BINARY impostor is refused, and codes from a
-    // DIFFERENT geometry are refused even though they carry the tag
-    val impostor = embs.withColumn("pq_codes", md5(col("vec_id").cast("string"))
-      .cast("binary"))
-    val e1 = intercept[IllegalArgumentException] {
-      Ann.pqTopKStored(impostor, queries, "vec_id", "embedding", "pq_codes",
-        codebook, k = 5, m = m, ksub = ksub)
-    }
-    assert(e1.getMessage.contains("provenance"))
-    val wrongGeom = Ann.withPqCodes(embs, "embedding",
-      Ann.pqSeedCodebook(embs, "vec_id", "embedding", 4, 16), 4, 16)
-    val e2 = intercept[IllegalArgumentException] {
-      Ann.pqTopKStored(wrongGeom, queries, "vec_id", "embedding", "pq_codes",
-        codebook, k = 5, m = m, ksub = ksub)
-    }
-    assert(e2.getMessage.contains("geometry"))
   }
 
   test("staged trained IVF-PQ (v19): staging idempotent, codebook roundtrip, parity") {
@@ -375,50 +376,51 @@ class LlmOpsSpec extends SparkSpec {
     def layout = Ann.withPqCodes(
       Ann.withIvfQuantizedLayout(embs, "vec_id", "embedding", nCentroids = 8),
       "embedding", codebook, m, ksub)
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivfpq").toString
-    layout.write.partitionBy("cluster_id").mode("overwrite").parquet(s"$dir/corpus")
-    // partitionBy strips field metadata on write for the moved column only;
-    // pq_codes is a data column, so its provenance tag survives the footer
-    val stored = spark.read.parquet(s"$dir/corpus")
-    val cent = Ann.seedCentroids(embs, "vec_id", "embedding", nCentroids = 8)
-    val queries = embs.where(col("vec_id") < 5)
+    withTempDir("graft-ivfpq") { dir =>
+      layout.write.partitionBy("cluster_id").mode("overwrite").parquet(s"$dir/corpus")
+      // partitionBy strips field metadata on write for the moved column only;
+      // pq_codes is a data column, so its provenance tag survives the footer
+      val stored = spark.read.parquet(s"$dir/corpus")
+      val cent = Ann.seedCentroids(embs, "vec_id", "embedding", nCentroids = 8)
+      val queries = embs.where(col("vec_id") < 5)
 
-    def key(df: org.apache.spark.sql.DataFrame) = df
-      .select("query_id", "rank", "corpus_id").collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
+      def key(df: org.apache.spark.sql.DataFrame) = df
+        .select("query_id", "rank", "corpus_id").collect()
+        .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
 
-    val storedRes = Ann.ivfPqTopK(stored, cent, queries, "vec_id", "embedding",
-      "pq_codes", codebook, k = 5, m = m, ksub = ksub, nProbe = 2,
-      nCandidates = 50)
-    val inlineRes = Ann.ivfPqTopK(layout, cent, queries, "vec_id", "embedding",
-      "pq_codes", codebook, k = 5, m = m, ksub = ksub, nProbe = 2,
-      nCandidates = 50)
-    assert(key(storedRes) === key(inlineRes),
-      "persisted IVF-PQ layout must reproduce the inline computation exactly")
+      val storedRes = Ann.ivfPqTopK(stored, cent, queries, "vec_id", "embedding",
+        "pq_codes", codebook, k = 5, m = m, ksub = ksub, nProbe = 2,
+        nCandidates = 50)
+      val inlineRes = Ann.ivfPqTopK(layout, cent, queries, "vec_id", "embedding",
+        "pq_codes", codebook, k = 5, m = m, ksub = ksub, nProbe = 2,
+        nCandidates = 50)
+      assert(key(storedRes) === key(inlineRes),
+        "persisted IVF-PQ layout must reproduce the inline computation exactly")
 
-    val exact = key(Ann.bruteForceTopK(embs, queries, "vec_id", "embedding", k = 5))
-    val hits = key(storedRes).count { case (q, _, c) =>
-      exact.exists(e => e._1 == q && e._3 == c) }
-    assert(hits.toDouble / exact.size > 0.4, s"recall@5: $hits/${exact.size}")
+      val exact = key(Ann.bruteForceTopK(embs, queries, "vec_id", "embedding", k = 5))
+      val hits = key(storedRes).count { case (q, _, c) =>
+        exact.exists(e => e._1 == q && e._3 == c) }
+      assert(hits.toDouble / exact.size > 0.4, s"recall@5: $hits/${exact.size}")
 
-    // plan pins on the layout's scans: every one prunes partitions, and
-    // the coarse scan (reading pq_codes) never reads the vector column
-    val scans = storedRes.queryExecution.executedPlan.toString
-      .split("FileScan parquet").toSeq.drop(1)
-      .filter(_.contains("graft-ivfpq"))
-    assert(scans.size >= 2,
-      s"expected coarse + rerank scans of the layout, got ${scans.size}")
-    scans.foreach { s =>
-      assert("PartitionFilters: \\[[^\\]]*cluster_id".r.findFirstIn(s).isDefined,
-        s"layout scan did not prune partitions:\n$s")
-    }
-    val coarseScans = scans.filter(
-      "ReadSchema: struct<[^>]*pq_codes".r.findFirstIn(_).isDefined)
-    assert(coarseScans.nonEmpty, "no layout scan reads the pq_codes column")
-    coarseScans.foreach { s =>
-      val schema = "ReadSchema: struct<[^>]*>".r.findFirstIn(s).get
-      assert(!schema.contains("embedding"),
-        s"coarse scan reads full vectors: $schema")
+      // plan pins on the layout's scans: every one prunes partitions, and
+      // the coarse scan (reading pq_codes) never reads the vector column
+      val scans = storedRes.queryExecution.executedPlan.toString
+        .split("FileScan parquet").toSeq.drop(1)
+        .filter(_.contains("graft-ivfpq"))
+      assert(scans.size >= 2,
+        s"expected coarse + rerank scans of the layout, got ${scans.size}")
+      scans.foreach { s =>
+        assert("PartitionFilters: \\[[^\\]]*cluster_id".r.findFirstIn(s).isDefined,
+          s"layout scan did not prune partitions:\n$s")
+      }
+      val coarseScans = scans.filter(
+        "ReadSchema: struct<[^>]*pq_codes".r.findFirstIn(_).isDefined)
+      assert(coarseScans.nonEmpty, "no layout scan reads the pq_codes column")
+      coarseScans.foreach { s =>
+        val schema = "ReadSchema: struct<[^>]*>".r.findFirstIn(s).get
+        assert(!schema.contains("embedding"),
+          s"coarse scan reads full vectors: $schema")
+      }
     }
   }
 
@@ -1027,46 +1029,47 @@ class LlmOpsSpec extends SparkSpec {
   }
 
   test("readMediaDir ingests a file directory as the canonical media table") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-media-dir")
-    def write(name: String, bytes: Array[Byte]): Unit =
-      java.nio.file.Files.write(dir.resolve(name), bytes)
-    // one real file per modality: PNG via the JVM encoder, WAV via the
-    // JVM audio writer, MP4 from the header fixture, plus a stray .txt
-    val img = new java.awt.image.BufferedImage(17, 9,
-      java.awt.image.BufferedImage.TYPE_INT_RGB)
-    val imgBos = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(img, "png", imgBos)
-    write("photo.png", imgBos.toByteArray)
-    val fmt = new javax.sound.sampled.AudioFormat(8000f, 16, 1, true, false)
-    val ais = new javax.sound.sampled.AudioInputStream(
-      new java.io.ByteArrayInputStream(new Array[Byte](8000 * 2)), fmt, 8000L)
-    val wavBos = new java.io.ByteArrayOutputStream()
-    javax.sound.sampled.AudioSystem.write(ais,
-      javax.sound.sampled.AudioFileFormat.Type.WAVE, wavBos)
-    write("clip.wav", wavBos.toByteArray)
-    write("movie.mp4", mp4Fixture)
-    write("notes.txt", "not media at all".getBytes("UTF-8"))
+    withTempDir("graft-media-dir") { dir =>
+      def write(name: String, bytes: Array[Byte]): Unit =
+        java.nio.file.Files.write(java.nio.file.Paths.get(dir, name), bytes)
+      // one real file per modality: PNG via the JVM encoder, WAV via the
+      // JVM audio writer, MP4 from the header fixture, plus a stray .txt
+      val img = new java.awt.image.BufferedImage(17, 9,
+        java.awt.image.BufferedImage.TYPE_INT_RGB)
+      val imgBos = new java.io.ByteArrayOutputStream()
+      javax.imageio.ImageIO.write(img, "png", imgBos)
+      write("photo.png", imgBos.toByteArray)
+      val fmt = new javax.sound.sampled.AudioFormat(8000f, 16, 1, true, false)
+      val ais = new javax.sound.sampled.AudioInputStream(
+        new java.io.ByteArrayInputStream(new Array[Byte](8000 * 2)), fmt, 8000L)
+      val wavBos = new java.io.ByteArrayOutputStream()
+      javax.sound.sampled.AudioSystem.write(ais,
+        javax.sound.sampled.AudioFileFormat.Type.WAVE, wavBos)
+      write("clip.wav", wavBos.toByteArray)
+      write("movie.mp4", mp4Fixture)
+      write("notes.txt", "not media at all".getBytes("UTF-8"))
 
-    val media = Multimodal.readMediaDir(spark, dir.toString)
-    assert(media.schema.simpleString === Multimodal.mediaSchema.simpleString)
-    // simpleString drops nullability — the canonical non-null payload
-    // contract must hold for real (binaryFile's content is nullable)
-    assert(!media.schema("payload").nullable, "payload must be non-nullable")
-    val byMime = Multimodal.extractFeatures(media).collect()
-      .map(f => f.mime -> f).toMap
-    assert(byMime.keySet === Set("image/png", "audio/wav", "video/mp4",
-      "application/octet-stream"))
-    assert((byMime("image/png").width, byMime("image/png").height) === ((17, 9)))
-    assert((byMime("audio/wav").sample_rate, byMime("audio/wav").channels,
-      byMime("audio/wav").duration_ms) === ((8000, 1, 1000L)))
-    assert((byMime("video/mp4").width, byMime("video/mp4").duration_ms,
-      byMime("video/mp4").n_tracks) === ((320, 2000L, 2)))
-    // ids are path-stable: re-reading yields the same media_id per file
-    val again = Multimodal.readMediaDir(spark, dir.toString)
-      .select("media_id").collect().map(_.getLong(0)).toSet
-    assert(again === media.select("media_id").collect().map(_.getLong(0)).toSet)
-    // the glob filter prunes at the source (only the wav survives)
-    assert(Multimodal.readMediaDir(spark, dir.toString, glob = "*.wav").count() === 1L)
+      val media = Multimodal.readMediaDir(spark, dir)
+      assert(media.schema.simpleString === Multimodal.mediaSchema.simpleString)
+      // simpleString drops nullability — the canonical non-null payload
+      // contract must hold for real (binaryFile's content is nullable)
+      assert(!media.schema("payload").nullable, "payload must be non-nullable")
+      val byMime = Multimodal.extractFeatures(media).collect()
+        .map(f => f.mime -> f).toMap
+      assert(byMime.keySet === Set("image/png", "audio/wav", "video/mp4",
+        "application/octet-stream"))
+      assert((byMime("image/png").width, byMime("image/png").height) === ((17, 9)))
+      assert((byMime("audio/wav").sample_rate, byMime("audio/wav").channels,
+        byMime("audio/wav").duration_ms) === ((8000, 1, 1000L)))
+      assert((byMime("video/mp4").width, byMime("video/mp4").duration_ms,
+        byMime("video/mp4").n_tracks) === ((320, 2000L, 2)))
+      // ids are path-stable: re-reading yields the same media_id per file
+      val again = Multimodal.readMediaDir(spark, dir)
+        .select("media_id").collect().map(_.getLong(0)).toSet
+      assert(again === media.select("media_id").collect().map(_.getLong(0)).toSet)
+      // the glob filter prunes at the source (only the wav survives)
+      assert(Multimodal.readMediaDir(spark, dir, glob = "*.wav").count() === 1L)
+    }
   }
 
   test("media decode never throws: fuzzed, magic-dressed, truncated payloads") {
@@ -1166,18 +1169,19 @@ class LlmOpsSpec extends SparkSpec {
 
     // the production entry point: PERSISTED corpus postings (the corpus
     // text is never touched again) must produce identical verdicts
-    val postingsDir = java.nio.file.Files.createTempDirectory("graft-postings")
-      .toString + "/postings"
-    Dedup.jaccardPostings(all.where(col("doc_id") < split), "doc_id", "text")
-      .write.parquet(postingsDir)
-    val fromStored = Dedup.incrementalJaccardFromPostings(
-      spark.read.parquet(postingsDir), all.where(col("doc_id") >= split),
-      "doc_id", "text", threshold = 0.1, maxDf = 100)
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getLong(0), r.getLong(1), Option(r.get(2)), r.getBoolean(3)))
-      .toSet
-    assert(rows(fromStored) === rows(inc),
-      "stored-postings path must match the from-text path")
+    withTempDir("graft-postings") { tmp =>
+      val postingsDir = s"$tmp/postings"
+      Dedup.jaccardPostings(all.where(col("doc_id") < split), "doc_id", "text")
+        .write.parquet(postingsDir)
+      val fromStored = Dedup.incrementalJaccardFromPostings(
+        spark.read.parquet(postingsDir), all.where(col("doc_id") >= split),
+        "doc_id", "text", threshold = 0.1, maxDf = 100)
+      def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
+        .map(r => (r.getLong(0), r.getLong(1), Option(r.get(2)), r.getBoolean(3)))
+        .toSet
+      assert(rows(fromStored) === rows(inc),
+        "stored-postings path must match the from-text path")
+    }
   }
 
   test("staged incremental dedup: exact equivalence, pruned plan, loud version check") {
@@ -1213,47 +1217,49 @@ class LlmOpsSpec extends SparkSpec {
     // the sf fixture, through a real write/read roundtrip of the staged
     // tables — the full equivalence law at gate scale
     val split = 250L
-    val stagedDir = java.nio.file.Files.createTempDirectory("graft-staged").toString
-    Dedup.stageJaccardPostings(docs.where(col("doc_id") < split),
-      "doc_id", "text", shingleN = 3, maxDf = 100).write(stagedDir)
-    val stored = Dedup.StagedPostings.read(spark, stagedDir)
-    val stagedOut = Dedup.incrementalJaccardStaged(stored,
-      docs.where(col("doc_id") >= split), "doc_id", "text", threshold = 0.1)
-    val unstagedOut = Dedup.incrementalJaccardFromPostings(
-      Dedup.jaccardPostings(docs.where(col("doc_id") < split), "doc_id", "text"),
-      docs.where(col("doc_id") >= split), "doc_id", "text",
-      threshold = 0.1, shingleN = 3, maxDf = 100)
-    assert(rows(stagedOut) === rows(unstagedOut),
-      "roundtripped staged verdicts must equal the unstaged path's")
-
-    // plan pin for the scale claim: the stored corpus tables reach the
-    // nightly query through a broadcast LEFT SEMI prune with NO shuffle
-    // and NO aggregation on either side of that join — corpus-sized work
-    // stays at ingest. (The batch shingle keys are pre-materialized here
-    // so the only Exchange in the pruning plan would have to come from
-    // the corpus side.)
-    val keysDir = java.nio.file.Files.createTempDirectory("graft-keys").toString
-    Dedup.jaccardPostings(docs.where(col("doc_id") >= split), "doc_id", "text")
-      .select("shingle").distinct().write.mode("overwrite").parquet(keysDir)
-    val prunePlan = Dedup.pruneToBatch(stored.postings,
-      spark.read.parquet(keysDir)).queryExecution.executedPlan.toString
-    assert(prunePlan.contains("BroadcastHashJoin") && prunePlan.contains("LeftSemi"),
-      s"corpus prune must be a broadcast semi join:\n$prunePlan")
-    assert(!prunePlan.contains("Exchange hashpartitioning"),
-      s"corpus prune must not shuffle the stored postings:\n$prunePlan")
-    assert(!prunePlan.contains("HashAggregate") && !prunePlan.contains("Window"),
-      s"corpus prune must not aggregate the stored postings:\n$prunePlan")
-
-    // a tokenizer-version mismatch fails loudly instead of serving
-    // near-zero Jaccards
-    val doctored = stored.copy(meta =
-      Seq((3, 100, Dedup.TokenizerVersion + 1))
-        .toDF("shingle_n", "max_df", "tokenizer_version"))
-    val err = intercept[IllegalArgumentException] {
-      Dedup.incrementalJaccardStaged(doctored,
+    withTempDir("graft-staged") { stagedDir =>
+      Dedup.stageJaccardPostings(docs.where(col("doc_id") < split),
+        "doc_id", "text", shingleN = 3, maxDf = 100).write(stagedDir)
+      val stored = Dedup.StagedPostings.read(spark, stagedDir)
+      val stagedOut = Dedup.incrementalJaccardStaged(stored,
         docs.where(col("doc_id") >= split), "doc_id", "text", threshold = 0.1)
+      val unstagedOut = Dedup.incrementalJaccardFromPostings(
+        Dedup.jaccardPostings(docs.where(col("doc_id") < split), "doc_id", "text"),
+        docs.where(col("doc_id") >= split), "doc_id", "text",
+        threshold = 0.1, shingleN = 3, maxDf = 100)
+      assert(rows(stagedOut) === rows(unstagedOut),
+        "roundtripped staged verdicts must equal the unstaged path's")
+
+      // plan pin for the scale claim: the stored corpus tables reach the
+      // nightly query through a broadcast LEFT SEMI prune with NO shuffle
+      // and NO aggregation on either side of that join — corpus-sized work
+      // stays at ingest. (The batch shingle keys are pre-materialized here
+      // so the only Exchange in the pruning plan would have to come from
+      // the corpus side.)
+      withTempDir("graft-keys") { keysDir =>
+        Dedup.jaccardPostings(docs.where(col("doc_id") >= split), "doc_id", "text")
+          .select("shingle").distinct().write.mode("overwrite").parquet(keysDir)
+        val prunePlan = Dedup.pruneToBatch(stored.postings,
+          spark.read.parquet(keysDir)).queryExecution.executedPlan.toString
+        assert(prunePlan.contains("BroadcastHashJoin") && prunePlan.contains("LeftSemi"),
+          s"corpus prune must be a broadcast semi join:\n$prunePlan")
+        assert(!prunePlan.contains("Exchange hashpartitioning"),
+          s"corpus prune must not shuffle the stored postings:\n$prunePlan")
+        assert(!prunePlan.contains("HashAggregate") && !prunePlan.contains("Window"),
+          s"corpus prune must not aggregate the stored postings:\n$prunePlan")
+
+        // a tokenizer-version mismatch fails loudly instead of serving
+        // near-zero Jaccards
+        val doctored = stored.copy(meta =
+          Seq((3, 100, Dedup.TokenizerVersion + 1))
+            .toDF("shingle_n", "max_df", "tokenizer_version"))
+        val err = intercept[IllegalArgumentException] {
+          Dedup.incrementalJaccardStaged(doctored,
+            docs.where(col("doc_id") >= split), "doc_id", "text", threshold = 0.1)
+        }
+        assert(err.getMessage.contains("tokenizer"), err.getMessage)
+      }
     }
-    assert(err.getMessage.contains("tokenizer"), err.getMessage)
   }
 
   test("bucketed staged postings: identical verdicts, pruned scan skips row groups") {
@@ -1268,71 +1274,71 @@ class LlmOpsSpec extends SparkSpec {
     val split = 250L
     val staged = Dedup.stageJaccardPostings(docs.where(col("doc_id") < split),
       "doc_id", "text", shingleN = 3, maxDf = 100)
-    val tableDir = java.nio.file.Files
-      .createTempDirectory("graft-bucketed-staged").toString
-    Seq("postings", "shingle_df", "meta")
-      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS graft_staged_spec_$t"))
-    staged.writeBucketed("graft_staged_spec", nBuckets = 4,
-      pathPrefix = Some(tableDir))
-    val fromTable = Dedup.StagedPostings.readTable(spark, "graft_staged_spec")
-    val batch = docs.where(col("doc_id") >= split)
-    assert(
-      rows(Dedup.incrementalJaccardStaged(fromTable, batch, "doc_id", "text", 0.1))
-        === rows(Dedup.incrementalJaccardStaged(staged, batch, "doc_id", "text", 0.1)),
-      "bucketed-table verdicts must equal the parquet-dir store's")
+    withTempDir("graft-bucketed-staged") { tableDir =>
+      Seq("postings", "shingle_df", "meta")
+        .foreach(t => spark.sql(s"DROP TABLE IF EXISTS graft_staged_spec_$t"))
+      staged.writeBucketed("graft_staged_spec", nBuckets = 4,
+        pathPrefix = Some(tableDir))
+      val fromTable = Dedup.StagedPostings.readTable(spark, "graft_staged_spec")
+      val batch = docs.where(col("doc_id") >= split)
+      assert(
+        rows(Dedup.incrementalJaccardStaged(fromTable, batch, "doc_id", "text", 0.1))
+          === rows(Dedup.incrementalJaccardStaged(staged, batch, "doc_id", "text", 0.1)),
+        "bucketed-table verdicts must equal the parquet-dir store's")
 
-    // 2) the scale claim on real scan metrics: a shingle-SORTED store has
-    // tight per-row-group min/max, so the pruned scan's pushed range
-    // filter skips groups the batch cannot touch. Engineered store:
-    // per-letter shingle ranges, tiny row groups (parquet.block.size),
-    // batch confined to one letter.
-    val corpus = ('a' to 'z').map { c =>
-      ((c - 'a').toLong, (1 to 40).map(i => s"${c}w$i").mkString(" "))
-    }.toDF("doc_id", "text")
-    val narrow = Seq((100L, (1 to 40).map(i => s"mw$i").mkString(" ")))
-      .toDF("doc_id", "text")
-    Seq("postings", "shingle_df", "meta")
-      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS graft_skip_spec_$t"))
-    Dedup.stageJaccardPostings(corpus, "doc_id", "text", shingleN = 3)
-      .writeBucketed("graft_skip_spec", nBuckets = 1,
-        pathPrefix = Some(s"$tableDir/skip"),
-        writerOptions = Map("parquet.block.size" -> "2048"))
-    val store = spark.table("graft_skip_spec_postings")
-    val total = store.count()
-    val batchKeys = Dedup.jaccardPostings(narrow, "doc_id", "text")
-      .select("shingle").distinct()
-    val pruned = Dedup.pruneToBatch(store, batchKeys)
-    pruned.collect()
-    val root = pruned.queryExecution.executedPlan match {
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-        a.executedPlan
-      case p => p
-    }
-    // the range filter must reach the parquet scan as a pushed filter
-    val planStr = root.toString
-    assert(
-      "PushedFilters: \\[[^\\]]*GreaterThanOrEqual\\(shingle".r
-        .findFirstIn(planStr).isDefined,
-      s"batch range was not pushed to the stored scan:\n$planStr")
-    // and actually skip: the scan must surface a fraction of the store
-    // (rows of surviving row groups), not the whole table post-filtered.
-    // (AQE wraps finished stages in QueryStageExec LEAVES — plain
-    // collect() never descends into them, so walk explicitly.)
-    def scans(p: org.apache.spark.sql.execution.SparkPlan)
-        : Seq[org.apache.spark.sql.execution.FileSourceScanExec] = p match {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec => Seq(f)
-      case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-        scans(q.plan)
-      case r: org.apache.spark.sql.execution.exchange.ReusedExchangeExec =>
-        scans(r.child)
-      case other => other.children.flatMap(scans)
-    }
-    val scanned = scans(root).map(_.metrics("numOutputRows").value).sum
-    assert(scanned > 0 && scanned < total / 4,
-      s"pruned scan read $scanned of $total rows — row groups not skipped")
-    (Seq("postings", "shingle_df", "meta")).foreach { t =>
-      spark.sql(s"DROP TABLE IF EXISTS graft_staged_spec_$t")
-      spark.sql(s"DROP TABLE IF EXISTS graft_skip_spec_$t")
+      // 2) the scale claim on real scan metrics: a shingle-SORTED store has
+      // tight per-row-group min/max, so the pruned scan's pushed range
+      // filter skips groups the batch cannot touch. Engineered store:
+      // per-letter shingle ranges, tiny row groups (parquet.block.size),
+      // batch confined to one letter.
+      val corpus = ('a' to 'z').map { c =>
+        ((c - 'a').toLong, (1 to 40).map(i => s"${c}w$i").mkString(" "))
+      }.toDF("doc_id", "text")
+      val narrow = Seq((100L, (1 to 40).map(i => s"mw$i").mkString(" ")))
+        .toDF("doc_id", "text")
+      Seq("postings", "shingle_df", "meta")
+        .foreach(t => spark.sql(s"DROP TABLE IF EXISTS graft_skip_spec_$t"))
+      Dedup.stageJaccardPostings(corpus, "doc_id", "text", shingleN = 3)
+        .writeBucketed("graft_skip_spec", nBuckets = 1,
+          pathPrefix = Some(s"$tableDir/skip"),
+          writerOptions = Map("parquet.block.size" -> "2048"))
+      val store = spark.table("graft_skip_spec_postings")
+      val total = store.count()
+      val batchKeys = Dedup.jaccardPostings(narrow, "doc_id", "text")
+        .select("shingle").distinct()
+      val pruned = Dedup.pruneToBatch(store, batchKeys)
+      pruned.collect()
+      val root = pruned.queryExecution.executedPlan match {
+        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+          a.executedPlan
+        case p => p
+      }
+      // the range filter must reach the parquet scan as a pushed filter
+      val planStr = root.toString
+      assert(
+        "PushedFilters: \\[[^\\]]*GreaterThanOrEqual\\(shingle".r
+          .findFirstIn(planStr).isDefined,
+        s"batch range was not pushed to the stored scan:\n$planStr")
+      // and actually skip: the scan must surface a fraction of the store
+      // (rows of surviving row groups), not the whole table post-filtered.
+      // (AQE wraps finished stages in QueryStageExec LEAVES — plain
+      // collect() never descends into them, so walk explicitly.)
+      def scans(p: org.apache.spark.sql.execution.SparkPlan)
+          : Seq[org.apache.spark.sql.execution.FileSourceScanExec] = p match {
+        case f: org.apache.spark.sql.execution.FileSourceScanExec => Seq(f)
+        case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
+          scans(q.plan)
+        case r: org.apache.spark.sql.execution.exchange.ReusedExchangeExec =>
+          scans(r.child)
+        case other => other.children.flatMap(scans)
+      }
+      val scanned = scans(root).map(_.metrics("numOutputRows").value).sum
+      assert(scanned > 0 && scanned < total / 4,
+        s"pruned scan read $scanned of $total rows — row groups not skipped")
+      (Seq("postings", "shingle_df", "meta")).foreach { t =>
+        spark.sql(s"DROP TABLE IF EXISTS graft_staged_spec_$t")
+        spark.sql(s"DROP TABLE IF EXISTS graft_skip_spec_$t")
+      }
     }
   }
 
@@ -1721,8 +1727,7 @@ class LlmOpsSpec extends SparkSpec {
   }
 
   test("pruneToCells: literals within bound, semi-join beyond, same rows") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-prune-cells")
-    try {
+    withTempDir("graft-prune-cells") { tmp =>
       Ann.withIvfQuantizedLayout(embs, "vec_id", "embedding", nCentroids = 8)
         .write.mode("overwrite").partitionBy("cluster_id")
         .parquet(s"$tmp/layout")
@@ -1746,11 +1751,6 @@ class LlmOpsSpec extends SparkSpec {
         s"beyond the bound the prune must be a semi-join:\n$semiPlan")
       assert(semiPlan.contains("dynamicpruning"),
         s"semi-join prune must reach the scan as dynamic partition pruning:\n$semiPlan")
-    } finally {
-      val walk = java.nio.file.Files.walk(tmp)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => java.nio.file.Files.deleteIfExists(p))
-      finally walk.close()
     }
   }
 
@@ -1783,42 +1783,42 @@ class LlmOpsSpec extends SparkSpec {
       nCentroids = 8)
     // external table at a fresh temp path: a previously-aborted run can
     // strand the managed-warehouse location and poison the re-create
-    val tableDir = java.nio.file.Files
-      .createTempDirectory("graft-sem-layout").toString
-    spark.sql("DROP TABLE IF EXISTS sem_layout_spec")
-    layout.write.format("parquet").mode("overwrite")
-      .bucketBy(4, "cluster_id").sortBy("cluster_id")
-      .option("path", s"$tableDir/t")
-      .saveAsTable("sem_layout_spec")
-    val stored = spark.table("sem_layout_spec")
+    withTempDir("graft-sem-layout") { tableDir =>
+      spark.sql("DROP TABLE IF EXISTS sem_layout_spec")
+      layout.write.format("parquet").mode("overwrite")
+        .bucketBy(4, "cluster_id").sortBy("cluster_id")
+        .option("path", s"$tableDir/t")
+        .saveAsTable("sem_layout_spec")
+      val stored = spark.table("sem_layout_spec")
 
-    def key(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getBoolean(3))).toSet
-    val storedRes = Dedup.semanticDedupStored(stored, "vec_id", "embedding",
-      threshold = 0.4)
-    val inline = Dedup.semanticDedup(embs, "vec_id", "embedding",
-      threshold = 0.4, nCentroids = 8)
-    assert(key(storedRes) === key(inline),
-      "stored-layout verdicts must equal the inline run's")
+      def key(df: org.apache.spark.sql.DataFrame) = df.collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getBoolean(3))).toSet
+      val storedRes = Dedup.semanticDedupStored(stored, "vec_id", "embedding",
+        threshold = 0.4)
+      val inline = Dedup.semanticDedup(embs, "vec_id", "embedding",
+        threshold = 0.4, nCentroids = 8)
+      assert(key(storedRes) === key(inline),
+        "stored-layout verdicts must equal the inline run's")
 
-    // plan pin: the pair stage over the bucketed table has NO exchange at
-    // all — both self-join sides arrive hash-partitioned by the stored
-    // key. Broadcast is disabled for the pin: at gate scale Spark would
-    // broadcast one side (also exchange-free, but it would leave the
-    // co-partitioning claim unexercised — at 100 TB neither side
-    // broadcasts and THIS is the plan that must hold)
-    val thresholdBefore = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val (_, pairs) = Dedup.semanticStoredPairs(stored, "vec_id", "embedding",
-        threshold = 0.4, clusterCol = "cluster_id", roundDp = -1)
-      val plan = pairs.queryExecution.executedPlan.toString
-      assert(!plan.contains("Exchange"),
-        s"corpus-side exchange in the stored pair join:\n$plan")
-      assert(plan.contains("SortMergeJoin"),
-        s"expected a bucket-co-partitioned sort-merge join:\n$plan")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresholdBefore)
-    spark.sql("DROP TABLE IF EXISTS sem_layout_spec")
+      // plan pin: the pair stage over the bucketed table has NO exchange at
+      // all — both self-join sides arrive hash-partitioned by the stored
+      // key. Broadcast is disabled for the pin: at gate scale Spark would
+      // broadcast one side (also exchange-free, but it would leave the
+      // co-partitioning claim unexercised — at 100 TB neither side
+      // broadcasts and THIS is the plan that must hold)
+      val thresholdBefore = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+      try {
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        val (_, pairs) = Dedup.semanticStoredPairs(stored, "vec_id", "embedding",
+          threshold = 0.4, clusterCol = "cluster_id", roundDp = -1)
+        val plan = pairs.queryExecution.executedPlan.toString
+        assert(!plan.contains("Exchange"),
+          s"corpus-side exchange in the stored pair join:\n$plan")
+        assert(plan.contains("SortMergeJoin"),
+          s"expected a bucket-co-partitioned sort-merge join:\n$plan")
+      } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresholdBefore)
+      spark.sql("DROP TABLE IF EXISTS sem_layout_spec")
+    }
   }
 
   test("incremental semantic dedup = full-corpus verdicts restricted to batch") {
@@ -1875,8 +1875,7 @@ class LlmOpsSpec extends SparkSpec {
     val fold = embs.where(col("vec_id") >= s1 && col("vec_id") < s2)
     val batch = embs.where(col("vec_id") >= s2)
     val cent = Ann.seedCentroids(corpus, "vec_id", "embedding", nCentroids = 8)
-    val work = java.nio.file.Files.createTempDirectory("graft_ivf_compact_").toString
-    try {
+    withTempDir("graft_ivf_compact_") { work =>
       Ann.withIvfQuantizedLayout(corpus, "vec_id", "embedding", nCentroids = 8)
         .write.mode("overwrite").partitionBy("cluster_id")
         .parquet(s"$work/base")
@@ -1918,11 +1917,6 @@ class LlmOpsSpec extends SparkSpec {
         Ann.compactIvfLayout(spark, s"$work/base", s"$work/overlay",
           Seq(s"$work/overlay"))
       }
-    } finally {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(java.nio.file.Paths.get(work)).iterator()
-        .asScala.toSeq.sortBy(-_.getNameCount)
-        .foreach(java.nio.file.Files.deleteIfExists(_))
     }
   }
 
@@ -1980,10 +1974,11 @@ class LlmOpsSpec extends SparkSpec {
       rankRoundDp = -1).collect().nonEmpty)
     // the writer's tag survives a parquet roundtrip (field metadata rides
     // in the footer schema) — the stored-path tests below depend on it
-    val dir = java.nio.file.Files.createTempDirectory("graft-ann-tag").toString
-    Ann.withRetrievalColumns(embs, "embedding").write.parquet(s"$dir/c")
-    val rt = spark.read.parquet(s"$dir/c")
-    assert(rt.schema("codes").metadata.contains(Ann.Int8CodesTag))
+    withTempDir("graft-ann-tag") { dir =>
+      Ann.withRetrievalColumns(embs, "embedding").write.parquet(s"$dir/c")
+      val rt = spark.read.parquet(s"$dir/c")
+      assert(rt.schema("codes").metadata.contains(Ann.Int8CodesTag))
+    }
   }
 
   test("persisted retrieval columns: stored-path parity and pruned coarse scans") {
@@ -1992,84 +1987,85 @@ class LlmOpsSpec extends SparkSpec {
     // staged retrievals' COARSE scans must read only id + code/prefix —
     // never the full vector column — while returning bit-identical results
     // to the on-the-fly overloads (the v06 cluster_id-pruning pattern)
-    val dir = java.nio.file.Files.createTempDirectory("graft-ann-store").toString
-    Ann.withRetrievalColumns(embs, "embedding", coarseDims = 16)
-      .write.parquet(s"$dir/corpus")
-    val stored = spark.read.parquet(s"$dir/corpus")
-    assert(stored.schema("codes").dataType ===
-      org.apache.spark.sql.types.BinaryType)
-    assert(stored.schema("prefix").dataType ===
-      org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.FloatType))
-    val queries = embs.where(col("vec_id") < 5)
-    val storedQueries = stored.where(col("vec_id") < 5)
+    withTempDir("graft-ann-store") { dir =>
+      Ann.withRetrievalColumns(embs, "embedding", coarseDims = 16)
+        .write.parquet(s"$dir/corpus")
+      val stored = spark.read.parquet(s"$dir/corpus")
+      assert(stored.schema("codes").dataType ===
+        org.apache.spark.sql.types.BinaryType)
+      assert(stored.schema("prefix").dataType ===
+        org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.FloatType))
+      val queries = embs.where(col("vec_id") < 5)
+      val storedQueries = stored.where(col("vec_id") < 5)
 
-    def key(df: org.apache.spark.sql.DataFrame) = df
-      .select("query_id", "rank", "corpus_id").collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
+      def key(df: org.apache.spark.sql.DataFrame) = df
+        .select("query_id", "rank", "corpus_id").collect()
+        .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
 
-    val v8Fly = Ann.twoStageTopK(embs, queries, "vec_id", "embedding",
-      k = 5, coarseDims = 16, nCandidates = 50)
-    val v8Stored = Ann.twoStageTopK(stored, storedQueries, "vec_id", "embedding",
-      "prefix", k = 5, coarseDims = 16, nCandidates = 50, rankRoundDp = -1)
-    assert(key(v8Stored) === key(v8Fly), "stored prefix path must match on-the-fly")
+      val v8Fly = Ann.twoStageTopK(embs, queries, "vec_id", "embedding",
+        k = 5, coarseDims = 16, nCandidates = 50)
+      val v8Stored = Ann.twoStageTopK(stored, storedQueries, "vec_id", "embedding",
+        "prefix", k = 5, coarseDims = 16, nCandidates = 50, rankRoundDp = -1)
+      assert(key(v8Stored) === key(v8Fly), "stored prefix path must match on-the-fly")
 
-    val v9Fly = Ann.quantizedTopK(embs, queries, "vec_id", "embedding",
-      k = 5, nCandidates = 50)
-    val v9Stored = Ann.quantizedTopK(stored, storedQueries, "vec_id", "embedding",
-      "codes", k = 5, nCandidates = 50, rankRoundDp = -1)
-    assert(key(v9Stored) === key(v9Fly), "stored codes path must match on-the-fly")
+      val v9Fly = Ann.quantizedTopK(embs, queries, "vec_id", "embedding",
+        k = 5, nCandidates = 50)
+      val v9Stored = Ann.quantizedTopK(stored, storedQueries, "vec_id", "embedding",
+        "codes", k = 5, nCandidates = 50, rankRoundDp = -1)
+      assert(key(v9Stored) === key(v9Fly), "stored codes path must match on-the-fly")
 
-    // plan pin: among the parquet scans each stored-path query plans, the
-    // COARSE scan (the one reading the storage column) must not also read
-    // the full embedding column — that is the whole point of the form
-    def coarseScans(df: org.apache.spark.sql.DataFrame, storageCol: String) = {
-      val schemas = "ReadSchema: struct<[^>]*>".r
-        .findAllIn(df.queryExecution.executedPlan.toString).toList
-      val coarse = schemas.filter(_.contains(storageCol))
-      assert(coarse.nonEmpty, s"no scan reads $storageCol:\n$schemas")
-      coarse
+      // plan pin: among the parquet scans each stored-path query plans, the
+      // COARSE scan (the one reading the storage column) must not also read
+      // the full embedding column — that is the whole point of the form
+      def coarseScans(df: org.apache.spark.sql.DataFrame, storageCol: String) = {
+        val schemas = "ReadSchema: struct<[^>]*>".r
+          .findAllIn(df.queryExecution.executedPlan.toString).toList
+        val coarse = schemas.filter(_.contains(storageCol))
+        assert(coarse.nonEmpty, s"no scan reads $storageCol:\n$schemas")
+        coarse
+      }
+      coarseScans(v8Stored, "prefix").foreach { s =>
+        assert(!s.contains("embedding"), s"coarse scan reads full vectors: $s")
+      }
+      coarseScans(v9Stored, "codes").foreach { s =>
+        assert(!s.contains("embedding"), s"coarse scan reads full vectors: $s")
+      }
+
+      // the composed form (v10): coarse = byte-PREFIX of the stored codes.
+      // At coarseDims = dim the prefix is the whole code array, so the
+      // composition must reproduce the stored-codes quantized retrieval
+      // exactly (substring(codes, 1, 64) ≡ codes, byte cosine ≡ byte cosine)
+      val dim = embs.select(org.apache.spark.sql.functions.size(col("embedding")))
+        .first().getInt(0)
+      val composedFull = Ann.twoStageQuantizedTopK(stored, storedQueries,
+        "vec_id", "embedding", "codes", k = 5, coarseDims = dim, nCandidates = 50)
+      assert(key(composedFull) === key(v9Stored),
+        "full-width code prefix must equal the quantized retrieval")
+      // at the production cut the coarse scan reads 16 BYTES per row —
+      // recall holds the same bar as the float-prefix stage (v08's test)
+      val composed = Ann.twoStageQuantizedTopK(stored, storedQueries,
+        "vec_id", "embedding", "codes", k = 5, coarseDims = 16, nCandidates = 50)
+      val exact = key(Ann.bruteForceTopK(embs, queries, "vec_id", "embedding", k = 5))
+      val hits = key(composed).count { case (q, _, c) =>
+        exact.exists(e => e._1 == q && e._3 == c) }
+      assert(hits.toDouble / exact.size > 0.4, s"composed recall@5: $hits/${exact.size}")
+      coarseScans(composed, "codes").foreach { s =>
+        assert(!s.contains("embedding"), s"composed coarse scan reads vectors: $s")
+      }
+
+      // the byte kernel itself: cosine(codes, float vector) equals
+      // cosine(double codes, float vector) bit-for-bit
+      val byteCos = stored.select(col("vec_id"),
+        vec_cosine(col("codes"), col("embedding")).as("c"))
+        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      val dblCos = embs.select(col("vec_id"), vec_cosine(
+        transform(col("embedding"), x => floor(x.cast("double") /
+          graft.functions.VectorFunctions.vec_norm(col("embedding")) * 127 + 0.5)
+          .cast("double")),
+        col("embedding")).as("c"))
+        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      assert(byteCos === dblCos, "byte-array cosine must be bit-identical")
     }
-    coarseScans(v8Stored, "prefix").foreach { s =>
-      assert(!s.contains("embedding"), s"coarse scan reads full vectors: $s")
-    }
-    coarseScans(v9Stored, "codes").foreach { s =>
-      assert(!s.contains("embedding"), s"coarse scan reads full vectors: $s")
-    }
-
-    // the composed form (v10): coarse = byte-PREFIX of the stored codes.
-    // At coarseDims = dim the prefix is the whole code array, so the
-    // composition must reproduce the stored-codes quantized retrieval
-    // exactly (substring(codes, 1, 64) ≡ codes, byte cosine ≡ byte cosine)
-    val dim = embs.select(org.apache.spark.sql.functions.size(col("embedding")))
-      .first().getInt(0)
-    val composedFull = Ann.twoStageQuantizedTopK(stored, storedQueries,
-      "vec_id", "embedding", "codes", k = 5, coarseDims = dim, nCandidates = 50)
-    assert(key(composedFull) === key(v9Stored),
-      "full-width code prefix must equal the quantized retrieval")
-    // at the production cut the coarse scan reads 16 BYTES per row —
-    // recall holds the same bar as the float-prefix stage (v08's test)
-    val composed = Ann.twoStageQuantizedTopK(stored, storedQueries,
-      "vec_id", "embedding", "codes", k = 5, coarseDims = 16, nCandidates = 50)
-    val exact = key(Ann.bruteForceTopK(embs, queries, "vec_id", "embedding", k = 5))
-    val hits = key(composed).count { case (q, _, c) =>
-      exact.exists(e => e._1 == q && e._3 == c) }
-    assert(hits.toDouble / exact.size > 0.4, s"composed recall@5: $hits/${exact.size}")
-    coarseScans(composed, "codes").foreach { s =>
-      assert(!s.contains("embedding"), s"composed coarse scan reads vectors: $s")
-    }
-
-    // the byte kernel itself: cosine(codes, float vector) equals
-    // cosine(double codes, float vector) bit-for-bit
-    val byteCos = stored.select(col("vec_id"),
-      vec_cosine(col("codes"), col("embedding")).as("c"))
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val dblCos = embs.select(col("vec_id"), vec_cosine(
-      transform(col("embedding"), x => floor(x.cast("double") /
-        graft.functions.VectorFunctions.vec_norm(col("embedding")) * 127 + 0.5)
-        .cast("double")),
-      col("embedding")).as("c"))
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(byteCos === dblCos, "byte-array cosine must be bit-identical")
   }
 
   test("IVF with a cluster_id partition column prunes the probe scan") {
@@ -2078,31 +2074,32 @@ class LlmOpsSpec extends SparkSpec {
     // PARTITION filter — the scan physically reads nProbe/nCentroids of
     // the corpus instead of filtering rows after a full read
     import org.apache.spark.sql.functions.{broadcast => bc}
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivf-store").toString
-    val cent = embs.orderBy(col("vec_id")).limit(8)
-      .select(col("vec_id").as("cid"), col("embedding").as("centroid"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("vec_id")).orderBy(col("ccos").desc, col("cid"))
-    embs.crossJoin(bc(cent))
-      .select(col("vec_id"), col("embedding"), col("cid"),
-        vec_cosine(col("embedding"), col("centroid")).as("ccos"))
-      .withColumn("r", org.apache.spark.sql.functions.row_number().over(w))
-      .where(col("r") === 1)
-      .select(col("vec_id"), col("embedding"), col("cid").as("cluster_id"))
-      .write.partitionBy("cluster_id").parquet(s"$dir/corpus")
-    val probed = spark.read.parquet(s"$dir/corpus")
-      .where(col("cluster_id").isin(0L, 1L))
-    val plan = probed.queryExecution.executedPlan.toString
-    // cluster_id must appear INSIDE the PartitionFilters bracket — a scan
-    // always prints an (often empty) PartitionFilters list, so matching
-    // the two substrings separately would pass vacuously
-    assert("PartitionFilters: \\[[^\\]]*cluster_id".r.findFirstIn(plan).isDefined,
-      s"probe filter did not prune partitions:\n$plan")
-    // and the pruned read returns exactly the two probed cells (partition
-    // columns come back with directory-inferred types — cast to compare)
-    val cells = probed.select(col("cluster_id").cast("long")).distinct()
-      .collect().map(_.getLong(0)).toSet
-    assert(cells.subsetOf(Set(0L, 1L)) && cells.nonEmpty)
+    withTempDir("graft-ivf-store") { dir =>
+      val cent = embs.orderBy(col("vec_id")).limit(8)
+        .select(col("vec_id").as("cid"), col("embedding").as("centroid"))
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy(col("vec_id")).orderBy(col("ccos").desc, col("cid"))
+      embs.crossJoin(bc(cent))
+        .select(col("vec_id"), col("embedding"), col("cid"),
+          vec_cosine(col("embedding"), col("centroid")).as("ccos"))
+        .withColumn("r", org.apache.spark.sql.functions.row_number().over(w))
+        .where(col("r") === 1)
+        .select(col("vec_id"), col("embedding"), col("cid").as("cluster_id"))
+        .write.partitionBy("cluster_id").parquet(s"$dir/corpus")
+      val probed = spark.read.parquet(s"$dir/corpus")
+        .where(col("cluster_id").isin(0L, 1L))
+      val plan = probed.queryExecution.executedPlan.toString
+      // cluster_id must appear INSIDE the PartitionFilters bracket — a scan
+      // always prints an (often empty) PartitionFilters list, so matching
+      // the two substrings separately would pass vacuously
+      assert("PartitionFilters: \\[[^\\]]*cluster_id".r.findFirstIn(plan).isDefined,
+        s"probe filter did not prune partitions:\n$plan")
+      // and the pruned read returns exactly the two probed cells (partition
+      // columns come back with directory-inferred types — cast to compare)
+      val cells = probed.select(col("cluster_id").cast("long")).distinct()
+        .collect().map(_.getLong(0)).toSet
+      assert(cells.subsetOf(Set(0L, 1L)) && cells.nonEmpty)
+    }
   }
 
   test("IVF x quantized layout (v11): pruned partitions, code-only coarse scan, parity") {
@@ -2110,54 +2107,55 @@ class LlmOpsSpec extends SparkSpec {
     // real — the probe reads only its cells (PartitionFilters) and the
     // coarse pass reads only code bytes (ReadSchema) — plus exact parity
     // with the same rule computed inline
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivfsq").toString
-    Ann.withIvfQuantizedLayout(embs, "vec_id", "embedding", nCentroids = 8)
-      .write.partitionBy("cluster_id").mode("overwrite").parquet(s"$dir/corpus")
-    val stored = spark.read.parquet(s"$dir/corpus")
-    val cent = Ann.seedCentroids(embs, "vec_id", "embedding", nCentroids = 8)
-    val queries = embs.where(col("vec_id") < 5)
+    withTempDir("graft-ivfsq") { dir =>
+      Ann.withIvfQuantizedLayout(embs, "vec_id", "embedding", nCentroids = 8)
+        .write.partitionBy("cluster_id").mode("overwrite").parquet(s"$dir/corpus")
+      val stored = spark.read.parquet(s"$dir/corpus")
+      val cent = Ann.seedCentroids(embs, "vec_id", "embedding", nCentroids = 8)
+      val queries = embs.where(col("vec_id") < 5)
 
-    def key(df: org.apache.spark.sql.DataFrame) = df
-      .select("query_id", "rank", "corpus_id").collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
+      def key(df: org.apache.spark.sql.DataFrame) = df
+        .select("query_id", "rank", "corpus_id").collect()
+        .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
 
-    val storedRes = Ann.ivfQuantizedTopK(stored, cent, queries,
-      "vec_id", "embedding", "codes", k = 5, nProbe = 2, nCandidates = 50)
-    val inlineRes = Ann.ivfQuantizedTopK(
-      Ann.withIvfQuantizedLayout(embs, "vec_id", "embedding", nCentroids = 8),
-      cent, queries, "vec_id", "embedding", "codes",
-      k = 5, nProbe = 2, nCandidates = 50)
-    assert(key(storedRes) === key(inlineRes),
-      "persisted layout must reproduce the inline computation exactly")
+      val storedRes = Ann.ivfQuantizedTopK(stored, cent, queries,
+        "vec_id", "embedding", "codes", k = 5, nProbe = 2, nCandidates = 50)
+      val inlineRes = Ann.ivfQuantizedTopK(
+        Ann.withIvfQuantizedLayout(embs, "vec_id", "embedding", nCentroids = 8),
+        cent, queries, "vec_id", "embedding", "codes",
+        k = 5, nProbe = 2, nCandidates = 50)
+      assert(key(storedRes) === key(inlineRes),
+        "persisted layout must reproduce the inline computation exactly")
 
-    // recall vs brute force: probing 2/8 cells with a byte-coarse pass
-    // holds the composed-retrieval floor (the v10 bar)
-    val exact = key(Ann.bruteForceTopK(embs, queries, "vec_id", "embedding", k = 5))
-    val hits = key(storedRes).count { case (q, _, c) =>
-      exact.exists(e => e._1 == q && e._3 == c) }
-    assert(hits.toDouble / exact.size > 0.4, s"recall@5: $hits/${exact.size}")
+      // recall vs brute force: probing 2/8 cells with a byte-coarse pass
+      // holds the composed-retrieval floor (the v10 bar)
+      val exact = key(Ann.bruteForceTopK(embs, queries, "vec_id", "embedding", k = 5))
+      val hits = key(storedRes).count { case (q, _, c) =>
+        exact.exists(e => e._1 == q && e._3 == c) }
+      assert(hits.toDouble / exact.size > 0.4, s"recall@5: $hits/${exact.size}")
 
-    // plan pins, scoped to the layout's scans (the embeddings fixture and
-    // centroid reads are unpartitioned parquet and legitimately unpruned):
-    // every scan of the stored layout must carry a cluster_id partition
-    // filter, and the coarse scan (the one reading `codes`) must not also
-    // read the vector column
-    val scans = storedRes.queryExecution.executedPlan.toString
-      .split("FileScan parquet").toSeq.drop(1)
-    val layoutScans = scans.filter(_.contains("graft-ivfsq"))
-    assert(layoutScans.size >= 2,
-      s"expected coarse + rerank scans of the layout, got ${layoutScans.size}")
-    layoutScans.foreach { s =>
-      assert("PartitionFilters: \\[[^\\]]*cluster_id".r.findFirstIn(s).isDefined,
-        s"layout scan did not prune partitions:\n$s")
-    }
-    val coarseScans = layoutScans.filter(
-      "ReadSchema: struct<[^>]*codes".r.findFirstIn(_).isDefined)
-    assert(coarseScans.nonEmpty, "no layout scan reads the codes column")
-    coarseScans.foreach { s =>
-      val schema = "ReadSchema: struct<[^>]*>".r.findFirstIn(s).get
-      assert(!schema.contains("embedding"),
-        s"coarse scan reads full vectors: $schema")
+      // plan pins, scoped to the layout's scans (the embeddings fixture and
+      // centroid reads are unpartitioned parquet and legitimately unpruned):
+      // every scan of the stored layout must carry a cluster_id partition
+      // filter, and the coarse scan (the one reading `codes`) must not also
+      // read the vector column
+      val scans = storedRes.queryExecution.executedPlan.toString
+        .split("FileScan parquet").toSeq.drop(1)
+      val layoutScans = scans.filter(_.contains("graft-ivfsq"))
+      assert(layoutScans.size >= 2,
+        s"expected coarse + rerank scans of the layout, got ${layoutScans.size}")
+      layoutScans.foreach { s =>
+        assert("PartitionFilters: \\[[^\\]]*cluster_id".r.findFirstIn(s).isDefined,
+          s"layout scan did not prune partitions:\n$s")
+      }
+      val coarseScans = layoutScans.filter(
+        "ReadSchema: struct<[^>]*codes".r.findFirstIn(_).isDefined)
+      assert(coarseScans.nonEmpty, "no layout scan reads the codes column")
+      coarseScans.foreach { s =>
+        val schema = "ReadSchema: struct<[^>]*>".r.findFirstIn(s).get
+        assert(!schema.contains("embedding"),
+          s"coarse scan reads full vectors: $schema")
+      }
     }
   }
 

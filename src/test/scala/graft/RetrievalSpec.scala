@@ -391,10 +391,10 @@ class RetrievalSpec extends SparkSpec {
   // ------------------------------------------------- plan-shape assertions
 
   test("bm25 plan: query side broadcast; no cartesian product") {
-    val (topk, scratch) =
+    val plan = graft.Pinned.scope {
       Retrieval.bm25TopKLazy(corpus, query, "doc_id", "text", k = 5)
-    val plan = topk.queryExecution.executedPlan.toString
-    scratch.foreach(graft.Pinned.free)
+        .queryExecution.executedPlan.toString
+    }
     assert(plan.contains("BroadcastHashJoin") || plan.contains("BroadcastNestedLoopJoin"),
       s"expected broadcast joins in:\n$plan")
     assert(!plan.contains("CartesianProduct"),

@@ -46,35 +46,36 @@ class ScaleFeaturesSpec extends SparkSpec {
   }
 
   test("dynamic partition pruning fires on a partitioned fact table") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-dpp").toString
-    spark.read.parquet(s"$dir/orders.parquet")
-      .withColumn("o_year", year(col("o_orderdate")))
-      .write.partitionBy("o_year").parquet(s"$tmp/orders_part")
-    // the dim must come from a SCAN with a non-foldable predicate — a
-    // literal would constant-fold into a static partition filter (also
-    // fine, but then nothing is "dynamic")
-    // the join key must match the partition column's type exactly — a
-    // cast wrapped around o_year disqualifies the scan from DPP
-    // the dim predicate must pass Catalyst's isLikelySelective test — a
-    // literal equality qualifies, a bare boolean column does not
-    spark.range(1992, 2000)
-      .select(col("id").cast("int").as("y"),
-        when(col("id") % 2 === 0, "even").otherwise("odd").as("cat"))
-      .write.parquet(s"$tmp/years")
-    // at fixture scale the cost heuristic sees no benefit — force the
-    // fallback estimate so the rule's mechanics (not its costing) are
-    // under test
-    withConfs(
-      "spark.sql.optimizer.dynamicPartitionPruning.useStats" -> "false",
-      "spark.sql.optimizer.dynamicPartitionPruning.fallbackFilterRatio" -> "50.0") {
-      val fact = spark.read.parquet(s"$tmp/orders_part")
-      val dim = spark.read.parquet(s"$tmp/years").where(col("cat") === "even")
-      val j = fact.join(dim, col("o_year") === col("y"))
-        .groupBy(col("o_orderstatus")).count()
-      val plan = j.queryExecution.executedPlan.toString
-      assert(plan.contains("dynamicpruning"),
-        s"expected dynamic partition pruning on o_year:\n$plan")
-      assert(j.collect().map(_.getLong(1)).sum > 0)
+    withTempDir("graft-dpp") { tmp =>
+      spark.read.parquet(s"$dir/orders.parquet")
+        .withColumn("o_year", year(col("o_orderdate")))
+        .write.partitionBy("o_year").parquet(s"$tmp/orders_part")
+      // the dim must come from a SCAN with a non-foldable predicate — a
+      // literal would constant-fold into a static partition filter (also
+      // fine, but then nothing is "dynamic")
+      // the join key must match the partition column's type exactly — a
+      // cast wrapped around o_year disqualifies the scan from DPP
+      // the dim predicate must pass Catalyst's isLikelySelective test — a
+      // literal equality qualifies, a bare boolean column does not
+      spark.range(1992, 2000)
+        .select(col("id").cast("int").as("y"),
+          when(col("id") % 2 === 0, "even").otherwise("odd").as("cat"))
+        .write.parquet(s"$tmp/years")
+      // at fixture scale the cost heuristic sees no benefit — force the
+      // fallback estimate so the rule's mechanics (not its costing) are
+      // under test
+      withConfs(
+        "spark.sql.optimizer.dynamicPartitionPruning.useStats" -> "false",
+        "spark.sql.optimizer.dynamicPartitionPruning.fallbackFilterRatio" -> "50.0") {
+        val fact = spark.read.parquet(s"$tmp/orders_part")
+        val dim = spark.read.parquet(s"$tmp/years").where(col("cat") === "even")
+        val j = fact.join(dim, col("o_year") === col("y"))
+          .groupBy(col("o_orderstatus")).count()
+        val plan = j.queryExecution.executedPlan.toString
+        assert(plan.contains("dynamicpruning"),
+          s"expected dynamic partition pruning on o_year:\n$plan")
+        assert(j.collect().map(_.getLong(1)).sum > 0)
+      }
     }
   }
 }

@@ -32,6 +32,33 @@ abstract class SparkSpec extends AnyFunSuite {
     finally graft.streaming.Streams.deleteTree(dir)
   }
 
+  /** The residue law: nothing `op` pins outlives its answer. `op` runs and
+    * its answer is read. A frame answer is a kernel's contract — its own
+    * pins pass to the caller, who frees them with [[Pinned.free]] once
+    * read; anything else (rows, a codebook) is what a query hands its
+    * caller and owns no pins. Then the set of RDDs holding blocks must be
+    * back to what it was. With `throws`, `op` must fail, and must leave
+    * nothing behind either. Frees do not block, so the check polls for
+    * up to 3 s.
+    */
+  def residueLaw(name: String, throws: Boolean = false)(op: => Any): Unit = {
+    def cached(): Set[Int] = spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
+    def read(): Unit = op match {
+      case out: org.apache.spark.sql.Dataset[_] => out.collect(); Pinned.free(out)
+      case _ => ()
+    }
+    val before = cached()
+    if (throws) assert(scala.util.Try(read()).isFailure, s"$name: expected a throw")
+    else read()
+    val deadline = System.nanoTime() + 3000000000L
+    var left = cached() -- before
+    while (left.nonEmpty && System.nanoTime() < deadline) {
+      Thread.sleep(50)
+      left = cached() -- before
+    }
+    assert(left.isEmpty, s"$name left cached RDDs $left behind")
+  }
+
   /** The regime law: `op` answers the same multiset of rows whichever plan
     * [[Regime]] picks — its default choice on the fixture, and the scale
     * plan under [[Regime.atScale]]. Rows are collected inside the scope,

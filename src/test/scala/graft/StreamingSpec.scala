@@ -377,37 +377,38 @@ class StreamingSpec extends SparkSpec {
 
   test("GraphUpdater recovers durable snapshot + WAL tail across restart") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_updater").toString
-    val g0 = DemoGraph.bigBang(spark)
-    val u1 = new Streams.GraphUpdater(g0, "possession",
-      durableDir = Some(dir), saveEvery = 2)
-    (0 until 5).foreach { b =>
-      val edges = (0 until 10)
-        .map(i => ("person:bob", s"object:d_${b}_$i")).toDF("src", "dst")
-      u1.applyBatch(edges, b.toLong)
+    withTempDir("graft_updater") { dir =>
+      val g0 = DemoGraph.bigBang(spark)
+      val u1 = new Streams.GraphUpdater(g0, "possession",
+        durableDir = Some(dir), saveEvery = 2)
+      (0 until 5).foreach { b =>
+        val edges = (0 until 10)
+          .map(i => ("person:bob", s"object:d_${b}_$i")).toDF("src", "dst")
+        u1.applyBatch(edges, b.toLong)
+      }
+      // snapshots committed at batches 1 and 3; batch 4 lives only in the WAL
+      assert(java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "snapshot_batch")))
+      // "crash": rebuild purely from disk (initial supplies schema/fallback)
+      val u2 = Streams.GraphUpdater.recover(g0, "possession", dir, saveEvery = 2)
+      def edgeSet(u: Streams.GraphUpdater) = u.current().edges("possession")
+        .collect().map(r => (r.getString(0), r.getString(1))).sorted.toSeq
+      assert(edgeSet(u2) === edgeSet(u1), "recovered graph must equal pre-crash graph")
+      // a re-delivered in-flight batch after recovery is still absorbed
+      val redelivered = (0 until 10)
+        .map(i => ("person:bob", s"object:d_4_$i")).toDF("src", "dst")
+      u2.applyBatch(redelivered, 4L)
+      assert(edgeSet(u2) === edgeSet(u1), "re-delivered batch must not duplicate edges")
+      // new batches keep applying, INCLUDING across a post-recovery snapshot
+      // save (saveEvery=2 fires within these applies): the versioned
+      // snapshot dirs mean the save never overwrites the parquet files the
+      // recovered graph's lazy plan is still reading
+      u2.applyBatch(Seq(("person:bob", "object:d_5_0")).toDF("src", "dst"), 5L)
+      u2.applyBatch(Seq(("person:bob", "object:d_6_0")).toDF("src", "dst"), 6L)
+      assert(u2.current().edges("possession").count() === edgeSet(u1).size + 2)
+      // and a second recovery from the post-save state sees everything
+      val u3 = Streams.GraphUpdater.recover(g0, "possession", dir)
+      assert(edgeSet(u3) === edgeSet(u2), "second recovery must equal live graph")
     }
-    // snapshots committed at batches 1 and 3; batch 4 lives only in the WAL
-    assert(java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "snapshot_batch")))
-    // "crash": rebuild purely from disk (initial supplies schema/fallback)
-    val u2 = Streams.GraphUpdater.recover(g0, "possession", dir, saveEvery = 2)
-    def edgeSet(u: Streams.GraphUpdater) = u.current().edges("possession")
-      .collect().map(r => (r.getString(0), r.getString(1))).sorted.toSeq
-    assert(edgeSet(u2) === edgeSet(u1), "recovered graph must equal pre-crash graph")
-    // a re-delivered in-flight batch after recovery is still absorbed
-    val redelivered = (0 until 10)
-      .map(i => ("person:bob", s"object:d_4_$i")).toDF("src", "dst")
-    u2.applyBatch(redelivered, 4L)
-    assert(edgeSet(u2) === edgeSet(u1), "re-delivered batch must not duplicate edges")
-    // new batches keep applying, INCLUDING across a post-recovery snapshot
-    // save (saveEvery=2 fires within these applies): the versioned
-    // snapshot dirs mean the save never overwrites the parquet files the
-    // recovered graph's lazy plan is still reading
-    u2.applyBatch(Seq(("person:bob", "object:d_5_0")).toDF("src", "dst"), 5L)
-    u2.applyBatch(Seq(("person:bob", "object:d_6_0")).toDF("src", "dst"), 6L)
-    assert(u2.current().edges("possession").count() === edgeSet(u1).size + 2)
-    // and a second recovery from the post-save state sees everything
-    val u3 = Streams.GraphUpdater.recover(g0, "possession", dir)
-    assert(edgeSet(u3) === edgeSet(u2), "second recovery must equal live graph")
   }
 
   test("GraphUpdater streams 1000+ edges with bounded plan depth") {
@@ -511,8 +512,7 @@ class StreamingSpec extends SparkSpec {
     }.toDF("doc_id", "text")
     val corpus = docs.where(col("doc_id") < 30)
     val batch = docs.where(col("doc_id") >= 30)
-    val store = java.nio.file.Files.createTempDirectory("graft_s12_spec_").toString
-    try {
+    withTempDir("graft_s12_spec_") { store =>
       graft.dedup.Dedup.stageJaccardPostings(corpus, "doc_id", "text",
         shingleN = 3, maxDf = 0).write(store)
       val staged = graft.dedup.Dedup.StagedPostings.read(spark, store)
@@ -534,11 +534,6 @@ class StreamingSpec extends SparkSpec {
       val oneTick = normalized(Streams.jaccardIngest(spark, staged, batch,
         "doc_id", "text", threshold = 0.3, nInputFiles = 1))
       assert(oneTick === expected, "single-tick ingest differs from batch t28")
-    } finally {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(java.nio.file.Paths.get(store)).iterator()
-        .asScala.toSeq.sortBy(-_.getNameCount)
-        .foreach(java.nio.file.Files.deleteIfExists(_))
     }
   }
 
@@ -566,8 +561,7 @@ class StreamingSpec extends SparkSpec {
     }.toDF("doc_id", "text")
     val corpus = docs.where(col("doc_id") < 30)
     val batch = docs.where(col("doc_id") >= 30)
-    val store = java.nio.file.Files.createTempDirectory("graft_s13_spec_").toString
-    try {
+    withTempDir("graft_s13_spec_") { store =>
       graft.dedup.Dedup.stageCdcChunks(corpus, "doc_id", "text",
         avgChunkTokens = 5).write(store)
       val staged = graft.dedup.Dedup.StagedChunkStore.read(spark, store)
@@ -588,11 +582,6 @@ class StreamingSpec extends SparkSpec {
       val oneTick = normalized(Streams.cdcIngest(spark, staged, batch,
         "doc_id", "text", nInputFiles = 1))
       assert(oneTick === expected, "single-tick CDC ingest differs from batch t35")
-    } finally {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(java.nio.file.Paths.get(store)).iterator()
-        .asScala.toSeq.sortBy(-_.getNameCount)
-        .foreach(java.nio.file.Files.deleteIfExists(_))
     }
   }
 
@@ -642,8 +631,7 @@ class StreamingSpec extends SparkSpec {
   test("jaccardIngest rejects a capped staged store loudly") {
     import spark.implicits._
     val docs = (0 until 20).map(i => (i.toLong, s"tok$i a b c d e f")).toDF("doc_id", "text")
-    val store = java.nio.file.Files.createTempDirectory("graft_s12_cap_").toString
-    try {
+    withTempDir("graft_s12_cap_") { store =>
       graft.dedup.Dedup.stageJaccardPostings(docs.where(col("doc_id") < 10),
         "doc_id", "text", shingleN = 3, maxDf = 100).write(store)
       val staged = graft.dedup.Dedup.StagedPostings.read(spark, store)
@@ -653,11 +641,6 @@ class StreamingSpec extends SparkSpec {
       }
       assert(e.getMessage.contains("UNCAPPED"),
         s"wrong rejection message: ${e.getMessage}")
-    } finally {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(java.nio.file.Paths.get(store)).iterator()
-        .asScala.toSeq.sortBy(-_.getNameCount)
-        .foreach(java.nio.file.Files.deleteIfExists(_))
     }
   }
 
@@ -667,8 +650,7 @@ class StreamingSpec extends SparkSpec {
 
   test("writeTick replayed with the same batchId does not double-append") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_tick_").toString
-    try {
+    withTempDir("graft_tick_") { dir =>
       val t0 = Seq((1L, "a"), (2L, "b")).toDF("id", "v")
       Streams.writeTick(t0, dir, 0L)
       Streams.writeTick(t0, dir, 0L) // the at-least-once re-delivery
@@ -686,18 +668,12 @@ class StreamingSpec extends SparkSpec {
       Streams.writeTick(t1, dir, 1L)
       Streams.writeTick(t0, dir, 0L)
       assert(Streams.readTicks(spark, dir).count() === 3L)
-    } finally {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(java.nio.file.Paths.get(dir)).iterator()
-        .asScala.toSeq.sortBy(-_.getNameCount)
-        .foreach(java.nio.file.Files.deleteIfExists(_))
     }
   }
 
   test("ticksSoFar serves strictly earlier ticks — a replayed tick never sees itself") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_tick_").toString
-    try {
+    withTempDir("graft_tick_") { dir =>
       assert(Streams.ticksSoFar(spark, dir, 0L).isEmpty, "empty dir must be None")
       Streams.writeTick(Seq((1L, "a")).toDF("id", "v"), dir, 0L)
       Streams.writeTick(Seq((2L, "b")).toDF("id", "v"), dir, 1L)
@@ -708,11 +684,6 @@ class StreamingSpec extends SparkSpec {
         s"replayed tick saw wrong reference: ${ref.mkString(",")}")
       assert(Streams.ticksSoFar(spark, dir, 0L).get.count() === 0L,
         "tick 0's replay must see an empty reference")
-    } finally {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(java.nio.file.Paths.get(dir)).iterator()
-        .asScala.toSeq.sortBy(-_.getNameCount)
-        .foreach(java.nio.file.Files.deleteIfExists(_))
     }
   }
 
@@ -883,9 +854,8 @@ class StreamingSpec extends SparkSpec {
 
   test("writeConcurrently runs every write, and rethrows only after ALL quiesce") {
     import java.util.concurrent.atomic.AtomicInteger
-    val work = java.nio.file.Files.createTempDirectory("graft_wc_")
-    val df = spark.range(10).toDF("id")
-    try {
+    withTempDir("graft_wc_") { work =>
+      val df = spark.range(10).toDF("id")
       // happy path: all three sinks land
       Streams.writeConcurrently(spark)(
         () => Streams.writeTick(df, s"$work/a", 0L),
@@ -911,19 +881,18 @@ class StreamingSpec extends SparkSpec {
       assert(boom.getMessage === "tick write failed")
       assert(finished.get() === 1,
         "failure was rethrown before the concurrent write quiesced")
-    } finally Streams.deleteTree(work)
+    }
   }
 
   test("writeConcurrently rethrows a fatal write error instead of hanging") {
     // a LinkageError is not NonFatal: a write path that only captures
     // NonFatal leaves its future uncompleted and the await hangs forever.
     // The call runs on its own daemon thread so this test bounds its wait
-    val work = java.nio.file.Files.createTempDirectory("graft_wc_fatal_")
-    val df = spark.range(10).toDF("id")
-    val (caller, outcome) = onThread(Streams.writeConcurrently(spark)(
-      () => throw new LinkageError("fatal tick write"),
-      () => Streams.writeTick(df, s"$work/ok", 0L)))
-    try {
+    withTempDir("graft_wc_fatal_") { work =>
+      val df = spark.range(10).toDF("id")
+      val (caller, outcome) = onThread(Streams.writeConcurrently(spark)(
+        () => throw new LinkageError("fatal tick write"),
+        () => Streams.writeTick(df, s"$work/ok", 0L)))
       caller.join(60000)
       assert(!caller.isAlive, "a fatal write error hung the await")
       assert(outcome.get.isInstanceOf[LinkageError] &&
@@ -931,7 +900,7 @@ class StreamingSpec extends SparkSpec {
         s"wrong outcome: ${outcome.get}")
       assert(spark.read.parquet(s"$work/ok").count() === 10L,
         "the healthy write did not complete")
-    } finally Streams.deleteTree(work)
+    }
   }
 
   test("writeConcurrently runs every write under its caller's job group") {
@@ -948,59 +917,59 @@ class StreamingSpec extends SparkSpec {
           .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
           .getOrElse("none"))
     }
-    val work = java.nio.file.Files.createTempDirectory("graft_wc_groups_")
-    val df = spark.range(10).toDF("id")
-    def writesUnder(group: String): Unit = {
-      sc.setJobGroup(group, group)
-      Streams.writeConcurrently(spark)((1 to 4).map(i =>
-        () => Streams.writeTick(df, s"$work/$group$i", 0L)): _*)
-    }
-    def fence(group: String): Unit = {
-      sc.setJobGroup(group, group)
-      spark.range(1).count()
-      assert(within(30)(groups.contains(group)), s"fence $group never seen")
-    }
-    sc.addSparkListener(listener)
-    try {
-      writesUnder("wc-A")
-      fence("wc-fence-1")
-      writesUnder("wc-B")
-      fence("wc-fence-2")
-      val seen = groups.asScala.toSeq
-      val bJobs = seen.drop(seen.lastIndexOf("wc-fence-1") + 1)
-        .takeWhile(_ != "wc-fence-2")
-      assert(bJobs.nonEmpty, "the B call started no jobs")
-      assert(bJobs.forall(_ == "wc-B"),
-        s"jobs of the B call ran under other groups: $bJobs")
-    } finally {
-      sc.removeSparkListener(listener)
-      sc.clearJobGroup()
-      Streams.deleteTree(work)
+    withTempDir("graft_wc_groups_") { work =>
+      val df = spark.range(10).toDF("id")
+      def writesUnder(group: String): Unit = {
+        sc.setJobGroup(group, group)
+        Streams.writeConcurrently(spark)((1 to 4).map(i =>
+          () => Streams.writeTick(df, s"$work/$group$i", 0L)): _*)
+      }
+      def fence(group: String): Unit = {
+        sc.setJobGroup(group, group)
+        spark.range(1).count()
+        assert(within(30)(groups.contains(group)), s"fence $group never seen")
+      }
+      sc.addSparkListener(listener)
+      try {
+        writesUnder("wc-A")
+        fence("wc-fence-1")
+        writesUnder("wc-B")
+        fence("wc-fence-2")
+        val seen = groups.asScala.toSeq
+        val bJobs = seen.drop(seen.lastIndexOf("wc-fence-1") + 1)
+          .takeWhile(_ != "wc-fence-2")
+        assert(bJobs.nonEmpty, "the B call started no jobs")
+        assert(bJobs.forall(_ == "wc-B"),
+          s"jobs of the B call ran under other groups: $bJobs")
+      } finally {
+        sc.removeSparkListener(listener)
+        sc.clearJobGroup()
+      }
     }
   }
 
   test("writeConcurrently cancels and awaits its writes when the caller is interrupted") {
-    val work = java.nio.file.Files.createTempDirectory("graft_wc_interrupt_")
-    TaskGate.reset()
-    val gate = udf(TaskGate.pass _)
-    val (caller, outcome) = onThread(Streams.writeConcurrently(spark)(
-      () => Streams.writeTick(spark.range(4).toDF("id")
-        .select(gate(col("id")).as("id")), s"$work/blocked", 0L),
-      () => Streams.writeTick(spark.range(4).toDF("id"), s"$work/free", 0L)))
-    try {
-      assert(TaskGate.entered.await(60, java.util.concurrent.TimeUnit.SECONDS),
-        "the blocking write never started")
-      caller.interrupt()
-      caller.join(60000)
-      assert(!caller.isAlive, "the interrupted call did not return")
-      assert(outcome.get.isInstanceOf[InterruptedException],
-        s"wrong outcome: ${outcome.get}")
-      assert(within(30)(spark.sparkContext.statusTracker.getActiveJobIds.isEmpty),
-        "a write job outlived its interrupted call: " +
-          spark.sparkContext.statusTracker.getActiveJobIds.mkString(","))
-    } finally {
-      TaskGate.release.countDown()
-      Streams.deleteTree(work)
+    withTempDir("graft_wc_interrupt_") { work =>
+      TaskGate.reset()
+      val gate = udf(TaskGate.pass _)
+      val (caller, outcome) = onThread(Streams.writeConcurrently(spark)(
+        () => Streams.writeTick(spark.range(4).toDF("id")
+          .select(gate(col("id")).as("id")), s"$work/blocked", 0L),
+        () => Streams.writeTick(spark.range(4).toDF("id"), s"$work/free", 0L)))
+      try {
+        assert(TaskGate.entered.await(60, java.util.concurrent.TimeUnit.SECONDS),
+          "the blocking write never started")
+        caller.interrupt()
+        caller.join(60000)
+        assert(!caller.isAlive, "the interrupted call did not return")
+        assert(outcome.get.isInstanceOf[InterruptedException],
+          s"wrong outcome: ${outcome.get}")
+        assert(within(30)(spark.sparkContext.statusTracker.getActiveJobIds.isEmpty),
+          "a write job outlived its interrupted call: " +
+            spark.sparkContext.statusTracker.getActiveJobIds.mkString(","))
+      } finally {
+        TaskGate.release.countDown()
+      }
     }
   }
 
@@ -1011,11 +980,10 @@ class StreamingSpec extends SparkSpec {
       tmp.list().filter(_.matches("graft_s1\\d_.*")).toSet
     val docs = (0 until 20).map(i => (i.toLong, s"w$i a b c d e f g h"))
       .toDF("doc_id", "text")
-    val store = java.nio.file.Files.createTempDirectory("graft_failpath_store_")
-    try {
+    withTempDir("graft_failpath_store_") { store =>
       graft.dedup.Dedup.stageCdcChunks(docs.where(col("doc_id") < 10),
-        "doc_id", "text", avgChunkTokens = 5).write(store.toString)
-      val staged = graft.dedup.Dedup.StagedChunkStore.read(spark, store.toString)
+        "doc_id", "text", avgChunkTokens = 5).write(store)
+      val staged = graft.dedup.Dedup.StagedChunkStore.read(spark, store)
       val dirsBefore = workDirs
       val queriesBefore = spark.streams.active.map(_.id).toSet
       // every tick reads a text column the batch lacks, so the first
@@ -1032,7 +1000,7 @@ class StreamingSpec extends SparkSpec {
         "the failed drain left its query active")
       assert((workDirs -- dirsBefore).isEmpty,
         s"work dir left behind: ${workDirs -- dirsBefore}")
-    } finally Streams.deleteTree(store)
+    }
   }
 
   test("an interrupted drain stops its query before returning") {

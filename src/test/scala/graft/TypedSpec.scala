@@ -117,35 +117,36 @@ class TypedSpec extends SparkSpec {
   }
 
   test("whereField filters are typed AND reach the parquet scan pushed down") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-typed-push").toString
-    DemoGraph.bigBang(spark).save(dir)
-    val loaded = TypedGraph(PropertyGraph.load(spark, dir))
-    val adults = loaded.nodes[Person].whereField(_.age)(_ > 20L)
-    assert(adults.ds.collect().map(_.name).sorted.toSeq === Seq("Jane", "Jose"))
-    // identical rows to the deserializing lambda filter and the
-    // handwritten Column filter — whereField is the best of both
-    assert(adults.ds.collect().toSet ===
-      loaded.nodes[Person].where(_.age > 20L).ds.collect().toSet)
-    assert(adults.ds.collect().toSet ===
-      loaded.nodes[Person].filter(col("age") > 20L).ds.collect().toSet)
-    // the fidelity pin: the typed predicate must reach the parquet scan
-    // (inside the PushedFilters bracket, not merely post-scan)
-    val plan = adults.ds.queryExecution.executedPlan.toString
-    assert("PushedFilters: \\[[^\\]]*age".r.findFirstIn(plan).isDefined,
-      s"typed field filter did not push down:\n$plan")
-    // predicate operand type is pinned to the FIELD type
-    assertTypeError(
-      """import graft.graph.DemoTyped._
-         import graft.typed._
-         def bad(tg: TypedGraph) =
-           tg.nodes[Person].whereField(_.age)(_ > "thirty")""")
-    // only simple accessors can yield a column NAME — computed selectors
-    // are rejected at compile time by the macro
-    assertDoesNotCompile(
-      """import graft.graph.DemoTyped._
-         import graft.typed._
-         def bad(tg: TypedGraph) =
-           tg.nodes[Person].whereField(p => p.age + 1L)(_ > 30L)""")
+    withTempDir("graft-typed-push") { dir =>
+      DemoGraph.bigBang(spark).save(dir)
+      val loaded = TypedGraph(PropertyGraph.load(spark, dir))
+      val adults = loaded.nodes[Person].whereField(_.age)(_ > 20L)
+      assert(adults.ds.collect().map(_.name).sorted.toSeq === Seq("Jane", "Jose"))
+      // identical rows to the deserializing lambda filter and the
+      // handwritten Column filter — whereField is the best of both
+      assert(adults.ds.collect().toSet ===
+        loaded.nodes[Person].where(_.age > 20L).ds.collect().toSet)
+      assert(adults.ds.collect().toSet ===
+        loaded.nodes[Person].filter(col("age") > 20L).ds.collect().toSet)
+      // the fidelity pin: the typed predicate must reach the parquet scan
+      // (inside the PushedFilters bracket, not merely post-scan)
+      val plan = adults.ds.queryExecution.executedPlan.toString
+      assert("PushedFilters: \\[[^\\]]*age".r.findFirstIn(plan).isDefined,
+        s"typed field filter did not push down:\n$plan")
+      // predicate operand type is pinned to the FIELD type
+      assertTypeError(
+        """import graft.graph.DemoTyped._
+           import graft.typed._
+           def bad(tg: TypedGraph) =
+             tg.nodes[Person].whereField(_.age)(_ > "thirty")""")
+      // only simple accessors can yield a column NAME — computed selectors
+      // are rejected at compile time by the macro
+      assertDoesNotCompile(
+        """import graft.graph.DemoTyped._
+           import graft.typed._
+           def bad(tg: TypedGraph) =
+             tg.nodes[Person].whereField(p => p.age + 1L)(_ > 30L)""")
+    }
   }
 
   test("groupByField aggregates stay Catalyst-native and match untyped plans") {
@@ -252,22 +253,23 @@ class TypedSpec extends SparkSpec {
         Reading("r:1", at(1, 8), 10L),
         Reading("r:2", at(2, 12), 20L),
         Reading("r:3", at(3, 16), 30L)))
-    val dir = java.nio.file.Files.createTempDirectory("graft-typed-ntz").toString
-    tg0.g.save(dir)
-    val loaded = TypedGraph(PropertyGraph.load(spark, dir))
-    // the persisted attribute must come back as NTZ, not silently widened
-    assert(loaded.nodes[Reading].ds.schema("at").dataType ===
-      org.apache.spark.sql.types.TimestampNTZType)
-    val late = loaded.nodes[Reading].whereField(_.at)(_ > at(1, 23))
-    assert(late.ds.collect().map(_.id).sorted.toSeq === Seq("r:2", "r:3"))
-    assert(loaded.nodes[Reading].whereField(_.at)(
-      _.between(at(2, 0), at(2, 23))).ds.collect().map(_.value).toSeq === Seq(20L))
-    // the NTZ predicate must reach the parquet scan like any other field
-    val plan = late.ds.queryExecution.executedPlan.toString
-    assert("PushedFilters: \\[[^\\]]*at".r.findFirstIn(plan).isDefined,
-      s"NTZ field filter did not push down:\n$plan")
-    // typed round-trip values survive exactly (no tz shift: NTZ is wall-clock)
-    assert(loaded.node[Reading]("r:1") === Reading("r:1", at(1, 8), 10L))
+    withTempDir("graft-typed-ntz") { dir =>
+      tg0.g.save(dir)
+      val loaded = TypedGraph(PropertyGraph.load(spark, dir))
+      // the persisted attribute must come back as NTZ, not silently widened
+      assert(loaded.nodes[Reading].ds.schema("at").dataType ===
+        org.apache.spark.sql.types.TimestampNTZType)
+      val late = loaded.nodes[Reading].whereField(_.at)(_ > at(1, 23))
+      assert(late.ds.collect().map(_.id).sorted.toSeq === Seq("r:2", "r:3"))
+      assert(loaded.nodes[Reading].whereField(_.at)(
+        _.between(at(2, 0), at(2, 23))).ds.collect().map(_.value).toSeq === Seq(20L))
+      // the NTZ predicate must reach the parquet scan like any other field
+      val plan = late.ds.queryExecution.executedPlan.toString
+      assert("PushedFilters: \\[[^\\]]*at".r.findFirstIn(plan).isDefined,
+        s"NTZ field filter did not push down:\n$plan")
+      // typed round-trip values survive exactly (no tz shift: NTZ is wall-clock)
+      assert(loaded.node[Reading]("r:1") === Reading("r:1", at(1, 8), 10L))
+    }
   }
 }
 
