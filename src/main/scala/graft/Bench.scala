@@ -144,9 +144,12 @@ object Bench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    def run(name: String): Unit =
+    // each query is consumed inside its own pin scope, so the pins it
+    // makes (operator-internal ones included) are freed when it ends
+    def run(name: String): Unit = Pinned.scope {
       SparkEntry.queries(name)(spark, sfDir)
         .write.format("noop").mode("overwrite").save()
+    }
 
     // Drop the blocks the last invocation pinned (operator-internal
     // localCheckpoints, streaming-drain result copies): across ~4 passes
@@ -169,46 +172,22 @@ object Bench {
       // lives in SURVEY §6 instead
     }
 
-    // v13's persisted corpus layout is staging, not query work: build it
-    // eagerly so the first timed rep never absorbs corpus-sized layout +
-    // centroid writes (matters when SPARK_GRAFT_BENCH_WARM_PASS=0, where
-    // nothing else would have forced it before timing)
-    if (selected.contains("v13_incremental_semantic_dedup") ||
-        selected.contains("s11_stream_semantic_dedup"))
-      graft.queries.VectorQueries.stageV13Layout(spark, sfDir)
-    // v19's trained IVF-PQ layout is likewise staging, not query work
-    if (selected.contains("v19_staged_ivfpq_topk"))
-      graft.queries.VectorQueries.stageV19Layout(spark, sfDir)
-    // t37/t38's BM25 index builds (and t38's batch fold) are ingest
-    if (selected.contains("t37_staged_bm25_retrieval"))
-      graft.queries.TextQueries.stageT37Index(spark, sfDir)
-    if (selected.contains("t38_incremental_bm25_index"))
-      graft.queries.TextQueries.stageT38Index(spark, sfDir)
-    // t42's compaction is likewise ingest-time work, not query work
-    if (selected.contains("t42_compacted_bm25_index"))
-      graft.queries.TextQueries.stageT42Index(spark, sfDir)
-    // t43/v21's store + fold + compact chains are the same class
-    if (selected.contains("t43_compacted_cdc_store"))
-      graft.queries.TextQueries.stageT43Store(spark, sfDir)
-    if (selected.contains("v21_compacted_ivf_layout"))
-      graft.queries.VectorQueries.stageV21Layout(spark, sfDir)
-
     run("q06_scalar_agg") // warmup, untimed
-    // untimed warm pass over the whole selected list: the first TIMED rep
-    // of the earliest queries otherwise absorbs residual codegen/
+    // untimed warm pass over the whole selected list. It builds every
+    // staged store (graft.Staged) off the timed path, and the first TIMED
+    // rep of the earliest queries otherwise absorbs residual codegen/
     // classloading that the single scalar-agg warmup doesn't touch
     // (observed: the first few queries' rep-1 samples ran 2-3× their warm
     // time, inflating their reported spreads). Costs ~1/3 more wall time,
-    // buys 3 warm reps per query. SPARK_GRAFT_BENCH_WARM_PASS=0 skips.
-    if (sys.env.getOrElse("SPARK_GRAFT_BENCH_WARM_PASS", "1") != "0")
-      selected.foreach { name =>
-        // the timed reps will report the failure; fatal VM errors
-        // (OOM etc.) must still propagate — timings from a corrupted
-        // JVM would be garbage reported as real
-        try run(name)
-        catch { case scala.util.control.NonFatal(_) => () }
-        finally cleanupBlocks()
-      }
+    // buys 3 warm reps per query.
+    selected.foreach { name =>
+      // the timed reps will report the failure; fatal VM errors
+      // (OOM etc.) must still propagate — timings from a corrupted
+      // JVM would be garbage reported as real
+      try run(name)
+      catch { case scala.util.control.NonFatal(_) => () }
+      finally cleanupBlocks()
+    }
 
     // median-of-N per query: single-shot numbers swing ±25% run-to-run
     // (JIT, page cache), which is too noisy to grade a round on.
@@ -222,7 +201,7 @@ object Bench {
     // JSON, and spreads well above ~0.3 mean the host was noisy.
     // cleanupBlocks' correctness rests on a GLOBAL invariant: no
     // cross-invocation cache is RDD-backed (the cross-call caches are
-    // parquet DIRS — v13 layout, s12 store). A future localCheckpoint-
+    // graft.Staged parquet dirs). A future localCheckpoint-
     // backed cross-call cache would be unrecoverable after unpersist
     // (truncated lineage) and fail confusingly mid-bench — assert the
     // invariant here, where every staging path has already run, so the
@@ -232,7 +211,7 @@ object Bench {
       "persistent RDDs survive cleanupBlocks() before timing — some " +
         "cross-call cache is RDD-backed (localCheckpoint/persist); " +
         "cleanupBlocks would truncate its lineage mid-bench. Back it " +
-        "with a parquet dir instead (see v13 layout staging).")
+        "with a graft.Staged parquet dir instead.")
 
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
     val sentinelName = "q06_scalar_agg"

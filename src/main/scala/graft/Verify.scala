@@ -41,18 +41,17 @@ object Verify {
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     selected.foreach { case (name, fn) =>
       val target = java.nio.file.Paths.get(outDir, name)
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(target.toString)
-      catch { case e: Throwable =>
+      // consumed inside a pin scope: the pins the query makes are freed
+      // when its result is written
+      try Pinned.scope {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(target.toString)
+      } catch { case e: Throwable =>
         failed += name
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
         // a failed query must not leave a STALE result dir from a previous
         // run masquerading as this round's output
-        if (java.nio.file.Files.exists(target)) {
-          import scala.jdk.CollectionConverters._
-          java.nio.file.Files.walk(target).iterator().asScala.toSeq
-            .sortBy(-_.getNameCount).foreach(java.nio.file.Files.deleteIfExists(_))
-        }
+        Staged.deleteTree(target)
         // ...but it MUST leave a machine-readable marker: in round 9 twelve
         // broken queries were simply ABSENT from the correctness artifact
         // because their dirs vanished — an invisible failure. The driver

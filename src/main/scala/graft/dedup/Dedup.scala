@@ -804,7 +804,11 @@ object Dedup {
         spark.read.parquet(s"$dir/shingle_df"),
         spark.read.parquet(s"$dir/meta"))
 
-    /** Reader for [[StagedPostings.writeBucketed]] catalog tables. */
+    /** Reader for [[StagedPostings.writeBucketed]] catalog tables: how a
+      * nightly job opens a corpus store that ingest saved into the
+      * session catalog (rather than as parquet dirs, [[read]]) and hands
+      * it to [[incrementalJaccardStaged]].
+      */
     def readTable(spark: org.apache.spark.sql.SparkSession,
         tablePrefix: String): StagedPostings =
       StagedPostings(

@@ -83,11 +83,6 @@ case class SortedIntersect(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-object SortedIntersect {
-  def sortedIntersect(a: Column, b: Column): Column =
-    Bridge.column(SortedIntersect(Bridge.expression(a), Bridge.expression(b)))
-}
-
 /** The per-edge triangle contribution list, fused: for a directed edge
   * `(s, t)` with sorted out-neighbor lists `ns`/`nt`, the closers are
   * `ws = ns ∩ nt` (two-pointer merge, [[SortedLongMerge]]); the edge

@@ -47,8 +47,10 @@ object Packing {
       .withColumn("n_seqs", (col("last_seq") - col("first_seq") + 1).cast("long"))
   }
 
-  /** Production shard choice: uniform hash of the id. Not DuckDB-replayable
-    * (xxhash64); oracle-gated callers pass an md5-derived shard instead.
+  /** Production shard choice: uniform hash of the id, the `shard` a
+    * training-data pipeline passes [[pack]] to spread documents evenly
+    * over packing shards. Not DuckDB-replayable (xxhash64), so oracle-gated
+    * callers (t-queries) pass an md5-derived shard instead.
     */
   def hashShard(id: Column, shards: Int): Column =
     pmod(xxhash64(id), lit(shards.toLong)).cast("int")

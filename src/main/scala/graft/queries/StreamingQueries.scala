@@ -333,30 +333,16 @@ object StreamingQueries {
   // UNCAPPED (maxDf=0 — cap hotness is not monotone under stream
   // prefixes; Streams.jaccardIngest enforces this loudly), so the oracle
   // is the uncapped t27 pair-CTE chain restricted to batch docs.
-  private val s12StagedDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-  // dedicated lock around the staging build — NOT bare getOrElseUpdate,
-  // which is non-atomic on TrieMap: concurrent first callers would stage
-  // the store twice and leak the loser's temp dir outside its shutdown
-  // hook (the VectorQueries.stagedV13Dir pattern)
-  private val s12StageLock = new Object
-
   private val s12: Q = (s, dir) => {
     val docs = Tables.t(s, dir, "documents")
     val split = docs.agg(max(col("doc_id"))).head().getLong(0) - 249L
-    val stagedDir = s12StageLock.synchronized { s12StagedDirs.getOrElseUpdate(dir, {
-      val out = java.nio.file.Files.createTempDirectory("graft_s12_store_").toString
+    val stagedDir = graft.Staged.once(("s12", dir)) {
+      val out = graft.Staged.dir("graft_s12_store_")
       graft.dedup.Dedup.stageJaccardPostings(
         docs.where(col("doc_id") < split), "doc_id", "text",
         shingleN = 3, maxDf = 0).write(out)
-      sys.addShutdownHook {
-        import scala.jdk.CollectionConverters._
-        scala.util.Try(java.nio.file.Files.walk(java.nio.file.Paths.get(out))
-          .iterator().asScala.toSeq.sortBy(-_.getNameCount)
-          .foreach(java.nio.file.Files.deleteIfExists(_)))
-      }
       out
-    }) }
+    }
     Streams.jaccardIngest(s,
       graft.dedup.Dedup.StagedPostings.read(s, stagedDir),
       docs.where(col("doc_id") >= split),
@@ -401,26 +387,16 @@ object StreamingQueries {
   // novel hashes fold in. Verdicts equal the whole-corpus t32 restricted
   // to batch docs (tick-invariant, StreamingSpec law), so the oracle is
   // t35's SQL verbatim.
-  private val s13StagedDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-  private val s13StageLock = new Object
-
   private val s13: Q = (s, dir) => {
     val docs = Tables.t(s, dir, "documents")
     val split = docs.agg(max(col("doc_id"))).head().getLong(0) - 249L
-    val stagedDir = s13StageLock.synchronized { s13StagedDirs.getOrElseUpdate(dir, {
-      val out = java.nio.file.Files.createTempDirectory("graft_s13_store_").toString
+    val stagedDir = graft.Staged.once(("s13", dir)) {
+      val out = graft.Staged.dir("graft_s13_store_")
       graft.dedup.Dedup.stageCdcChunks(
         docs.where(col("doc_id") < split), "doc_id", "text",
         avgChunkTokens = 20).write(out)
-      sys.addShutdownHook {
-        import scala.jdk.CollectionConverters._
-        scala.util.Try(java.nio.file.Files.walk(java.nio.file.Paths.get(out))
-          .iterator().asScala.toSeq.sortBy(-_.getNameCount)
-          .foreach(java.nio.file.Files.deleteIfExists(_)))
-      }
       out
-    }) }
+    }
     Streams.cdcIngest(s,
       graft.dedup.Dedup.StagedChunkStore.read(s, stagedDir),
       docs.where(col("doc_id") >= split), "doc_id", "text",
@@ -437,25 +413,15 @@ object StreamingQueries {
   // layered index. Readers sum across generations, so the ranking equals
   // the whole-corpus t36 — its replay is the oracle — and is
   // tick-partition-invariant (StreamingSpec law).
-  private val s14StagedDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-  private val s14StageLock = new Object
-
   private val s14: Q = (s, dir) => {
     val docs = Tables.t(s, dir, "documents")
     val split = docs.agg(max(col("doc_id"))).head().getLong(0) - 249L
-    val stagedDir = s14StageLock.synchronized { s14StagedDirs.getOrElseUpdate(dir, {
-      val out = java.nio.file.Files.createTempDirectory("graft_s14_base_").toString
+    val stagedDir = graft.Staged.once(("s14", dir)) {
+      val out = graft.Staged.dir("graft_s14_base_")
       graft.operators.Retrieval.stageBm25Index(
         docs.where(col("doc_id") < split), "doc_id", "text").write(out)
-      sys.addShutdownHook {
-        import scala.jdk.CollectionConverters._
-        scala.util.Try(java.nio.file.Files.walk(java.nio.file.Paths.get(out))
-          .iterator().asScala.toSeq.sortBy(-_.getNameCount)
-          .foreach(java.nio.file.Files.deleteIfExists(_)))
-      }
       out
-    }) }
+    }
     Streams.bm25Ingest(s, stagedDir,
       docs.where(col("doc_id") >= split),
       docs.where(col("doc_id") % 100 === 0), "doc_id", "text", k = 10,

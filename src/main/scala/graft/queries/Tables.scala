@@ -86,9 +86,7 @@ object Tables {
     * load of any dir still era-checks it.
     */
   def assertEventEraOnce(dir: String, normalized: => DataFrame): Unit =
-    eraCheckedDirs.getOrElseUpdate(dir, assertEventEra(normalized))
-  private val eraCheckedDirs =
-    scala.collection.concurrent.TrieMap.empty[String, Unit]
+    graft.Staged.once(("eventEra", dir))(assertEventEra(normalized))
 
   def t(spark: SparkSession, dir: String, name: String): DataFrame = name match {
     case "events" =>

@@ -966,41 +966,17 @@ object TextQueries {
   // split by the staged equivalence law (LlmOpsSpec); at sf0.01 the
   // documents table has exactly 500 docs, so the split is 250 and the
   // computed oracle mirrors t27's CTEs with the split taken from the data.
-  private val stagedDirs = scala.collection.concurrent.TrieMap.empty[String, String]
-  // dedicated lock around the staging build — NOT bare getOrElseUpdate,
-  // which is non-atomic on TrieMap: concurrent first callers would stage
-  // the store twice and leak the loser's temp dir outside the cleanup
-  // hook (the s12StageLock/VectorQueries.layoutLock pattern)
-  private val t28StageLock = new Object
-  // the staged postings are corpus-proportional parquet (substantial at
-  // sf1): without cleanup every bench/verify JVM would strand one copy
-  // per sf dir under /tmp until the host fills — a real ingest persists
-  // them as owned artifacts; this gate-scale cache is process-scoped
-  private val stagedCleanup: Thread = {
-    val t = new Thread(() => stagedDirs.values.foreach { d =>
-      scala.util.Try {
-        val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(d))
-        try walk.sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => java.nio.file.Files.deleteIfExists(p))
-        finally walk.close()
-      }
-    }, "graft-staged-cleanup")
-    Runtime.getRuntime.addShutdownHook(t)
-    t
-  }
-
   private val t28: Q = (s, dir) => {
     val docs = t(s, dir, "documents")
     // scalar driver read (parquet-stats-cheap): the batch is the last 250
     // ids regardless of corpus scale
     val split = docs.agg(max(col("doc_id"))).head().getLong(0) - 249L
-    locally(stagedCleanup) // force hook registration with the first use
-    val stagedDir = t28StageLock.synchronized { stagedDirs.getOrElseUpdate(dir, {
-      val out = java.nio.file.Files.createTempDirectory("graft_staged_").toString
+    val stagedDir = graft.Staged.once(("t28", dir)) {
+      val out = graft.Staged.dir("graft_staged_")
       Dedup.stageJaccardPostings(docs.where(col("doc_id") < split),
         "doc_id", "text", shingleN = 3, maxDf = t07MaxDf).write(out)
       out
-    }) }
+    }
     Dedup.incrementalJaccardStaged(Dedup.StagedPostings.read(s, stagedDir),
       docs.where(col("doc_id") >= split), "doc_id", "text", threshold = 0.1)
   }
@@ -1245,32 +1221,19 @@ object TextQueries {
   // the whole-corpus t32 restricted to batch docs — so the oracle is the
   // t32 boundary replay with the profile filtered to the batch (the dup
   // ranking stays global).
-  private val cdcStagedDirs = scala.collection.concurrent.TrieMap.empty[String, String]
-  private val cdcStageLock = new Object
-
-  private def tempStagedDir(prefix: String): String = {
-    val out = java.nio.file.Files.createTempDirectory(prefix).toString
-    sys.addShutdownHook {
-      import scala.jdk.CollectionConverters._
-      scala.util.Try(java.nio.file.Files.walk(java.nio.file.Paths.get(out))
-        .iterator().asScala.toSeq.sortBy(-_.getNameCount)
-        .foreach(java.nio.file.Files.deleteIfExists(_)))
-    }
-    out
-  }
 
   /** t35's persisted corpus chunk store for `dir` (idempotent): the
     * distinct chunk hashes of every doc below max(doc_id) - 249.
     */
   private[graft] def stagedCdcDir(s: SparkSession, dir: String): String =
-    cdcStageLock.synchronized { cdcStagedDirs.getOrElseUpdate(dir, {
+    graft.Staged.once(("t35", dir)) {
       val docs = t(s, dir, "documents")
       val split = docs.agg(max(col("doc_id"))).head().getLong(0) - 249L
-      val out = tempStagedDir("graft_cdc_store_")
+      val out = graft.Staged.dir("graft_cdc_store_")
       Dedup.stageCdcChunks(docs.where(col("doc_id") < split),
         "doc_id", "text", avgChunkTokens = 20).write(out)
       out
-    }) }
+    }
 
   private val t35: Q = (s, dir) => {
     val docs = t(s, dir, "documents")
@@ -1338,36 +1301,26 @@ object TextQueries {
   // cost tracks the query terms' posting lists, not the corpus. Staged ≡
   // inline by the RetrievalSpec parity law, so the oracle is t36's full
   // first-principles replay — the staging itself is oracle-proven.
-  private val bm25StagedDirs = scala.collection.concurrent.TrieMap.empty[String, String]
-  private val bm25StageLock = new Object
 
-  private[queries] def bm25StagedDir(s: SparkSession, dir: String, key: String)
+  /** The BM25 index `build` writes, staged once per (`key`, `dir`). */
+  private[queries] def bm25StagedDir(dir: String, key: String)
       (build: String => Unit): String =
-    bm25StageLock.synchronized { bm25StagedDirs.getOrElseUpdate(s"$key:$dir", {
-      val out = java.nio.file.Files.createTempDirectory("graft_bm25_index_").toString
+    graft.Staged.once((key, dir)) {
+      val out = graft.Staged.dir("graft_bm25_index_")
       build(out)
-      sys.addShutdownHook {
-        import scala.jdk.CollectionConverters._
-        scala.util.Try(java.nio.file.Files.walk(java.nio.file.Paths.get(out))
-          .iterator().asScala.toSeq.sortBy(-_.getNameCount)
-          .foreach(java.nio.file.Files.deleteIfExists(_)))
-      }
       out
-    }) }
+    }
 
-  /** Eagerly stage t37's index for `dir` (idempotent; Bench calls this
-    * off the timed path — the v13/v19 rule). */
-  def stageT37Index(s: SparkSession, dir: String): Unit =
-    bm25StagedDir(s, dir, "t37") { out =>
+  private def t37Index(s: SparkSession, dir: String): String =
+    bm25StagedDir(dir, "t37") { out =>
       Retrieval.stageBm25Index(t(s, dir, "documents"), "doc_id", "text")
         .write(out)
     }
 
   private val t37: Q = (s, dir) => {
-    stageT37Index(s, dir)
     val docs = t(s, dir, "documents")
     Retrieval.bm25TopKStaged(
-      Retrieval.StagedBm25Index.read(s, bm25StagedDirs(s"t37:$dir")),
+      Retrieval.StagedBm25Index.read(s, t37Index(s, dir)),
       docs.where(col("doc_id") % 100 === 0), "doc_id", "text", k = 10)
   }
 
@@ -1380,9 +1333,8 @@ object TextQueries {
   // across both generations — df sums deltas, avgdl sums stats rows — so
   // the oracle is again t36's whole-corpus replay: a fold that dropped,
   // doubled, or mis-merged a generation hash-mismatches immediately.
-  /** Eagerly stage t38's two-generation index for `dir` (idempotent). */
-  def stageT38Index(s: SparkSession, dir: String): Unit =
-    bm25StagedDir(s, dir, "t38") { out =>
+  private def t38Index(s: SparkSession, dir: String): String =
+    bm25StagedDir(dir, "t38") { out =>
       val docs = t(s, dir, "documents")
       val split = docs.agg(max(col("doc_id"))).head().getLong(0) - 249L
       Retrieval.stageBm25Index(docs.where(col("doc_id") < split),
@@ -1392,10 +1344,9 @@ object TextQueries {
     }
 
   private val t38: Q = (s, dir) => {
-    stageT38Index(s, dir)
     val docs = t(s, dir, "documents")
     Retrieval.bm25TopKStaged(
-      Retrieval.StagedBm25Index.read(s, bm25StagedDirs(s"t38:$dir")),
+      Retrieval.StagedBm25Index.read(s, t38Index(s, dir)),
       docs.where(col("doc_id") % 100 === 0), "doc_id", "text", k = 10)
   }
 
@@ -1407,21 +1358,18 @@ object TextQueries {
   // certifies that compaction dropped, doubled, or re-summed nothing,
   // and the spec law (compact(stage+folds) ≡ stage(union)) pins it
   // row-identical at the index level.
-  /** Eagerly build t42's compacted index from t38's two-generation one
-    * (idempotent; compaction is ingest-time cost, off the timed path).
+  /** t42's compacted index, built from t38's two-generation one
+    * (compaction is ingest-time cost, off the timed path).
     */
-  def stageT42Index(s: SparkSession, dir: String): Unit = {
-    stageT38Index(s, dir)
-    bm25StagedDir(s, dir, "t42") { out =>
-      Retrieval.compactBm25Index(s, bm25StagedDirs(s"t38:$dir"), out)
+  private def t42Index(s: SparkSession, dir: String): String =
+    bm25StagedDir(dir, "t42") { out =>
+      Retrieval.compactBm25Index(s, t38Index(s, dir), out)
     }
-  }
 
   private val t42: Q = (s, dir) => {
-    stageT42Index(s, dir)
     val docs = t(s, dir, "documents")
     Retrieval.bm25TopKStaged(
-      Retrieval.StagedBm25Index.read(s, bm25StagedDirs(s"t42:$dir")),
+      Retrieval.StagedBm25Index.read(s, t42Index(s, dir)),
       docs.where(col("doc_id") % 100 === 0), "doc_id", "text", k = 10)
   }
 
@@ -1434,16 +1382,8 @@ object TextQueries {
   // fold ids all precede batch ids, verdicts equal the whole-corpus t32
   // replay restricted to the batch — the same oracle shape as t35 at the
   // later boundary, so the oracle proves compaction changed NOTHING.
-  private val t43StagedDirs = scala.collection.concurrent.TrieMap.empty[String, String]
-
-  /** Eagerly build t43's compacted chunk store (idempotent; Bench calls
-    * this off the timed path — compaction is ingest-time work).
-    */
-  def stageT43Store(s: SparkSession, dir: String): Unit =
-    t43CompactedDir(s, dir)
-
   private def t43CompactedDir(s: SparkSession, dir: String): String =
-    cdcStageLock.synchronized { t43StagedDirs.getOrElseUpdate(dir, {
+    graft.Staged.once(("t43", dir)) {
       val docs = t(s, dir, "documents")
       val maxId = docs.agg(max(col("doc_id"))).head().getLong(0)
       val srcDir = stagedCdcDir(s, dir) // corpus < max-249
@@ -1454,12 +1394,12 @@ object TextQueries {
         col("doc_id") < maxId - 124L)
       val newHashes = Dedup.cdcDedupIncrementalWithHashes(
         store.hashes, fold, "doc_id", "text", avgChunkTokens = 20)._2
-      val overlay = tempStagedDir("graft_cdc_overlay_")
+      val overlay = graft.Staged.dir("graft_cdc_overlay_")
       graft.streaming.Streams.writeTick(newHashes, overlay, 0L)
-      val out = tempStagedDir("graft_cdc_compacted_")
+      val out = graft.Staged.dir("graft_cdc_compacted_")
       Dedup.compactChunkStore(s, srcDir, out, Seq(overlay))
       out
-    }) }
+    }
 
   private val t43: Q = (s, dir) => {
     val docs = t(s, dir, "documents")

@@ -276,44 +276,11 @@ object Streams {
   def resultSinkForKeyedOutput(spark: SparkSession, path: String,
       keyCol: String, rowBytes: Long = 64L,
       memMaxBytes: Long = 4L << 20): Option[String] = {
-    val keys = keyCardCache.getOrElseUpdate((path, keyCol),
+    val keys = graft.Staged.once(("keyCard", path, keyCol))(
       spark.read.parquet(path)
         .agg(approx_count_distinct(col(keyCol))).head().getLong(0))
     if (keys * rowBytes <= memMaxBytes) None else Some("parquet")
   }
-  private val keyCardCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), Long]
-
-  // File-sink drain roots live until JVM exit (the returned frame reads
-  // the directory lazily, so an earlier delete would tear the result out
-  // from under the caller), then a shutdown hook removes them — the same
-  // lifecycle Spark gives its own local dirs. Registration is idempotent
-  // per JVM; deletion best-effort (a half-deleted tree on a dirty exit
-  // is still OS-reapable, same as before the hook existed).
-  private val drainRootsLock = new Object
-  private var drainRoots: List[java.nio.file.Path] = Nil
-  private lazy val drainCleanupHook: Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(
-      () => drainRootsLock.synchronized(drainRoots).foreach(deleteTree),
-      "graft-drain-root-cleanup"))
-  private def registerDrainRoot(p: java.nio.file.Path): java.nio.file.Path = {
-    drainCleanupHook
-    drainRootsLock.synchronized { drainRoots ::= p }
-    p
-  }
-  // NonFatal, not IOException: Files.walk surfaces mid-walk failures as
-  // UncheckedIOException (a RuntimeException), which is exactly what a
-  // file vanishing under a concurrent Spark teardown throws — the hook
-  // must keep deleting the REMAINING roots when one root's walk dies.
-  private[graft] def deleteTree(root: java.nio.file.Path): Unit =
-    try {
-      import scala.jdk.CollectionConverters._
-      val walk = java.nio.file.Files.walk(root)
-      try walk.iterator().asScala.toSeq.sortBy(-_.getNameCount)
-        .foreach(p => try java.nio.file.Files.deleteIfExists(p)
-                      catch { case scala.util.control.NonFatal(_) => () })
-      finally walk.close()
-    } catch { case scala.util.control.NonFatal(_) => () }
 
   /** The drain core: start `w` with `Trigger.AvailableNow`, block until
     * the query has processed every input available at start, and stop it.
@@ -383,9 +350,10 @@ object Streams {
             // unique per CALL, not per name: `name`s restart per JVM
             // (s05_out_1), and a reused sink/checkpoint root would make
             // a later run resume the previous JVM's offsets and read its
-            // _spark_metadata-committed files as this drain's result
-            val root = registerDrainRoot(java.nio.file.Files
-              .createTempDirectory(s"graft_drain_${name}_")).toString
+            // _spark_metadata-committed files as this drain's result.
+            // The returned frame reads the root lazily, so it lives until
+            // JVM exit, the lifecycle Spark gives its own local dirs
+            val root = graft.Staged.dir(s"graft_drain_${name}_")
             drain(df.writeStream
               .format("parquet")
               .option("path", s"$root/data")
@@ -1148,11 +1116,10 @@ object Streams {
     * caller is interrupted.
     *
     * Cleanup: the wrapper owns the work dir (staged input, checkpoint,
-    * tick outputs) and removes it with [[deleteTree]] on every exit path.
-    * deleteTree swallows per-file errors, so a straggler state or
-    * checkpoint file appearing or vanishing mid-walk never replaces the
-    * drain's result or exception. Pins made by `tick` or `readBack` are
-    * theirs to release.
+    * tick outputs) and removes it with [[graft.Staged.deleteTree]] on
+    * every exit path, so a straggler state or checkpoint file appearing or
+    * vanishing mid-walk never replaces the drain's result or exception.
+    * Pins made by `tick` or `readBack` are theirs to release.
     */
   private def stagedIngest[A](spark: SparkSession, batch: DataFrame,
       idCol: String, nInputFiles: Int, prefix: String)(
@@ -1170,7 +1137,7 @@ object Streams {
         .foreachBatch((mb: Dataset[Row], batchId: Long) => body(mb.toDF(), batchId))
         .option("checkpointLocation", s"$dir/ckpt"))
       readBack(dir)
-    } finally deleteTree(work)
+    } finally graft.Staged.deleteTree(work)
   }
 
   /** The verdict ticks a dedup drain wrote under `dir`, pinned so they

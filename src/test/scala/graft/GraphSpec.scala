@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import graft.graph.{DemoGraph, PropertyGraph}
 import graft.schema._
 import org.apache.spark.sql.types._
+import org.apache.spark.sql.graftinternal.Bridge
 
 /** Golden demo-fixture tests (SURVEY.md §5.2.3) + operator semantics
   * (SURVEY.md §5.2.2 invariants). Expectations derived from the reference's
@@ -276,8 +277,8 @@ class GraphSpec extends SparkSpec {
     }
     import spark.implicits._
     val df = rows.toDF("a", "b")
-    val got = df.select(
-      graft.functions.SortedIntersect.sortedIntersect(col("a"), col("b")))
+    val got = df.select(Bridge.column(graft.functions.SortedIntersect(
+        Bridge.expression(col("a")), Bridge.expression(col("b")))))
       .collect().map(_.getSeq[Long](0))
     val want = df.select(array_intersect(col("a"), col("b")))
       .collect().map(_.getSeq[Long](0))

@@ -331,7 +331,7 @@ class LlmOpsSpec extends SparkSpec {
   test("staged trained IVF-PQ (v19): staging idempotent, codebook roundtrip, parity") {
     import graft.queries.VectorQueries
     val m = 8; val ksub = 16
-    // staging is idempotent (the dedicated-lock rule): same dir both times
+    // staging is idempotent (Staged.once): same dir both times
     val staged = VectorQueries.stagedV19Dir(spark, dir)
     assert(VectorQueries.stagedV19Dir(spark, dir) === staged)
 

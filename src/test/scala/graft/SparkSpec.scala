@@ -29,7 +29,7 @@ abstract class SparkSpec extends AnyFunSuite {
   def withTempDir[T](prefix: String)(body: String => T): T = {
     val dir = java.nio.file.Files.createTempDirectory(prefix)
     try body(dir.toString)
-    finally graft.streaming.Streams.deleteTree(dir)
+    finally Staged.deleteTree(dir)
   }
 
   /** The residue law: nothing `op` pins outlives its answer. `op` runs and
