@@ -36,12 +36,21 @@ private[graft] object Staged {
 
   private var exitDirs = List.empty[Path]
 
-  /** Every dir [[dir]] has made, newest first: what JVM exit deletes. */
+  /** Every path registered for deletion at JVM exit, newest first. */
   def atExit: List[Path] = synchronized(exitDirs)
 
   private lazy val exitHook: Unit =
     Runtime.getRuntime.addShutdownHook(new Thread(
       () => atExit.foreach(deleteTree), "graft-staged-cleanup"))
+
+  /** Registers `p`, contents included, for deletion at JVM exit: for a
+    * staged store that lives outside a [[dir]], such as a managed table in
+    * the session warehouse.
+    */
+  def deleteAtExit(p: Path): Unit = {
+    exitHook
+    synchronized { exitDirs ::= p }
+  }
 
   /** A new temp dir named `prefix…`, deleted at JVM exit. It is registered
     * as it is created, so a build that fails after writing to it leaks
@@ -51,7 +60,7 @@ private[graft] object Staged {
   def dir(prefix: String): String = {
     exitHook
     val d = Files.createTempDirectory(prefix)
-    synchronized { exitDirs ::= d }
+    deleteAtExit(d)
     d.toString
   }
 

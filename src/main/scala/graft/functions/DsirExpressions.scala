@@ -3,7 +3,6 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftinternal.Bridge
 import org.apache.spark.sql.types._
@@ -27,7 +26,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * across sessions/partitions).
   */
 case class HashedNgramBuckets(child: Expression, buckets: Int)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with KernelCodegen {
 
   // 1 bucket would make every document's score n_grams·ratio[0] — a
   // degenerate fit; tiny counts are almost certainly a units mistake
@@ -81,7 +80,7 @@ case class HashedNgramBuckets(child: Expression, buckets: Int)
   * anything order-sensitive, so the oracle's unordered SUM agrees.
   */
 case class BucketTableSum(child: Expression, table: Array[Double])
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with KernelCodegen {
 
   override def prettyName: String = "bucket_table_sum"
 
@@ -119,7 +118,7 @@ case class BucketTableSum(child: Expression, table: Array[Double])
   * exactly; rand() would not).
   */
 case class Hash61(child: Expression)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with KernelCodegen {
 
   override def prettyName: String = "graft_hash61"
 

@@ -2,100 +2,32 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.graftinternal.Bridge
 import org.apache.spark.sql.types._
 
-/** Codegen'd two-pointer merge intersection over SORTED, DISTINCT
-  * `ARRAY<BIGINT>` inputs — the triangle-closing kernel of
-  * [[graft.graph.GraphAlgos.triangleCountEdges]].
-  *
-  * Why not the builtin `array_intersect`: its evaluation builds a hash
-  * set PER ROW (one per directed edge here) and probes element-wise —
-  * allocation plus hashing on the hottest loop of the whole graph
-  * family, executed once per wedge (41M wedges at sf0.1, ~10× that at
-  * sf1). On sorted inputs the same result is a single forward merge:
-  * no hash set, no per-element hashing, one primitive-array output.
-  *
-  * PRECONDITION (caller-enforced, as with the vector kernels' layout
-  * contracts): both arrays ascending-sorted with distinct elements and
-  * no nulls — exactly what `array_sort(collect_list(...))` over a
-  * dedup'd edge set produces. On unsorted input the merge silently
-  * drops matches; the adjacency build in GraphAlgos is the one
-  * call site and sorts at aggregation time (per-vertex O(d log d),
-  * amortized over the O(Σ wedges) merges it accelerates). Equality
-  * with `array_intersect` on that call site's inputs is pinned by
-  * GraphSpec.
-  */
-object SortedLongMerge {
-
-  /** Merge-intersect two sorted distinct long arrays. Called from
-    * generated code and from nullSafeEval.
-    */
-  def intersect(a: ArrayData, b: ArrayData): ArrayData = {
-    val na = a.numElements()
-    val nb = b.numElements()
-    val out = new Array[Long](if (na < nb) na else nb)
-    var k = 0
-    var i = 0
-    var j = 0
-    while (i < na && j < nb) {
-      val x = a.getLong(i)
-      val y = b.getLong(j)
-      if (x == y) { out(k) = x; k += 1; i += 1; j += 1 }
-      else if (x < y) i += 1
-      else j += 1
-    }
-    UnsafeArrayData.fromPrimitiveArray(java.util.Arrays.copyOf(out, k))
-  }
-}
-
-/** `sorted_intersect(a, b)` — see [[SortedLongMerge]]. */
-case class SortedIntersect(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "sorted_intersect"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(LongType, _), ArrayType(LongType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"sorted_intersect expects two ARRAY<BIGINT> inputs, got " +
-          s"${l.catalogString} and ${r.catalogString}")
-    }
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    SortedLongMerge.intersect(
-      a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.functions.SortedLongMerge.intersect($a, $b);")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
 /** The per-edge triangle contribution list, fused: for a directed edge
   * `(s, t)` with sorted out-neighbor lists `ns`/`nt`, the closers are
-  * `ws = ns ∩ nt` (two-pointer merge, [[SortedLongMerge]]); the edge
-  * contributes `(s, |ws|)`, `(t, |ws|)` and one `(w, 1)` per closer —
-  * `ARRAY<STRUCT<vid BIGINT, c BIGINT>>`, empty (and thus dropped by the
-  * consuming explode) when nothing closes. One native kernel instead of
-  * merge + `size` + `concat` + `transform(...)`: the HOF spelling is
-  * CodegenFallback, an interpreted lambda frame per element on the
+  * `ws = ns ∩ nt`; the edge contributes `(s, |ws|)`, `(t, |ws|)` and one
+  * `(w, 1)` per closer — `ARRAY<STRUCT<vid BIGINT, c BIGINT>>`, empty
+  * (and thus dropped by the consuming explode) when nothing closes. One
+  * native kernel instead of merge + `size` + `concat` + `transform(...)`:
+  * the HOF spelling is interpreted, a lambda frame per element on the
   * wedge-scale hot loop this sits in.
+  *
+  * The intersection is a two-pointer merge, not the builtin
+  * `array_intersect`, which builds a hash set per row and probes it
+  * element-wise. PRECONDITION (caller-enforced): both lists ascending,
+  * distinct and null-free — what `array_sort(collect_list(...))` over a
+  * dedup'd edge set emits, the adjacency build in GraphAlgos. On unsorted
+  * input the merge silently drops matches. GraphSpec pins the closers
+  * equal to `array_intersect` on that input shape.
   */
 case class TriangleContribs(
     s: Expression, t: Expression, ns: Expression, nt: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.QuaternaryExpression {
+    extends org.apache.spark.sql.catalyst.expressions.QuaternaryExpression
+    with KernelCodegen {
 
   override def first: Expression = s
   override def second: Expression = t
@@ -117,10 +49,6 @@ case class TriangleContribs(
   override protected def nullSafeEval(a: Any, b: Any, c: Any, d: Any): Any =
     TriangleContribs.contribs(a.asInstanceOf[Long], b.asInstanceOf[Long],
       c.asInstanceOf[ArrayData], d.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b, c, d) =>
-      s"${ev.value} = graft.functions.TriangleContribs.contribs($a, $b, $c, $d);")
 
   override protected def withNewChildrenInternal(
       f: Expression, sec: Expression, th: Expression, fo: Expression): Expression =
@@ -181,8 +109,8 @@ object TriangleContribs {
   * exactly these rows (measured at sf1: the lineitem self-join spent
   * ~4s of g09's canon stage that per-order local expansion avoids). A
   * higher-order-function spelling (nested `transform` + `slice` +
-  * `flatten`) computes the same thing but HOFs are CodegenFallback —
-  * interpreted lambda frames per element on a 40M-struct stream.
+  * `flatten`) computes the same thing but HOFs run interpreted — lambda
+  * frames per element on a 40M-struct stream.
   *
   * The per-key quadratic fan-out is the CALLER's skew contract, same as
   * any groupBy-explode: a key with k items emits C(k,2) pairs (TPC-H
@@ -191,7 +119,8 @@ object TriangleContribs {
   * input keeps every emitted pair already canonical (u < v).
   */
 case class AscendingPairs(child: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
+    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
+    with KernelCodegen {
 
   override def dataType: DataType = AscendingPairs.OutType
   override def nullIntolerant: Boolean = true
@@ -205,10 +134,6 @@ case class AscendingPairs(child: Expression)
 
   override protected def nullSafeEval(input: Any): Any =
     AscendingPairs.expand(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.AscendingPairs.expand($c);")
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

@@ -3,7 +3,6 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftinternal.Bridge
 import org.apache.spark.sql.types._
@@ -30,7 +29,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * Deterministic across sessions/partitions: pure function of the input.
   */
 case class MinHashSignature(child: Expression, k: Int, shingleN: Int)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with KernelCodegen {
 
   // k <= 0 would emit an empty signature (divide-by-zero in the Jaccard
   // estimate); shingleN <= 0 would absorb only the empty shingle, making

@@ -3,7 +3,6 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftinternal.Bridge
 import org.apache.spark.sql.types._
@@ -30,6 +29,7 @@ import org.apache.spark.sql.types._
   * (in the operator), so no rounding error accumulates across subspaces.
   */
 private[functions] trait PqCodebook {
+  def child: Expression
   def codebook: Array[Double]
   def m: Int
   def ksub: Int
@@ -53,8 +53,41 @@ private[functions] trait PqCodebook {
         s"$name expects ARRAY<FLOAT|DOUBLE>, got ${other.catalogString}")
     }
 
-  protected final def elem(a: ArrayData, i: Int, isFloat: Boolean): Double =
+  private lazy val isFloat =
+    child.dataType.asInstanceOf[ArrayType].elementType == FloatType
+
+  protected final def elem(a: ArrayData, i: Int): Double =
     if (isFloat) a.getFloat(i).toDouble else a.getDouble(i)
+
+  /** The child's value, checked to span the codebook's `m·subDim` dims. */
+  protected final def vec(a: Any, name: String): ArrayData = {
+    val v = a.asInstanceOf[ArrayData]
+    require(v.numElements() == m * subDim,
+      s"$name: vector of ${v.numElements()} dims, codebook spans ${m * subDim}")
+    v
+  }
+
+  /** The codeword of subspace `s` nearest `v`: the smallest 5dp-rounded
+    * L2², ties to the lowest index — the choice the oracles replay.
+    */
+  protected final def nearest(v: ArrayData, s: Int): Int = {
+    var best = 0
+    var bestD = Double.MaxValue
+    var j = 0
+    while (j < ksub) {
+      var d2 = 0.0
+      var d = 0
+      while (d < subDim) {
+        val diff = elem(v, s * subDim + d) - cb(s, j, d)
+        d2 += diff * diff
+        d += 1
+      }
+      val r = round5(d2)
+      if (r < bestD) { bestD = r; best = j } // strict <: ties keep lowest j
+      j += 1
+    }
+    best
+  }
 }
 
 /** PQ code of a vector: for each subspace, the index of the codeword with
@@ -63,7 +96,7 @@ private[functions] trait PqCodebook {
   */
 case class PqEncode(child: Expression, codebook: Array[Double],
     m: Int, ksub: Int, subDim: Int)
-    extends UnaryExpression with CodegenFallback with PqCodebook {
+    extends UnaryExpression with KernelCodegen with PqCodebook {
 
   override def prettyName: String = "pq_encode"
   override def checkInputDataTypes(): TypeCheckResult =
@@ -71,35 +104,9 @@ case class PqEncode(child: Expression, codebook: Array[Double],
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
   override def nullIntolerant: Boolean = true
 
-  private lazy val isFloat =
-    child.dataType.asInstanceOf[ArrayType].elementType == FloatType
-
   override def nullSafeEval(a: Any): Any = {
-    val v = a.asInstanceOf[ArrayData]
-    require(v.numElements() == m * subDim,
-      s"$prettyName: vector of ${v.numElements()} dims, codebook spans ${m * subDim}")
-    val out = new Array[Int](m)
-    var s = 0
-    while (s < m) {
-      var best = 0
-      var bestD = Double.MaxValue
-      var j = 0
-      while (j < ksub) {
-        var d2 = 0.0
-        var d = 0
-        while (d < subDim) {
-          val diff = elem(v, s * subDim + d, isFloat) - cb(s, j, d)
-          d2 += diff * diff
-          d += 1
-        }
-        val r = round5(d2)
-        if (r < bestD) { bestD = r; best = j } // strict <: ties keep lowest j
-        j += 1
-      }
-      out(s) = best
-      s += 1
-    }
-    new GenericArrayData(out)
+    val v = vec(a, prettyName)
+    new GenericArrayData(Array.tabulate(m)(nearest(v, _)))
   }
 
   override protected def withNewChildInternal(c: Expression): PqEncode =
@@ -113,7 +120,7 @@ case class PqEncode(child: Expression, codebook: Array[Double],
   */
 case class PqAdcTable(child: Expression, codebook: Array[Double],
     m: Int, ksub: Int, subDim: Int)
-    extends UnaryExpression with CodegenFallback with PqCodebook {
+    extends UnaryExpression with KernelCodegen with PqCodebook {
 
   override def prettyName: String = "pq_adc_table"
   override def checkInputDataTypes(): TypeCheckResult =
@@ -121,13 +128,8 @@ case class PqAdcTable(child: Expression, codebook: Array[Double],
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
   override def nullIntolerant: Boolean = true
 
-  private lazy val isFloat =
-    child.dataType.asInstanceOf[ArrayType].elementType == FloatType
-
   override def nullSafeEval(a: Any): Any = {
-    val v = a.asInstanceOf[ArrayData]
-    require(v.numElements() == m * subDim,
-      s"$prettyName: vector of ${v.numElements()} dims, codebook spans ${m * subDim}")
+    val v = vec(a, prettyName)
     val out = new Array[Double](m * ksub)
     var s = 0
     while (s < m) {
@@ -136,7 +138,7 @@ case class PqAdcTable(child: Expression, codebook: Array[Double],
         var dot = 0.0
         var d = 0
         while (d < subDim) {
-          dot += elem(v, s * subDim + d, isFloat) * cb(s, j, d)
+          dot += elem(v, s * subDim + d) * cb(s, j, d)
           d += 1
         }
         out(s * ksub + j) = dot
@@ -158,7 +160,7 @@ case class PqAdcTable(child: Expression, codebook: Array[Double],
   */
 case class PqEncodeBytes(child: Expression, codebook: Array[Double],
     m: Int, ksub: Int, subDim: Int)
-    extends UnaryExpression with CodegenFallback with PqCodebook {
+    extends UnaryExpression with KernelCodegen with PqCodebook {
 
   require(ksub <= 256, s"pq_encode_bytes: ksub=$ksub exceeds one byte per code")
 
@@ -168,35 +170,9 @@ case class PqEncodeBytes(child: Expression, codebook: Array[Double],
   override def dataType: DataType = BinaryType
   override def nullIntolerant: Boolean = true
 
-  private lazy val isFloat =
-    child.dataType.asInstanceOf[ArrayType].elementType == FloatType
-
   override def nullSafeEval(a: Any): Any = {
-    val v = a.asInstanceOf[ArrayData]
-    require(v.numElements() == m * subDim,
-      s"$prettyName: vector of ${v.numElements()} dims, codebook spans ${m * subDim}")
-    val out = new Array[Byte](m)
-    var s = 0
-    while (s < m) {
-      var best = 0
-      var bestD = Double.MaxValue
-      var j = 0
-      while (j < ksub) {
-        var d2 = 0.0
-        var d = 0
-        while (d < subDim) {
-          val diff = elem(v, s * subDim + d, isFloat) - cb(s, j, d)
-          d2 += diff * diff
-          d += 1
-        }
-        val r = round5(d2)
-        if (r < bestD) { bestD = r; best = j }
-        j += 1
-      }
-      out(s) = best.toByte
-      s += 1
-    }
-    out
+    val v = vec(a, prettyName)
+    Array.tabulate(m)(nearest(v, _).toByte)
   }
 
   override protected def withNewChildInternal(c: Expression): PqEncodeBytes =
@@ -210,7 +186,7 @@ case class PqEncodeBytes(child: Expression, codebook: Array[Double],
   */
 case class PqAdcScoreBytes(left: Expression, right: Expression, ksub: Int)
     extends org.apache.spark.sql.catalyst.expressions.BinaryExpression
-    with CodegenFallback {
+    with KernelCodegen {
 
   require(ksub >= 1, s"pq_adc_score: ksub must be >= 1, got $ksub")
 

@@ -4,7 +4,6 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftinternal.Bridge
 import org.apache.spark.sql.types._
@@ -30,7 +29,7 @@ import org.apache.spark.sql.types._
   * cross product (the round-2 64-dim collapse).
   */
 case class SignBucketHash(child: Expression, planes: Int, seed: Long, dim: Int)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with KernelCodegen {
 
   // planes > 63 would wrap 1L << p so extra planes alias low bits; dim must
   // be positive for the plane matrix to exist
@@ -72,8 +71,10 @@ case class SignBucketHash(child: Expression, planes: Int, seed: Long, dim: Int)
     throw new IllegalArgumentException(
       s"signBucket: expected $dim-dim null-free vector, got len=$len nulls=$nulls")
 
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
+  // no null short-cut: a null vector raises, on both evaluation paths
+  override def eval(input: InternalRow): Any = nullSafeEval(child.eval(input))
+
+  override def nullSafeEval(v: Any): Any = {
     if (v == null) fail("null", "null")
     val arr = v.asInstanceOf[ArrayData]
     if (arr.numElements() != dim) fail(arr.numElements().toString, "false")

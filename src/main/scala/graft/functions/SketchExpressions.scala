@@ -4,13 +4,12 @@ import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.graftinternal.Bridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.sketch.{BloomFilter, CountMinSketch}
 
-/** Codegen'd probes against broadcast sketches (CountMinSketch /
+/** Probes against broadcast sketches (CountMinSketch /
   * BloomFilter from Spark's public `org.apache.spark.util.sketch`).
   *
   * Why Expressions and not UDFs: the probe sits on the 100 TB scan's hot
@@ -18,7 +17,7 @@ import org.apache.spark.util.sketch.{BloomFilter, CountMinSketch}
   * the tail ([[graft.operators.Sketch]]). A ScalaUDF forces a
   * per-row InternalRow→Row conversion and breaks the surrounding
   * whole-stage-codegen span; these probe the sketch directly on the
-  * UTF8String's bytes inside the generated loop.
+  * UTF8String's bytes inside the generated loop ([[KernelCodegen]]).
   *
   * Hash agreement (the correctness-critical invariant): both sketches are
   * BUILT from string columns, which Spark's builders feed as UTF-8 bytes
@@ -29,11 +28,11 @@ import org.apache.spark.util.sketch.{BloomFilter, CountMinSketch}
   * construction ([[graft.operators.Sketch.requireStringKey]]).
   *
   * The sketch rides a `Broadcast` (one copy per executor, not per task
-  * closure); the generated code resolves `.value()` once per partition
-  * into a mutable-state slot, so the per-row cost is the sketch's own
+  * closure); a `@transient lazy val` resolves `.value` once per
+  * deserialized expression, so the per-row cost is the sketch's own
   * hash-and-lookup.
   */
-private[graft] trait SketchProbe extends UnaryExpression {
+private[graft] trait SketchProbe extends UnaryExpression with KernelCodegen {
   override def dataType: DataType = BooleanType
   override def nullIntolerant: Boolean = true
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
@@ -59,16 +58,6 @@ case class CmsAtLeast(child: Expression, bcCms: Broadcast[CountMinSketch],
   override def nullSafeEval(v: Any): Any =
     cms.estimateCount(v.asInstanceOf[UTF8String].getBytes) >= threshold
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val bcRef = ctx.addReferenceObj("bcCms", bcCms,
-      classOf[Broadcast[CountMinSketch]].getName)
-    val cmsVar = ctx.addMutableState(
-      "org.apache.spark.util.sketch.CountMinSketch", "graftCms",
-      v => s"$v = (org.apache.spark.util.sketch.CountMinSketch) $bcRef.value();")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = $cmsVar.estimateCount($c.getBytes()) >= ${threshold}L;")
-  }
-
   override protected def withNewChildInternal(c: Expression): CmsAtLeast =
     copy(child = c)
 }
@@ -86,16 +75,6 @@ case class BloomMightContain(child: Expression, bcBloom: Broadcast[BloomFilter])
 
   override def nullSafeEval(v: Any): Any =
     bloom.mightContainBinary(v.asInstanceOf[UTF8String].getBytes)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val bcRef = ctx.addReferenceObj("bcBloom", bcBloom,
-      classOf[Broadcast[BloomFilter]].getName)
-    val bfVar = ctx.addMutableState(
-      "org.apache.spark.util.sketch.BloomFilter", "graftBloom",
-      v => s"$v = (org.apache.spark.util.sketch.BloomFilter) $bcRef.value();")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = $bfVar.mightContainBinary($c.getBytes());")
-  }
 
   override protected def withNewChildInternal(c: Expression): BloomMightContain =
     copy(child = c)

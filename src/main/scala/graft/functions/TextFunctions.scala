@@ -7,10 +7,12 @@ import org.apache.spark.sql.functions._
   * §2.4): tokenization, shingling, MinHash signatures, LSH banding,
   * language-ID heuristics, quality scoring, rolling-hash fingerprints.
   *
-  * Everything here is a composition of codegen'd built-ins (split, HOF
-  * transform/filter/aggregate, xxhash64) — columnar, no UDFs, no
-  * serialization boundary — so the whole pipeline stays inside
-  * whole-stage codegen and scales linearly with input splits.
+  * Everything here is a composition of built-ins and graft's own kernels
+  * — columnar, no UDFs, no serialization boundary — and scales linearly
+  * with input splits. The kernels and most built-ins compile into
+  * whole-stage codegen; the higher-order functions (`transform`,
+  * `filter`, `aggregate`, `zip_with`) do not: Spark runs them
+  * interpreted, and an operator holding one leaves its codegen stage.
   */
 object TextFunctions {
 

@@ -5,7 +5,6 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftinternal.Bridge
 import org.apache.spark.sql.types._
@@ -97,11 +96,11 @@ object TfIdfKernel {
 
 /** `tfidf_top_terms(text)` → `array<struct<term string, tfidf double>>`,
   * the document's top-k distinct terms by rounded tf-idf (see
-  * [[TfIdfKernel]]). The idf model rides a Broadcast; generated code
-  * resolves `.value()` once per partition into a mutable-state slot.
+  * [[TfIdfKernel]]). The idf model rides a Broadcast, resolved once per
+  * deserialized expression.
   */
 case class TfIdfTopTerms(child: Expression, bcModel: Broadcast[IdfModel],
-    k: Int) extends UnaryExpression {
+    k: Int) extends UnaryExpression with KernelCodegen {
 
   override def prettyName: String = "tfidf_top_terms"
   override def nullIntolerant: Boolean = true
@@ -121,16 +120,6 @@ case class TfIdfTopTerms(child: Expression, bcModel: Broadcast[IdfModel],
 
   override protected def nullSafeEval(input: Any): Any =
     TfIdfKernel.topTerms(input.asInstanceOf[UTF8String], model, k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val bcRef = ctx.addReferenceObj("bcIdf", bcModel,
-      classOf[Broadcast[IdfModel]].getName)
-    val modelVar = ctx.addMutableState(
-      "graft.functions.IdfModel", "graftIdfModel",
-      v => s"$v = (graft.functions.IdfModel) $bcRef.value();")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.TfIdfKernel.topTerms($c, $modelVar, $k);")
-  }
 
   override protected def withNewChildInternal(c: Expression): TfIdfTopTerms =
     copy(child = c)

@@ -3,13 +3,12 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftinternal.Bridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Fused lowercase + space-trim + whitespace tokenization as ONE codegen'd
+/** Fused lowercase + space-trim + whitespace tokenization as ONE
   * byte scan — the drop-in replacement for `split(trim(lower(text)), "\\s+")`,
   * the opening move of every text operator in the engine (tf-idf, BM25,
   * shingles, MinHash, token stats, quality scores).
@@ -40,7 +39,7 @@ object WsTokens {
   @inline private def isWs(b: Byte): Boolean = b == 32 || (b >= 9 && b <= 13)
 
   /** lower → trim(space) → split-on-\s+ with Java limit=-1 semantics.
-    * Called from generated code (static forwarder) and from nullSafeEval.
+    * Called from [[WhitespaceTokens]]' nullSafeEval and [[TfIdfKernel]].
     *
     * One bulk `getBytes` materializes the lowered doc as a heap array;
     * every token is then a zero-copy `fromBytes(bytes, pos, len)` WRAP of
@@ -77,7 +76,8 @@ object WsTokens {
 /** `ws_tokens(text)` — see [[WsTokens]]. Output never contains nulls
   * (empty-field edges produce `""`, as the regex chain does).
   */
-case class WhitespaceTokens(child: Expression) extends UnaryExpression {
+case class WhitespaceTokens(child: Expression) extends UnaryExpression
+    with KernelCodegen {
 
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def nullIntolerant: Boolean = true
@@ -91,10 +91,6 @@ case class WhitespaceTokens(child: Expression) extends UnaryExpression {
 
   override protected def nullSafeEval(input: Any): Any =
     WsTokens.tokensOf(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.WsTokens.tokensOf($c);")
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

@@ -328,7 +328,7 @@ case class QuantizeInt8(child: Expression) extends UnaryExpression {
   * 64-bit multiply could not be expressed there).
   */
 case class SimHash64(child: Expression) extends UnaryExpression
-    with codegen.CodegenFallback {
+    with KernelCodegen {
 
   override def prettyName: String = "simhash64"
   override def dataType: DataType = LongType
@@ -358,9 +358,6 @@ case class SimHash64(child: Expression) extends UnaryExpression
     while (j < 64) { if (counts(j) > 0) out |= (1L << j); j += 1 }
     out
   }
-
-  // Interpreted eval only: SimHash runs once per document (not per pair), so
-  // it is never the hot loop; codegen would buy nothing measurable.
 
   override protected def withNewChildInternal(c: Expression): SimHash64 = copy(child = c)
 }

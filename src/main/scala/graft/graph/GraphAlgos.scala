@@ -792,9 +792,9 @@ object GraphAlgos {
       .pin(true)
     // sorted adjacency: per-vertex O(d log d) at build time buys the
     // O(Σ wedges) closing stage a two-pointer merge instead of the
-    // builtin array_intersect's per-row hash set (sorted_intersect —
-    // graft.functions.SortedLongMerge; equality on this input shape is
-    // spec-pinned)
+    // builtin array_intersect's per-row hash set (the merge inside
+    // graft.functions.TriangleContribs; its equality with array_intersect
+    // on this input shape is spec-pinned)
     val adjPlain = dirE.groupBy(col("s"))
       .agg(array_sort(collect_list(col("t"))).as("nbrs"))
       .pin(true)

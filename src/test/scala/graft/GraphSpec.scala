@@ -4,7 +4,6 @@ import org.apache.spark.sql.functions._
 import graft.graph.{DemoGraph, PropertyGraph}
 import graft.schema._
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.graftinternal.Bridge
 
 /** Golden demo-fixture tests (SURVEY.md §5.2.3) + operator semantics
   * (SURVEY.md §5.2.2 invariants). Expectations derived from the reference's
@@ -262,11 +261,13 @@ class GraphSpec extends SparkSpec {
     assert(measured === bcast, "measured dispatch must match forced regimes")
   }
 
-  test("sorted_intersect equals array_intersect on the adjacency input shape") {
+  test("triangle_contribs closers equal array_intersect on the adjacency input shape") {
     // the triangle kernel's precondition: ascending, distinct, non-null
     // long arrays (what array_sort(collect_list) over a dedup'd edge set
     // emits) — including empty and disjoint edges
-    import org.apache.spark.sql.functions.{array_intersect, col}
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.functions.{array_intersect, col, lit}
+    import graft.functions.TriangleContribs.triangleContribs
     val rnd = new scala.util.Random(7)
     val rows = (0 until 200).map { _ =>
       def arr() = rnd.nextInt(12) match {
@@ -277,13 +278,15 @@ class GraphSpec extends SparkSpec {
     }
     import spark.implicits._
     val df = rows.toDF("a", "b")
-    val got = df.select(Bridge.column(graft.functions.SortedIntersect(
-        Bridge.expression(col("a")), Bridge.expression(col("b")))))
-      .collect().map(_.getSeq[Long](0))
+    val got = df.select(triangleContribs(lit(-1L), lit(-2L), col("a"), col("b")))
+      .collect().map(_.getSeq[Row](0))
     val want = df.select(array_intersect(col("a"), col("b")))
       .collect().map(_.getSeq[Long](0))
     got.zip(want).zip(rows).foreach { case ((g2, w), (a, b)) =>
-      assert(g2 === w, s"diverged on ${a.toSeq} ∩ ${b.toSeq}")
+      val closers = g2.drop(2).map(r => r.getLong(0) -> r.getLong(1))
+      assert(closers === w.map(_ -> 1L), s"diverged on ${a.toSeq} ∩ ${b.toSeq}")
+      val ends = if (w.isEmpty) Nil else Seq(-1L -> w.size.toLong, -2L -> w.size.toLong)
+      assert(g2.take(2).map(r => r.getLong(0) -> r.getLong(1)) === ends)
     }
   }
 
@@ -554,6 +557,17 @@ class GraphSpec extends SparkSpec {
         DemoGraph.schema.relationDefs.foreach(r => spark.sql(s"DROP TABLE IF EXISTS graftspec_edges_${r.name}"))
         spark.sql("DROP TABLE IF EXISTS graftspec_schema")
       }
+    }
+  }
+
+  test("g12's bucketed tables in the session warehouse are deleted at JVM exit") {
+    import graft.queries.GraphQueries
+    assert(GraphQueries.bucketedGraph(spark, TestSpark.sf0001).edgeTables.nonEmpty)
+    val locs = GraphQueries.tableLocations(spark, "graft_g12")
+    assert(locs.nonEmpty, "g12 staged no catalog tables")
+    locs.foreach { l =>
+      assert(java.nio.file.Files.isDirectory(l), s"no table data at $l")
+      assert(Staged.atExit.contains(l), s"$l is not registered for deletion at exit")
     }
   }
 }

@@ -30,12 +30,6 @@ class RegimeSpec extends SparkSpec {
   private def pairs = edges.select(col("src"), col("dst"))
   private def verts = (0L to 9L).toDF("vid")
 
-  private def withConf[T](key: String, value: String)(body: => T): T = {
-    val saved = spark.conf.getOption(key)
-    spark.conf.set(key, value)
-    try body finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
-  }
-
   /** The executed plans of every SQL execution `body` runs (eager
     * checkpoints included), read off a QueryExecutionListener. Listener
     * events arrive in posting order, so a fence query run after `body`
@@ -76,7 +70,7 @@ class RegimeSpec extends SparkSpec {
     intercept[IllegalStateException](Regime.atScale(throw new IllegalStateException("x")))
     assert(Regime.fits(0L, 5L), "the scope must end when its body throws")
     // a negative threshold, Spark's documented off switch, never broadcasts
-    withConf("spark.sql.autoBroadcastJoinThreshold", "-1") {
+    withConfs("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       assert(!Regime.broadcastable(BigInt(0)))
     }
   }
@@ -135,7 +129,7 @@ class RegimeSpec extends SparkSpec {
   test("the scale branches no earlier spec reached run their scale plans") {
     // broadcast disabled for Catalyst and AQE alike: the only broadcasts
     // left are the kernels' own hints, so their absence shows the branch
-    withConf("spark.sql.autoBroadcastJoinThreshold", "-1") {
+    withConfs("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       def shuffledOnly(plans: Seq[String], what: String): Unit = {
         assert(plans.exists(_.contains("SortMergeJoin")), s"$what ran no join")
         assert(!plans.exists(_.contains("BroadcastHashJoin")),

@@ -14,17 +14,6 @@ class ScaleFeaturesSpec extends SparkSpec {
 
   private val dir = TestSpark.sf0001
 
-  /** Run `body` with the confs set, restoring the previous values after. */
-  private def withConfs[T](confs: (String, String)*)(body: => T): T = {
-    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
-    }
-  }
-
   test("runtime bloom filter prunes the fact side of a selective join") {
     withConfs(
       "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",

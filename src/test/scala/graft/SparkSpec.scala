@@ -32,6 +32,35 @@ abstract class SparkSpec extends AnyFunSuite {
     finally Staged.deleteTree(dir)
   }
 
+  /** Runs `body` with the confs set, restoring the previous values after. */
+  def withConfs[T](confs: (String, String)*)(body: => T): T = {
+    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None)    => spark.conf.unset(k)
+    }
+  }
+
+  /** `body`'s result in each expression evaluation mode, by mode name:
+    * whole-stage codegen; expression codegen without whole-stage; and
+    * interpreted eval. Codegen fallback is off in all three, so generated
+    * code that does not compile fails instead of quietly running
+    * interpreted.
+    */
+  def inEvalModes[T](body: => T): Seq[(String, T)] = {
+    def mode(wholeStage: Boolean, factory: String) = Seq(
+      "spark.sql.codegen.wholeStage" -> wholeStage.toString,
+      "spark.sql.codegen.factoryMode" -> factory,
+      "spark.sql.codegen.fallback" -> "false")
+    Seq(
+      "whole-stage" -> mode(wholeStage = true, "CODEGEN_ONLY"),
+      "codegen" -> mode(wholeStage = false, "CODEGEN_ONLY"),
+      "interpreted" -> mode(wholeStage = false, "NO_CODEGEN"))
+      .map { case (name, confs) => name -> withConfs(confs: _*)(body) }
+  }
+
   /** The residue law: nothing `op` pins outlives its answer. `op` runs and
     * its answer is read. A frame answer is a kernel's contract — its own
     * pins pass to the caller, who frees them with [[Pinned.free]] once
