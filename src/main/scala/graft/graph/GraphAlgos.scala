@@ -476,7 +476,7 @@ object GraphAlgos {
     * measured 1.6s (and a matching GC bill charged to the NEXT bench
     * query) at 9.35M puts+gets. Keys must be distinct (vertex ids are).
     */
-  private final class LongIntMap(expected: Int) {
+  private[graph] final class LongIntMap(expected: Int) {
     private val cap = java.lang.Integer.highestOneBit(
       math.max(16, expected * 2) - 1) << 1
     private val keys = new Array[Long](cap)

@@ -1,10 +1,16 @@
 package graft.graph
 
+import scala.jdk.CollectionConverters._
+import scala.util.Try
+
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, EqualTo, Expression, In}
+import org.apache.spark.sql.catalyst.plans.logical.Filter
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.Pinned
+import graft.{Pinned, Regime}
 import graft.Pinned.PinSyntax
 import graft.schema._
 import graft.schema.GraphSchema.{DstCol, IdCol, SrcCol}
@@ -28,11 +34,41 @@ import graft.schema.GraphSchema.{DstCol, IdCol, SrcCol}
   *   - At scale, node and edge tables are plain partitioned Parquet;
   *     traversals are equi-joins that Catalyst plans (broadcast for small
   *     extents, sort-merge/shuffled-hash for large, AQE for skew).
+  *   - Indexed snapshot: `checkpointed()` and `empty` give a snapshot a
+  *     driver-side [[SnapshotIndex]] of its contents — per relation a CSR
+  *     adjacency in both orientations, per label the node rows keyed by id
+  *     (the reference's per-node adjacency, src/Edgy/Operations.hs:220-301).
+  *     Point mutations carry it forward as base ⊕ delta, and the next
+  *     `checkpointed()` folds the delta on the driver. While the snapshot
+  *     fits `SnapshotIndex.MaxRows`, `isRelated`, `getAttribute`,
+  *     `lookupBy` and a traversal that starts from literal ids run no
+  *     Spark job, at O(degree) cost. Bulk mutations, `copy`, `load` and
+  *     values the index cannot hold exactly drop it: that snapshot reads
+  *     by scan until its next `checkpointed()`. The Spark tables are the
+  *     same either way.
   */
 final case class PropertyGraph(
     schema: GraphSchema,
     nodeTables: Map[String, DataFrame],
     edgeTables: Map[String, DataFrame]) {
+
+  /** This snapshot's index, set once as it is made by a point mutation,
+    * `checkpointed()` or `empty`. A graph made any other way has none.
+    */
+  @volatile private var index: Option[SnapshotIndex] = None
+
+  private def indexed(ix: Option[SnapshotIndex]): PropertyGraph = { index = ix; this }
+
+  /** base ⊕ delta, when this snapshot has an index in the small regime. */
+  private def contents: Option[SnapshotIndex.Contents] = index.flatMap(_.contents)
+
+  /** A successor snapshot over new tables, carrying the index through
+    * `step` (None drops it).
+    */
+  private def next(nodeTables: Map[String, DataFrame] = nodeTables,
+      edgeTables: Map[String, DataFrame] = edgeTables)(
+      step: SnapshotIndex => Option[SnapshotIndex]): PropertyGraph =
+    PropertyGraph(schema, nodeTables, edgeTables).indexed(index.flatMap(step))
 
   // ---------------------------------------------------------------- reads
 
@@ -71,7 +107,8 @@ final case class PropertyGraph(
   /** Begin a traversal at a type extent (reference: the
     * `getRelated @"Person" universe` idiom, app/Main.hs:133-135).
     */
-  def from(label: String): Traversal = Traversal(this, label, nodes(label))
+  def from(label: String): Traversal =
+    Traversal(this, label, nodes(label)).knowing(Traversal.WholeExtent)
 
   /** String id from the API surface coerced to the schema's id type, so
     * point reads/mutations keep their string signatures (the reference's
@@ -83,10 +120,18 @@ final case class PropertyGraph(
 
   /** Edge-existence predicate (reference: isRelated,
     * src/Edgy/Operations.hs:289-301). For many probes at once use
-    * [[areRelated]], the distributed form.
+    * [[areRelated]], the distributed form. An indexed snapshot answers
+    * from its adjacency at O(degree) with no Spark job; one without an
+    * index (see the header) runs a filtered scan of the edge view.
     */
-  def isRelated(relName: String, srcId: String, dstId: String): Boolean =
-    !edges(relName).where(col(SrcCol) === cid(srcId) && col(DstCol) === cid(dstId)).isEmpty
+  def isRelated(relName: String, srcId: String, dstId: String): Boolean = {
+    val ref = schema.relation(relName)
+    val (s, d) = (cid(srcId), cid(dstId))
+    contents match {
+      case Some(c) => c.neighbors(ref, s).contains(d)
+      case None => !edges(relName).where(col(SrcCol) === s && col(DstCol) === d).isEmpty
+    }
+  }
 
   /** Bulk edge-existence: the subset of `pairs` (src, dst) that are related
     * — one left-semi join instead of a driver loop of point probes.
@@ -95,15 +140,16 @@ final case class PropertyGraph(
     pairs.join(edges(relName), Seq(SrcCol, DstCol), "left_semi")
 
   /** Point attribute read with optional default
-    * (reference: getAttribute, src/Edgy/Operations.hs:220-244).
+    * (reference: getAttribute, src/Edgy/Operations.hs:220-244). Reads
+    * through [[nodeRows]]: no Spark job on an indexed snapshot.
     */
   def getAttribute(label: String, id: String, attr: String): Any = {
     val d = schema.node(label)
     val a = d.attr(attr).getOrElse(
       throw new IllegalArgumentException(s"unknown attribute $label.$attr"))
-    val rows = nodes(label).where(col(IdCol) === cid(id)).select(col(attr)).collect()
-    rows.headOption match {
-      case Some(r) if !r.isNullAt(0) => r.get(0)
+    val pos = 1 + d.attrs.indexOf(a)
+    nodeRows(label, id).headOption match {
+      case Some(r) if !r.isNullAt(pos) => r.get(pos)
       case Some(_) if !a.required    => a.defaultValue
       case Some(_) =>
         throw new IllegalStateException(s"missing required attribute $label.$attr for $id")
@@ -112,13 +158,48 @@ final case class PropertyGraph(
     }
   }
 
+  /** The rows of `label` with id `id`, as [[nodes]] shows them, in table
+    * order — the one point read of a node, shared by [[getAttribute]] and
+    * `graft.typed`. Read from the index when the snapshot has one, else
+    * by a filtered scan of the extent.
+    */
+  private[graft] def nodeRows(label: String, id: String): Seq[Row] = {
+    val key = cid(id)
+    schema.node(label) // an unknown label raises here, as the scan's would
+    contents match {
+      case Some(c) => c.nodeRows(label, key)
+      case None => nodes(label).where(col(IdCol) === key).collect().toSeq
+    }
+  }
+
+  /** The target rows of every `relName` edge from `srcId` (one per edge
+    * and matching node row, as [[nodes]] shows them) — the typed point
+    * traversal's read, from the index when the snapshot has one.
+    */
+  private[graft] def relatedRows(relName: String, srcId: String): Seq[Row] = {
+    val ref = schema.relation(relName)
+    val key = cid(srcId)
+    contents match {
+      case Some(c) => c.neighbors(ref, key).flatMap(c.nodeRows(ref.dstLabel, _)).toVector
+      case None => edges(relName).where(col(SrcCol) === key)
+        .join(nodes(ref.dstLabel), col(DstCol) === col(IdCol))
+        .drop(SrcCol, DstCol).collect().toSeq
+    }
+  }
+
   /** Exact-name lookup asserting exactly one hit — mirror of the demo's
     * `lookupByName` including its error behavior (reference:
-    * app/Main.hs:118-140: errors on 0 and on >1 matches).
+    * app/Main.hs:118-140: errors on 0 and on >1 matches). An indexed
+    * snapshot scans its driver-side rows of the label, with no Spark job,
+    * when `value` has the attribute's exact type; otherwise, and without
+    * an index, the extent is scanned by Spark.
     */
   def lookupBy(label: String, attr: String, value: Any): String = {
-    val hits = nodes(label).where(col(attr) === lit(value)).select(col(IdCol))
-      .limit(3).collect().map(_.get(0).toString)
+    val hits = contents.flatMap(_.lookup(label, attr, value)) match {
+      case Some(ids) => ids.take(3).map(_.toString).toArray
+      case None => nodes(label).where(col(attr) === lit(value)).select(col(IdCol))
+        .limit(3).collect().map(_.get(0).toString)
+    }
     hits.length match {
       case 1 => hits.head
       case 0 => throw new NoSuchElementException(s"No $label named $value")
@@ -127,8 +208,10 @@ final case class PropertyGraph(
   }
 
   // ----------------------------------------------------------- mutations
-  // All copy-on-write; per-op cost is O(table) but ops batch into one
-  // snapshot. Semantics preserved exactly; latency profile deliberately not
+  // All copy-on-write: each returns a new snapshot whose tables add one
+  // union or filter to the plan (checkpointed() cuts the chain). Point
+  // mutations also carry the index forward as base ⊕ delta at O(1) driver
+  // cost, so reads on the result stay job-free; bulk mutations drop it
   // (SURVEY.md §7 risk 1).
 
   private def spark: SparkSession = nodeTables.head._2.sparkSession
@@ -154,7 +237,14 @@ final case class PropertyGraph(
       }
     }
     val row = oneRow(d.structType(schema.idType), values)
-    copy(nodeTables = nodeTables.updated(label, nodeTables(label).unionByName(row)))
+    next(nodeTables = nodeTables.updated(label, nodeTables(label).unionByName(row))) { ix =>
+      val shown = values.head +: d.attrs.zip(values.tail).map { case (a, v) =>
+        if (v == null && !a.required) a.defaultValue else v }
+      if (SnapshotIndex.exactDefaults(d) &&
+          d.attrs.zip(values.tail).forall { case (a, v) => SnapshotIndex.exact(a.dataType, v) })
+        Some(ix.addNode(label, values.head, Row.fromSeq(shown)))
+      else None
+    }
   }
 
   /** Delete a node and cascade: remove every edge touching it, across every
@@ -169,7 +259,7 @@ final case class PropertyGraph(
         (if (r.to == label) col(DstCol) === cid(id) else lit(false))
       acc.updated(r.name, acc(r.name).where(!pred))
     }
-    copy(nodeTables = newNodes, edgeTables = newEdges)
+    next(newNodes, newEdges)(ix => Some(ix.deleteNode(label, cid(id))))
   }
 
   /** Overwrite one attribute of one node (reference: setAttribute,
@@ -184,7 +274,12 @@ final case class PropertyGraph(
       s"required attribute $label.$attr cannot be set to null")
     val updated = nodeTables(label).withColumn(
       attr, when(col(IdCol) === cid(id), lit(value)).otherwise(col(attr)))
-    copy(nodeTables = nodeTables.updated(label, updated))
+    next(nodeTables = nodeTables.updated(label, updated)) { ix =>
+      if (SnapshotIndex.exactDefaults(d) && SnapshotIndex.exact(a.dataType, value))
+        Some(ix.setAttribute(label, cid(id), 1 + d.attrs.indexOf(a),
+          if (value == null) a.defaultValue else value))
+      else None
+    }
   }
 
   private def storedOrientation(ref: RelationRef, a: String, b: String): (String, String) =
@@ -200,8 +295,10 @@ final case class PropertyGraph(
   def addRelated(relName: String, srcId: String, dstId: String): PropertyGraph = {
     val ref = schema.relation(relName)
     val (s, d) = storedOrientation(ref, srcId, dstId)
-    copy(edgeTables = edgeTables.updated(
-      ref.rel.name, edgeTables(ref.rel.name).unionByName(edgeRow(s, d))))
+    next(edgeTables = edgeTables.updated(
+      ref.rel.name, edgeTables(ref.rel.name).unionByName(edgeRow(s, d)))) { ix =>
+      Some(ix.addEdge(ref.rel.name, cid(s), cid(d)))
+    }
   }
 
   /** Bulk node insert — the distributed mutation path (one union for the
@@ -238,24 +335,36 @@ final case class PropertyGraph(
     * point-mutation convenience). `pairs` columns: (src, dst) in the
     * direction named by `relName`; storage orientation is handled here.
     */
-  def addRelatedBulk(relName: String, pairs: DataFrame): PropertyGraph = {
+  def addRelatedBulk(relName: String, pairs: DataFrame): PropertyGraph =
+    copy(edgeTables = withEdges(relName, pairs))
+
+  /** The edge tables with `pairs` (in `relName`'s direction) unioned
+    * onto the relation's stored table.
+    */
+  private def withEdges(relName: String, pairs: DataFrame): Map[String, DataFrame] = {
     val ref = schema.relation(relName)
     val oriented =
       if (ref.reversed) pairs.select(col(DstCol).as(SrcCol), col(SrcCol).as(DstCol))
       else pairs.select(col(SrcCol), col(DstCol))
-    copy(edgeTables = edgeTables.updated(
-      ref.rel.name, edgeTables(ref.rel.name).unionByName(oriented)))
+    edgeTables.updated(ref.rel.name, edgeTables(ref.rel.name).unionByName(oriented))
   }
 
   /** Cut lineage: materialize every table via localCheckpoint. After many
     * copy-on-write mutations the plan is a deep union/filter chain; a
     * periodic checkpoint bounds plan depth (and analysis time) without
     * changing semantics. Eager by default.
+    *
+    * The result is an indexed snapshot. When this snapshot's index base
+    * was built, base ⊕ delta is folded into the new base on the driver,
+    * with no Spark job; otherwise the new base is collected from the new
+    * pins on its first point read.
     */
-  def checkpointed(eager: Boolean = true): PropertyGraph =
-    copy(
-      nodeTables = nodeTables.map { case (k, v) => k -> v.pin(eager) },
-      edgeTables = edgeTables.map { case (k, v) => k -> v.pin(eager) })
+  def checkpointed(eager: Boolean = true): PropertyGraph = {
+    val g = PropertyGraph(schema,
+      nodeTables.map { case (k, v) => k -> v.pin(eager) },
+      edgeTables.map { case (k, v) => k -> v.pin(eager) })
+    g.indexed(Some(index.flatMap(_.folded).getOrElse(SnapshotIndex.over(g))))
+  }
 
   /** Release every checkpoint block this snapshot's tables pin (no-op on
     * non-checkpointed tables). Call ONLY after every consumer of the
@@ -279,8 +388,11 @@ final case class PropertyGraph(
         (col(SrcCol) === cid(s) && col(DstCol) === cid(d)) ||
           (col(SrcCol) === cid(d) && col(DstCol) === cid(s))
       else col(SrcCol) === cid(s) && col(DstCol) === cid(d)
-    copy(edgeTables = edgeTables.updated(
-      ref.rel.name, edgeTables(ref.rel.name).where(!hit)))
+    next(edgeTables = edgeTables.updated(
+      ref.rel.name, edgeTables(ref.rel.name).where(!hit))) { ix =>
+      val one = ix.removeEdge(ref.rel.name, cid(s), cid(d))
+      Some(if (ref.rel.symmetric) one.removeEdge(ref.rel.name, cid(d), cid(s)) else one)
+    }
   }
 
   /** Replace the full target set of (node, relation) (reference: setRelated
@@ -305,7 +417,12 @@ final case class PropertyGraph(
       val rows = dstIds.map(d => Row(cid(srcId), cid(d)))
       val pairs = spark.createDataFrame(
         java.util.Arrays.asList(rows: _*), PropertyGraph.edgeStructOf(schema.idType))
-      cleared.addRelatedBulk(relName, pairs)
+      cleared.next(edgeTables = cleared.withEdges(relName, pairs)) { ix =>
+        Some(dstIds.foldLeft(ix) { (acc, d) =>
+          val (s, t) = storedOrientation(ref, srcId, d)
+          acc.addEdge(ref.rel.name, cid(s), cid(t))
+        })
+      }
     }
   }
 
@@ -318,8 +435,14 @@ final case class PropertyGraph(
       if (ref.rel.symmetric) col(SrcCol) === cid(srcId) || col(DstCol) === cid(srcId)
       else if (ref.reversed) col(DstCol) === cid(srcId)
       else col(SrcCol) === cid(srcId)
-    copy(edgeTables = edgeTables.updated(
-      ref.rel.name, edgeTables(ref.rel.name).where(!hit)))
+    val x = cid(srcId)
+    next(edgeTables = edgeTables.updated(
+      ref.rel.name, edgeTables(ref.rel.name).where(!hit))) { ix =>
+      Some(
+        if (ref.rel.symmetric) ix.clearSrc(ref.rel.name, x).clearDst(ref.rel.name, x)
+        else if (ref.reversed) ix.clearDst(ref.rel.name, x)
+        else ix.clearSrc(ref.rel.name, x))
+    }
   }
 
   // --------------------------------------------------------- validation
@@ -491,11 +614,33 @@ final case class PropertyGraph(
         .saveAsTable(s"${prefix}_edges_$r") }
   }
 
-  /** Cache all tables (the in-memory stance of the reference). */
-  def cached(): PropertyGraph =
-    copy(
-      nodeTables = nodeTables.map { case (k, v) => k -> v.cache() },
-      edgeTables = edgeTables.map { case (k, v) => k -> v.cache() })
+  // ------------------------------------------------- indexed traversals
+
+  /** The bag a filter on the whole extent of `label` selects, when it is
+    * `id = literal` or `id IN (literals)` and the snapshot has an index:
+    * one id per matching node row. None sends the traversal to Spark.
+    */
+  private[graph] def literalStart(label: String, filtered: DataFrame): Option[Vector[Any]] =
+    PropertyGraph.literalIds(filtered, schema.idType).flatMap { ids =>
+      contents.map { c =>
+        ids.filter(_ != null).distinct.flatMap(c.nodeRows(label, _).map(_.get(0))).toVector
+      }
+    }
+
+  /** One hop from the bag `ids` along `ref`, walked on the index: None
+    * without an index or past `SnapshotIndex.MaxLocalFrontier` ids.
+    */
+  private[graph] def walk(ref: RelationRef, ids: Vector[Any]): Option[Vector[Any]] =
+    contents.flatMap { c =>
+      val out = ids.iterator.flatMap(c.neighbors(ref, _))
+        .take(SnapshotIndex.MaxLocalFrontier.toInt + 1).toVector
+      if (Regime.fits(out.size.toLong, SnapshotIndex.MaxLocalFrontier)) Some(out) else None
+    }
+
+  /** A bag of ids as a local relation `(id)`. */
+  private[graph] def idFrame(ids: Seq[Any]): DataFrame =
+    spark.createDataFrame(ids.map(Row(_)).asJava,
+      StructType(Seq(StructField(IdCol, schema.idType, nullable = false))))
 }
 
 object PropertyGraph {
@@ -514,6 +659,35 @@ object PropertyGraph {
     case _           => v
   }
 
+  /** The literal ids of a filter of the form `id = v`, `v = id` or
+    * `id IN (v, …)` with foldable `v`s of the id type, read off the
+    * analyzed `Filter` on top of `filtered`; None for any other shape, or
+    * when a literal fails to evaluate (Spark raises that error itself).
+    */
+  private def literalIds(filtered: DataFrame, idType: DataType): Option[Seq[Any]] =
+    filtered.queryExecution.analyzed match {
+      case Filter(cond, child) =>
+        val id = child.output.find(_.name == IdCol).map(_.exprId)
+        def isId(e: Expression) = e match {
+          case a: AttributeReference => id.contains(a.exprId)
+          case _ => false
+        }
+        def value(e: Expression): Option[Any] =
+          if (!e.foldable || !e.deterministic || e.dataType != idType) None
+          else Try(CatalystTypeConverters.convertToScala(e.eval(), idType)).toOption
+        def all(es: Seq[Expression]): Option[Seq[Any]] = {
+          val vs = es.map(value)
+          if (vs.forall(_.isDefined)) Some(vs.flatten) else None
+        }
+        cond match {
+          case EqualTo(l, r) if isId(l) => all(Seq(r))
+          case EqualTo(l, r) if isId(r) => all(Seq(l))
+          case In(v, list) if isId(v) => all(list)
+          case _ => None
+        }
+      case _ => None
+    }
+
   /** Empty graph for a schema. */
   def empty(spark: SparkSession, schema: GraphSchema): PropertyGraph = {
     val nodes = schema.nodeDefs.map { d =>
@@ -525,6 +699,7 @@ object PropertyGraph {
         java.util.Collections.emptyList[Row](), edgeStructOf(schema.idType))
     }.toMap
     PropertyGraph(schema.validated(), nodes, edges)
+      .indexed(Some(SnapshotIndex.empty(schema)))
   }
 
   /** Load a graph previously written by `save`. */
@@ -706,30 +881,56 @@ object PropertyGraph {
   * actually read (`df`, `attr`, `filter`). A k-hop chain therefore plans
   * k edge joins + ONE node-table join, not k of each — intermediate-hop
   * attribute joins are pure cost at any scale.
+  *
+  * On an indexed snapshot, `from(label).filter(id = literal)` (or
+  * `id IN (literals)`) also knows its bag of ids on the driver, and each
+  * `related` hop from a known bag walks the snapshot's CSR and hands on
+  * the result as a local relation — no edge scan. Every other frontier
+  * plans the equi-join.
   */
 final case class Traversal(g: PropertyGraph, label: String,
     private val frontier: DataFrame, private val hasAttrs: Boolean = true) {
+  import Traversal._
+
+  /** What the driver knows of the bag, set once as `from`, `filter` or
+    * `related` makes this traversal; any other make knows nothing.
+    */
+  @volatile private var known: Known = Unknown
+
+  private[graph] def knowing(k: Known): Traversal = { known = k; this }
 
   /** The bag with attributes attached (joined on demand). */
   lazy val df: DataFrame =
     if (hasAttrs) frontier else frontier.join(g.nodes(label), Seq(IdCol))
 
-  def filter(cond: Column): Traversal =
-    copy(frontier = df.where(cond), hasAttrs = true)
+  def filter(cond: Column): Traversal = {
+    val out = df.where(cond)
+    val start = if (known == WholeExtent) g.literalStart(label, out) else None
+    Traversal(g, label, out, hasAttrs = true).knowing(start.fold[Known](Unknown)(Ids))
+  }
 
   /** 1-hop traversal (reference: getRelated, src/Edgy/Operations.hs:273-287)
     * = equi-join current ids onto the relation's edge view. Duplicates
-    * preserved; target attributes join lazily on first use.
+    * preserved; target attributes join lazily on first use. A bag known on
+    * the driver walks the index instead (class doc).
     */
   def related(relName: String): Traversal = {
     val ref = g.schema.relation(relName)
     require(ref.srcLabel == label,
       s"relation $relName starts at ${ref.srcLabel}, traversal is at $label")
-    val e = g.edges(relName)
-    val hop = frontier.select(col(IdCol).as("__src"))
-      .join(e, col("__src") === col(SrcCol))
-      .select(col(DstCol).as(IdCol))
-    Traversal(g, ref.dstLabel, hop, hasAttrs = false)
+    val walked = known match {
+      case Ids(ids) => g.walk(ref, ids)
+      case _ => None
+    }
+    walked match {
+      case Some(out) =>
+        Traversal(g, ref.dstLabel, g.idFrame(out), hasAttrs = false).knowing(Ids(out))
+      case None =>
+        val hop = frontier.select(col(IdCol).as("__src"))
+          .join(g.edges(relName), col("__src") === col(SrcCol))
+          .select(col(DstCol).as(IdCol))
+        Traversal(g, ref.dstLabel, hop, hasAttrs = false)
+    }
   }
 
   /** Multiset union (reference: `++`, app/Main.hs:154). Ids-only: the
@@ -756,4 +957,14 @@ final case class Traversal(g: PropertyGraph, label: String,
   def attr(name: String): DataFrame = df.select(col(name))
 
   def ids: DataFrame = frontier.select(col(IdCol))
+}
+
+object Traversal {
+  /** What the driver knows of a traversal's bag without running it. */
+  private[graph] sealed trait Known
+  private[graph] case object Unknown extends Known
+  /** The whole extent of the label: `from(label)`, not yet filtered. */
+  private[graph] case object WholeExtent extends Known
+  /** Exactly these ids, duplicates included. */
+  private[graph] final case class Ids(ids: Vector[Any]) extends Known
 }

@@ -15,7 +15,8 @@ import org.apache.spark.sql.functions._
   *      md5 order, so shards partition the global order into 16 contiguous
   *      runs;
   *   2. rank within each shard (parallel per-shard sort);
-  *   3. add each shard's cumulative predecessor count (a 16-row aggregate,
+  *   3. add each shard's cumulative predecessor count (a 16-row count
+  *      table prefix-summed on the driver by `GlobalOrder.offsets`,
   *      broadcast) to make ranks global.
   *
   * Equal BY CONSTRUCTION to the global window — asserted in LlmOpsSpec and
@@ -27,18 +28,14 @@ object CorpusShuffle {
 
   /** All input columns plus `pos` (1-based global permutation position). */
   def permutation(df: DataFrame, idCol: String): DataFrame = {
+    // the shard is the first md5 hex digit as an int: lowercase hex sorts
+    // as its value, so the shard order stays a prefix of the md5 order
     val keyed = df
       .withColumn("__hkey", md5(col(idCol).cast("string")))
-      .withColumn("__shard", substring(col("__hkey"), 1, 1))
+      .withColumn("__shard", conv(substring(col("__hkey"), 1, 1), 16, 10).cast("int"))
     val w = Window.partitionBy(col("__shard")).orderBy(col("__hkey"), col(idCol))
     val ranked = keyed.withColumn("__r", row_number().over(w))
-    // predecessors per shard: 16 rows — the only non-parallel step
-    val offsets = keyed.groupBy(col("__shard")).agg(count(lit(1)).as("__n"))
-      .withColumn("__off", coalesce(
-        sum(col("__n")).over(Window.orderBy(col("__shard"))
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("__shard"), col("__off"))
-    ranked.join(broadcast(offsets), "__shard")
+    ranked.join(broadcast(GlobalOrder.offsets(keyed, "__shard", "__off")), "__shard")
       .withColumn("pos", (col("__off") + col("__r")).cast("long"))
       .select(df.columns.map(col) :+ col("pos"): _*)
   }

@@ -1,8 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
 import graft.Pinned.PinSyntax
 
@@ -19,8 +22,9 @@ import graft.Pinned.PinSyntax
   *      ordered value ranges across `n` partitions;
   *   2. rank within each physical range partition (parallel per-partition
   *      window keyed on `spark_partition_id()`);
-  *   3. add each partition's cumulative predecessor count (an `n`-row
-  *      aggregate, broadcast) to make ranks global.
+  *   3. add each partition's cumulative predecessor count ([[offsets]]:
+  *      an `n`-row count table, prefix-summed on the driver, broadcast) to
+  *      make ranks global.
   *
   * The published ranks are INDEPENDENT of where the sampled range bounds
   * fall: the sort key must be a total order (callers append a unique id
@@ -59,14 +63,26 @@ object GlobalOrder {
       .pin(true)
     val w = Window.partitionBy(col("__go_pid")).orderBy(sortCols: _*)
     val ranked = rp.withColumn("__go_r", row_number().over(w))
-    // predecessors per range partition: <= n rows — the only non-parallel step
-    val offsets = rp.groupBy(col("__go_pid")).agg(count(lit(1)).as("__go_n"))
-      .withColumn("__go_off", coalesce(
-        sum(col("__go_n")).over(Window.orderBy(col("__go_pid"))
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("__go_pid"), col("__go_off"))
-    ranked.join(broadcast(offsets), "__go_pid")
+    ranked.join(broadcast(offsets(rp, "__go_pid", "__go_off")), "__go_pid")
       .withColumn(rankName, (col("__go_off") + col("__go_r")).cast("long"))
       .select(df.columns.map(col) :+ col(rankName): _*)
+  }
+
+  /** `(key, off)`: for each value of the int column `key` in `df`, the
+    * number of rows whose key sorts before it (nulls first, as an
+    * ascending window orders them). The per-key counts — one row per key,
+    * a handful of partitions or shards — are collected and prefix-summed
+    * on the driver: a window over them has no partition key, so Spark
+    * would run it in one task and log a "No Partition Defined for Window
+    * operation" warning on every call.
+    */
+  private[operators] def offsets(df: DataFrame, key: String, off: String): DataFrame = {
+    val counts = df.groupBy(col(key)).agg(count(lit(1))).collect()
+      .map(r => (Option(r.get(0)).map(_.asInstanceOf[Int]), r.getLong(1)))
+      .sortBy(_._1)
+    val rows = counts.scanLeft(0L)(_ + _._2).zip(counts)
+      .map { case (before, (k, _)) => Row(k.orNull, before) }
+    df.sparkSession.createDataFrame(rows.toSeq.asJava, StructType(Seq(
+      StructField(key, IntegerType), StructField(off, LongType, nullable = false))))
   }
 }

@@ -1,13 +1,14 @@
 package graft.typed
 
+import scala.jdk.CollectionConverters._
 import scala.language.experimental.macros
 
-import org.apache.spark.sql.{Column, Dataset, Encoder, Encoders}
+import org.apache.spark.sql.{Column, Dataset, Encoder, Encoders, Row}
 import org.apache.spark.sql.functions._
 
 import graft.graph.{PropertyGraph, Traversal}
 import graft.schema.{Cardinality, GraphSchema}
-import graft.schema.GraphSchema.{DstCol, IdCol, SrcCol}
+import graft.schema.GraphSchema.IdCol
 
 /** Compile-time-checked facade over [[PropertyGraph]] — the Scala image of
   * the reference's type-level schema, which is edgy's defining feature:
@@ -183,13 +184,12 @@ final class TypedGraph(val g: PropertyGraph) {
   }
 
   /** Typed point read of one node; throws like the untyped getAttribute
-    * path if the id is absent.
+    * path if the id is absent. Reads through `PropertyGraph.nodeRows`, so
+    * an indexed snapshot answers with no Spark job.
     */
   def node[T](id: String)(implicit nt: NodeType[T]): T = {
     TypedGraph.validateNodeType(g, nt)
-    val rows = g.nodes(nt.label)
-      .where(col(IdCol) === PropertyGraph.coerceId(g.schema.idType, id))
-      .as[T](nt.enc).collect()
+    val rows = TypedGraph.decode(g, g.nodeRows(nt.label, id), nt)
     rows.headOption.getOrElse(
       throw new NoSuchElementException(s"no ${nt.label} node $id"))
   }
@@ -209,18 +209,21 @@ final class TypedGraph(val g: PropertyGraph) {
       implicit snt: NodeType[S], dnt: NodeType[D], cs: CardShape[C])
       : cs.Out[D] = {
     TypedGraph.validateRel(g, rel, snt, dnt, Some(cs.expected))
-    val rows = g.edges(rel.name)
-      .where(col(SrcCol) === PropertyGraph.coerceId(g.schema.idType, srcId))
-      .join(g.nodes(dnt.label), col(DstCol) === col(IdCol))
-      .drop(SrcCol, DstCol)
-      .as[D](dnt.enc)
-      .collect()
+    val rows = TypedGraph.decode(g, g.relatedRows(rel.name, srcId), dnt)
     cs.pack(rows.toSeq, s"${snt.label} $srcId -[${rel.name}]->")
   }
 }
 
 object TypedGraph {
   def apply(g: PropertyGraph): TypedGraph = new TypedGraph(g)
+
+  /** Node rows of `nt`'s label, as `g.nodes` shows them, bound to `T` by
+    * field name. A local relation: collecting it runs no Spark job.
+    */
+  private def decode[T](g: PropertyGraph, rows: Seq[Row], nt: NodeType[T]): Array[T] =
+    g.nodeTables.head._2.sparkSession
+      .createDataFrame(rows.asJava, g.nodes(nt.label).schema)
+      .as[T](nt.enc).collect()
 
   /** Engine-startup-style check: the case class must cover `id` plus every
     * REQUIRED attribute, and every field must name a schema column of the

@@ -11,8 +11,10 @@ import graft.schema._
   * (a) inverse symmetry, (b) no dangling edges after cascade delete,
   * (c) cardinality violations exactly when the declared shape is violated,
   * (d) setRelated ≡ clear + add-fold, (e) optional attrs default to the
-  * mempty image. Graphs stay tiny (Spark plans per op); ScalaCheck shrinks
-  * failures to minimal op sequences.
+  * mempty image — and the index law: a snapshot's driver-side index
+  * answers every point read and literal-start traversal exactly as the
+  * scan path does. Graphs stay tiny (Spark plans per op); ScalaCheck
+  * shrinks failures to minimal op sequences.
   */
 class GraphPropertySpec extends SparkSpec {
 
@@ -25,7 +27,8 @@ class GraphPropertySpec extends SparkSpec {
     Seq(
       RelationDef("r", "rInv", "A", "B"),
       RelationDef("fav", "favOf", "A", "B",
-        Cardinality.Optional, Cardinality.Many)))
+        Cardinality.Optional, Cardinality.Many),
+      RelationDef("peer", "peer", "A", "A", symmetric = true)))
 
   private val aIds = Seq("a:1", "a:2", "a:3")
   private val bIds = Seq("b:1", "b:2")
@@ -42,6 +45,15 @@ class GraphPropertySpec extends SparkSpec {
   private case class SetR(src: String, dsts: Seq[String]) extends Op
   private case class Clear(rel: String, src: String) extends Op
   private case class Del(id: String) extends Op
+  private case class AddN(id: String) extends Op
+  /** `name` to a new value, or optional `note` to null (its default). */
+  private case class SetA(id: String, attr: String, value: String) extends Op
+  private case class Bulk(src: String, dst: String) extends Op
+  /** checkpointed(), after a point read that builds the index when `read`. */
+  private case class Ckpt(read: Boolean) extends Op
+
+  // ids an AddN may use: an existing one (a duplicate node row) or a new one
+  private val addIds = aIds :+ "a:4"
 
   private val genOp: Gen[Op] = Gen.oneOf(
     for { s <- Gen.oneOf(aIds); d <- Gen.oneOf(bIds) } yield Add("r", s, d),
@@ -49,7 +61,16 @@ class GraphPropertySpec extends SparkSpec {
     for { s <- Gen.oneOf(aIds); d <- Gen.oneOf(bIds) } yield Add("fav", s, d),
     for { s <- Gen.oneOf(aIds); ds <- Gen.someOf(bIds.take(1)) } yield SetR(s, ds.toSeq),
     for { s <- Gen.oneOf(aIds) } yield Clear("r", s),
-    for { d <- Gen.oneOf(bIds) } yield Del(d))
+    for { d <- Gen.oneOf(bIds) } yield Del(d),
+    for { s <- Gen.oneOf(aIds); d <- Gen.oneOf(aIds) } yield Add("peer", s, d),
+    for { s <- Gen.oneOf(aIds); d <- Gen.oneOf(aIds) } yield Rem("peer", s, d),
+    for { id <- Gen.oneOf(addIds) } yield AddN(id),
+    for {
+      id <- Gen.oneOf(addIds)
+      (attr, v) <- Gen.oneOf(("name", "x"), ("name", "a:1"), ("note", null))
+    } yield SetA(id, attr, v),
+    for { s <- Gen.oneOf(aIds); d <- Gen.oneOf(bIds) } yield Bulk(s, d),
+    Gen.oneOf(true, false).map(Ckpt))
 
   private val genOps: Gen[List[Op]] = Gen.listOfN(5, genOp)
 
@@ -62,6 +83,14 @@ class GraphPropertySpec extends SparkSpec {
     case SetR(s, ds) => g.setRelated("r", s, ds)
     case Clear(rel, s) => g.clearRelated(rel, s)
     case Del(id) => g.deleteNode("B", id)
+    case AddN(id) => g.addNode("A", id, Map("name" -> id))
+    case SetA(id, attr, v) => g.setAttribute("A", id, attr, v)
+    case Bulk(s, d) =>
+      import spark.implicits._
+      g.addRelatedBulk("r", Seq((s, d)).toDF("src", "dst"))
+    case Ckpt(read) =>
+      if (read) g.isRelated("r", aIds.head, bIds.head)
+      g.checkpointed()
   }
 
   // deleteNode makes later point-ops on that id semantically "node missing";
@@ -73,6 +102,7 @@ class GraphPropertySpec extends SparkSpec {
         case Add(_, _, d) => gone(d)
         case Rem(_, _, d) => gone(d)
         case SetR(_, ds) => ds.exists(gone)
+        case Bulk(_, d) => gone(d)
         case _ => false
       }
       if (touchesGone) (g, gone)
@@ -135,6 +165,46 @@ class GraphPropertySpec extends SparkSpec {
         g.addRelated("r", src, d)
       }
       edgePairs(viaSet, "r") == edgePairs(viaFold, "r")
+    })
+  }
+
+  /** Every point answer of `g`, an exception counting as its class and
+    * message: isRelated in each direction, getAttribute (a missing node
+    * included), lookupBy with 0, 1 and more hits, and the bags of two-hop
+    * traversals from literal starts.
+    */
+  private def pointAnswers(g: PropertyGraph): Seq[Any] = {
+    import org.apache.spark.sql.functions.col
+    def ans(v: => Any): Any =
+      try v catch { case e: Exception => (e.getClass.getName, e.getMessage) }
+    def bag(t: graft.graph.Traversal): Any =
+      ans(t.ids.collect().map(_.getString(0)).toSeq.sorted)
+    val as = addIds :+ "a:9"
+    val related = for {
+      a <- as; b <- bIds ++ as
+      (rel, s, d) <- Seq(("r", a, b), ("rInv", b, a), ("fav", a, b), ("favOf", b, a),
+        ("peer", a, b))
+    } yield ans(g.isRelated(rel, s, d))
+    val attrs = for (a <- as; attr <- Seq("name", "note")) yield ans(g.getAttribute("A", a, attr))
+    val lookups = Seq("a:1", "a:2", "x", "zzz").map(v => ans(g.lookupBy("A", "name", v))) :+
+      ans(g.lookupBy("A", "note", "")) :+ ans(g.lookupBy("B", "name", "b:1"))
+    val bags = as.flatMap { a =>
+      val from = g.from("A").filter(col("id") === a)
+      Seq(bag(from.related("r").related("rInv")), bag(from.related("peer").related("fav")))
+    } ++ bIds.map { b =>
+      bag(g.from("B").filter(col("id").isin(b, "a:1", b)).related("rInv").related("peer"))
+    }
+    related ++ attrs ++ lookups ++ bags
+  }
+
+  test("index law: indexed answers equal the scan path's under any op sequence") {
+    check(Prop.forAll(Gen.listOfN(6, genOp)) { ops =>
+      val g = applyAll(ops)
+      val indexed = pointAnswers(g)
+      val scanned = Regime.atScale(pointAnswers(g))
+      if (indexed != scanned)
+        println(s"index law: $ops\n  indexed $indexed\n  scanned $scanned")
+      indexed == scanned
     })
   }
 

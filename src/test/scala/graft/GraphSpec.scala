@@ -11,7 +11,7 @@ import org.apache.spark.sql.types._
   */
 class GraphSpec extends SparkSpec {
 
-  lazy val g: PropertyGraph = DemoGraph.bigBang(spark).cached()
+  lazy val g: PropertyGraph = DemoGraph.bigBang(spark).checkpointed()
 
   private def names(df: org.apache.spark.sql.DataFrame): Seq[String] =
     df.collect().map(_.getString(0)).toSeq.sorted
@@ -557,6 +557,87 @@ class GraphSpec extends SparkSpec {
         DemoGraph.schema.relationDefs.foreach(r => spark.sql(s"DROP TABLE IF EXISTS graftspec_edges_${r.name}"))
         spark.sql("DROP TABLE IF EXISTS graftspec_schema")
       }
+    }
+  }
+
+  test("an indexed snapshot runs no Spark job per point read; a bulk mutation scans again") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        groups.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse("none"))
+    }
+    // the jobs `body` starts, delimited by a fence job: listener events
+    // arrive in posting order
+    def jobsOf(group: String)(body: => Unit): Int = {
+      sc.setJobGroup(group, group)
+      body
+      sc.setJobGroup(s"$group-fence", "fence")
+      spark.range(1).count()
+      val deadline = System.nanoTime() + 30000000000L
+      while (!groups.contains(s"$group-fence") && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      assert(groups.contains(s"$group-fence"), s"fence of $group never seen")
+      groups.toArray.count(_ == group)
+    }
+    def friendsTools(g: PropertyGraph, id: String): Seq[String] =
+      g.from("Person").filter(col(GraphSchema.IdCol) === id).related("friend")
+        .related("possession").ids.collect().map(_.get(0).toString).toSeq.sorted
+    sc.addSparkListener(listener)
+    try {
+      val base = DemoGraph.bigBang(spark).checkpointed()
+      assert(jobsOf("indexed") {
+        assert(base.isRelated("spouse", "person:jane", "person:bob"))
+        assert(!base.isRelated("friend", "person:jane", "person:bob"))
+        assert(base.getAttribute("Person", "person:jose", "age") === 22L)
+        assert(base.lookupBy("Person", "name", "Jane") === "person:jane")
+        assert(friendsTools(base, "person:bob") === Seq("object:cards", "object:poles"))
+      } === 0)
+      val mutated = base
+        .addNode("Person", "person:ann", Map("name" -> "Ann", "age" -> 30L))
+        .addRelated("friendOf", "person:bob", "person:ann")
+        .setAttribute("Person", "person:bob", "age", 25L)
+        .removeRelated("friend", "person:bob", "person:jose")
+        .deleteNode("Object", "object:cards")
+        .setRelated("possession", "person:ann", Seq("object:chips"))
+        .clearRelated("hobby", "person:bob")
+      def mutatedReads(g: PropertyGraph): Unit = {
+        assert(g.isRelated("friend", "person:ann", "person:bob"))
+        assert(!g.isRelated("friend", "person:bob", "person:jose"))
+        assert(!g.isRelated("hobby", "person:bob", "activity:poker"))
+        assert(g.getAttribute("Person", "person:bob", "age") === 25L)
+        assert(g.lookupBy("Person", "name", "Ann") === "person:ann")
+        assert(friendsTools(g, "person:ann") === Seq("object:map"))
+        assert(friendsTools(g, "person:jane") === Seq("object:poles"))
+      }
+      assert(jobsOf("mutated")(mutatedReads(mutated)) === 0)
+      val folded = mutated.checkpointed()
+      assert(jobsOf("folded")(mutatedReads(folded)) === 0)
+      val bulk = folded.addRelatedBulk("friend",
+        Seq(("person:jane", "person:bob")).toDF("src", "dst"))
+      assert(jobsOf("bulk")(assert(bulk.isRelated("friend", "person:jane", "person:bob"))) >= 1)
+      // a long-keyed graph from the constructor: its base is collected on
+      // the first read, after which reads are job-free
+      val longSchema = GraphSchema(
+        Seq(NodeDef("N", Seq(AttrDef("name", StringType)))),
+        Seq(RelationDef("e", "eOf", "N", "N")), idType = LongType)
+      val lg = PropertyGraph(longSchema,
+        Map("N" -> Seq((1L, "one"), (2L, "two"), (3L, "three")).toDF("id", "name")),
+        Map("e" -> Seq((1L, 2L), (1L, 3L), (2L, 3L)).toDF("src", "dst"))).checkpointed()
+      assert(jobsOf("long-build")(assert(lg.isRelated("e", "1", "2"))) >= 1)
+      assert(jobsOf("long") {
+        assert(lg.isRelated("eOf", "3", "2") && !lg.isRelated("e", "3", "2"))
+        assert(lg.getAttribute("N", "3", "name") === "three")
+        assert(lg.lookupBy("N", "name", "two") === "2")
+        assert(lg.from("N").filter(col(GraphSchema.IdCol).isin(1L, 2L)).related("e")
+          .ids.collect().map(_.getLong(0)).sorted.toSeq === Seq(2L, 3L, 3L))
+      } === 0)
+      Seq(base, folded, lg).foreach(_.release())
+    } finally {
+      sc.removeSparkListener(listener)
+      sc.clearJobGroup()
     }
   }
 

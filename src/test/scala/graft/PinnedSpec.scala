@@ -190,7 +190,7 @@ class PinnedSpec extends SparkSpec {
     entries.foreach { case (name, throws, run) => residueLaw(name, throws)(run()) }
   }
 
-  test("localCheckpoint and unpersist appear in src/main only inside Pinned.scala") {
+  test("localCheckpoint, unpersist, cache and persist in src/main only in Pinned.scala") {
     val root = new java.io.File("src/main/scala")
     assert(root.isDirectory, s"no source tree at ${root.getAbsolutePath}")
     def files(d: java.io.File): Seq[java.io.File] =
@@ -198,7 +198,7 @@ class PinnedSpec extends SparkSpec {
     val hits = for {
       f <- files(root) if f.getName.endsWith(".scala") && f.getName != "Pinned.scala"
       (line, i) <- scala.io.Source.fromFile(f, "UTF-8").getLines().toSeq.zipWithIndex
-      if line.contains("localCheckpoint(") || line.contains(".unpersist(")
+      if Seq("localCheckpoint(", ".unpersist(", ".cache()", ".persist(").exists(line.contains)
     } yield s"${f.getPath}:${i + 1}: ${line.trim}"
     assert(hits.isEmpty, s"pin or free outside Pinned:\n${hits.mkString("\n")}")
   }

@@ -8,8 +8,9 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.dedup.Dedup
-import graft.graph.GraphAlgos
+import graft.graph.{DemoGraph, GraphAlgos}
 import graft.operators.{Retrieval, SaltedJoin, Sketch, TfIdf}
+import graft.schema.GraphSchema
 import graft.similarity.Ann
 
 /** The one small-input-vs-scale policy ([[Regime]]): the test hook itself,
@@ -124,6 +125,21 @@ class RegimeSpec extends SparkSpec {
     val dim = (0 until 5).map(i => (i, s"d$i")).toDF("k", "name")
     regimeLaw("SaltedJoin.join: broadcastable dim")(
       SaltedJoin.join(fact, dim, Seq("k")))
+    // PropertyGraph: the snapshot index against the scan path
+    val g = DemoGraph.bigBang(spark).checkpointed()
+    regimeLaw("PropertyGraph.isRelated: snapshot index")(Seq(
+      g.isRelated("friend", "person:bob", "person:jane"),
+      g.isRelated("friendOf", "person:bob", "person:jane"),
+      g.isRelated("spouse", "person:jane", "person:bob")).toDF("related"))
+    regimeLaw("PropertyGraph.getAttribute: snapshot index")(Seq(
+      g.getAttribute("Person", "person:jose", "age").toString,
+      g.getAttribute("Object", "object:map", "name").toString).toDF("value"))
+    regimeLaw("PropertyGraph.lookupBy: snapshot index")(
+      Seq(g.lookupBy("Person", "name", "Jane")).toDF("id"))
+    regimeLaw("Traversal.related: CSR walk from a literal start")(
+      g.from("Person").filter(col(GraphSchema.IdCol) === "person:bob")
+        .related("friend").related("possession").ids)
+    g.release()
   }
 
   test("the scale branches no earlier spec reached run their scale plans") {

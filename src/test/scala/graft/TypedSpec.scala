@@ -16,7 +16,7 @@ class TypedSpec extends SparkSpec {
 
   import DemoTyped._
 
-  private lazy val g: PropertyGraph = DemoGraph.bigBang(spark).cached()
+  private lazy val g: PropertyGraph = DemoGraph.bigBang(spark).checkpointed()
   private lazy val tg = TypedGraph(g)
 
   test("typed missingTools equals the untyped golden for every person") {
