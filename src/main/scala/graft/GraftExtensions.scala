@@ -8,21 +8,31 @@ import org.apache.spark.sql.types._
 
 import graft.functions._
 
-/** SQL-surface registration for the engine's custom Catalyst expressions,
-  * the `SparkSessionExtensions` integration point the build plan reserves
-  * for capabilities the DataFrame facade alone can't deliver (SURVEY.md
-  * §4.2). Everything else in this engine is deliberately plain
-  * DataFrame/Dataset composition — no custom strategies or logical plans
-  * are injected because no operator needed them; this class exists so the
-  * custom *functions* (the one place we did go below the public API) are
-  * reachable from pure SQL too:
+/** The engine's `SparkSessionExtensions` integration point (SURVEY.md
+  * §4.2), for what the DataFrame facade alone can't deliver. It installs
+  * two things into a session:
   *
-  *   spark-submit --conf spark.sql.extensions=graft.GraftExtensions ...
-  *   spark.sql("SELECT vec_cosine(a.embedding, b.embedding) ...")
+  *   - the custom Catalyst *functions* (the one place the engine went
+  *     below the public API), so they are reachable from pure SQL too:
+  *
+  *       spark-submit --conf spark.sql.extensions=graft.GraftExtensions ...
+  *       spark.sql("SELECT vec_cosine(a.embedding, b.embedding) ...")
+  *
+  *   - one optimizer rule, [[LocalPlans]]: an aggregate over a local
+  *     relation of at most `LocalPlans.MaxRows` rows is computed on the
+  *     driver, so a count, distinct or `groupBy` over a bag the engine
+  *     already holds (a walked traversal) runs no Spark job. It folds only
+  *     where its answer is exactly Spark's — deterministic, declarative,
+  *     order-free aggregates with no float buffers and binary-equal
+  *     grouping keys, no possible overflow — and leaves any other plan,
+  *     or one whose fold throws, to Spark. No strategy or logical plan
+  *     node is injected.
   *
   * For an already-running session (notebook / driver-owned lifecycles
-  * where the extensions conf was fixed at startup), the same catalog is
-  * installed by `GraftExtensions.register(spark)`.
+  * where the extensions conf was fixed at startup), the same catalog and
+  * rule are installed by `GraftExtensions.register(spark)`; the engine
+  * itself installs the rule on the session it first hands a driver-known
+  * bag to. This file is the only place rules enter a session.
   *
   * The reference's analog is its fixed Template-Haskell-generated API
   * surface (edgy src/Edgy.hs:1-60): every operator the schema admits is
@@ -30,8 +40,10 @@ import graft.functions._
   * for SQL callers.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit =
+  override def apply(ext: SparkSessionExtensions): Unit = {
     GraftExtensions.functions.foreach(ext.injectFunction)
+    ext.injectOptimizerRule(_ => LocalPlans)
+  }
 }
 
 object GraftExtensions {
@@ -201,12 +213,31 @@ object GraftExtensions {
       a => PqAdcScoreBytes(a(0), a(1), litInt(a(2), "pq_adc_score", "ksub"))
     })
 
-  /** Install the catalog into a LIVE session (the extensions conf can only
-    * take effect at session construction). Idempotent: re-registration
-    * replaces the same entries.
+  /** Install the catalog and [[LocalPlans]] into a LIVE session (the
+    * extensions conf can only take effect at session construction).
+    * Idempotent: re-registration replaces the same entries.
     */
-  def register(spark: SparkSession): Unit =
+  def register(spark: SparkSession): Unit = {
     functions.foreach { case (id, info, builder) =>
       Bridge.registerFunction(spark, id, info, builder)
     }
+    installRules(spark)
+  }
+
+  /** Sessions whose optimizer is known to run [[LocalPlans]]. */
+  private val ruled = new java.util.WeakHashMap[SparkSession, java.lang.Boolean]
+
+  /** Makes `spark`'s optimizer run [[LocalPlans]], once per session and
+    * safely from any thread: a session built with these extensions
+    * already has it; any other gets it as an extra optimization.
+    */
+  private[graft] def installRules(spark: SparkSession): Unit = ruled.synchronized {
+    if (!ruled.containsKey(spark)) {
+      val s = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      val has = s.sessionState.optimizer.extendedOperatorOptimizationRules.contains(LocalPlans) ||
+        s.experimental.extraOptimizations.contains(LocalPlans)
+      if (!has) s.experimental.extraOptimizations = s.experimental.extraOptimizations :+ LocalPlans
+      ruled.put(spark, true)
+    }
+  }
 }

@@ -24,6 +24,9 @@ object Verify {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    // the SQL catalog and LocalPlans, as a session built with
+    // spark.sql.extensions=graft.GraftExtensions would have them
+    GraftExtensions.register(spark)
     new java.io.File(outDir).mkdirs()
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

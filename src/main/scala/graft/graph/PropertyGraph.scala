@@ -10,7 +10,7 @@ import org.apache.spark.sql.catalyst.plans.logical.Filter
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.{Pinned, Regime}
+import graft.{GraftExtensions, Pinned, Regime}
 import graft.Pinned.PinSyntax
 import graft.schema._
 import graft.schema.GraphSchema.{DstCol, IdCol, SrcCol}
@@ -46,6 +46,13 @@ import graft.schema.GraphSchema.{DstCol, IdCol, SrcCol}
   *     values the index cannot hold exactly drop it: that snapshot reads
   *     by scan until its next `checkpointed()`. The Spark tables are the
   *     same either way.
+  *   - Job-free answers over a known bag: such a traversal's hops, their
+  *     `unionAll` and `exceptAll`, and the `ids`, `df` and `attr` of these
+  *     are local relations built on the driver, and [[graft.LocalPlans]]
+  *     folds a small count, distinct or `groupBy` over them on the
+  *     driver too. So edgy's `getRelated`-then-list-algebra queries
+  *     (`length`, `nub`, `++`, `\\`; `DemoGraph.missingTools`) run no
+  *     Spark job on an indexed snapshot.
   */
 final case class PropertyGraph(
     schema: GraphSchema,
@@ -639,8 +646,24 @@ final case class PropertyGraph(
 
   /** A bag of ids as a local relation `(id)`. */
   private[graph] def idFrame(ids: Seq[Any]): DataFrame =
-    spark.createDataFrame(ids.map(Row(_)).asJava,
+    localFrame(ids.map(Row(_)),
       StructType(Seq(StructField(IdCol, schema.idType, nullable = false))))
+
+  /** The node rows of `label` for each id of the bag `ids`, as [[nodes]]
+    * shows them and in its schema, as a local relation — the rows a join
+    * of the bag onto the extent returns. None without an index.
+    */
+  private[graph] def nodeFrame(label: String, ids: Seq[Any]): Option[DataFrame] =
+    contents.map(c => localFrame(ids.flatMap(c.nodeRows(label, _)), nodes(label).schema))
+
+  /** The one place the engine hands a driver-known bag to Spark: the
+    * session gets [[graft.LocalPlans]] first, so a small aggregate over
+    * the bag folds on the driver.
+    */
+  private def localFrame(rows: Seq[Row], schemaT: StructType): DataFrame = {
+    GraftExtensions.installRules(spark)
+    spark.createDataFrame(rows.asJava, schemaT)
+  }
 }
 
 object PropertyGraph {
@@ -885,8 +908,14 @@ object PropertyGraph {
   * On an indexed snapshot, `from(label).filter(id = literal)` (or
   * `id IN (literals)`) also knows its bag of ids on the driver, and each
   * `related` hop from a known bag walks the snapshot's CSR and hands on
-  * the result as a local relation — no edge scan. Every other frontier
-  * plans the equi-join.
+  * the result as a local relation — no edge scan. `unionAll` and
+  * `exceptAll` of two known bags are computed on the driver too (up to
+  * `SnapshotIndex.MaxLocalFrontier` ids), and `ids`, `df` and `attr` of a
+  * bag they make are local relations, the last two built from the
+  * index's node rows. None of these runs a Spark job, and neither does a
+  * small count, distinct or `groupBy` over them ([[graft.LocalPlans]]).
+  * A literal start's own `df` is the filtered extent scan. Every other
+  * frontier plans the equi-join.
   */
 final case class Traversal(g: PropertyGraph, label: String,
     private val frontier: DataFrame, private val hasAttrs: Boolean = true) {
@@ -899,9 +928,13 @@ final case class Traversal(g: PropertyGraph, label: String,
 
   private[graph] def knowing(k: Known): Traversal = { known = k; this }
 
-  /** The bag with attributes attached (joined on demand). */
+  /** The bag with attributes attached: joined on demand, or built from
+    * the index's node rows when the bag is known.
+    */
   lazy val df: DataFrame =
-    if (hasAttrs) frontier else frontier.join(g.nodes(label), Seq(IdCol))
+    if (hasAttrs) frontier
+    else (known match { case Ids(ids) => g.nodeFrame(label, ids); case _ => None })
+      .getOrElse(frontier.join(g.nodes(label), Seq(IdCol)))
 
   def filter(cond: Column): Traversal = {
     val out = df.where(cond)
@@ -938,7 +971,8 @@ final case class Traversal(g: PropertyGraph, label: String,
     */
   def unionAll(other: Traversal): Traversal = {
     require(other.label == label, s"union of $label with ${other.label}")
-    copy(frontier = ids.unionByName(other.ids), hasAttrs = false)
+    bothKnown(other)(_ ++ _).getOrElse(
+      copy(frontier = ids.unionByName(other.ids), hasAttrs = false))
   }
 
   /** Multiset difference on node identity (reference: Data.List.(\\) —
@@ -948,8 +982,23 @@ final case class Traversal(g: PropertyGraph, label: String,
     */
   def exceptAll(other: Traversal): Traversal = {
     require(other.label == label, s"difference of $label with ${other.label}")
-    copy(frontier = ids.exceptAll(other.ids), hasAttrs = false)
+    bothKnown(other)(_ diff _).getOrElse(
+      copy(frontier = ids.exceptAll(other.ids), hasAttrs = false))
   }
+
+  /** `op` of the two bags on the driver, when both are known and the
+    * result fits `SnapshotIndex.MaxLocalFrontier`. Scala's `diff` is the
+    * multiset difference `\\` is.
+    */
+  private def bothKnown(other: Traversal)(
+      op: (Vector[Any], Vector[Any]) => Vector[Any]): Option[Traversal] =
+    (known, other.known) match {
+      case (Ids(a), Ids(b)) =>
+        val out = op(a, b)
+        if (!Regime.fits(out.size.toLong, SnapshotIndex.MaxLocalFrontier)) None
+        else Some(Traversal(g, label, g.idFrame(out), hasAttrs = false).knowing(Ids(out)))
+      case _ => None
+    }
 
   /** Attribute projection over the bag (reference: traverse getAttribute,
     * app/Main.hs:172).

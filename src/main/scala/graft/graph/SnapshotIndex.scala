@@ -22,7 +22,10 @@ import graft.schema.GraphSchema.{DstCol, SrcCol}
   * per relation, added edges and tombstones, keyed by id rather than by
   * code, so it stays valid whether or not the base was ever built.
   * `PropertyGraph.checkpointed()` folds base ⊕ delta into a new base on
-  * the driver ([[folded]]), with no Spark job.
+  * the driver ([[folded]]), with no Spark job. The fold rebuilds only the
+  * labels and relations the delta touches: the dictionary grows in
+  * first-seen order, so every old code stays valid and every untouched
+  * `NodeRows` and `Adjacency` is reused as it is.
   */
 private[graph] final class SnapshotIndex private (
     schema: GraphSchema,
@@ -182,6 +185,14 @@ private[graph] object SnapshotIndex {
     def code(id: Any): Int =
       if (longs != null) longs.get(IdCodes.key(id))
       else { val c = strings.get(id); if (c == null) -1 else c.intValue }
+    /** This dictionary with the ids of `more` it lacks appended, in
+      * first-seen order: every code of this one keeps its id.
+      */
+    def extend(idType: DataType, more: Iterator[Any]): IdCodes = {
+      val fresh = more.filter(code(_) < 0).toVector
+      if (fresh.isEmpty) this
+      else IdCodes(idType, ids.iterator ++ fresh, size + fresh.size)
+    }
   }
 
   object IdCodes {
@@ -218,11 +229,22 @@ private[graph] object SnapshotIndex {
     * `adj(off(k) until off(k + 1))`, in input order.
     */
   final class Csr private (off: Array[Int], adj: Array[Int]) {
-    /** Empty for -1, the code of an id the dictionary does not hold. */
+    /** Empty for -1, the code of an id the dictionary does not hold, and
+      * for a code past this CSR's keys (an id a later, extended
+      * dictionary added).
+      */
     def values(k: Int): Iterator[Int] =
-      if (k < 0) Iterator.empty else Iterator.range(off(k), off(k + 1)).map(adj)
+      if (k < 0 || k >= off.length - 1) Iterator.empty
+      else Iterator.range(off(k), off(k + 1)).map(adj)
     def pairs: Iterator[(Int, Int)] =
       Iterator.range(0, off.length - 1).flatMap(k => values(k).map(k -> _))
+    /** The number of values. */
+    def size: Int = adj.length
+    /** Sets in `live` every key that has a value. */
+    def markKeys(live: java.util.BitSet): Unit = {
+      var k = 0
+      while (k < off.length - 1) { if (off(k + 1) > off(k)) live.set(k); k += 1 }
+    }
   }
 
   object Csr {
@@ -242,11 +264,35 @@ private[graph] object SnapshotIndex {
   /** The rows of one label, grouped by id code. */
   final class NodeRows(val rows: Array[Row], val byId: Csr)
 
+  object NodeRows {
+    def apply(codes: IdCodes, rs: Array[Row]): NodeRows =
+      new NodeRows(rs, Csr(codes.size, rs.map(r => codes.code(r.get(0))), rs.indices.toArray))
+  }
+
   /** One stored relation: `out` by src, `in` by dst. */
   final class Adjacency(val out: Csr, val in: Csr)
 
+  object Adjacency {
+    def apply(codes: IdCodes, ps: Array[(Any, Any)]): Adjacency = {
+      val s = ps.map(p => codes.code(p._1))
+      val d = ps.map(p => codes.code(p._2))
+      new Adjacency(Csr(codes.size, s, d), Csr(codes.size, d, s))
+    }
+  }
+
   final class Base(val codes: IdCodes, val labels: Map[String, NodeRows],
-      val rels: Map[String, Adjacency], val rows: Long)
+      val rels: Map[String, Adjacency]) {
+    val rows: Long =
+      labels.values.map(_.rows.length.toLong).sum + rels.values.map(_.out.size.toLong).sum
+
+    /** The number of codes some row or edge of this base uses. */
+    def liveIds: Int = {
+      val live = new java.util.BitSet(codes.size)
+      labels.values.foreach(_.byId.markKeys(live))
+      rels.values.foreach { a => a.out.markKeys(live); a.in.markKeys(live) }
+      live.cardinality
+    }
+  }
 
   object Base {
     /** None when a null id or more than [[MaxRows]] rows are present. */
@@ -255,23 +301,20 @@ private[graph] object SnapshotIndex {
       val nodeRows = schema.nodeDefs.map(d => d.label -> nodes.getOrElse(d.label, Nil).toArray)
       val pairs = schema.relationDefs.map(r => r.name -> edges.getOrElse(r.name, Nil).toArray)
       val rows = nodeRows.map(_._2.length.toLong).sum + pairs.map(_._2.length.toLong).sum
-      def allIds = nodeRows.iterator.flatMap(_._2.iterator.map(_.get(0))) ++
-        pairs.iterator.flatMap(_._2.iterator.flatMap(p => Iterator(p._1, p._2)))
+      def allIds = idsOf(nodeRows.map(_._2), pairs.map(_._2))
       if (rows > MaxRows || allIds.contains(null)) None
       else {
         val codes = IdCodes(schema.idType, allIds, math.max(1, (2 * rows).toInt))
-        val n = codes.size
-        val labels = nodeRows.map { case (l, rs) =>
-          l -> new NodeRows(rs, Csr(n, rs.map(r => codes.code(r.get(0))), rs.indices.toArray))
-        }.toMap
-        val rels = pairs.map { case (r, ps) =>
-          val s = ps.map(p => codes.code(p._1))
-          val d = ps.map(p => codes.code(p._2))
-          r -> new Adjacency(Csr(n, s, d), Csr(n, d, s))
-        }.toMap
-        Some(new Base(codes, labels, rels, rows))
+        Some(new Base(codes,
+          nodeRows.map { case (l, rs) => l -> NodeRows(codes, rs) }.toMap,
+          pairs.map { case (r, ps) => r -> Adjacency(codes, ps) }.toMap))
       }
     }
+
+    /** Every id of `rows` and `pairs`, in order. */
+    def idsOf(rows: Seq[Array[Row]], pairs: Seq[Array[(Any, Any)]]): Iterator[Any] =
+      rows.iterator.flatMap(_.iterator.map(_.get(0))) ++
+        pairs.iterator.flatMap(_.iterator.flatMap(p => Iterator(p._1, p._2)))
   }
 
   /** The point mutations to one node id of one label since the base:
@@ -395,19 +438,42 @@ private[graph] object SnapshotIndex {
       else Some(labelRows(label).filter(r => sparkEquals(r.get(pos + 1), value)).map(_.get(0)))
     }
 
+    /** The stored edges of `rel`, base ⊕ delta. */
+    private def edgePairs(rel: String): Array[(Any, Any)] = {
+      val e = delta.edges.getOrElse(rel, EdgeDelta.empty)
+      val ids = base.codes.ids
+      val kept = base.rels(rel).out.pairs.map { case (s, d) => (ids(s), ids(d)) }
+        .filter { case (s, d) => e.keeps(s, d) }
+      val added = e.out.iterator.flatMap { case (s, ds) => ds.iterator.map(s -> _) }
+      (kept ++ added).toArray
+    }
+
     /** The base this snapshot's pinned tables would collect to: none when
-      * it would pass [[MaxRows]].
+      * it would pass [[MaxRows]] or hold a null id. Only the labels and
+      * relations the delta touches are rebuilt, over the dictionary
+      * extended by their new ids; when that dictionary holds more than
+      * twice the ids still in use (deletes leave codes behind), the whole
+      * base is rebuilt instead.
       */
-    def fold(): Option[Base] = Base.build(schema,
-      schema.nodeDefs.map(d => d.label -> labelRows(d.label).toVector).toMap,
-      schema.relationDefs.map { r =>
-        val e = delta.edges.getOrElse(r.name, EdgeDelta.empty)
-        val ids = base.codes.ids
-        val kept = base.rels(r.name).out.pairs.map { case (s, d) => (ids(s), ids(d)) }
-          .filter { case (s, d) => e.keeps(s, d) }
-        val added = e.out.iterator.flatMap { case (s, ds) => ds.iterator.map(s -> _) }
-        r.name -> (kept ++ added).toVector
-      }.toMap)
+    def fold(): Option[Base] = {
+      val labels = schema.nodeDefs.map(_.label).filter(delta.nodes.contains)
+        .map(l => l -> labelRows(l).toArray)
+      val rels = schema.relationDefs.map(_.name).filter(delta.edges.contains)
+        .map(r => r -> edgePairs(r))
+      def fresh = Base.idsOf(labels.map(_._2), rels.map(_._2))
+      if (fresh.contains(null)) None
+      else {
+        val codes = base.codes.extend(schema.idType, fresh)
+        val next = new Base(codes,
+          base.labels ++ labels.map { case (l, rs) => l -> NodeRows(codes, rs) },
+          base.rels ++ rels.map { case (r, ps) => r -> Adjacency(codes, ps) })
+        if (next.rows > MaxRows) None
+        else if (codes.size <= 2L * next.liveIds) Some(next)
+        else Base.build(schema,
+          schema.nodeDefs.map(d => d.label -> labelRows(d.label).toVector).toMap,
+          schema.relationDefs.map(r => r.name -> edgePairs(r.name).toSeq).toMap)
+      }
+    }
   }
 
   /** Spark's `=` on two non-null values of one exact type: NaN equals

@@ -225,4 +225,17 @@ class GraftExtensionsSpec extends SparkSpec {
     }
     assert(e2.getMessage.contains("must be an integer literal"), e2.getMessage)
   }
+
+  test("extraOptimizations, injectOptimizerRule and extraStrategies in src/main only in GraftExtensions.scala") {
+    val root = new java.io.File("src/main/scala")
+    assert(root.isDirectory, s"no source tree at ${root.getAbsolutePath}")
+    def files(d: java.io.File): Seq[java.io.File] =
+      d.listFiles().toSeq.flatMap(f => if (f.isDirectory) files(f) else Seq(f))
+    val hits = for {
+      f <- files(root) if f.getName.endsWith(".scala") && f.getName != "GraftExtensions.scala"
+      (line, i) <- scala.io.Source.fromFile(f, "UTF-8").getLines().toSeq.zipWithIndex
+      if Seq("extraOptimizations", "injectOptimizerRule", "extraStrategies").exists(line.contains)
+    } yield s"${f.getPath}:${i + 1}: ${line.trim}"
+    assert(hits.isEmpty, s"a rule installed outside GraftExtensions:\n${hits.mkString("\n")}")
+  }
 }

@@ -188,9 +188,20 @@ class GraphPropertySpec extends SparkSpec {
     val attrs = for (a <- as; attr <- Seq("name", "note")) yield ans(g.getAttribute("A", a, attr))
     val lookups = Seq("a:1", "a:2", "x", "zzz").map(v => ans(g.lookupBy("A", "name", v))) :+
       ans(g.lookupBy("A", "note", "")) :+ ans(g.lookupBy("B", "name", "b:1"))
+    def names(df: org.apache.spark.sql.DataFrame): Any =
+      ans(df.collect().map(r => String.valueOf(r.get(0))).toSeq.sorted)
     val bags = as.flatMap { a =>
       val from = g.from("A").filter(col("id") === a)
-      Seq(bag(from.related("r").related("rInv")), bag(from.related("peer").related("fav")))
+      val viaR = from.related("r").related("rInv")
+      val peers = from.related("peer")
+      val unknown = g.from("A").filter(col("name") === a).related("peer")
+      Seq(bag(viaR), bag(from.related("peer").related("fav")),
+        bag(viaR.unionAll(peers)), bag(viaR.exceptAll(peers)), bag(peers.exceptAll(viaR)),
+        bag(peers.unionAll(unknown)), bag(viaR.exceptAll(unknown)),
+        names(viaR.unionAll(peers).attr("name")), names(peers.attr("note")),
+        names(from.attr("note")),
+        ans(viaR.unionAll(peers).ids.distinct().count()),
+        names(viaR.exceptAll(peers).ids.groupBy("id").count().select(col("count"))))
     } ++ bIds.map { b =>
       bag(g.from("B").filter(col("id").isin(b, "a:1", b)).related("rInv").related("peer"))
     }

@@ -595,6 +595,20 @@ class GraphSpec extends SparkSpec {
         assert(base.lookupBy("Person", "name", "Jane") === "person:jane")
         assert(friendsTools(base, "person:bob") === Seq("object:cards", "object:poles"))
       } === 0)
+      // answers over a walked bag: small aggregates fold on the driver,
+      // and edgy's flagship query is driver-side list algebra throughout
+      val walked = base.from("Person").filter(col(GraphSchema.IdCol) === "person:bob")
+        .related("friend").related("possession")
+      assert(jobsOf("aggregates") {
+        assert(walked.ids.agg(count(lit(1))).collect().head.getLong(0) === 2L)
+        assert(walked.ids.distinct().count() === 2L)
+        assert(walked.ids.groupBy(col(GraphSchema.IdCol)).count().collect().length === 2)
+        assert(names(walked.attr("name")) === Seq("Deck of Cards", "Trekking Poles"))
+        assert(names(DemoGraph.missingTools(base, "Bob")) === Seq("Poker Chips"))
+      } === 0)
+      assert(jobsOf("pinned-aggregate")(base.nodes("Person").agg(count(lit(1))).collect()) >= 1)
+      assert(jobsOf("past-the-cap")((0L to graft.LocalPlans.MaxRows).toDF("id")
+        .agg(count(lit(1))).collect()) >= 1)
       val mutated = base
         .addNode("Person", "person:ann", Map("name" -> "Ann", "age" -> 30L))
         .addRelated("friendOf", "person:bob", "person:ann")

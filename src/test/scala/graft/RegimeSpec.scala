@@ -139,6 +139,11 @@ class RegimeSpec extends SparkSpec {
     regimeLaw("Traversal.related: CSR walk from a literal start")(
       g.from("Person").filter(col(GraphSchema.IdCol) === "person:bob")
         .related("friend").related("possession").ids)
+    regimeLaw("Traversal.exceptAll/attr: driver-side bag algebra")(
+      DemoGraph.missingTools(g, "Bob"))
+    regimeLaw("LocalPlans: aggregate folded over a local relation")(
+      Seq((1, 10L), (1, 5L), (2, 7L), (3, 7L)).toDF("k", "v")
+        .groupBy("k").agg(count(lit(1)), sum("v"), max("v")))
     g.release()
   }
 

@@ -15,6 +15,9 @@ object TestSpark {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
+    // graft's optimizer rule from the start, so no suite's plans depend
+    // on whether an earlier suite's traversal installed it
+    GraftExtensions.installRules(s)
     s
   }
   val sf0001 = "/root/testdata/sf0.001"
