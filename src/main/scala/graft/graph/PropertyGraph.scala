@@ -908,11 +908,11 @@ object PropertyGraph {
   * On an indexed snapshot, `from(label).filter(id = literal)` (or
   * `id IN (literals)`) also knows its bag of ids on the driver, and each
   * `related` hop from a known bag walks the snapshot's CSR and hands on
-  * the result as a local relation — no edge scan. `unionAll` and
-  * `exceptAll` of two known bags are computed on the driver too (up to
+  * only the ids — no edge scan, and no frame. `unionAll` and `exceptAll`
+  * of two known bags are computed on the driver too (up to
   * `SnapshotIndex.MaxLocalFrontier` ids), and `ids`, `df` and `attr` of a
-  * bag they make are local relations, the last two built from the
-  * index's node rows. None of these runs a Spark job, and neither does a
+  * bag they make are local relations built when first read, the last two
+  * from the index's node rows. None of these runs a Spark job, and neither does a
   * small count, distinct or `groupBy` over them ([[graft.LocalPlans]]).
   * A literal start's own `df` is the filtered extent scan. Every other
   * frontier plans the equi-join.
@@ -920,6 +920,17 @@ object PropertyGraph {
 final case class Traversal(g: PropertyGraph, label: String,
     private val frontier: DataFrame, private val hasAttrs: Boolean = true) {
   import Traversal._
+
+  /** The bag as Spark rows: the frontier, or for a bag a hop or bag
+    * algebra made on the driver (whose frontier is null, [[ofIds]]) the
+    * local relation of its ids, built only when something reads it.
+    */
+  private lazy val rows: DataFrame =
+    if (frontier != null) frontier
+    else known match {
+      case Ids(ids) => g.idFrame(ids)
+      case other => throw new IllegalStateException(s"no frontier for $other")
+    }
 
   /** What the driver knows of the bag, set once as `from`, `filter` or
     * `related` makes this traversal; any other make knows nothing.
@@ -932,9 +943,9 @@ final case class Traversal(g: PropertyGraph, label: String,
     * the index's node rows when the bag is known.
     */
   lazy val df: DataFrame =
-    if (hasAttrs) frontier
+    if (hasAttrs) rows
     else (known match { case Ids(ids) => g.nodeFrame(label, ids); case _ => None })
-      .getOrElse(frontier.join(g.nodes(label), Seq(IdCol)))
+      .getOrElse(rows.join(g.nodes(label), Seq(IdCol)))
 
   def filter(cond: Column): Traversal = {
     val out = df.where(cond)
@@ -956,10 +967,9 @@ final case class Traversal(g: PropertyGraph, label: String,
       case _ => None
     }
     walked match {
-      case Some(out) =>
-        Traversal(g, ref.dstLabel, g.idFrame(out), hasAttrs = false).knowing(Ids(out))
+      case Some(out) => ofIds(g, ref.dstLabel, out)
       case None =>
-        val hop = frontier.select(col(IdCol).as("__src"))
+        val hop = rows.select(col(IdCol).as("__src"))
           .join(g.edges(relName), col("__src") === col(SrcCol))
           .select(col(DstCol).as(IdCol))
         Traversal(g, ref.dstLabel, hop, hasAttrs = false)
@@ -996,7 +1006,7 @@ final case class Traversal(g: PropertyGraph, label: String,
       case (Ids(a), Ids(b)) =>
         val out = op(a, b)
         if (!Regime.fits(out.size.toLong, SnapshotIndex.MaxLocalFrontier)) None
-        else Some(Traversal(g, label, g.idFrame(out), hasAttrs = false).knowing(Ids(out)))
+        else Some(ofIds(g, label, out))
       case _ => None
     }
 
@@ -1005,7 +1015,7 @@ final case class Traversal(g: PropertyGraph, label: String,
     */
   def attr(name: String): DataFrame = df.select(col(name))
 
-  def ids: DataFrame = frontier.select(col(IdCol))
+  def ids: DataFrame = rows.select(col(IdCol))
 }
 
 object Traversal {
@@ -1016,4 +1026,11 @@ object Traversal {
   private[graph] case object WholeExtent extends Known
   /** Exactly these ids, duplicates included. */
   private[graph] final case class Ids(ids: Vector[Any]) extends Known
+
+  /** The bag of `ids` of `label`, known on the driver: no frame until
+    * `ids`, `df` or `attr` reads it.
+    */
+  private[graph] def ofIds(g: PropertyGraph, label: String,
+      ids: Vector[Any]): Traversal =
+    Traversal(g, label, null, hasAttrs = false).knowing(Ids(ids))
 }

@@ -20,6 +20,14 @@ import org.apache.spark.sql.types._
   * (H.264 etc.) are refused loudly, never faked. Other bytes (the
   * text-backed fixtures) fall through to a clearly-marked deterministic
   * stub.
+  *
+  * Container headers are read in two places, one walker per format
+  * ([[walkBoxes]], [[walkRiff]]); each operator is a visitor. A walk
+  * descends through an explicit stack, not a JVM frame per nesting level,
+  * so its work and memory are bounded by the payload's size, and corrupt
+  * or crafted media (truncated, lying sizes, 20,000 nested lists) gives a
+  * fallback row — the stub, byte-slice frames or `unsupported` luma rows.
+  *
   * Everything Spark-side is real and load-bearing
   * either way: the schema convention, the mapPartitions batch shape (one
   * decoder init per partition, not per row), and the feature-struct output
@@ -181,155 +189,166 @@ object Multimodal {
     ((p(off + 3) & 0xFFL) << 24) | ((p(off + 2) & 0xFFL) << 16) |
       ((p(off + 1) & 0xFFL) << 8) | (p(off) & 0xFFL)
 
+  /** Little-endian B, G, R bytes as one 0xRRGGBB pixel. */
+  private def le24(p: Array[Byte], off: Int): Int =
+    ((p(off + 2) & 0xFF) << 16) | ((p(off + 1) & 0xFF) << 8) | (p(off) & 0xFF)
+
   private def fourcc(p: Array[Byte], off: Int): String =
     new String(p, off, 4, java.nio.charset.StandardCharsets.US_ASCII)
 
-  /** Pure-JVM MP4 (ISO BMFF) header parse: walks the box tree for
+  /** An open level of a walk: its parent's type ("" at the top), a cursor. */
+  private final class Level(val parent: String, var off: Int, val until: Int)
+
+  /** The one ISO-BMFF (MP4) box walker (ISO 14496-12 §4.2). A box is a
+    * 32-bit big-endian size and a type; size 1 means a 64-bit size follows
+    * the type, size 0 means "to the end of the enclosing box". A box whose
+    * size is under 8 or runs past its parent ends that level: the parent
+    * goes on with its next sibling. `visit(parent, type, from, until)` sees
+    * every box of every level it enters, in file order, depth first, with
+    * its body range; it returns true to descend into that body. Open levels
+    * live on an explicit stack, not on JVM frames: no nesting depth can
+    * overflow the thread's stack, and as each level spends at least 8
+    * payload bytes, work and memory stay bounded by the payload's size.
+    */
+  private def walkBoxes(p: Array[Byte])(
+      visit: (String, String, Int, Int) => Boolean): Unit = {
+    val open = scala.collection.mutable.Stack(new Level("", 0, p.length))
+    while (open.nonEmpty) {
+      val lv = open.top
+      val off = lv.off
+      if (lv.until - off < 8) open.pop()
+      else {
+        val size32 = be32(p, off)
+        val (from, size) =
+          if (size32 == 1L && lv.until - off >= 16) (off + 16, be64(p, off + 8))
+          else if (size32 == 0L) (off + 8, (lv.until - off).toLong) // to end
+          else (off + 8, size32)
+        if (size < 8 || off + size > lv.until) open.pop() // malformed: level ends
+        else {
+          val end = off + size.toInt
+          val typ = fourcc(p, off + 4)
+          lv.off = end
+          if (visit(lv.parent, typ, from, end)) open.push(new Level(typ, from, end))
+        }
+      }
+    }
+  }
+
+  /** The one RIFF (AVI) chunk walker, over the chunks after the 12-byte
+    * `RIFF size form` header. A chunk is a four-character id and a 32-bit
+    * little-endian size; its body pads to an even length. A chunk running
+    * past its list ends that level: the enclosing list goes on with its
+    * next sibling. `visit(parent, id, from, until)` sees every chunk of
+    * every list it enters, in file order, depth first, with its body range;
+    * `parent` is the enclosing list's type ("" at the top). A `LIST`
+    * chunk's body opens with its [[listType]]: true descends into the
+    * chunks after it (on other chunks true means nothing). Same explicit
+    * stack and bounds as [[walkBoxes]].
+    */
+  private def walkRiff(p: Array[Byte])(
+      visit: (String, String, Int, Int) => Boolean): Unit = {
+    val open = scala.collection.mutable.Stack(new Level("", 12, p.length))
+    while (open.nonEmpty) {
+      val lv = open.top
+      val off = lv.off
+      if (lv.until - off < 8) open.pop()
+      else {
+        val size = le32(p, off + 4) // unsigned 32-bit: never negative
+        val from = off + 8
+        if (from + size > lv.until) open.pop() // malformed: level ends
+        else {
+          val end = from + size.toInt
+          val id = fourcc(p, off)
+          lv.off = end + (size.toInt & 1) // even padding
+          if (visit(lv.parent, id, from, end) && id == "LIST" && size >= 4)
+            open.push(new Level(fourcc(p, from), from + 4, end))
+        }
+      }
+    }
+  }
+
+  /** The type a `LIST` chunk's body opens with; "" when it is too short. */
+  private def listType(p: Array[Byte], from: Int, until: Int): String =
+    if (until - from >= 4) fourcc(p, from) else ""
+
+  /** Pure-JVM MP4 (ISO BMFF) header parse, a [[walkBoxes]] visitor: reads
     * `moov`/`mvhd` (timescale + duration → duration_ms), counts `trak`
     * boxes, and reads presentation width/height from each `tkhd` (16.16
     * fixed point, the final 8 bytes of the box in both v0 and v1
-    * layouts — ISO 14496-12 §8.3.2). Returns None on any malformed
-    * structure; no codec work, header-only, reference: the audio header
-    * decode above.
+    * layouts — ISO 14496-12 §8.3.2). None without a trak; no codec work,
+    * header-only, reference: the audio header decode above.
     */
   private def parseMp4(p: Array[Byte]): Option[Decoded] = try {
     var durationMs = 0L
     var nTracks = 0
     var width = 0
     var height = 0
-    // walk one box level [from, until); recurse into moov/trak
-    def walk(from: Int, until: Int, depth: Int): Unit = {
-      var off = from
-      while (off + 8 <= until) {
-        val size32 = be32(p, off)
-        val typ = fourcc(p, off + 4)
-        val (bodyOff, size) =
-          if (size32 == 1L && off + 16 <= until) (off + 16, be64(p, off + 8))
-          else if (size32 == 0L) (off + 8, (until - off).toLong) // to end
-          else (off + 8, size32)
-        if (size < 8 || off + size > until) return // malformed: stop cleanly
-        val end = off + size.toInt
-        typ match {
-          case "moov" if depth == 0 => walk(bodyOff, end, 1)
-          case "trak" if depth == 1 =>
-            nTracks += 1
-            walk(bodyOff, end, 2)
-          case "mvhd" if depth == 1 && bodyOff + 4 <= end =>
-            val version = p(bodyOff) & 0xFF
-            if (version == 1 && bodyOff + 32 <= end) {
-              val timescale = be32(p, bodyOff + 20)
-              val duration = be64(p, bodyOff + 24)
-              // overflow guard: a corrupt duration near 2^63 would wrap
-              // negative on *1000 — report it via Math.multiplyHigh-free
-              // bounds check instead of emitting garbage
-              if (timescale > 0 && duration >= 0 &&
-                  duration <= Long.MaxValue / 1000L)
-                durationMs = duration * 1000L / timescale
-            } else if (version == 0 && bodyOff + 20 <= end) {
-              val timescale = be32(p, bodyOff + 12)
-              val duration = be32(p, bodyOff + 16) // unsigned 32-bit: *1000 can't overflow
-              if (timescale > 0) durationMs = duration * 1000L / timescale
-            }
-          case "tkhd" if depth == 2 && end - bodyOff >= 8 =>
-            // width/height close the box in every tkhd version
-            val w = (be32(p, end - 8) >> 16).toInt
-            val h = (be32(p, end - 4) >> 16).toInt
-            if (w > width) width = w
-            if (h > height) height = h
-          case _ => ()
-        }
-        off = end
+    walkBoxes(p) { (parent, typ, from, until) =>
+      typ match {
+        case "moov" => parent == ""
+        case "trak" if parent == "moov" =>
+          nTracks += 1
+          true
+        case "mvhd" if parent == "moov" && from + 4 <= until =>
+          val version = p(from) & 0xFF
+          if (version == 1 && from + 32 <= until) {
+            val timescale = be32(p, from + 20)
+            val duration = be64(p, from + 24)
+            // overflow guard: a corrupt duration near 2^63 would wrap
+            // negative on *1000 — report it via Math.multiplyHigh-free
+            // bounds check instead of emitting garbage
+            if (timescale > 0 && duration >= 0 &&
+                duration <= Long.MaxValue / 1000L)
+              durationMs = duration * 1000L / timescale
+          } else if (version == 0 && from + 20 <= until) {
+            val timescale = be32(p, from + 12)
+            val duration = be32(p, from + 16) // unsigned 32-bit: *1000 can't overflow
+            if (timescale > 0) durationMs = duration * 1000L / timescale
+          }
+          false
+        case "tkhd" if parent == "trak" && until - from >= 8 =>
+          // width/height close the box in every tkhd version
+          val w = (be32(p, until - 8) >> 16).toInt
+          val h = (be32(p, until - 4) >> 16).toInt
+          if (w > width) width = w
+          if (h > height) height = h
+          false
+        case _ => false
       }
     }
-    walk(0, p.length, 0)
     if (nTracks == 0) None
     else Some(Decoded(width, height, 0L, durationMs = durationMs, nTracks = nTracks))
   } catch { case scala.util.control.NonFatal(_) => None }
 
-  /** Pure-JVM AVI header parse: RIFF chunk walk to the `avih` main header
-    * (inside LIST/hdrl) — µs-per-frame × total frames → duration_ms,
-    * dwStreams → track count, dwWidth/dwHeight → dims. Little-endian,
-    * chunks pad to even offsets. Returns None when no avih is found.
+  /** Pure-JVM AVI header parse, a [[walkRiff]] visitor: looks through
+    * every list for the `avih` main header (in LIST/hdrl) — µs-per-frame
+    * × total frames → duration_ms, dwStreams → track count,
+    * dwWidth/dwHeight → dims. None when no avih is found.
     */
   private def parseAvi(p: Array[Byte]): Option[Decoded] = try {
     var found: Option[Decoded] = None
-    def walk(from: Int, until: Int): Unit = {
-      var off = from
-      while (off + 8 <= until && found.isEmpty) {
-        val id = fourcc(p, off)
-        val size = le32(p, off + 4)
-        val body = off + 8
-        if (size < 0 || body + size > until) return
-        if (id == "LIST" && size >= 4) walk(body + 4, body + size.toInt)
-        else if (id == "avih" && size >= 40) {
-          val usPerFrame = le32(p, body)
-          val totalFrames = le32(p, body + 16)
-          // unsigned 32-bit fields: a raw .toInt would sign-wrap
-          // adversarial values (dwStreams=0xFFFFFFFF → -1 tracks); clamp
-          // over-Int values to 0 like the duration guard below
-          def clamped(v: Long): Int = if (v > Int.MaxValue) 0 else v.toInt
-          val streams = clamped(le32(p, body + 24))
-          val w = clamped(le32(p, body + 32))
-          val h = clamped(le32(p, body + 36))
-          // both fields are unsigned 32-bit (≤ ~4.3e9): their product can
-          // reach ~1.8e19 > Long.MaxValue on an adversarial header, so
-          // divide before multiplying overflows
-          val durMs =
-            if (usPerFrame > 0 && totalFrames > Long.MaxValue / usPerFrame) 0L
-            else totalFrames * usPerFrame / 1000L
-          found = Some(Decoded(w, h, 0L, durationMs = durMs, nTracks = streams))
-        }
-        off = body + size.toInt + (size.toInt & 1) // even padding
+    walkRiff(p) { (_, id, body, until) =>
+      if (id == "avih" && until - body >= 40 && found.isEmpty) {
+        val usPerFrame = le32(p, body)
+        val totalFrames = le32(p, body + 16)
+        // unsigned 32-bit fields: a raw .toInt would sign-wrap
+        // adversarial values (dwStreams=0xFFFFFFFF → -1 tracks); clamp
+        // over-Int values to 0 like the duration guard below
+        def clamped(v: Long): Int = if (v > Int.MaxValue) 0 else v.toInt
+        val streams = clamped(le32(p, body + 24))
+        val w = clamped(le32(p, body + 32))
+        val h = clamped(le32(p, body + 36))
+        // both fields are unsigned 32-bit (≤ ~4.3e9): their product can
+        // reach ~1.8e19 > Long.MaxValue on an adversarial header, so
+        // divide before multiplying overflows
+        val durMs =
+          if (usPerFrame > 0 && totalFrames > Long.MaxValue / usPerFrame) 0L
+          else totalFrames * usPerFrame / 1000L
+        found = Some(Decoded(w, h, 0L, durationMs = durMs, nTracks = streams))
       }
+      found.isEmpty // every list, until the first avih
     }
-    walk(12, p.length)
     found
-  } catch { case scala.util.control.NonFatal(_) => None }
-
-  /** Demux an AVI payload's video frames: RIFF walk to the `movi` LIST,
-    * collecting `NNdb`/`NNdc` chunks (uncompressed / compressed video data
-    * for stream NN) in file order, recursing into `rec ` interleave
-    * groupings. For MJPEG AVIs each chunk is a complete JPEG. Returns None
-    * when no movi list exists or it holds no video chunks, so callers can
-    * fall back to byte-slicing.
-    */
-  private[graft] def demuxAviFrames(p: Array[Byte]): Option[Vector[Array[Byte]]] = try {
-    val frames = Vector.newBuilder[Array[Byte]]
-    var any = false
-    def isVideoChunk(id: String): Boolean =
-      id.length == 4 && id(0).isDigit && id(1).isDigit &&
-        id(2) == 'd' && (id(3) == 'b' || id(3) == 'c')
-    // inside a movi (or nested rec) list: leaf chunks are stream data
-    def walkChunks(from: Int, until: Int): Unit = {
-      var off = from
-      while (off + 8 <= until) {
-        val id = fourcc(p, off)
-        val size = le32(p, off + 4)
-        val body = off + 8
-        if (size < 0 || body + size > until) return
-        if (id == "LIST" && size >= 4 && fourcc(p, body) == "rec ")
-          walkChunks(body + 4, body + size.toInt)
-        else if (isVideoChunk(id)) {
-          frames += java.util.Arrays.copyOfRange(p, body, body + size.toInt)
-          any = true
-        }
-        off = body + size.toInt + (size.toInt & 1) // even padding
-      }
-    }
-    def walk(from: Int, until: Int): Unit = {
-      var off = from
-      while (off + 8 <= until) {
-        val id = fourcc(p, off)
-        val size = le32(p, off + 4)
-        val body = off + 8
-        if (size < 0 || body + size > until) return
-        if (id == "LIST" && size >= 4 && fourcc(p, body) == "movi")
-          walkChunks(body + 4, body + size.toInt)
-        off = body + size.toInt + (size.toInt & 1)
-      }
-    }
-    walk(12, p.length)
-    if (any) Some(frames.result()) else None
   } catch { case scala.util.control.NonFatal(_) => None }
 
   /** The AVI video stream's pixel format, from the stream header list
@@ -345,9 +364,9 @@ object Multimodal {
       palette: Array[Int] = Array.empty) {
     def topDown: Boolean = height < 0
     def absHeight: Int = math.abs(height)
-    /** DIB rows pad to 4-byte boundaries. */
-    def rowStride: Int = ((width * (bitCount / 8)) + 3) & ~3
-    def frameBytes: Int = rowStride * absHeight
+    /** DIB rows pad to 4-byte boundaries; Long, so no crafted size wraps. */
+    def rowStride: Long = ((width.toLong * (bitCount / 8)) + 3) & ~3L
+    def frameBytes: Long = rowStride * absHeight
     def isRawRgb24: Boolean =
       compression == 0L && bitCount == 24 && width > 0 && absHeight > 0
     /** 8-bit palettized uncompressed — indices into the strf palette. */
@@ -363,131 +382,112 @@ object Multimodal {
     def decodable: Boolean = isRawRgb24 || isPal8 || isRle8
     /** Codec label for the decodable formats. */
     def codecName: String = if (isRle8) "rle8" else "rawvideo"
-    /** Integer BT.601 luma (milli-units) per palette entry — computed
-      * once per format, probed per pixel.
-      */
-    lazy val paletteLumaMilli: Array[Long] = palette.map { rgb =>
-      299L * ((rgb >> 16) & 0xFF) + 587L * ((rgb >> 8) & 0xFF) +
-        114L * (rgb & 0xFF)
-    }
+    /** Luma per palette entry — computed once per format, probed per pixel. */
+    lazy val paletteLumaMilli: Array[Long] = palette.map(lumaMilli)
   }
 
-  private[graft] def aviVideoFormat(p: Array[Byte]): Option[DibFormat] = try {
-    var found: Option[DibFormat] = None
-    def walkStrl(from: Int, until: Int): Unit = {
-      var off = from
-      var isVids = false
-      while (off + 8 <= until && found.isEmpty) {
-        val id = fourcc(p, off)
-        val size = le32(p, off + 4)
-        val body = off + 8
-        if (size < 0 || body + size > until) return
-        if (id == "strh" && size >= 4) isVids = fourcc(p, body) == "vids"
-        else if (id == "strf" && isVids && size >= 20) {
-          val w = le32(p, body + 4).toInt
-          val h = le32(p, body + 8).toInt // signed: negative = top-down
-          val bits = (p(body + 14) & 0xFF) | ((p(body + 15) & 0xFF) << 8)
-          // palette (RGBQUAD = B,G,R,reserved) follows the 40-byte
-          // header for <=8-bit formats: biClrUsed entries, or the full
-          // 2^bitCount when biClrUsed is 0 — bounded by the strf size
-          val declared =
-            if (size >= 36 && bits <= 8) {
-              val used = le32(p, body + 32)
-              if (used > 0) used.toInt else 1 << bits
-            } else 0
-          val avail = if (size > 40) ((size - 40) / 4).toInt else 0
-          val n = math.min(declared, avail)
-          val pal = new Array[Int](math.max(n, 0))
-          var i = 0
-          while (i < pal.length) {
-            val o = body + 40 + i * 4
-            pal(i) = ((p(o + 2) & 0xFF) << 16) | ((p(o + 1) & 0xFF) << 8) |
-              (p(o) & 0xFF)
-            i += 1
-          }
-          found = Some(DibFormat(w, h, bits, le32(p, body + 16), pal))
-        }
-        off = body + size.toInt + (size.toInt & 1)
+  /** A `strf` body [from, until) of at least 20 bytes as a [[DibFormat]]. */
+  private def strfFormat(p: Array[Byte], from: Int, until: Int): DibFormat = {
+    val size = until - from
+    val w = le32(p, from + 4).toInt
+    val h = le32(p, from + 8).toInt // signed: negative = top-down
+    val bits = (p(from + 14) & 0xFF) | ((p(from + 15) & 0xFF) << 8)
+    // palette (RGBQUAD = B,G,R,reserved) follows the 40-byte
+    // header for <=8-bit formats: biClrUsed entries, or the full
+    // 2^bitCount when biClrUsed is 0 — bounded by the strf size
+    val declared =
+      if (size >= 36 && bits <= 8) {
+        val used = le32(p, from + 32)
+        if (used > 0) used.toInt else 1 << bits
+      } else 0
+    val avail = if (size > 40) (size - 40) / 4 else 0
+    val pal = Array.tabulate(math.max(math.min(declared, avail), 0))(i =>
+      le24(p, from + 40 + i * 4))
+    DibFormat(w, h, bits, le32(p, from + 16), pal)
+  }
+
+  /** A demuxed video track: frames in file order, and AVI's pixel format. */
+  private[graft] final case class Demuxed(frames: Vector[Array[Byte]],
+      format: Option[DibFormat])
+
+  /** Demux an AVI payload in one [[walkRiff]] walk: the `NNdb`/`NNdc`
+    * chunks (uncompressed / compressed video data for stream NN) of each
+    * top-level `movi` list and of the `rec ` interleave groups nested in
+    * it, in file order — for MJPEG AVIs each chunk is a complete JPEG —
+    * and the [[DibFormat]] of the first video stream. None when no movi
+    * list holds a video chunk, so callers can fall back to byte-slicing.
+    */
+  private[graft] def demuxAvi(p: Array[Byte]): Option[Demuxed] = try {
+    val frames = Vector.newBuilder[Array[Byte]]
+    var format: Option[DibFormat] = None
+    var isVids = false // the current strl's strh names a video stream
+    def isVideoChunk(id: String): Boolean =
+      id.length == 4 && id(0).isDigit && id(1).isDigit &&
+        id(2) == 'd' && (id(3) == 'b' || id(3) == 'c')
+    walkRiff(p) { (parent, id, body, until) =>
+      if (id == "LIST") (parent, listType(p, body, until)) match {
+        case ("" | "hdrl", "hdrl") | ("", "movi") | ("movi" | "rec ", "rec ") => true
+        case ("hdrl", "strl") =>
+          isVids = false
+          true
+        case _ => false
+      } else {
+        if ((parent == "movi" || parent == "rec ") && isVideoChunk(id))
+          frames += java.util.Arrays.copyOfRange(p, body, until)
+        else if (parent == "strl" && id == "strh" && until - body >= 4)
+          isVids = fourcc(p, body) == "vids"
+        else if (parent == "strl" && id == "strf" && isVids &&
+            format.isEmpty && until - body >= 20)
+          format = Some(strfFormat(p, body, until))
+        false
       }
     }
-    def walk(from: Int, until: Int, inHdrl: Boolean): Unit = {
-      var off = from
-      while (off + 8 <= until && found.isEmpty) {
-        val id = fourcc(p, off)
-        val size = le32(p, off + 4)
-        val body = off + 8
-        if (size < 0 || body + size > until) return
-        if (id == "LIST" && size >= 4) {
-          val lt = fourcc(p, body)
-          if (lt == "hdrl") walk(body + 4, body + size.toInt, inHdrl = true)
-          else if (lt == "strl" && inHdrl) walkStrl(body + 4, body + size.toInt)
-        }
-        off = body + size.toInt + (size.toInt & 1)
-      }
-    }
-    walk(12, p.length, inHdrl = false)
-    found
+    val out = frames.result()
+    if (out.nonEmpty) Some(Demuxed(out, format)) else None
   } catch { case scala.util.control.NonFatal(_) => None }
 
-  /** REAL rawvideo decode: mean BT.601 luminance over a BI_RGB 24-bit DIB
-    * frame's actual pixels — BGR byte order, rows 4-byte padded,
-    * bottom-up unless biHeight was negative. Integer arithmetic
-    * throughout (per-pixel 299·R + 587·G + 114·B is luma in
-    * milli-units; the mean divides once at the end), so the value is
-    * deterministic across JVMs — no float accumulation. None when the
-    * chunk isn't a full frame for the advertised format (truncated
-    * chunk — data, not a bug).
+  /** Integer BT.601 luma of one 0xRRGGBB pixel in milli-units: the one
+    * spelling every frame decoder sums, so a mean (one division at the end)
+    * is the same integer on every JVM — no float accumulation.
+    */
+  private def lumaMilli(rgb: Int): Long =
+    299L * ((rgb >> 16) & 0xFF) + 587L * ((rgb >> 8) & 0xFF) +
+      114L * (rgb & 0xFF)
+
+  /** REAL rawvideo decode: mean luma ([[lumaMilli]]) over an
+    * uncompressed DIB frame's actual pixels — 24-bit BGR, or 8-bit
+    * indices into the strf palette — rows 4-byte padded, bottom-up unless
+    * biHeight was negative. BI_RLE8 frames go to [[rle8MeanLumaMilli]].
+    * None when the chunk isn't a full frame for the advertised format
+    * (truncated chunk — data, not a bug) or an index falls outside the
+    * palette (a corrupt frame: refuse, not guess).
     */
   private[graft] def dibMeanLumaMilli(bytes: Array[Byte],
-      fmt: DibFormat): Option[Long] = {
-    if (fmt.isPal8) pal8MeanLumaMilli(bytes, fmt)
-    else if (fmt.isRle8) rle8MeanLumaMilli(bytes, fmt)
-    else if (!fmt.isRawRgb24 || bytes.length < fmt.frameBytes) None
+      fmt: DibFormat): Option[Long] =
+    if (fmt.isRle8) rle8MeanLumaMilli(bytes, fmt)
+    else if (!(fmt.isRawRgb24 || fmt.isPal8) || bytes.length < fmt.frameBytes)
+      None
     else {
-      val stride = fmt.rowStride
+      val pal8 = fmt.isPal8
+      val lut = fmt.paletteLumaMilli
+      val stride = fmt.rowStride.toInt // fits: the frame fits in `bytes`
       var sum = 0L
       var y = 0
       while (y < fmt.absHeight) {
         val ro = (if (fmt.topDown) y else fmt.absHeight - 1 - y) * stride
         var x = 0
         while (x < fmt.width) {
-          val b = bytes(ro + x * 3) & 0xFF
-          val g = bytes(ro + x * 3 + 1) & 0xFF
-          val r = bytes(ro + x * 3 + 2) & 0xFF
-          sum += 299L * r + 587L * g + 114L * b
+          if (pal8) {
+            val idx = bytes(ro + x) & 0xFF
+            if (idx >= lut.length) return None
+            sum += lut(idx)
+          } else sum += lumaMilli(le24(bytes, ro + x * 3))
           x += 1
         }
         y += 1
       }
       Some(sum / (fmt.width.toLong * fmt.absHeight))
     }
-  }
-
-  /** 8-bit palettized uncompressed DIB: each pixel byte indexes the strf
-    * palette; rows pad to 4 bytes. Same row/stride walk as the 24-bit
-    * path, with the per-entry luma precomputed on the format. An
-    * out-of-palette index is a corrupt frame → None (refuse, not guess).
-    */
-  private def pal8MeanLumaMilli(bytes: Array[Byte],
-      fmt: DibFormat): Option[Long] = {
-    if (bytes.length < fmt.frameBytes) return None
-    val lut = fmt.paletteLumaMilli
-    val stride = fmt.rowStride
-    var sum = 0L
-    var y = 0
-    while (y < fmt.absHeight) {
-      val ro = (if (fmt.topDown) y else fmt.absHeight - 1 - y) * stride
-      var x = 0
-      while (x < fmt.width) {
-        val idx = bytes(ro + x) & 0xFF
-        if (idx >= lut.length) return None
-        sum += lut(idx)
-        x += 1
-      }
-      y += 1
-    }
-    Some(sum / (fmt.width.toLong * fmt.absHeight))
-  }
 
   /** BI_RLE8 decode-to-luma: walks the encoded stream (count>0 = a run of
     * `count` copies of the following palette index; count=0 escapes:
@@ -543,41 +543,47 @@ object Multimodal {
     Some(sum / total)
   }
 
-  /** Mean BT.601 luma (milli-units) of an ImageIO-decodable frame (the
-    * MJPEG path) — same integer spelling as [[dibMeanLumaMilli]].
+  /** ImageIO decode of image bytes; None when they don't decode (a
+    * truncated frame — data, not a bug).
     */
-  private def imageMeanLumaMilli(bytes: Array[Byte]): Option[Long] =
-    try {
-      val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes))
-      if (img == null || img.getWidth <= 0 || img.getHeight <= 0) None
-      else {
-        var sum = 0L
-        var y = 0
-        while (y < img.getHeight) {
-          var x = 0
-          while (x < img.getWidth) {
-            val rgb = img.getRGB(x, y)
-            sum += 299L * ((rgb >> 16) & 0xFF) + 587L * ((rgb >> 8) & 0xFF) +
-              114L * (rgb & 0xFF)
-            x += 1
+  private def readImage(bytes: Array[Byte]): Option[java.awt.image.BufferedImage] =
+    try Option(javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes)))
+    catch { case scala.util.control.NonFatal(_) => None }
+
+  /** (width, height, mean luma) of an ImageIO-decodable frame (the MJPEG
+    * path), from one decode; the mean sums [[lumaMilli]] like the DIB path.
+    */
+  private def imageLuma(bytes: Array[Byte]): Option[(Int, Int, Long)] =
+    readImage(bytes).filter(img => img.getWidth > 0 && img.getHeight > 0)
+      .flatMap { img =>
+        try {
+          var sum = 0L
+          var y = 0
+          while (y < img.getHeight) {
+            var x = 0
+            while (x < img.getWidth) {
+              sum += lumaMilli(img.getRGB(x, y))
+              x += 1
+            }
+            y += 1
           }
-          y += 1
-        }
-        Some(sum / (img.getWidth.toLong * img.getHeight))
+          Some((img.getWidth, img.getHeight,
+            sum / (img.getWidth.toLong * img.getHeight)))
+        } catch { case scala.util.control.NonFatal(_) => None }
       }
-    } catch { case scala.util.control.NonFatal(_) => None }
 
   /** Demux an MP4 payload's video-track samples via the sample tables
     * (ISO 14496-12 §8.5-8.7: `stsz`/`stsc`/`stco`|`co64` under
     * trak/mdia/minf/stbl; the video trak is identified by its `hdlr`
-    * handler_type `vide`). Each sample's byte range is reconstructed
-    * chunk by chunk: chunk offsets from stco/co64, the chunk's sample
-    * count from the stsc run covering it (entries are 1-based
-    * first_chunk runs), consecutive sample sizes from stsz. For
-    * MJPEG/JPEG-coded tracks each sample is a complete JPEG, same as
-    * the AVI `00dc` contract. Returns None when no video trak carries
-    * usable tables or any reconstructed range escapes the payload —
-    * callers fall back to byte-slicing.
+    * handler_type `vide`), read by a [[walkBoxes]] visitor. Each sample's
+    * byte range is reconstructed chunk by chunk: chunk offsets from
+    * stco/co64, the chunk's sample count from the stsc run covering it
+    * (entries are 1-based first_chunk runs), consecutive sample sizes
+    * from stsz — linear in the table sizes. For MJPEG/JPEG-coded tracks
+    * each sample is a complete JPEG, same as the AVI `00dc` contract.
+    * Returns None when no video trak carries usable tables or any
+    * reconstructed range escapes the payload — callers fall back to
+    * byte-slicing.
     */
   private[graft] def demuxMp4Frames(p: Array[Byte]): Option[Vector[Array[Byte]]] = try {
     final class Tables {
@@ -590,53 +596,48 @@ object Multimodal {
     }
     val traks = scala.collection.mutable.ArrayBuffer.empty[Tables]
     var cur: Tables = null
-    def walk(from: Int, until: Int, parent: String): Unit = {
-      var off = from
-      while (off + 8 <= until) {
-        val size32 = be32(p, off)
-        val typ = fourcc(p, off + 4)
-        val (bodyOff, size) =
-          if (size32 == 1L && off + 16 <= until) (off + 16, be64(p, off + 8))
-          else if (size32 == 0L) (off + 8, (until - off).toLong)
-          else (off + 8, size32)
-        if (size < 8 || off + size > until) return // malformed: stop cleanly
-        val end = off + size.toInt
-        typ match {
-          case t @ ("moov" | "mdia" | "minf" | "stbl") => walk(bodyOff, end, t)
-          case "trak" => cur = new Tables; traks += cur; walk(bodyOff, end, "trak")
-          // ONLY the mdia-level hdlr names the track's media type —
-          // QuickTime-style files carry a second minf-level hdlr (data
-          // handler, e.g. 'dhlr'/'alis') that must not overwrite 'vide'
-          case "hdlr" if parent == "mdia" && cur != null && bodyOff + 12 <= end =>
-            cur.handler = fourcc(p, bodyOff + 8)
-          case "stsz" if cur != null && bodyOff + 12 <= end =>
-            cur.uniformSize = be32(p, bodyOff + 4)
-            val n = be32(p, bodyOff + 8)
-            if (n <= Int.MaxValue) {
-              cur.sampleCount = n.toInt
-              if (cur.uniformSize == 0L && bodyOff + 12 + 4L * n <= end)
-                cur.sizes = Array.tabulate(n.toInt)(i => be32(p, bodyOff + 12 + 4 * i))
+    walkBoxes(p) { (parent, typ, from, until) =>
+      typ match {
+        case "moov" | "mdia" | "minf" | "stbl" => true
+        case "trak" =>
+          cur = new Tables
+          traks += cur
+          true
+        // ONLY the mdia-level hdlr names the track's media type —
+        // QuickTime-style files carry a second minf-level hdlr (data
+        // handler, e.g. 'dhlr'/'alis') that must not overwrite 'vide'
+        case "hdlr" if parent == "mdia" && cur != null && from + 12 <= until =>
+          cur.handler = fourcc(p, from + 8)
+          false
+        case "stsz" if cur != null && from + 12 <= until =>
+          cur.uniformSize = be32(p, from + 4)
+          val n = be32(p, from + 8)
+          if (n <= Int.MaxValue) {
+            cur.sampleCount = n.toInt
+            if (cur.uniformSize == 0L && from + 12 + 4L * n <= until)
+              cur.sizes = Array.tabulate(n.toInt)(i => be32(p, from + 12 + 4 * i))
+          }
+          false
+        case "stsc" if cur != null && from + 8 <= until =>
+          val n = be32(p, from + 4)
+          if (n <= Int.MaxValue && from + 8 + 12L * n <= until)
+            cur.stsc = Array.tabulate(n.toInt) { i =>
+              (be32(p, from + 8 + 12 * i), be32(p, from + 8 + 12 * i + 4))
             }
-          case "stsc" if cur != null && bodyOff + 8 <= end =>
-            val n = be32(p, bodyOff + 4)
-            if (n <= Int.MaxValue && bodyOff + 8 + 12L * n <= end)
-              cur.stsc = Array.tabulate(n.toInt) { i =>
-                (be32(p, bodyOff + 8 + 12 * i), be32(p, bodyOff + 8 + 12 * i + 4))
-              }
-          case "stco" if cur != null && bodyOff + 8 <= end =>
-            val n = be32(p, bodyOff + 4)
-            if (n <= Int.MaxValue && bodyOff + 8 + 4L * n <= end)
-              cur.offsets = Array.tabulate(n.toInt)(i => be32(p, bodyOff + 8 + 4 * i))
-          case "co64" if cur != null && bodyOff + 8 <= end =>
-            val n = be32(p, bodyOff + 4)
-            if (n <= Int.MaxValue && bodyOff + 8 + 8L * n <= end)
-              cur.offsets = Array.tabulate(n.toInt)(i => be64(p, bodyOff + 8 + 8 * i))
-          case _ => ()
-        }
-        off = end
+          false
+        case "stco" if cur != null && from + 8 <= until =>
+          val n = be32(p, from + 4)
+          if (n <= Int.MaxValue && from + 8 + 4L * n <= until)
+            cur.offsets = Array.tabulate(n.toInt)(i => be32(p, from + 8 + 4 * i))
+          false
+        case "co64" if cur != null && from + 8 <= until =>
+          val n = be32(p, from + 4)
+          if (n <= Int.MaxValue && from + 8 + 8L * n <= until)
+            cur.offsets = Array.tabulate(n.toInt)(i => be64(p, from + 8 + 8 * i))
+          false
+        case _ => false
       }
     }
-    walk(0, p.length, "")
     traks
       .find(t => t.handler == "vide" && t.sampleCount > 0 &&
         t.offsets.nonEmpty && t.stsc.nonEmpty &&
@@ -644,23 +645,23 @@ object Multimodal {
       .flatMap { t =>
         def sampleSize(i: Int): Long =
           if (t.uniformSize > 0L) t.uniformSize else t.sizes(i)
-        // samples_per_chunk for 1-based chunk c: the LAST run whose
-        // first_chunk <= c (stsc is run-length encoded over chunks)
-        def spc(c: Int): Long = {
-          var v = 0L
-          var i = 0
-          while (i < t.stsc.length && t.stsc(i)._1 <= c) { v = t.stsc(i)._2; i += 1 }
-          v
-        }
         val frames = Vector.newBuilder[Array[Byte]]
         var si = 0
         var ci = 0
+        var run = 0 // stsc runs whose first_chunk <= the current chunk
+        var perChunk = 0L
         var ok = true
         while (ci < t.offsets.length && si < t.sampleCount && ok) {
+          // samples_per_chunk for 1-based chunk ci + 1: the last run of
+          // the longest prefix of runs whose first_chunk <= ci + 1. The
+          // chunk number only grows, so that prefix only grows too
+          while (run < t.stsc.length && t.stsc(run)._1 <= ci + 1) {
+            perChunk = t.stsc(run)._2
+            run += 1
+          }
           var inChunk = 0L
           var off = t.offsets(ci)
-          val n = spc(ci + 1)
-          while (inChunk < n && si < t.sampleCount && ok) {
+          while (inChunk < perChunk && si < t.sampleCount && ok) {
             val sz = sampleSize(si)
             if (off < 0 || sz < 0 || off + sz > p.length) ok = false
             else {
@@ -676,6 +677,14 @@ object Multimodal {
         if (ok && si == t.sampleCount && out.nonEmpty) Some(out) else None
       }
   } catch { case scala.util.control.NonFatal(_) => None }
+
+  /** The video track of an AVI or MP4 payload, sniffed and walked once;
+    * None for any other payload or one without demuxable video.
+    */
+  private def demux(p: Array[Byte]): Option[Demuxed] =
+    if (looksLikeAvi(p)) demuxAvi(p)
+    else if (looksLikeMp4(p)) demuxMp4Frames(p).map(Demuxed(_, None))
+    else None
 
   /** Deterministic synthetic ISO-BMFF builder (ISO 14496-12 §8.5-8.7) —
     * the fixture/oracle surface for [[demuxMp4Frames]]: packs `samples`
@@ -877,11 +886,8 @@ object Multimodal {
   private def decode(payload: Array[Byte]): Decoded = {
     val stub = decodeStub(payload)
     if (looksLikeImage(payload))
-      try {
-        val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(payload))
-        if (img == null) stub
-        else stub.copy(width = img.getWidth, height = img.getHeight)
-      } catch { case scala.util.control.NonFatal(_) => stub }
+      readImage(payload).fold(stub)(img =>
+        stub.copy(width = img.getWidth, height = img.getHeight))
     else if (looksLikeAudio(payload))
       try {
         // header-only parse (no PCM decode): ByteArrayInputStream supports
@@ -982,21 +988,16 @@ object Multimodal {
       .mapPartitions { rows =>
         javax.imageio.ImageIO.setUseCache(false) // once per partition
         rows.flatMap { case (id, payload) =>
-          val demux =
-            if (looksLikeAvi(payload)) demuxAviFrames(payload)
-            else if (looksLikeMp4(payload)) demuxMp4Frames(payload)
-            else None
-          // rawvideo dims come from the stream format header, parsed ONCE
-          // per payload (not per frame — every 00db chunk shares it)
-          val dib = demux.flatMap(_ =>
-            if (looksLikeAvi(payload)) aviVideoFormat(payload).filter(_.isRawRgb24)
-            else None)
-          demux match {
-            case Some(chunks) =>
+          demux(payload) match {
+            case Some(Demuxed(chunks, format)) =>
+              // rawvideo dims come from the stream format header, read by
+              // the demux walk (not per frame — every 00db chunk shares it)
+              val dib = format.filter(_.isRawRgb24)
               (0 until chunks.length by stride).iterator.map { ci =>
                 val bytes = chunks(ci)
                 val (w, h) =
-                  if (looksLikeImage(bytes)) imageDims(bytes)
+                  if (looksLikeImage(bytes))
+                    readImage(bytes).fold((0, 0))(img => (img.getWidth, img.getHeight))
                   else dib match {
                     case Some(f) if bytes.length >= f.frameBytes =>
                       (f.width, f.absHeight)
@@ -1040,11 +1041,12 @@ object Multimodal {
     *     (H.264 and friends need a real codec library; a wrong number
     *     here would poison any downstream filter keyed on brightness).
     *
-    * Both decoders share one integer BT.601 spelling (299R+587G+114B
-    * milli-units, one division at the end), so values are deterministic
-    * across JVMs. Same mapPartitions fan-out contract as
-    * [[sampleFrames]]: partition-local, no shuffle, decoder state
-    * initialized once per partition.
+    * Every decoder sums one integer BT.601 spelling ([[lumaMilli]],
+    * one division at the end), so values are deterministic across JVMs.
+    * The frames and the stream format come from one walk of the payload,
+    * and each MJPEG frame is decoded once. Same mapPartitions fan-out
+    * contract as [[sampleFrames]]: partition-local, no shuffle, decoder
+    * state initialized once per partition.
     */
   def frameLuma(media: DataFrame, stride: Int = 1): Dataset[FrameLuma] = {
     val spark = media.sparkSession
@@ -1054,39 +1056,24 @@ object Multimodal {
       .mapPartitions { rows =>
         javax.imageio.ImageIO.setUseCache(false) // once per partition
         rows.flatMap { case (id, payload) =>
-          val demux =
-            if (looksLikeAvi(payload)) demuxAviFrames(payload)
-            else if (looksLikeMp4(payload)) demuxMp4Frames(payload)
-            else None
-          val dib =
-            if (looksLikeAvi(payload)) aviVideoFormat(payload).filter(_.decodable)
-            else None
-          demux.fold(Iterator.empty: Iterator[FrameLuma]) { chunks =>
-            (0 until chunks.length by stride).iterator.map { ci =>
-              val bytes = chunks(ci)
-              dib.flatMap(f => dibMeanLumaMilli(bytes, f).map(l =>
-                  FrameLuma(id, ci, f.width, f.absHeight, f.codecName, l)))
-                .orElse {
-                  if (looksLikeImage(bytes))
-                    imageMeanLumaMilli(bytes).map { l =>
-                      val (w, h) = imageDims(bytes)
-                      FrameLuma(id, ci, w, h, "mjpeg", l)
-                    }
-                  else None
-                }
-                .getOrElse(FrameLuma(id, ci, 0, 0, "unsupported", -1L))
-            }
+          demux(payload).fold(Iterator.empty: Iterator[FrameLuma]) {
+            case Demuxed(chunks, format) =>
+              val dib = format.filter(_.decodable)
+              (0 until chunks.length by stride).iterator.map { ci =>
+                val bytes = chunks(ci)
+                dib.flatMap(f => dibMeanLumaMilli(bytes, f).map(l =>
+                    FrameLuma(id, ci, f.width, f.absHeight, f.codecName, l)))
+                  .orElse {
+                    if (looksLikeImage(bytes))
+                      imageLuma(bytes).map { case (w, h, l) =>
+                        FrameLuma(id, ci, w, h, "mjpeg", l)
+                      }
+                    else None
+                  }
+                  .getOrElse(FrameLuma(id, ci, 0, 0, "unsupported", -1L))
+              }
           }
         }
       }
   }
-
-  /** True decoded dimensions for an image payload; (0,0) when the bytes
-    * don't decode (truncated frame — data, not a bug).
-    */
-  private def imageDims(bytes: Array[Byte]): (Int, Int) =
-    try {
-      val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes))
-      if (img == null) (0, 0) else (img.getWidth, img.getHeight)
-    } catch { case scala.util.control.NonFatal(_) => (0, 0) }
 }

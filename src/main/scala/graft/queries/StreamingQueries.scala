@@ -29,7 +29,7 @@ object StreamingQueries {
       statePartitions = // store count by keyed-state volume (s05 law)
         Some(Streams.storesForSource(s, s"$dir/events.parquet")),
       noDataBatches = false) // complete mode: the final no-data batch
-        // only re-emits the identical result (Streams.withNoDataBatches)
+        // only re-emits the identical result (Streams.runToMemory)
     out.select(col("hour_start"), col("event_type"), col("n_events"), col("total_value"))
   }
 

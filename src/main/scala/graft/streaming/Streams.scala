@@ -152,16 +152,18 @@ object Streams {
       sessionProvider: Option[String], perQuery: Option[String]): Option[String] =
     perQuery.orElse(sessionProvider)
 
-  /** The ONE save/set/restore scope for the provider conf — both the
-    * per-drain choice ([[runToMemory]]) and the block form
-    * ([[withRocksDBStateStore]]) go through here, so restore semantics
-    * can never diverge between them. `provider = None` leaves the
-    * session untouched.
+  /** The ONE save/set/restore scope for the session conf a drain changes
+    * — the state store provider, the state partition count and the
+    * no-data batch switch of [[runToMemory]], and the block form
+    * [[withRocksDBStateStore]] — so restore semantics can never diverge
+    * between them. Each setting is a key and an optional value: None
+    * leaves that key untouched; every key it sets gets its previous value
+    * (or its absence) back when `body` returns or throws.
     *
-    * The provider conf is SESSION-GLOBAL, so the whole set/drain/restore
-    * is a critical section: two concurrent drains would otherwise
-    * interleave set/restore and one could start under the other's
-    * provider, or a restore could clobber a newer setting. The lock is a
+    * These confs are SESSION-GLOBAL, so the whole set/drain/restore is a
+    * critical section: two concurrent drains would otherwise interleave
+    * set/restore and one could start under the other's provider, or a
+    * restore could clobber a newer setting. The lock is a
     * DEDICATED object, deliberately not the SparkSession's own monitor —
     * Scala lazy-val initialization on the session synchronizes on the
     * instance, so holding `spark`'s monitor across a multi-second drain
@@ -171,16 +173,19 @@ object Streams {
     * correctness per session is what matters.
     */
   private val providerSwapLock = new Object
-  private def withProvider[A](spark: SparkSession, provider: Option[String])(
-      body: => A): A = providerSwapLock.synchronized {
-    val prev = spark.conf.getOption(ProviderKey)
-    provider.foreach(spark.conf.set(ProviderKey, _))
-    try body
-    finally if (provider.isDefined) prev match {
-      case Some(v) => spark.conf.set(ProviderKey, v)
-      case None    => spark.conf.unset(ProviderKey)
+  private def withConf[A](spark: SparkSession,
+      settings: (String, Option[String])*)(body: => A): A =
+    providerSwapLock.synchronized {
+      val set = settings.collect { case (k, Some(v)) => k -> v }
+      val prev = set.map { case (k, _) => k -> spark.conf.getOption(k) }
+      try {
+        set.foreach { case (k, v) => spark.conf.set(k, v) }
+        body
+      } finally prev.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None)    => spark.conf.unset(k)
+      }
     }
-  }
 
   /** On-disk bytes of a streaming source — driver-side FS metadata, no
     * Spark job, so sizing decisions never tax the drain they size.
@@ -334,6 +339,16 @@ object Streams {
     * of millions of session keys wants hundreds of partitions; a gate-
     * scale drain wants single digits), not by the session's relational
     * shuffle width. None = inherit the session conf.
+    *
+    * `noDataBatches = false` skips the trailing watermark-finalization
+    * (no-data) micro-batch, for drains whose OUTPUT cannot depend on it:
+    * COMPLETE-mode aggregations re-emit the full result every data batch,
+    * so the final no-data batch only re-runs the output stage to produce
+    * byte-identical sink contents (~0.5s of pure machinery per drain at
+    * gate scale, measured interleaved with row parity pinned,
+    * OPTIMIZATION_r17.md). APPEND and timer-bearing drains MUST keep it:
+    * their final emissions are exactly what the watermark-advance batch
+    * flushes.
     */
   def runToMemory(spark: SparkSession, df: DataFrame, name: String,
       mode: String = "complete",
@@ -341,85 +356,47 @@ object Streams {
       statePartitions: Option[Int] = None,
       resultSink: Option[String] = None,
       noDataBatches: Boolean = true): DataFrame =
-    withProvider(spark,
-      resolveProvider(spark.conf.getOption(ProviderKey), stateStoreProvider)) {
-      withShufflePartitions(spark, statePartitions) {
-       withNoDataBatches(spark, noDataBatches) {
-        resultSink match {
-          case Some("parquet") =>
-            // unique per CALL, not per name: `name`s restart per JVM
-            // (s05_out_1), and a reused sink/checkpoint root would make
-            // a later run resume the previous JVM's offsets and read its
-            // _spark_metadata-committed files as this drain's result.
-            // The returned frame reads the root lazily, so it lives until
-            // JVM exit, the lifecycle Spark gives its own local dirs
-            val root = graft.Staged.dir(s"graft_drain_${name}_")
+    withConf(spark,
+        ProviderKey ->
+          resolveProvider(spark.conf.getOption(ProviderKey), stateStoreProvider),
+        "spark.sql.shuffle.partitions" -> statePartitions.map(_.toString),
+        "spark.sql.streaming.noDataMicroBatches.enabled" ->
+          Option.when(!noDataBatches)("false")) {
+      resultSink match {
+        case Some("parquet") =>
+          // unique per CALL, not per name: `name`s restart per JVM
+          // (s05_out_1), and a reused sink/checkpoint root would make
+          // a later run resume the previous JVM's offsets and read its
+          // _spark_metadata-committed files as this drain's result.
+          // The returned frame reads the root lazily, so it lives until
+          // JVM exit, the lifecycle Spark gives its own local dirs
+          val root = graft.Staged.dir(s"graft_drain_${name}_")
+          drain(df.writeStream
+            .format("parquet")
+            .option("path", s"$root/data")
+            .option("checkpointLocation", s"$root/ckpt")
+            .outputMode(mode))
+          // a drain that emitted nothing leaves no parquet footers to
+          // infer from — hand the reader the query's own schema
+          spark.read.schema(df.schema).parquet(s"$root/data")
+        case Some(other) =>
+          throw new IllegalArgumentException(
+            s"unsupported result sink '$other' — supported: " +
+              "None (memory) or Some(\"parquet\")")
+        case None =>
+          // copy the result out of the memory sink and DROP it: the sink
+          // holds the full result set in driver memory, and repeated
+          // drains (bench reps) would otherwise accumulate one retained
+          // table per run
+          try {
             drain(df.writeStream
-              .format("parquet")
-              .option("path", s"$root/data")
-              .option("checkpointLocation", s"$root/ckpt")
+              .format("memory")
+              .queryName(name)
               .outputMode(mode))
-            // a drain that emitted nothing leaves no parquet footers to
-            // infer from — hand the reader the query's own schema
-            spark.read.schema(df.schema).parquet(s"$root/data")
-          case Some(other) =>
-            throw new IllegalArgumentException(
-              s"unsupported result sink '$other' — supported: " +
-                "None (memory) or Some(\"parquet\")")
-          case None =>
-            // copy the result out of the memory sink and DROP it: the sink
-            // holds the full result set in driver memory, and repeated
-            // drains (bench reps) would otherwise accumulate one retained
-            // table per run
-            try {
-              drain(df.writeStream
-                .format("memory")
-                .queryName(name)
-                .outputMode(mode))
-              spark.table(name).pin(true)
-            } finally spark.catalog.dropTempView(name)
-        }
-       }
+            spark.table(name).pin(true)
+          } finally spark.catalog.dropTempView(name)
       }
     }
-
-  /** Skip the trailing watermark-finalization (no-data) micro-batch for
-    * drains whose OUTPUT cannot depend on it — COMPLETE-mode aggregations
-    * re-emit the full result every data batch, so the final no-data batch
-    * only re-runs the output stage to produce byte-identical sink
-    * contents (~0.5s of pure machinery per drain at gate scale, measured
-    * interleaved with row parity pinned, OPTIMIZATION_r17.md). APPEND
-    * and timer-bearing drains MUST keep it: their final emissions are
-    * exactly what the watermark-advance batch flushes. Session-global
-    * conf, so the same save/set/restore scope as the provider swap.
-    */
-  private def withNoDataBatches[A](spark: SparkSession, enabled: Boolean)(
-      body: => A): A =
-    if (enabled) body
-    else {
-      val key = "spark.sql.streaming.noDataMicroBatches.enabled"
-      val prev = spark.conf.getOption(key)
-      spark.conf.set(key, "false")
-      try body
-      finally prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None    => spark.conf.unset(key)
-      }
-    }
-
-  private def withShufflePartitions[A](spark: SparkSession,
-      n: Option[Int])(body: => A): A = n match {
-    case None => body
-    case Some(p) =>
-      val key = "spark.sql.shuffle.partitions"
-      val prev = spark.conf.getOption(key)
-      spark.conf.set(key, p.toString)
-      try body
-      finally prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None    => spark.conf.unset(key)
-      }
-  }
 
   // ------------------------------------------------------- stateful session
 
@@ -658,7 +635,7 @@ object Streams {
     * call site.
     */
   def withRocksDBStateStore[A](spark: SparkSession)(body: => A): A =
-    withProvider(spark, RocksDB)(body)
+    withConf(spark, ProviderKey -> RocksDB)(body)
 
   /** Stream of cumulative per-user totals, one updated row per user per
     * micro-batch that touched them.

@@ -1032,6 +1032,31 @@ class LlmOpsSpec extends SparkSpec {
     (good.indices by 7).foreach { n =>
       Multimodal.demuxMp4Frames(good.take(n)) // must not throw
     }
+    // a 1.7 MB file whose 100,000 stsc runs all start at chunk 1 (the
+    // last run, 1 sample per chunk, covers every chunk): rescanning the
+    // table from its first run for each chunk is quadratic, tens of
+    // seconds here; one pass over the runs is linear
+    val n = 100000
+    val ftyp = mp4box("ftyp", "isom".getBytes("US-ASCII") ++ be(512))
+    val mdat = mp4box("mdat", Array.tabulate[Byte](n)(_.toByte))
+    def table(entries: Int, entryInts: Int)(put: (java.nio.ByteBuffer, Int) => Unit) = {
+      val bb = java.nio.ByteBuffer.allocate(8 + 4 * entryInts * entries).putInt(0).putInt(entries)
+      (0 until entries).foreach(put(bb, _))
+      bb.array()
+    }
+    val stsc = mp4box("stsc", table(n, 3)((bb, _) => bb.putInt(1).putInt(1).putInt(1)))
+    val stco = mp4box("stco", table(n, 1)((bb, i) => bb.putInt(ftyp.length + 8 + i)))
+    val stsz = mp4box("stsz", be(0) ++ be(1) ++ be(n)) // uniform: 1 byte each
+    val hdlr = mp4box("hdlr", be(0) ++ be(0) ++ "vide".getBytes("US-ASCII") ++
+      new Array[Byte](13))
+    val runs = ftyp ++ mdat ++ mp4box("moov", mp4box("trak", mp4box("mdia",
+      hdlr ++ mp4box("minf", mp4box("stbl", stsz ++ stsc ++ stco)))))
+    val t0 = System.nanoTime()
+    val demuxed = Multimodal.demuxMp4Frames(runs)
+    val seconds = (System.nanoTime() - t0) / 1e9
+    assert(demuxed.map(_.map(_.toSeq)) ===
+      Some((0 until n).map(i => Seq(i.toByte))), "n one-byte frames, in order")
+    assert(seconds < 5.0, f"stsc demux took $seconds%.2f s: not linear")
   }
 
   test("readMediaDir ingests a file directory as the canonical media table") {
@@ -1119,9 +1144,47 @@ class LlmOpsSpec extends SparkSpec {
       mp4box("ftyp", "isom".getBytes("US-ASCII") ++ be(512)) ++
         mp4box("moov", mvhd ++ mp4box("trak", mp4box("tkhd", new Array[Byte](84))))
     }
+    // a strf whose stride × height wraps a 32-bit int to 0: the frame-size
+    // check must not wave a 4-byte chunk through to a 2^32-byte pixel walk
+    val hugeDims = rgbAvi(Seq(Array[Byte](10, 20, 200.toByte, 0)),
+      w = 65536, h = 65536)
+    // crafted nesting, 20,000 levels deep: a walker that spends a JVM frame
+    // per level overflows its stack here, and StackOverflowError is not
+    // NonFatal — in a Spark task it takes the executor JVM down
+    val depth = 20000
+    val frameA = Array[Byte](10, 20, 200.toByte, 0) // 1x1 BGR, luma 72680
+    val nestedHdrl = {
+      // avih and a vids strl at the bottom of the hdrl nest, one rawvideo
+      // frame in a top-level movi: both are only found by going all the way
+      val strh = chunk("strh", "vids".getBytes("US-ASCII") ++ new Array[Byte](52))
+      val strf = chunk("strf", le(40) ++ le(1) ++ le(1) ++
+        Array[Byte](1, 0, 24, 0) ++ le(0) ++ new Array[Byte](20))
+      val bottom = aviFixture.drop(24) ++ // the fixture's avih chunk
+        list("strl", strh ++ strf)
+      riffAvi(nestedLists("hdrl", depth, bottom) ++
+        list("movi", chunk("00db", frameA)))
+    }
+    val nestedRec = riffAvi(list("movi",
+      nestedLists("rec ", depth, chunk("00dc", "frame!".getBytes("US-ASCII")))))
+    val moovJpegs = (0 until 3).map(i => jpegBytes(8, 4, i))
+    val nestedMoov = {
+      // synthMp4 is ftyp ++ mdat ++ moov with absolute chunk offsets, so
+      // wrapping its moov in more moov boxes keeps the samples in place
+      val mp4 = Multimodal.synthMp4(moovJpegs)
+      val moovAt = 16 + java.nio.ByteBuffer.wrap(mp4).getInt(16)
+      val moov = mp4.drop(moovAt)
+      val bb = java.nio.ByteBuffer.allocate(moovAt + 8 * depth + moov.length)
+      bb.put(mp4, 0, moovAt)
+      (0 until depth).foreach { i =>
+        bb.putInt(8 * (depth - i) + moov.length).put("moov".getBytes("US-ASCII"))
+      }
+      bb.put(moov).array()
+    }
+    val nested = Seq(nestedHdrl, nestedRec, nestedMoov)
     val payloads = (dressed ++ mp4ish ++ truncations ++ garbage ++
-      Seq(evilAvi, evilMp4)).zipWithIndex
+      Seq(evilAvi, evilMp4, hugeDims) ++ nested).zipWithIndex
       .map { case (p, i) => (i.toLong, p, "application/octet-stream") }
+    val Seq(hugeId, hdrlId, recId, moovId) = payloads.takeRight(4).map(_._1)
     val media = payloads.toDF("media_id", "payload", "mime")
       .select(col("media_id"), col("payload"),
         struct(col("mime"), lit("fuzz").as("source"),
@@ -1132,6 +1195,70 @@ class LlmOpsSpec extends SparkSpec {
     assert(feats.forall(_.duration_ms >= 0L), "no negative durations")
     assert(feats.forall(f => f.n_tracks >= 0 && f.width >= 0 && f.height >= 0),
       "no sign-wrapped dims/track counts")
+    val featOf = feats.map(f => f.media_id -> f).toMap
+    assert((featOf(hdrlId).width, featOf(hdrlId).height,
+      featOf(hdrlId).duration_ms, featOf(hdrlId).n_tracks) === ((640, 480, 9999L, 2)),
+      "the avih at the bottom of the nest is found")
+    assert(featOf(recId).n_tracks === 0 && featOf(moovId).n_tracks === 0,
+      "no main header or top-level trak: the stub row")
+
+    // the frame operators over the same corpus: a payload with demuxable
+    // video gives one sampled frame and one luma row (decoded or
+    // `unsupported`) per frame; any other gives byte slices that cover it
+    // exactly, and no luma rows
+    val frames = Multimodal.sampleFrames(media, frameBytes = 256, stride = 1)
+      .collect().groupBy(_.media_id).map { case (k, v) => k -> v.sortBy(_.frame_idx) }
+    val lumas = Multimodal.frameLuma(media).collect()
+      .groupBy(_.media_id).map { case (k, v) => k -> v.sortBy(_.frame_idx) }
+    payloads.foreach { case (i, p, _) =>
+      val fs = frames.getOrElse(i, Array.empty[Multimodal.MediaFrame])
+      if (fs.exists(_.demuxed)) {
+        assert(fs.forall(_.demuxed), s"payload $i mixes demuxed and sliced frames")
+        assert(lumas.get(i).map(_.map(_.frame_idx).toSeq) ===
+          Some(fs.map(_.frame_idx).toSeq), s"payload $i: one luma row per frame")
+      } else {
+        assert(fs.flatMap(_.frame_bytes).toSeq === p.toSeq,
+          s"payload $i: the byte slices cover the payload")
+        assert(!lumas.contains(i), s"payload $i: no frames, no luma rows")
+      }
+    }
+    assert(lumas.values.flatten.forall(l =>
+      if (l.codec == "unsupported") l.mean_luma_milli == -1L
+      else l.mean_luma_milli >= 0L), "a luma is decoded or refused")
+    assert(lumas(hugeId).map(_.codec).toSeq === Seq("unsupported"),
+      "a frame far smaller than its wrapped size is refused")
+    assert(frames(hdrlId).map(f => (f.width, f.height)).toSeq === Seq((1, 1)) &&
+      lumas(hdrlId).map(l => (l.codec, l.mean_luma_milli)).toSeq ===
+        Seq(("rawvideo", 72680L)), "the strf at the bottom of the nest is found")
+    assert(frames(recId).map(f => new String(f.frame_bytes, "US-ASCII")).toSeq ===
+      Seq("frame!") && lumas(recId).map(_.codec).toSeq === Seq("unsupported"),
+      "the chunk at the bottom of the rec nest is demuxed")
+    assert(frames(moovId).map(_.frame_bytes.toSeq).toSeq === moovJpegs.map(_.toSeq) &&
+      lumas(moovId).map(l => (l.codec, l.width, l.height)).toSeq ===
+        Seq.fill(3)(("mjpeg", 8, 4)), "the trak at the bottom of the moov nest is demuxed")
+  }
+
+  private def chunk(id: String, body: Array[Byte]): Array[Byte] =
+    id.getBytes("US-ASCII") ++ le(body.length) ++ body ++
+      (if (body.length % 2 == 1) Array[Byte](0) else Array.emptyByteArray)
+  private def list(typ: String, body: Array[Byte]): Array[Byte] =
+    chunk("LIST", typ.getBytes("US-ASCII") ++ body)
+  private def riffAvi(body: Array[Byte]): Array[Byte] =
+    "RIFF".getBytes("US-ASCII") ++ le(4 + body.length) ++
+      "AVI ".getBytes("US-ASCII") ++ body
+
+  /** `inner` (of even length) inside `depth` nested LIST chunks of list
+    * type `typ`, written header by header: wrapping one level at a time
+    * would copy the payload once per level.
+    */
+  private def nestedLists(typ: String, depth: Int, inner: Array[Byte]): Array[Byte] = {
+    val bb = java.nio.ByteBuffer.allocate(12 * depth + inner.length)
+      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    (0 until depth).foreach { i =>
+      bb.put("LIST".getBytes("US-ASCII")).putInt(4 + 12 * (depth - 1 - i) + inner.length)
+        .put(typ.getBytes("US-ASCII"))
+    }
+    bb.put(inner).array()
   }
 
   test("incremental dedup flags batch docs against corpus and earlier batch only") {

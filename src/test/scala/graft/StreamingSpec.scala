@@ -432,33 +432,49 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("concurrent drains serialize the provider swap and restore the conf") {
-    // the provider conf is session-global; withProvider holds the session
-    // monitor across set/drain/restore, so concurrent drains with MIXED
-    // providers must all complete correctly and leave the conf unchanged
-    // (unsynchronized, one drain could start under the other's provider
-    // or a restore could clobber a newer setting)
+    // the provider, state-partition and no-data-batch confs are
+    // session-global; runToMemory holds one lock across set/drain/restore,
+    // so concurrent drains with MIXED settings must all complete correctly
+    // and leave the conf unchanged (unsynchronized, one drain could start
+    // under the other's provider or a restore could clobber a newer
+    // setting) — also when a drain throws inside the scope
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration._
     implicit val ec: ExecutionContext = ExecutionContext.global
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val before = spark.conf.getOption(key)
+    val keys = Seq("spark.sql.streaming.stateStore.providerClass",
+      "spark.sql.shuffle.partitions",
+      "spark.sql.streaming.noDataMicroBatches.enabled")
+    val before = keys.map(spark.conf.getOption)
     val t0 = new Timestamp(1700000000000L)
+    def counts(i: Int) = {
+      val input = MemoryStream[(Timestamp, Long)]
+      input.addData((0 until 20).map(j => (t0, (i * 100 + j % 10).toLong)): _*)
+      input.toDF().toDF("ts", "k").groupBy(col("k")).count()
+    }
     val futures = (0 until 6).map { i =>
       Future {
-        val input = MemoryStream[(Timestamp, Long)]
-        input.addData((0 until 20).map(j => (t0, (i * 100 + j % 10).toLong)): _*)
-        val agg = input.toDF().toDF("ts", "k").groupBy(col("k")).count()
         val provider = if (i % 2 == 0) Streams.RocksDB else None
-        Streams.runToMemory(spark, agg, s"conc_drain_$i", "complete", provider)
-          .count()
+        Streams.runToMemory(spark, counts(i), s"conc_drain_$i", "complete",
+          provider, statePartitions = Option.when(i % 3 == 0)(3),
+          noDataBatches = i % 2 == 1).count()
       }
     }
-    val counts = Await.result(Future.sequence(futures), 180.seconds)
-    assert(counts.forall(_ === 10L), s"wrong drain results: $counts")
-    assert(spark.conf.getOption(key) === before,
-      "provider conf not restored after concurrent drains")
+    val failing = (0 until 2).map { i =>
+      Future {
+        intercept[IllegalArgumentException] {
+          Streams.runToMemory(spark, counts(i), s"conc_drain_bad_$i", "complete",
+            Streams.RocksDB, statePartitions = Some(5),
+            resultSink = Some("unknown"), noDataBatches = false)
+        }
+      }
+    }
+    val results = Await.result(Future.sequence(futures), 180.seconds)
+    Await.result(Future.sequence(failing), 180.seconds)
+    assert(results.forall(_ === 10L), s"wrong drain results: $results")
+    assert(keys.map(spark.conf.getOption) === before,
+      "drain conf not restored after concurrent and failing drains")
   }
 
   test("streaming semantic-dedup ingest ≡ batch v13, invariant to batching") {
